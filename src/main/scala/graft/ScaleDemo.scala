@@ -440,11 +440,11 @@ object ScaleDemo {
             val loB = cut99 + (hiAll - cut99) * (g - 1) / 10
             val hiB =
               if (g == 10) hiAll else cut99 + (hiAll - cut99) * g / 10
-            queries.StreamingOps.s18ProcessBatch(spark, s18Work,
+            queries.StreamingOps.cluster.processBatch(spark, s18Work,
               d10.filter(col("doc_id") > loB && col("doc_id") <= hiB)
                 .select(col("doc_id"), col("text")), (g - 1).toLong)
             println(s"SCALE s18 after batch $g: " +
-              s"${queries.DedupOps.generationCount(s18Work, "labels")} " +
+              s"${queries.Generations.count(s18Work.resolve("labels"))} " +
               "labels generations")
           }
         }
@@ -472,18 +472,19 @@ object ScaleDemo {
         // policy itself thresholds on), at an unbounded fence so
         // every landed generation counts
         def relabelGens(w: java.nio.file.Path): Int =
-          queries.StreamingOps.s18RelabelGenCount(w, Long.MaxValue)
+          queries.Generations.count(w.resolve("labels"),
+            queries.Generations.Replacement)
         def batch(g: Int): Unit = {
           val loB = cut99 + (hiAll - cut99) * (g - 1) / 10
           val hiB =
             if (g == 10) hiAll else cut99 + (hiAll - cut99) * g / 10
           val t0 = System.nanoTime()
-          queries.StreamingOps.s18ProcessBatch(spark, s19Work,
+          queries.StreamingOps.cluster.processBatch(spark, s19Work,
             d10.filter(col("doc_id") > loB && col("doc_id") <= hiB)
               .select(col("doc_id"), col("text")), (g - 1).toLong)
           println(f"SCALE s19 batch $g%d: " +
             f"${(System.nanoTime() - t0) / 1e9}%.2f s, plain=" +
-            s"${queries.DedupOps.generationCount(s19Work, "labels")} " +
+            s"${queries.Generations.count(s19Work.resolve("labels"))} " +
             s"rel=${relabelGens(s19Work)}")
         }
         time("s19 stream-absorb batches 1-5 (pre-advance)") {
@@ -784,7 +785,7 @@ object ScaleDemo {
               upTo = if (g == gens) hi else mid + (hi - mid) * g / gens,
               autoCompactMax = 3)
             println(s"SCALE t40 after batch $g: " +
-              s"${queries.DedupOps.generationCount(t40Idx)} generations")
+              s"${queries.Generations.count(t40Idx.resolve("buckets"))} generations")
           }
         }
         spark.catalog.clearCache()
@@ -818,10 +819,10 @@ object ScaleDemo {
             val batch = d
               .filter(col("doc_id") > loB && col("doc_id") <= hiB)
               .select(col("doc_id"), col("text"))
-            queries.StreamingOps
-              .s16ProcessBatch(spark, work, batch, (g - 1).toLong)
+            queries.StreamingOps.band
+              .processBatch(spark, work, batch, (g - 1).toLong)
             println(s"SCALE s16 after batch $g: " +
-              s"${queries.DedupOps.generationCount(work)} " +
+              s"${queries.Generations.count(work.resolve("buckets"))} " +
               "bucket generations")
           }
         }
@@ -1677,13 +1678,7 @@ object ScaleDemo {
             val tmp = trDir.resolve(s"tmp_$tag")
             half.repartition(8).write
               .mode(SaveMode.Overwrite).parquet(tmp.toString)
-            tmp.toFile.listFiles()
-              .filter(f => f.getName.startsWith("part-") &&
-                f.getName.endsWith(".parquet"))
-              .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-                Files.move(f.toPath, trDir.resolve(f"$tag-$i%03d.parquet"))
-              }
-            rm(tmp.toFile)
+            queries.Generations.install(tmp, trDir, s"$tag-")
           }
           Files.write(trDir.resolve("_STAGED"), Array.emptyByteArray)
         }

@@ -1175,7 +1175,7 @@ object DedupOps {
     val cut = cutOf(out)
     val delta = deltaIn.filter(col("doc_id") > cut)
     // the delta high-watermark: reuse the caller's already-computed
-    // max when provided (s18ProcessBatch pays one max agg for its
+    // max when provided (the stream driver pays one max agg for its
     // monotone assert and was paying a second identical one here —
     // the filter only removes rows ≤ cut, so deltaIn's max IS delta's
     // max whenever it exceeds the cut, and a below-cut/empty delta is
@@ -1295,26 +1295,13 @@ object DedupOps {
            else Nil) ++ Seq(
             () => dmOut.coalesce(genParts(s))
               .write.mode("overwrite").parquet(tmpM.toString)))
-        def moveGen(src: java.nio.file.Path, dst: java.nio.file.Path,
-            prefix: String): Unit = {
-          Option(dst.toFile.listFiles()).foreach(
-            _.filter(_.getName.startsWith(prefix))
-              .foreach(f => { f.delete(); () }))
-          src.toFile.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-              java.nio.file.Files.move(f.toPath,
-                dst.resolve(f"$prefix%s$i%03d.parquet"),
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            }
-          deleteRecursively(src.toFile)
-        }
         commitArtifactAppend(out, tmp, newCut, rel = "labels",
           beforeReady = () => {
             if (hasRel)
-              moveGen(tmpR, out.resolve("labels"), f"relabel-a$newCut%d-")
-            moveGen(tmpM, out.resolve("members"), f"append-$newCut%d-")
+              Generations.install(tmpR, out.resolve("labels"),
+                Generations.prefix("relabel-a", newCut))
+            Generations.install(tmpM, out.resolve("members"),
+              Generations.prefix("append", newCut))
           }, expectedCut = cut)
         } finally dm.unpersist(blocking = true)
       }
@@ -1437,29 +1424,10 @@ object DedupOps {
               .write.mode("overwrite").parquet(tmpK.toString)))
           val ready = out.resolve("_INDEX_READY")
           java.nio.file.Files.deleteIfExists(ready)
-          val dst = out.resolve("labels")
-          Option(dst.toFile.listFiles()).foreach(
-            _.filter(_.getName.startsWith(s"relabel-f$tag-"))
-              .foreach(f => { f.delete(); () }))
-          tmp.toFile.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-              java.nio.file.Files.move(f.toPath,
-                dst.resolve(f"relabel-f$tag%s-$i%03d.parquet"),
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            }
-          deleteRecursively(tmp.toFile)
+          Generations.install(tmp, out.resolve("labels"),
+            Generations.prefix("relabel-f", tag))
           deleteRecursively(out.resolve("relabel_nodes").toFile)
-          java.nio.file.Files.createDirectories(out.resolve("relabel_nodes"))
-          tmpK.toFile.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-              java.nio.file.Files.move(f.toPath,
-                out.resolve("relabel_nodes").resolve(f"k$i%03d.parquet"))
-            }
-          deleteRecursively(tmpK.toFile)
+          Generations.install(tmpK, out.resolve("relabel_nodes"), "k")
           java.nio.file.Files.write(marker, "1".getBytes("UTF-8"))
           java.nio.file.Files.write(ready,
             System.nanoTime().toString.getBytes("UTF-8"))
@@ -1500,15 +1468,7 @@ object DedupOps {
           val ready = out.resolve("_INDEX_READY")
           java.nio.file.Files.deleteIfExists(ready)
           deleteRecursively(dst.toFile)
-          java.nio.file.Files.createDirectories(dst)
-          tmp.toFile.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-              java.nio.file.Files.move(f.toPath,
-                dst.resolve(f"compact-0-$i%03d.parquet"))
-            }
-          deleteRecursively(tmp.toFile)
+          Generations.install(tmp, dst, Generations.prefix("compact", 0))
           val keys = out.resolve("relabel_nodes")
           if (java.nio.file.Files.exists(keys))
             deleteRecursively(keys.toFile)
@@ -2121,18 +2081,7 @@ object DedupOps {
     // the retry exact for EVERY merge family, idempotent or not. (The
     // normal recovery path — a build — wipes the marker-less dir, but
     // the contract doesn't require one.)
-    Option(dst.toFile.listFiles()).foreach(
-      _.filter(_.getName.startsWith(f"$kind%s-$newCut%d-"))
-        .foreach(f => { f.delete(); () }))
-    tmp.toFile.listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.move(f.toPath,
-          dst.resolve(f"$kind%s-$newCut%d-$i%03d.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    deleteRecursively(tmp.toFile)
+    Generations.install(tmp, dst, Generations.prefix(kind, newCut))
     java.nio.file.Files.write(out.resolve("_CUT"),
       newCut.toString.getBytes("UTF-8"))
     beforeReady()
@@ -2193,7 +2142,8 @@ object DedupOps {
         // conditional on the cut this delta was computed against: a
         // concurrent driver's append conflicts and we recompute
         commitArtifactAppend(out, tmp, newCut, expectedCut = cut)
-        if (autoCompactMax > 0 && generationCount(out) > autoCompactMax) {
+        if (autoCompactMax > 0 &&
+            Generations.count(out.resolve("buckets")) > autoCompactMax) {
           compactBandIndex(s, out); ()
         }
         newCut
@@ -2336,15 +2286,7 @@ object DedupOps {
         val marker = out.resolve("_INDEX_READY")
         java.nio.file.Files.deleteIfExists(marker)
         deleteRecursively(dst.toFile)
-        java.nio.file.Files.createDirectories(dst)
-        tmp.toFile.listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-            java.nio.file.Files.move(f.toPath,
-              dst.resolve(f"compact-$cut%d-$i%03d.parquet"))
-          }
-        deleteRecursively(tmp.toFile)
+        Generations.install(tmp, dst, Generations.prefix("compact", cut))
         java.nio.file.Files.write(marker,
           System.nanoTime().toString.getBytes("UTF-8"))
         true
@@ -2489,16 +2431,7 @@ object DedupOps {
         } else {
           val ready = out.resolve("_INDEX_READY")
           java.nio.file.Files.deleteIfExists(ready)
-          java.nio.file.Files.createDirectories(tombs)
-          tmp.toFile.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-              java.nio.file.Files.move(f.toPath,
-                tombs.resolve(f"delete-$gen%s-$i%03d.parquet"),
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            }
-          deleteRecursively(tmp.toFile)
+          Generations.install(tmp, tombs, Generations.prefix("delete", gen))
           // the writer's own schema seeds the read memo: the serve's
           // tombstone anti-join plans with no footer-inference job
           // even on a per-invocation work dir (generations are
@@ -2665,16 +2598,8 @@ object DedupOps {
       java.nio.file.Files.deleteIfExists(marker)
       deleteRecursively(dst.toFile)
       deleteRecursively(tombs.toFile)
-      java.nio.file.Files.createDirectories(dst)
       java.nio.file.Files.createDirectories(tombs)
-      tmp.toFile.listFiles()
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            dst.resolve(f"compact-0-$i%03d.parquet"))
-        }
-      deleteRecursively(tmp.toFile)
+      Generations.install(tmp, dst, Generations.prefix("compact", 0))
       java.nio.file.Files.write(marker,
         System.nanoTime().toString.getBytes("UTF-8"))
       true
@@ -2903,20 +2828,6 @@ object DedupOps {
 
   // ------------ t40: AUTO-COMPACTION policy (fold when generations
   // exceed a threshold)
-
-  /** The artifact's current generation count: distinct `append-*`
-    * watermark tags plus one for the base (`part-*` build files or a
-    * prior fold's `compact-*`). What the auto-compact policy
-    * thresholds on. */
-  private[graft] def generationCount(out: java.nio.file.Path,
-      rel: String = "buckets"): Int = {
-    val names = Option(out.resolve(rel).toFile.listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.endsWith(".parquet"))
-    names.filter(_.startsWith("append-"))
-      .map(_.split("-")(1)).distinct.size +
-      (if (names.exists(n => n.startsWith("part-") ||
-        n.startsWith("compact-"))) 1 else 0)
-  }
 
   /** t40's OWN band-index copy (t35 rw / t36 manual-compact / t40
     * policy-compact — order-independent gates). The `_TRANCHES` file

@@ -1678,24 +1678,12 @@ object Relational {
         part.join(keys, Seq("event_type"), "left_semi")
           .write.mode("overwrite").parquet(tmpA.toString)
         DedupOps.commitArtifactAppend(out, tmpU, newCut, rel = "partials",
-          beforeReady = () => {
-            val dst = out.resolve("partials")
-            // clear a crashed retry's own half-moved generation first
-            // (commitArtifactAppend's delete-then-move rule, applied
-            // to the replacement side)
-            Option(dst.toFile.listFiles()).foreach(
-              _.filter(_.getName.startsWith(f"resketch-$newCut%d-"))
-                .foreach(f => { f.delete(); () }))
-            tmpA.toFile.listFiles()
-              .filter(f => f.getName.startsWith("part-") &&
-                f.getName.endsWith(".parquet"))
-              .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-                java.nio.file.Files.move(f.toPath,
-                  dst.resolve(f"resketch-$newCut%d-$i%03d.parquet"),
-                  java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              }
-            DedupOps.deleteRecursively(tmpA.toFile)
-          }, expectedCut = cut)
+          // the install clears a crashed retry's own half-moved
+          // generation first (commitArtifactAppend's delete-then-move
+          // rule, applied to the replacement side)
+          beforeReady = () => Generations.install(tmpA,
+            out.resolve("partials"), Generations.prefix("resketch", newCut)),
+          expectedCut = cut)
         newCut
       }
     } }
@@ -1782,15 +1770,7 @@ object Relational {
           val marker = out.resolve("_INDEX_READY")
           java.nio.file.Files.deleteIfExists(marker)
           DedupOps.deleteRecursively(dst.toFile)
-          java.nio.file.Files.createDirectories(dst)
-          tmp.toFile.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-              java.nio.file.Files.move(f.toPath,
-                dst.resolve(f"compact-$cut%d-$i%03d.parquet"))
-            }
-          DedupOps.deleteRecursively(tmp.toFile)
+          Generations.install(tmp, dst, Generations.prefix("compact", cut))
           DedupOps.deleteRecursively(keysDir.toFile)
           java.nio.file.Files.write(marker,
             System.nanoTime().toString.getBytes("UTF-8"))

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.streaming.EventWindows
@@ -30,6 +31,10 @@ object StreamingOps {
   private val lastSink =
     new java.util.concurrent.atomic.AtomicReference[String](null)
 
+  /** State and shuffle partitions of the gate streams and the
+    * micro-batch maintenance scope (see [[runStream]]). */
+  private val StatePartitions = 8
+
   /** Run `q` as an AvailableNow stream into a complete/append memory
     * sink and return the final table; the previous invocation's sink
     * view is dropped (its rows live in driver memory until then).
@@ -44,10 +49,10 @@ object StreamingOps {
     * thousands of state keys, so 8 partitions keep the executors
     * busy without 4× the commit I/O. An unbounded deployment sizes
     * this with key cardinality exactly like shuffle partitions — the
-    * value is pinned into the stream's checkpoint at first start —
-    * via `graft.stream.statePartitions`. The override is scoped to
-    * this stream's planning and restored in finally (the session is
-    * shared; bench/verify/test callers run queries sequentially). */
+    * value is pinned into the stream's checkpoint at first start
+    * ([[StatePartitions]]). The override is scoped to this stream's
+    * planning and restored in finally (the session is shared;
+    * bench/verify/test callers run queries sequentially). */
   private[queries] def runStream(s: SparkSession, prefix: String,
       q: DataFrame, mode: String): DataFrame = {
     val name = prefix + runSerial.incrementAndGet()
@@ -55,8 +60,7 @@ object StreamingOps {
     if (old != null) s.catalog.dropTempView(old)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.get("graft.stream.statePartitions", "8"))
+      s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
       val query = q.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow())
         .start()
@@ -77,8 +81,7 @@ object StreamingOps {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val query =
       try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          s.conf.get("graft.stream.statePartitions", "8"))
+        s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
         val qh = q.writeStream.format("memory").queryName(name)
           .outputMode(mode).option("checkpointLocation", checkpoint)
           .trigger(Trigger.AvailableNow())
@@ -154,13 +157,7 @@ object StreamingOps {
             "b" -> ev.filter(col("ts") > cut)).foreach { case (tag, half) =>
           val tmp = out.resolve(s"tmp_$tag")
           half.repartition(4).write.mode("overwrite").parquet(tmp.toString)
-          tmp.toFile.listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-              Files.move(f.toPath, out.resolve(f"$tag-$i%03d.parquet"))
-            }
-          rm(tmp.toFile)
+          Generations.install(tmp, out, s"$tag-")
         }
         Files.write(out.resolve("_STAGED"), Array.emptyByteArray)
       }
@@ -256,13 +253,7 @@ object StreamingOps {
           "b" -> d.filter(col("doc_id") > cut)).foreach { case (tag, half) =>
         val tmp = out.resolve(s"tmp_$tag")
         half.repartition(4).write.mode("overwrite").parquet(tmp.toString)
-        tmp.toFile.listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-            Files.move(f.toPath, out.resolve(f"$tag-$i%03d.parquet"))
-          }
-        rm(tmp.toFile)
+        Generations.install(tmp, out, s"$tag-")
       }
       Files.write(out.resolve("_STAGED"), Array.emptyByteArray)
     }
@@ -316,8 +307,7 @@ object StreamingOps {
     def runToSink(q: DataFrame): StreamingQuery = {
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          s.conf.get("graft.stream.statePartitions", "8"))
+        s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
         val qh = q.writeStream.format("parquet")
           .option("path", sink.toString)
           .option("checkpointLocation", cp.toString)
@@ -728,53 +718,6 @@ object StreamingOps {
     out
   }
 
-  /** Copy the pristine base into a fresh per-invocation working index
-    * (bucket + member part files + `_CUT` + the nonce) — O(index),
-    * tiny beside the stream; the previous invocation's working dir is
-    * retired the way [[lastSink]] retires memory-sink views. */
-  private[graft] def s16WorkingCopy(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val base = s16BuildBase(s, dir)
-    DedupOps.requireReady(base)
-    val work = Files.createTempDirectory("s16_work_")
-    Seq("buckets", "members").foreach { rel =>
-      Files.createDirectories(work.resolve(rel))
-      base.resolve(rel).toFile.listFiles()
-        .filter(_.getName.endsWith(".parquet")).foreach { f =>
-          Files.copy(f.toPath, work.resolve(rel).resolve(f.getName))
-        }
-      // a copy shares its source's schema: seed the read memo so the
-      // per-rep work-dir reads plan with zero inference jobs
-      DedupOps.seedSchemaFrom(s, work.resolve(rel), base.resolve(rel))
-    }
-    Seq("_CUT", "_INDEX_READY").foreach { n =>
-      Files.copy(base.resolve(n), work.resolve(n))
-    }
-    // the replay fence starts BEFORE any batch, carrying the base cut
-    // as the fenced watermark (see [[s16Fence]])
-    Files.write(work.resolve("_BATCH"),
-      s"-1 ${DedupOps.cutOf(base)}".getBytes("UTF-8"))
-    work
-  }
-
-  private[graft] val lastS16Work =
-    new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
-
-  /** The replay fence: `(last committed micro-batch id, the index cut
-    * AS OF that commit)`, written as one `"<batch> <cut>"` file.
-    * Carrying the FENCED CUT (not just the batch id) is what makes
-    * the restart repair possible: after a crash inside a commit,
-    * `_CUT` may already have run ahead of the fence, so "which bucket
-    * generations belong to a batch that never fenced" is answerable
-    * only from the fence's own record — any `append-<tag>-*` with
-    * `tag > fencedCut` is un-fenced debris ([[s16ProcessBatch]]
-    * step 0). `(-1, baseCut)` before any batch commits. */
-  private def s16Fence(work: java.nio.file.Path): (Long, Long) = {
-    val parts = new String(Files.readAllBytes(work.resolve("_BATCH")),
-      "UTF-8").trim.split("\\s+")
-    (parts(0).toLong, parts(1).toLong)
-  }
-
   /** The working index's bucket relation as the PROBE sees it. Two
     * paths:
     *
@@ -833,378 +776,252 @@ object StreamingOps {
       _ => ids.toDF("doc_id"))
   }
 
-  /** Fenced-generation predicate: the base (`part-*` build files or a
-    * prior fold's `compact-*`) plus every `append-<tag>` at or below
-    * the fenced cut. Only these may fold — an un-fenced generation is
-    * a crashed attempt's debris (step 0's property) and must stay out
-    * of any new base. */
-  private def s16IsFenced(name: String, fencedCut: Long,
-      ownCompact: Long): Boolean =
-    name.endsWith(".parquet") && (
-      (name.startsWith("append-") &&
-        name.split("-")(1).toLong <= fencedCut) ||
-      ((name.startsWith("part-") || name.startsWith("compact-")) &&
-        !name.startsWith(f"compact-$ownCompact%d-")))
+  // ------------- the fenced micro-batch driver, shared by s16-s20
 
-  private[graft] def s16GenCount(work: java.nio.file.Path,
-      fencedCut: Long, rel: String = "buckets"): Int = {
-    val names = Option(work.resolve(rel).toFile.listFiles())
-      .toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet"))
-    names.filter(n => n.startsWith("append-") &&
-        n.split("-")(1).toLong <= fencedCut)
-      .map(_.split("-")(1)).distinct.size +
-      (if (names.exists(n => n.startsWith("part-") ||
-        n.startsWith("compact-"))) 1 else 0)
-  }
+  /** The stream's AUTO-COMPACT threshold — t40's bounded-generations
+    * invariant on fenced state: a working index gains one generation
+    * per micro-batch forever, so once more than this many fenced
+    * generations are served, the next batch folds them at its start
+    * (the staged gates then serve at most two). */
+  private val AutoCompactMax = 2
 
-  /** Phase A of the stream fold, shared by the s16 bucket index and
-    * the s18 cluster index: materialize each relation's fold over
-    * every FENCED generation into a temp dir (eager parquet writes —
-    * a crash here is inert debris), then write the `_FOLD` intent
-    * marker recording the fenced cut. `folds` maps relation name →
-    * fold function (min-fold for buckets/labels, identity concat for
-    * members). `relabel-*` files never match [[s16IsFenced]], so an
-    * active replacement (s19's retention forget) is NEVER disturbed:
-    * plain rows fold, the read's anti-join against `relabel_nodes`
-    * commutes with the per-key min. A relation with zero fenced files
-    * (a base whose labels write emitted no part file) skips its fold
-    * dir — the commit tolerates the absence. Every skipped fold dir
-    * is DELETED if present: a crash after a prior attempt's temp
-    * write but before its `_FOLD` marker leaves unmarked debris, and
-    * a later fold that skips the rewrite must not let the commit copy
-    * a STALE temp in under the new cut (rows the old attempt folded
-    * may since have been retired). */
-  private def streamFoldPhaseA(s: SparkSession,
-      work: java.nio.file.Path, fencedCut: Long,
-      folds: Seq[(String, DataFrame => DataFrame)]): Unit = {
-    folds.foreach { case (rel, fold) =>
-      val files =
-        Option(work.resolve(rel).toFile.listFiles()).toSeq.flatten
-          .filter(f => s16IsFenced(f.getName, fencedCut, fencedCut))
-          .map(_.toString)
-      if (files.nonEmpty)
-        fold(s.read.parquet(files: _*))
-          .repartition(DedupOps.genParts(s))
-          .write.mode("overwrite")
-          .parquet(work.resolve(s"${rel}_fold").toString)
-      else
-        DedupOps.deleteRecursively(
-          work.resolve(s"${rel}_fold").toFile)
-    }
-    Files.write(work.resolve("_FOLD"),
-      fencedCut.toString.getBytes("UTF-8"))
-    ()
-  }
+  /** One generation family a fenced fold compacts: `rel`'s files on
+    * `side` (see [[Generations.foldable]]), folded by `fold` into
+    * `<rel><side.tmpSuffix>` and landed back as the side's compact
+    * generation at the fenced cut. `minGens` is the fenced generation
+    * count below which the family does not fold: 1 for the plain
+    * sides (a triggered fold rewrites even a lone base), 2 for the
+    * replacement side (a single `relabel-a` stays as it is). */
+  private[graft] final case class FoldFamily(rel: String,
+      side: Generations.Side, fold: DataFrame => DataFrame,
+      minGens: Int = 1)
 
-  /** s16's phase A: min-folded buckets + concatenated members
-    * (members carry no fold semantics — the "compaction" is a file
-    * concat: fewer generations to list/read; tombstones untouched).
-    * Exposed separately so the spec can pin a crash exactly between
-    * intent and commit. */
-  private[graft] def s16FoldPhaseA(s: SparkSession,
-      work: java.nio.file.Path, fencedCut: Long): Unit =
-    streamFoldPhaseA(s, work, fencedCut, Seq(
-      "buckets" -> (df => df.groupBy(col("band"), col("sig"))
-        .agg(min(col("canon")).as("canon"))),
-      "members" -> identity))
-
-  /** The s18 REPLACEMENT-side fold set: `relabel-a<tag>` generations
-    * at or below the fenced cut (the post-forget absorbs' lowerings —
-    * committed by the same argument as `append-*`; debris above the
-    * fence was cleared in step 0a) plus any PRIOR `relabel-c`
-    * compact, excluding this fold's own output. `relabel-f*` (the
-    * forget's re-derivation) deliberately stays out: its crash
-    * protocol is the forget's own marker-keyed re-submission, and
-    * min-folding it with the a-side would be correct but would
-    * entangle the two repair stories for no read win (there is at
-    * most ONE f-generation by the refusal discipline). */
-  private def s18RelabelFoldable(work: java.nio.file.Path,
-      fencedCut: Long): Seq[String] =
-    Option(work.resolve("labels").toFile.listFiles()).toSeq.flatten
-      .map(_.getName).filter { n =>
-        n.endsWith(".parquet") && (
-          (n.startsWith("relabel-a") &&
-            n.stripPrefix("relabel-a").split("-")(0).toLong <= fencedCut) ||
-          (n.startsWith("relabel-c") &&
-            !n.startsWith(f"relabel-c$fencedCut%d-")))
-      }
-      .map(n => work.resolve("labels").resolve(n).toString)
-
-  /** Distinct replacement-side generations eligible to fold — what
-    * the policy thresholds on. Without this count a stream absorbing
-    * across an ACTIVE replacement (s19's shape, uncompacted) would
-    * gain one permanent `relabel-a` generation per batch — the exact
-    * O(batches) growth the plain-side fold exists to prevent. */
-  private[graft] def s18RelabelGenCount(work: java.nio.file.Path,
-      fencedCut: Long): Int = {
-    val names = Option(work.resolve("labels").toFile.listFiles())
-      .toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet"))
-    names.filter(n => n.startsWith("relabel-a") &&
-        n.stripPrefix("relabel-a").split("-")(0).toLong <= fencedCut)
-      .map(_.stripPrefix("relabel-a").split("-")(0)).distinct.size +
-      (if (names.exists(_.startsWith("relabel-c"))) 1 else 0)
-  }
-
-  /** s18's phase A: min-folded labels (per node — the cluster
-    * shelf's associative merge, labels only ever decrease under
-    * appends) + concatenated members on the PLAIN side, and — when
-    * more than one replacement-side generation is fenced — the
-    * min-fold of the `relabel-a`/`relabel-c` files into a
-    * `labels_relfold` temp (replacement rows are all for nodes in
-    * `relabel_nodes`; the read unions every `relabel-*` file and
-    * min-folds per node, so folding a SUBSET commutes). `relabel-f*`
-    * and `relabel_nodes` stay untouched — the prefer-replacement
-    * read is byte-exact across the fold. The shared phase A writes
-    * the `_FOLD` intent marker LAST, covering both sides' commit.
-    * When the replacement side does NOT fold (≤ 1 generation fenced
-    * — e.g. a t44Compact retired the replacement since the last
-    * attempt), any pre-existing `labels_relfold` is a crashed
-    * PRE-marker attempt's unmarked debris and is DELETED here:
-    * letting the commit copy it in as `relabel-c<newCut>` would
-    * resurrect retired relabel rows with `relabel_nodes` gone —
-    * the prefer-replacement read would then misread. */
-  private[graft] def s18FoldPhaseA(s: SparkSession,
-      work: java.nio.file.Path, fencedCut: Long): Unit = {
-    if (s18RelabelGenCount(work, fencedCut) > 1)
-      s.read.parquet(s18RelabelFoldable(work, fencedCut): _*)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-        .repartition(DedupOps.genParts(s))
-        .write.mode("overwrite")
-        .parquet(work.resolve("labels_relfold").toString)
-    else
-      DedupOps.deleteRecursively(
-        work.resolve("labels_relfold").toFile)
-    streamFoldPhaseA(s, work, fencedCut, Seq(
-      "labels" -> (df => df.groupBy(col("node"))
-        .agg(min(col("label")).as("label"))),
-      "members" -> identity))
-  }
-
-  /** Phase B — idempotent commit, also the crash REPAIR: copy the fold
-    * results in as `compact-<fencedCut>-NNN` (copy, not move, and
-    * REPLACE_EXISTING — a re-run after any crash point repeats
-    * harmlessly), then delete the folded-away fenced generations, the
-    * temp dirs, and the `_FOLD` marker LAST. Every intermediate state
-    * is readable: compacted rows coexisting with their unfolded
-    * sources double only under merges that are idempotent (min for
-    * buckets; members feed a min re-election, so duplicate rows are
-    * absorbed) — the property that makes copy-then-delete safe on
-    * state that has NO rebuild path. If the temp dirs are gone the
-    * copies already landed (they are deleted only after the copy
-    * loop), so repair degrades to the deletion steps. */
-  private[graft] def s16FoldCommit(s: SparkSession,
-      work: java.nio.file.Path, fencedCut: Long): Unit =
-    streamFoldCommit(s, work, fencedCut, Seq("buckets", "members"))
-
-  /** s18's phase B — the replacement side commits first (copy the
-    * relfold in as `relabel-c<fencedCut>-NNN` with REPLACE_EXISTING,
-    * delete the folded-away sources, drop the temp — every step
-    * re-runnable: a missing temp means the copies landed, the
-    * deletion predicate is a pure function of the fenced cut the
-    * `_FOLD` marker records), then the shared plain-side commit,
-    * which retires `_FOLD` LAST so a crash anywhere re-enters this
-    * whole repair. */
-  private[graft] def s18FoldCommit(s: SparkSession,
-      work: java.nio.file.Path, fencedCut: Long): Unit = {
-    val dst = work.resolve("labels")
-    val tmp = work.resolve("labels_relfold")
-    if (Files.exists(tmp)) {
-      tmp.toFile.listFiles()
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-          Files.copy(f.toPath,
-            dst.resolve(f"relabel-c$fencedCut%d-$i%03d.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-    }
-    // sources retire ONLY once the fold output demonstrably landed
-    // (temp present = copies just made; temp gone but own-compact
-    // files present = a crashed commit's copies — the repair case).
-    // A fold that never wrote a relfold (the plain side alone
-    // triggered, one replacement generation fenced) must not delete
-    // the un-replaced source.
-    val relFoldLanded = Files.exists(tmp) ||
-      Option(dst.toFile.listFiles()).toSeq.flatten
-        .exists(_.getName.startsWith(f"relabel-c$fencedCut%d-"))
-    if (relFoldLanded)
-      s18RelabelFoldable(work, fencedCut)
-        .foreach(p => { new java.io.File(p).delete(); () })
-    DedupOps.deleteRecursively(tmp.toFile)
-    streamFoldCommit(s, work, fencedCut, Seq("labels", "members"))
-  }
-
-  private def streamFoldCommit(s: SparkSession,
-      work: java.nio.file.Path, fencedCut: Long,
-      rels: Seq[String]): Unit = {
-    rels.foreach { rel =>
-      val dst = work.resolve(rel)
-      val tmp = work.resolve(s"${rel}_fold")
-      if (Files.exists(tmp)) {
-        tmp.toFile.listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-            Files.copy(f.toPath,
-              dst.resolve(f"compact-$fencedCut%d-$i%03d.parquet"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
-      }
-      Option(dst.toFile.listFiles()).foreach(
-        _.filter(f => s16IsFenced(f.getName, fencedCut, fencedCut))
-          .foreach(f => { f.delete(); () }))
-      DedupOps.deleteRecursively(tmp.toFile)
-    }
-    Files.deleteIfExists(work.resolve("_FOLD"))
-    ()
-  }
-
-  /** The stream's AUTO-COMPACT policy — t40's bounded-generations
-    * invariant composed onto fenced state: the working index gains one
-    * bucket generation per micro-batch FOREVER (read amplification
-    * O(batches)), but t40's trigger can't be copied verbatim because
-    * the working dir has no rebuild path (a crash-during-fold must
-    * not strand the stream). So the fold runs at BATCH START, inside
-    * the existing lock, over generations AT OR BELOW THE FENCED CUT
-    * only — exactly the set step 0's repair classifies as committed —
-    * with a two-phase intent-marker protocol whose every state is
-    * re-runnable ([[s16FoldPhaseA]]/[[s16FoldCommit]]); the
-    * crash-rewind contract is untouched because un-fenced generations
-    * never enter the fold. Threshold via
-    * `graft.stream.autoCompactMax` (0 disables); the default 2 keeps
-    * the staged gate's generation count bounded at ≤ 2 served. */
-  private def s16MaybeFold(s: SparkSession, work: java.nio.file.Path,
-      fencedCut: Long): Unit = {
-    val max = s.conf.get("graft.stream.autoCompactMax", "2").toInt
-    if (max > 0 && s16GenCount(work, fencedCut) > max)
-      DedupOps.withArtifactLease(work) {
-        s16FoldPhaseA(s, work, fencedCut)
-        s16FoldCommit(s, work, fencedCut)
-      }
-  }
-
-  /** s18's auto-compact: the fenced-fold-at-batch-start policy over
-    * BOTH of the cluster index's growing sides — the plain
-    * generations (base + `append-*`) and, when a replacement is
-    * active, the `relabel-a*` lowerings post-forget absorbs stack
-    * beside it (each folds to one `relabel-c` compact; `relabel-f*`
-    * itself is bounded at one by t43's refusal discipline and never
-    * folds). Either side exceeding the threshold triggers one
-    * two-phase fold under the cross-process lease. */
-  private def s18MaybeFold(s: SparkSession, work: java.nio.file.Path,
-      fencedCut: Long): Unit = {
-    val max = s.conf.get("graft.stream.autoCompactMax", "2").toInt
-    if (max > 0 && (s16GenCount(work, fencedCut, "labels") > max ||
-        s18RelabelGenCount(work, fencedCut) > max))
-      DedupOps.withArtifactLease(work) {
-        s18FoldPhaseA(s, work, fencedCut)
-        s18FoldCommit(s, work, fencedCut)
-      }
-  }
-
-  /** ONE micro-batch of the s16 write-back — exposed for the spec's
-    * replay pins. Probe-then-append against the working index:
-    *  0. RESTART REPAIR: generations (buckets AND members) whose tag
-    *     exceeds the FENCED cut are a crashed attempt's leftovers — a
-    *     partial move, or a complete commit whose batch never fenced
-    *     (the crash landed between the nonce re-stamp and the fence
-    *     write). Left in place they would pollute this retry's probe
-    *     with the batch's OWN docs (within-batch twins would flag;
-    *     `dup_of` could point into the same batch). Clear them first;
-    *     the append in step 3 recreates exactly what a clean attempt
-    *     writes (`_CUT` may have run ahead of the fence — harmless:
-    *     nothing reads it between here and the commit overwriting
-    *     it). A `_FOLD` intent marker is a crash inside the
-    *     auto-compact's commit: re-run the idempotent
-    *     [[s16FoldCommit]]. Then the AUTO-COMPACT policy itself
-    *     ([[s16MaybeFold]]) bounds the fenced generation count before
-    *     the probe.
+  /** A shelf the stream maintains — everything the fenced driver
+    * needs to know about it: the relations a working copy carries and
+    * step 0 repairs (the first is the primary one the auto-compact
+    * policy thresholds on), the fold families in commit order, the
+    * flags schema the gate serves, and the per-batch absorb
+    * `(session, work, batch, flags dir, batch max id or
+    * Long.MinValue when empty)`, which probes and commits one
+    * generation under the artifact lock.
+    *
+    * The protocol, per micro-batch ([[processBatch]]):
+    *  0. RESTART REPAIR: generations above the FENCED cut in any
+    *     relation are a crashed attempt's leftovers — a partial move,
+    *     or a complete commit whose batch never fenced (the crash
+    *     landed between the nonce re-stamp and the fence write). Left
+    *     in place they would pollute this retry's probe with the
+    *     batch's OWN docs. Clear them, and REWIND `_CUT` to the fenced
+    *     cut when it ran ahead (the fence is the truth; an absorb that
+    *     filters `doc_id > cut` would otherwise skip the re-delivered
+    *     batch whose generation was just deleted). A `_FOLD` intent
+    *     marker is a crash inside the auto-compact's commit: re-run
+    *     the idempotent [[foldCommit]]. Then the auto-compact policy
+    *     itself bounds the fenced generation count before the probe.
+    *     Fold repair and policy fold delete committed generations, so
+    *     they run under the cross-process lease like every other
+    *     artifact mutation.
     *  1. REPLAY FENCE: a batch id at or below `_BATCH` already
-    *     committed fully — skip (the restart that re-delivers an
+    *     committed fully — skip (a restart that re-delivers an
     *     absorbed batch must not double-absorb it). The batch
-    *     high-watermark is also REQUIRED monotone with the fence
-    *     here: the debris rule above keys on "tag > fencedCut", so an
-    *     out-of-order source must fail loudly, not lose a committed
-    *     generation on the next repair.
-    *  2. PROBE the batch against the index AS OF the previous batch
-    *     (flags land in `flags/b<id>`, overwrite mode — a retried
-    *     half-committed batch rewrites the identical flags).
-    *  3. APPEND the batch's folded buckets through the shared
-    *     [[DedupOps.commitArtifactAppend]] (which clears the
-    *     generation first, so a retry after a crash between commit
-    *     and fence-write is exact even mid-generation), with the
-    *     batch's raw membership rows moved into `members/` INSIDE the
-    *     same commit window (`beforeReady`) — deletion's re-election
-    *     state, never committed separately from the buckets it
-    *     mirrors.
-    *  4. Advance the `_BATCH` fence LAST — batch id plus this
-    *     commit's cut, the pair step 0 needs — so the at-least-once
-    *     window is re-entered, never skipped.
-    * Steps 2-3 are per-batch Spark jobs over the micro-batch only:
-    * O(batch) banding + a bucket-relation join + an O(batch) write —
+    *     high-watermark is REQUIRED monotone with the fence: the
+    *     debris rule keys on "cut > fencedCut", so an out-of-order
+    *     source must fail loudly, not lose a committed generation on
+    *     the next repair.
+    *  2. ABSORB: the shelf probes the batch against its state as of
+    *     the previous batch, writing `flags/b<id>` (overwrite mode — a
+    *     retried half-committed batch rewrites the identical flags),
+    *     and commits the batch's generation cleared-first.
+    *  3. Advance the `_BATCH` fence LAST — batch id plus the
+    *     post-commit cut, the pair step 0 needs — so the
+    *     at-least-once window is re-entered, never skipped.
+    * Every step is a per-batch Spark job over the micro-batch only:
     * the 100 TB shape where the stream absorbs a day in batch-sized
     * pieces. */
-  private[graft] def s16ProcessBatch(s: SparkSession,
-      work: java.nio.file.Path, batch: DataFrame, batchId: Long): Unit = {
-    val (lastBatch, fencedCut) = s16Fence(work)
-    if (batchId > lastBatch) {
-      // step 0a: clear un-fenced debris in BOTH relations (a crashed
-      // attempt's buckets would pollute the probe; its members would
-      // resurrect a same-batch twin as a canon candidate)
-      Seq("buckets", "members").foreach { rel =>
-        Option(work.resolve(rel).toFile.listFiles()).foreach(
-          _.filter { f =>
-            val n = f.getName
-            n.startsWith("append-") && n.split("-")(1).toLong > fencedCut
-          }.foreach(f => { f.delete(); () }))
+  private[graft] final class StreamShelf(name: String,
+      val rels: Seq[String], families: Seq[FoldFamily],
+      val flagsSchema: StructType,
+      absorb: (SparkSession, java.nio.file.Path, DataFrame,
+        java.nio.file.Path, Long) => Unit) {
+
+    /** Copy a pristine `base` into a fresh per-invocation working
+      * index (the relations' part files + `_CUT` + the nonce) —
+      * O(index), tiny beside the stream — with the replay fence
+      * starting BEFORE any batch at `(-1, baseCut)`. */
+    def workingCopy(s: SparkSession, base: java.nio.file.Path)
+        : java.nio.file.Path = {
+      DedupOps.requireReady(base)
+      val work = Files.createTempDirectory(s"${name}_work_")
+      rels.foreach { rel =>
+        Files.createDirectories(work.resolve(rel))
+        base.resolve(rel).toFile.listFiles()
+          .filter(_.getName.endsWith(".parquet")).foreach { f =>
+            Files.copy(f.toPath, work.resolve(rel).resolve(f.getName))
+          }
+        // a copy shares its source's schema: seed the read memo so the
+        // per-rep work-dir reads plan with zero inference jobs
+        DedupOps.seedSchemaFrom(s, work.resolve(rel), base.resolve(rel))
       }
-      // step 0b: a `_FOLD` intent marker is a crash inside the fold's
-      // commit — re-run the idempotent commit (repair); the fence was
-      // never touched by the fold, so the batch replay logic is
-      // unaffected
-      // the fold repair and the policy fold DELETE committed
-      // generations — mutations a concurrent PROCESS must never see
-      // mid-flight, so they run under the cross-process lease like
-      // every other artifact mutation (the commit/takedown paths
-      // already do via commitArtifactAppend/applyTakedown)
-      if (Files.exists(work.resolve("_FOLD"))) {
-        val cut = new String(Files.readAllBytes(work.resolve("_FOLD")),
-          "UTF-8").trim.toLong
-        DedupOps.artifactLock(work).synchronized {
-          DedupOps.withArtifactLease(work) {
-            s16FoldCommit(s, work, cut)
+      Seq("_CUT", "_INDEX_READY").foreach { n =>
+        Files.copy(base.resolve(n), work.resolve(n))
+      }
+      Files.write(work.resolve("_BATCH"),
+        s"-1 ${DedupOps.cutOf(base)}".getBytes("UTF-8"))
+      work
+    }
+
+    /** The replay fence: `(last committed micro-batch id, the index cut
+      * AS OF that commit)`, one `"<batch> <cut>"` file. Carrying the
+      * fenced cut is what makes step 0's repair possible: after a
+      * crash inside a commit `_CUT` may have run ahead of the fence,
+      * so which generations belong to a batch that never fenced is
+      * answerable only from the fence's own record. */
+    private def fence(work: java.nio.file.Path): (Long, Long) = {
+      val parts = new String(Files.readAllBytes(work.resolve("_BATCH")),
+        "UTF-8").trim.split("\\s+")
+      (parts(0).toLong, parts(1).toLong)
+    }
+
+    /** ONE micro-batch — exposed for the spec's replay pins. */
+    def processBatch(s: SparkSession, work: java.nio.file.Path,
+        batch: DataFrame, batchId: Long): Unit = {
+      val (lastBatch, fencedCut) = fence(work)
+      if (batchId > lastBatch) {
+        rels.foreach { rel =>
+          Option(work.resolve(rel).toFile.listFiles()).foreach(
+            _.filter(f => Generations.isDebris(f.getName, fencedCut))
+              .foreach(f => { f.delete(); () }))
+        }
+        if (DedupOps.cutOf(work) > fencedCut)
+          Files.write(work.resolve("_CUT"),
+            fencedCut.toString.getBytes("UTF-8"))
+        if (Files.exists(work.resolve("_FOLD"))) {
+          val cut = new String(Files.readAllBytes(work.resolve("_FOLD")),
+            "UTF-8").trim.toLong
+          DedupOps.artifactLock(work).synchronized {
+            DedupOps.withArtifactLease(work) {
+              foldCommit(s, work, cut)
+            }
           }
         }
+        // the lease is taken inside, only when a fold triggers
+        DedupOps.artifactLock(work).synchronized {
+          maybeFold(s, work, fencedCut)
+        }
+        val hiRow = batch.agg(max(col("doc_id"))).head()
+        if (!hiRow.isNullAt(0))
+          require(hiRow.getLong(0) >= fencedCut,
+            s"out-of-order batch: batch $batchId max doc_id " +
+              s"${hiRow.getLong(0)} is below the fenced cut $fencedCut — " +
+              "the fence/debris protocol requires monotone batch id " +
+              "ranges (re-key debris detection per batch to lift this)")
+        absorb(s, work, batch.select(col("doc_id"), col("text")),
+          work.resolve("flags").resolve(s"b$batchId"),
+          if (hiRow.isNullAt(0)) Long.MinValue else hiRow.getLong(0))
+        Files.write(work.resolve("_BATCH"),
+          s"$batchId ${DedupOps.cutOf(work)}".getBytes("UTF-8"))
+        ()
       }
-      // step 0c: the auto-compact policy — fold FENCED generations
-      // when they exceed the threshold, before this batch probes
-      // (the lease is taken INSIDE, only when a fold triggers)
-      DedupOps.artifactLock(work).synchronized {
-        s16MaybeFold(s, work, fencedCut)
+    }
+
+    /** Run the stream over the staged tail: each tranche arrives as
+      * one micro-batch and [[processBatch]] absorbs it into `work`.
+      * Caller-chosen glob/checkpoint for the spec's restart pins. */
+    def runStream(s: SparkSession, work: java.nio.file.Path,
+        staged: java.nio.file.Path, glob: String, checkpoint: String)
+        : Unit =
+      runForeachBatchStream(s, staged, glob, checkpoint)(
+        (b, id) => processBatch(s, work, b, id))
+
+    /** The auto-compact policy: at batch start, inside the lock, over
+      * generations AT OR BELOW THE FENCED CUT only — exactly the set
+      * step 0 classifies as committed — so the crash-rewind contract
+      * is untouched. The working dir has no rebuild path, hence the
+      * two-phase intent-marker protocol whose every state re-runs
+      * ([[foldPhaseA]] / [[foldCommit]]). */
+    private def maybeFold(s: SparkSession, work: java.nio.file.Path,
+        fencedCut: Long): Unit =
+      if (families.filter(_.rel == rels.head).exists(f =>
+          Generations.count(work.resolve(f.rel), f.side, fencedCut) >
+            AutoCompactMax))
+        DedupOps.withArtifactLease(work) {
+          foldPhaseA(s, work, fencedCut)
+          foldCommit(s, work, fencedCut)
+        }
+
+    /** Phase A: materialize each family's fold over its FENCED files
+      * into its temp dir (eager parquet writes — a crash here is inert
+      * debris), then write the `_FOLD` intent marker recording the
+      * fenced cut, LAST. A family that does not fold DELETES its temp
+      * dir if present: a crash after an earlier attempt's temp write
+      * but before its marker leaves unmarked debris, and the commit
+      * must not copy a STALE temp in under the new cut (rows the old
+      * attempt folded may since have been retired — e.g. a t44Compact
+      * retired the replacement, and a stale `relabel-c` would
+      * resurrect relabel rows with `relabel_nodes` gone). Exposed so
+      * the spec can pin a crash exactly between intent and commit. */
+    def foldPhaseA(s: SparkSession, work: java.nio.file.Path,
+        fencedCut: Long): Unit = {
+      families.foreach { f =>
+        val dir = work.resolve(f.rel)
+        val tmp = work.resolve(f.rel + f.side.tmpSuffix)
+        val files = Generations.foldable(dir, f.side, fencedCut)
+        if (files.nonEmpty &&
+            Generations.count(dir, f.side, fencedCut) >= f.minGens)
+          f.fold(s.read.parquet(files.map(_.toString): _*))
+            .repartition(DedupOps.genParts(s))
+            .write.mode("overwrite").parquet(tmp.toString)
+        else DedupOps.deleteRecursively(tmp.toFile)
       }
-      // persist: the banding feeds the probe flags, the bucket fold,
-      // the membership write, and the high-watermark agg — four
-      // actions that were each re-running the MinHash kernel over the
-      // batch (the s18 absorb already persists its banding for the
-      // same reason); dropped before the fence write below
-      val bands = DedupOps.bandedSignaturesOf(
-        batch.select(col("doc_id"), col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-      // the batch high-watermark, BEFORE any mutation: step 0's debris
-      // rule keys on "tag > fencedCut", which assumes batch max ids
-      // are monotone with batch ids — an out-of-order source would
-      // make a later batch fence a LOWER cut and the next repair
-      // delete an earlier batch's committed generation as debris.
-      // The staged fixtures are monotone by construction; assert it
-      // loudly rather than lose data silently on a source that isn't.
-      val hiRow = batch.agg(max(col("doc_id"))).head()
-      if (!hiRow.isNullAt(0))
-        require(hiRow.getLong(0) >= fencedCut,
-          s"out-of-order batch: batch $batchId max doc_id " +
-            s"${hiRow.getLong(0)} is below the fenced cut $fencedCut — " +
-            "the fence/debris protocol requires monotone batch id " +
-            "ranges (re-key debris detection per batch to lift this)")
+      Files.write(work.resolve("_FOLD"),
+        fencedCut.toString.getBytes("UTF-8"))
+      ()
+    }
+
+    /** Phase B — idempotent commit, also the crash REPAIR, family by
+      * family: copy the fold in as the side's compact generation at
+      * the fenced cut (a copy keeps the temp, so a crash mid-copy
+      * re-runs), retire the folded-away sources, drop the temp, and
+      * the `_FOLD` marker LAST. Sources retire only once the fold
+      * demonstrably landed — temp present (copies just made) or
+      * temp gone with own-compact files present (a crashed commit's
+      * copies) — so a family that never folded keeps its files. Every
+      * intermediate state is readable: compacted rows coexisting with
+      * their sources double only under idempotent merges (min for
+      * buckets/labels; members feed a min re-election), the property
+      * that makes copy-then-delete safe on state with NO rebuild
+      * path. */
+    def foldCommit(s: SparkSession, work: java.nio.file.Path,
+        fencedCut: Long): Unit = {
+      families.foreach { f =>
+        val dst = work.resolve(f.rel)
+        val tmp = work.resolve(f.rel + f.side.tmpSuffix)
+        val own = Generations.prefix(f.side.compact, fencedCut)
+        Generations.install(tmp, dst, own, copy = true)
+        if (Files.exists(tmp) || Option(dst.toFile.listFiles()).toSeq
+            .flatten.exists(_.getName.startsWith(own)))
+          Generations.foldable(dst, f.side, fencedCut)
+            .foreach(p => { p.toFile.delete(); () })
+        DedupOps.deleteRecursively(tmp.toFile)
+      }
+      Files.deleteIfExists(work.resolve("_FOLD"))
+      ()
+    }
+  }
+
+  /** The band shelf's absorb (s16/s17): probe the batch's bands
+    * against [[s16AliveBuckets]] into the flags, then append the
+    * batch's folded buckets through the shared
+    * [[DedupOps.commitArtifactAppend]], with its raw membership rows
+    * moved into `members/` INSIDE the same commit window
+    * (`beforeReady`) — deletion's re-election state, never committed
+    * apart from the buckets it mirrors. The banding is persisted: it
+    * feeds the probe, the bucket fold and the membership write. */
+  private def bandAbsorb(s: SparkSession, work: java.nio.file.Path,
+      batch: DataFrame, flags: java.nio.file.Path, hi: Long): Unit = {
+    val bands = DedupOps.bandedSignaturesOf(batch)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
       // the probe (flags) and append (buckets/members temp) writes are
       // mutually independent — the probe reads the index AS OF the
       // previous batch and the appends land in temp dirs until the
@@ -1220,97 +1037,102 @@ object StreamingOps {
           .groupBy(col("doc_id"))
           .agg(min(col("band")).as("band"), min(col("canon")).as("dup_of"))
           .repartition(DedupOps.genParts(s))
-          .write.mode("overwrite")
-          .parquet(work.resolve("flags").resolve(s"b$batchId").toString)
-      val newCut =
-        if (hiRow.isNullAt(0)) { probeWrite(); fencedCut }
-        else {
-          val c = hiRow.getLong(0)
-          val tmp = work.resolve("buckets_append")
-          val tmpM = work.resolve("members_append")
-          DedupOps.parallelWrites(Seq(
-            probeWrite,
-            () => bands.groupBy(col("band"), col("sig"))
-              .agg(min(col("doc_id")).as("canon"))
-              .repartition(DedupOps.genParts(s))
-              .write.mode("overwrite").parquet(tmp.toString),
-            // the membership rows the append already has in hand — the
-            // state full-fidelity re-election needs (see
-            // [[s16AliveBuckets]]); moved in INSIDE the same commit
-            // window so no reachable state holds buckets without members
-            () => bands.select(col("band"), col("sig"), col("doc_id"))
-              .repartition(DedupOps.genParts(s))
-              .write.mode("overwrite").parquet(tmpM.toString)))
-          DedupOps.artifactLock(work).synchronized {
-            DedupOps.commitArtifactAppend(work, tmp, c,
-              beforeReady = () => {
-                val dst = work.resolve("members")
-                Files.createDirectories(dst)
-                Option(dst.toFile.listFiles()).foreach(
-                  _.filter(_.getName.startsWith(f"append-$c%d-"))
-                    .foreach(f => { f.delete(); () }))
-                tmpM.toFile.listFiles()
-                  .filter(f => f.getName.startsWith("part-") &&
-                    f.getName.endsWith(".parquet"))
-                  .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-                    Files.move(f.toPath,
-                      dst.resolve(f"append-$c%d-$i%03d.parquet"),
-                      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-                  }
-                DedupOps.deleteRecursively(tmpM.toFile)
-              })
-          }
-          c
+          .write.mode("overwrite").parquet(flags.toString)
+      if (hi == Long.MinValue) probeWrite()
+      else {
+        val tmp = work.resolve("buckets_append")
+        val tmpM = work.resolve("members_append")
+        DedupOps.parallelWrites(Seq(
+          probeWrite,
+          () => bands.groupBy(col("band"), col("sig"))
+            .agg(min(col("doc_id")).as("canon"))
+            .repartition(DedupOps.genParts(s))
+            .write.mode("overwrite").parquet(tmp.toString),
+          () => bands.select(col("band"), col("sig"), col("doc_id"))
+            .repartition(DedupOps.genParts(s))
+            .write.mode("overwrite").parquet(tmpM.toString)))
+        DedupOps.artifactLock(work).synchronized {
+          DedupOps.commitArtifactAppend(work, tmp, hi,
+            beforeReady = () => Generations.install(tmpM,
+              work.resolve("members"), Generations.prefix("append", hi)))
         }
-      Files.write(work.resolve("_BATCH"),
-        s"$batchId $newCut".getBytes("UTF-8"))
-      } finally bands.unpersist(blocking = true)
-      ()
-    }
+      }
+    } finally bands.unpersist(blocking = true)
   }
 
-  /** Run the s16 stream: the staged tail tranches arrive one
-    * micro-batch each (`maxFilesPerTrigger = 1`, AvailableNow) and
-    * [[s16ProcessBatch]] folds every batch into the working index.
-    * Exposed with caller-chosen glob/checkpoint for the spec's
-    * restart pin. */
-  private[graft] def s16RunStream(s: SparkSession,
-      work: java.nio.file.Path, staged: java.nio.file.Path,
-      glob: String, checkpoint: String): Unit =
-    runForeachBatchStream(s, staged, glob, checkpoint)(
-      (b, id) => s16ProcessBatch(s, work, b, id))
+  private val minLabel: DataFrame => DataFrame =
+    _.groupBy(col("node")).agg(min(col("label")).as("label"))
 
-  /** The shared foreachBatch harness over the staged tranche fixture
-    * (one file per micro-batch, AvailableNow) — s16's write-back and
-    * s18's cluster maintenance differ only in the processor. */
+  /** The band shelf: `buckets` min-fold per (band, sig), `members`
+    * concatenate (no fold semantics — fewer generations to list and
+    * read; tombstones untouched). */
+  private[graft] val band = new StreamShelf("s16", Seq("buckets", "members"),
+    Seq(
+      FoldFamily("buckets", Generations.Plain,
+        _.groupBy(col("band"), col("sig")).agg(min(col("canon")).as("canon"))),
+      FoldFamily("members", Generations.Plain, identity)),
+    StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("band", IntegerType, nullable = true),
+      StructField("dup_of", LongType, nullable = true))),
+    bandAbsorb)
+
+  /** The cluster shelf (s18-s20): the absorb is t42's merge-graph
+    * [[DedupOps.t42AbsorbDelta]] — it converges the batch's merge
+    * graph, writes the batch docs' cluster assignments AT ABSORB TIME
+    * to the flags BEFORE its commit, and commits cleared-first and
+    * `_CUT`-conditional; `knownHi` spares it a second max agg. The
+    * fold bounds both growing sides of `labels`: the replacement side
+    * first (post-forget absorbs' `relabel-a` lowerings min-fold per
+    * node into one `relabel-c` — replacement rows all key on
+    * `relabel_nodes`, so folding a subset commutes with the
+    * prefer-replacement read), then the plain side (labels only ever
+    * decrease under appends, and the read's anti-join against
+    * `relabel_nodes` commutes with the per-node min), then `members`
+    * concatenated. `relabel-f` and `relabel_nodes` stay untouched. */
+  private[graft] val cluster = new StreamShelf("s18", Seq("labels", "members"),
+    Seq(
+      FoldFamily("labels", Generations.Replacement, minLabel, minGens = 2),
+      FoldFamily("labels", Generations.Plain, minLabel),
+      FoldFamily("members", Generations.Plain, identity)),
+    StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("cluster_id", LongType, nullable = true))),
+    (s, work, batch, flags, hi) => DedupOps.artifactLock(work).synchronized {
+      DedupOps.t42AbsorbDelta(s, work, batch, flags = flags,
+        knownHi = Some(hi))
+      ()
+    })
+
+  private[graft] def s16WorkingCopy(s: SparkSession, dir: String)
+      : java.nio.file.Path =
+    band.workingCopy(s, s16BuildBase(s, dir))
+
+  /** The cluster shelf's working copy of t42's build at the s16
+    * midpoint split; `fam` keys the pristine base per GATE, so no two
+    * gates share a mutable artifact (order-independence). */
+  private[graft] def s18WorkingCopy(s: SparkSession, dir: String,
+      fam: String = "s18", withTs: Boolean = false): java.nio.file.Path =
+    cluster.workingCopy(s, DedupOps.buildT42Index(s, dir, fam, withTs))
+
   /** Pins the micro-batch maintenance conf around a block and
     * restores it in finally: the stream's fixed partition count
-    * (default 8 — batch-sized relations keep executors busy without
-    * 4× the commit I/O) AND adaptive execution OFF. AQE materializes
-    * every exchange as its own scheduled query-stage job — measured
-    * ~13 jobs for the merge-graph probe's one count() at 8
-    * partitions, pure fixed overhead on plans whose relations are
-    * micro-batch-sized and give the re-planner nothing to decide.
+    * ([[StatePartitions]] — batch-sized relations keep executors busy
+    * without 4× the commit I/O) AND adaptive execution OFF. AQE
+    * materializes every exchange as its own scheduled query-stage
+    * job — measured ~13 jobs for the merge-graph probe's one count()
+    * at 8 partitions, pure fixed overhead on plans whose relations
+    * are micro-batch-sized and give the re-planner nothing to decide.
     * The batch gates keep AQE (fleet-scale joins want the runtime
     * re-plan); this scope is exactly the one that already pins the
     * partition count for the same reason. Scoped to the foreachBatch
-    * streams and the mid-stream forgets (s19/s20); the stateful
+    * streams and the mid-stream forgets (s17/s19/s20); the stateful
     * sinks need no AQE handling — the engine disables it there
     * itself. */
-  private val microBatchConfLock = new Object
-
   private[graft] def withMicroBatchConf[T](s: SparkSession)(f: => T): T =
-    // the save/set/restore mutates SESSION-global conf; two
-    // overlapping scopes on a shared session would interleave their
-    // restores and strand the session at 8 partitions with AQE off
-    // for every later fleet-scale gate. The JVM monitor is reentrant,
-    // so an (accidental) nested scope degrades to a no-op wrapper
     microBatchConfLock.synchronized {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.get("graft.stream.statePartitions", "8"))
+      s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
       s.conf.set("spark.sql.adaptive.enabled", "false")
       f
     } finally {
@@ -1319,19 +1141,24 @@ object StreamingOps {
     }
     }
 
-  // staged tranche fixtures are immutable once written (fingerprint-
-  // named staging dirs), so the stream source's schema is a constant
-  // per staged path — memoized to spare the footer-inference job each
-  // of the two AvailableNow starts per gate rep pays
-  private val stagedSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path,
-      org.apache.spark.sql.types.StructType]
+  /** The save/set/restore above mutates SESSION-global conf; two
+    * overlapping scopes on a shared session would interleave their
+    * restores and strand the session at 8 partitions with AQE off
+    * for every later fleet-scale gate. The JVM monitor is reentrant,
+    * so an (accidental) nested scope degrades to a no-op wrapper. */
+  private val microBatchConfLock = new Object
 
+  /** The shared foreachBatch harness over the staged tranche fixture
+    * (one file per micro-batch, AvailableNow) — the shelves differ
+    * only in the processor. The staged tranches are immutable once
+    * written (fingerprint-named dirs), so the source schema comes
+    * through [[DedupOps.readStable]]'s path memo: one footer job for
+    * the first start, none after. */
   private def runForeachBatchStream(s: SparkSession,
       staged: java.nio.file.Path, glob: String, checkpoint: String)(
       process: (DataFrame, Long) => Unit): Unit = {
-    val schema = stagedSchemaMemo.computeIfAbsent(staged, p =>
-      s.read.parquet(p.resolve("t-000.parquet").toString).schema)
+    val schema = DedupOps.readStable(s,
+      staged.resolve("t-000.parquet").toString).schema
     withMicroBatchConf(s) {
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", glob)
@@ -1346,6 +1173,76 @@ object StreamingOps {
     }
   }
 
+  /** One stream gate (s16-s20): a shelf, the pristine base its
+    * working copy starts from, and an optional retention advance that
+    * lands BETWEEN micro-batches. `advance` runs on the fresh working
+    * copy BEFORE any batch (a horizon derived from the index must not
+    * see `_CUT` move) and returns the advance itself. `lastWork` holds
+    * the gate's previous working dir. */
+  private[graft] final class Gate(val shelf: StreamShelf,
+      val base: (SparkSession, String) => java.nio.file.Path,
+      val advance: Option[(SparkSession, java.nio.file.Path) => () => Unit] =
+        None) {
+    val lastWork =
+      new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
+  }
+
+  /** Serializes whole gate invocations in this JVM: without it, two
+    * concurrent callers (a bench rep overlapping a test) could race
+    * `lastWork` and delete a working directory out from under the
+    * other's in-flight stream — the same cross-fixture hazard the s10
+    * sweep comment documents. The previous invocation's directory is
+    * retired only AFTER the new run completes (not before it starts),
+    * so under the lock no in-flight stream can own the dir being
+    * deleted; the last invocation's dir survives the process — by
+    * design, since the returned DataFrame reads it lazily (the
+    * lastSink idiom). */
+  private val gateLock = new Object
+
+  /** Run a gate: every invocation pays the full machinery on a fresh
+    * working copy of the pristine base — the per-batch absorb IS the
+    * thing measured, like s10's restart. Without an advance the three
+    * tranches stream in one run; with one, tranche 1 streams, the
+    * advance lands under the micro-batch conf (its relations are
+    * micro-batch-sized: no win from 32 ways or AQE's per-stage jobs),
+    * and the stream resumes from the same checkpoint with the widened
+    * glob admitting tranches 2-3 (already-seen files skip — the
+    * restart-fixture idiom). The advance never touches the `_BATCH`
+    * fence or `_CUT`: a policy advance is not a batch. Serves the
+    * flags every batch emitted. */
+  private def runGate(s: SparkSession, dir: String, g: Gate): DataFrame =
+    gateLock.synchronized {
+      val staged = stageS16Tail(s, dir)
+      val work = g.shelf.workingCopy(s, g.base(s, dir))
+      val ck = work.resolve("ckpt").toString
+      g.advance match {
+        case None => g.shelf.runStream(s, work, staged, "t-*.parquet", ck)
+        case Some(prepare) =>
+          val advance = prepare(s, work)
+          g.shelf.runStream(s, work, staged, "t-000.parquet", ck)
+          withMicroBatchConf(s)(advance())
+          g.shelf.runStream(s, work, staged, "t-*.parquet", ck)
+      }
+      val old = g.lastWork.getAndSet(work)
+      if (old != null && old != work) DedupOps.deleteRecursively(old.toFile)
+      s.read.schema(g.shelf.flagsSchema)
+        .parquet(work.resolve("flags").toString + "/b*")
+        .orderBy(col("doc_id"))
+    }
+
+  /** An id-span retention advance: the horizon is the midpoint of the
+    * index's own span below the base cut (one O(index) members min,
+    * no corpus scan), captured before any batch advances `_CUT`. */
+  private def idSpanAdvance(
+      forget: (SparkSession, java.nio.file.Path, Long) => Unit)
+      : (SparkSession, java.nio.file.Path) => () => Unit = (s, work) => {
+    val mid = DedupOps.cutOf(work)
+    val lo = DedupOps.readStable(s, work.resolve("members").toString)
+      .agg(min(col("doc_id"))).head().getLong(0)
+    val h = lo + (mid - lo) / 2
+    () => forget(s, work, h)
+  }
+
   /** s16: STREAMING WRITE-BACK — the last loop closed. s14 streams
     * against a frozen index; s15 streams against an index someone
     * ELSE maintained; s16's stream maintains the index ITSELF: each
@@ -1357,245 +1254,47 @@ object StreamingOps {
     * delivery: the `_BATCH` fence (advanced after the commit) skips
     * re-delivered absorbed batches, and a retry inside the window is
     * exact because flags overwrite and the append clears its
-    * generation first ([[s16ProcessBatch]]; restart pinned in
-    * StreamingGateSpec). Every invocation pays the full machinery on
-    * a fresh working copy of the pristine base — the per-batch
-    * absorb-then-probe IS the thing measured, like s10's restart.
-    * The oracle reproduces the batch boundaries as integer id cuts:
-    * tranche j's docs flag against docs at or below tranche j−1's
-    * cut — a flag row for a tranche-3 doc whose only twin sits in
-    * tranche 2 exists ONLY if batch 2's write-back served batch 3's
-    * probe. */
-  // serializes whole s16 invocations in this JVM: without it, two
-  // concurrent callers (a bench rep overlapping a test) could race
-  // getAndSet and delete a working directory out from under the
-  // other's in-flight stream — the same cross-fixture hazard the s10
-  // sweep comment documents. The previous invocation's directory is
-  // retired only AFTER the new run completes (not before it starts),
-  // so under the lock no in-flight stream can own the dir being
-  // deleted; the last invocation's dir survives the process — by
-  // design, since the returned DataFrame reads it lazily (the
-  // lastSink idiom).
+    * generation first ([[StreamShelf]]; restart pinned in
+    * StreamingGateSpec). The oracle reproduces the batch boundaries
+    * as integer id cuts: tranche j's docs flag against docs at or
+    * below tranche j−1's cut — a flag row for a tranche-3 doc whose
+    * only twin sits in tranche 2 exists ONLY if batch 2's write-back
+    * served batch 3's probe. */
+  private val s16Gate = new Gate(band, s16BuildBase)
 
-  /** The flags relations' fixed schemas, declared on the serve read so
-    * the per-rep scan plans without a footer-inference job (the work
-    * dir is per-invocation, so [[DedupOps.readStable]]'s path memo
-    * cannot amortize it). Written by this file alone. */
-  private val s16FlagsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType, nullable = true),
-    org.apache.spark.sql.types.StructField("dup_of",
-      org.apache.spark.sql.types.LongType, nullable = true)))
-
-  private val s18FlagsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("cluster_id",
-      org.apache.spark.sql.types.LongType, nullable = true)))
-
-  private val s16EntryLock = new Object
+  private[graft] def lastS16Work = s16Gate.lastWork
 
   def streamedIndexWriteback(s: SparkSession, dir: String): DataFrame =
-    s16EntryLock.synchronized {
-      val staged = stageS16Tail(s, dir)
-      val work = s16WorkingCopy(s, dir)
-      s16RunStream(s, work, staged, "t-*.parquet",
-        work.resolve("ckpt").toString)
-      val old = lastS16Work.getAndSet(work)
-      if (old != null && old != work) DedupOps.deleteRecursively(old.toFile)
-      s.read.schema(s16FlagsSchema)
-        .parquet(work.resolve("flags").toString + "/b*")
-        .orderBy(col("doc_id"))
-    }
-
-  // ------------- s17: RETENTION between micro-batches — the policy ×
-  // streaming composition cell (s16 closed takedown × stream and
-  // compaction × stream; this closes age-off × stream)
-
-  private val s17EntryLock = new Object
-  private[graft] val lastS17Work =
-    new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
+    runGate(s, dir, s16Gate)
 
   /** s17: retention age-off ON THE STREAMED LIVING INDEX — the
     * scheduler's nightly TTL advance landing BETWEEN micro-batches
-    * while the stream keeps absorbing. Tranche 1 arrives and is
-    * absorbed against the pristine base (s16's machinery verbatim —
-    * same fence, same commit, same crash story); then the policy
-    * horizon advances through the SHARED [[DedupOps.ageOffMembers]]
-    * verb (per-horizon marker, `delete-h*` tombstone generation via
-    * [[DedupOps.applyTakedown]] — the `_BATCH` fence is untouched
-    * because a policy advance is not a batch, s16Takedown's rule),
-    * expiring the older half of the BASE span; then the stream
-    * resumes (same checkpoint, widened glob — the restart-fixture
-    * idiom) and tranches 2-3 probe [[s16AliveBuckets]]: every
-    * candidate canon is a SURVIVOR, re-election included (a bucket
-    * whose canon expired serves its next-min alive member), while
-    * tranche 1's already-emitted flags stand — emitted flags are
-    * immutable facts about probe time; retention changes what the
-    * index SERVES, never history. The horizon derives from the
-    * index's own id bounds (v22's rule — one O(index) members min,
-    * no corpus scan), and the expired docs' text never rejoins any
-    * plan. s16's auto-fold composes untouched: a fold with
-    * tombstones present min-folds the bucket generations (dead
-    * canons included — harmless, the tombstoned probe path reads
-    * members) and concatenates members with tombstones intact. At
-    * 100 TB this is exactly the deployment shape: retention runs as
-    * a maintenance job against the same artifact the 24/7 ingest
-    * stream maintains, serialized by the artifact lease, O(expired)
-    * per advance. Oracle: s16's tranche-cut rule with post-age-off
-    * probes restricted to surviving canons. */
+    * while the stream keeps absorbing (the policy × streaming
+    * composition cell). Tranche 1 absorbs against the pristine base;
+    * then the policy horizon advances through the SHARED
+    * [[DedupOps.ageOffMembers]] verb (per-horizon marker, `delete-h*`
+    * tombstone generation via [[DedupOps.applyTakedown]]), expiring
+    * the older half of the BASE span; then tranches 2-3 probe
+    * [[s16AliveBuckets]]: every candidate canon is a SURVIVOR,
+    * re-election included (a bucket whose canon expired serves its
+    * next-min alive member), while tranche 1's already-emitted flags
+    * stand — emitted flags are immutable facts about probe time;
+    * retention changes what the index SERVES, never history. The
+    * expired docs' text never rejoins any plan. The auto-fold
+    * composes untouched: a fold with tombstones present min-folds the
+    * bucket generations (dead canons included — harmless, the
+    * tombstoned probe path reads members) and concatenates members
+    * with tombstones intact. At 100 TB this is exactly the deployment
+    * shape: retention runs as a maintenance job against the same
+    * artifact the 24/7 ingest stream maintains, serialized by the
+    * artifact lease, O(expired) per advance. Oracle: s16's
+    * tranche-cut rule with post-age-off probes restricted to
+    * surviving canons. */
+  private[graft] val s17Gate = new Gate(band, s16BuildBase,
+    Some(idSpanAdvance((s, work, h) => DedupOps.ageOffMembers(s, work, h))))
+
   def streamedRetention(s: SparkSession, dir: String): DataFrame =
-    s17EntryLock.synchronized {
-      val staged = stageS16Tail(s, dir)
-      val work = s16WorkingCopy(s, dir)
-      val ck = work.resolve("ckpt").toString
-      // the base cut and the index-derived policy horizon, captured
-      // BEFORE any batch advances _CUT
-      val mid = DedupOps.cutOf(work)
-      val lo = DedupOps.readStable(s, work.resolve("members").toString)
-        .agg(min(col("doc_id"))).head().getLong(0)
-      val h = lo + (mid - lo) / 2
-      // segment 1: tranche 1 absorbed against the pristine base
-      s16RunStream(s, work, staged, "t-000.parquet", ck)
-      // the retention advance, between batches, under the micro-batch
-      // conf (index-sized tombstone write — no win from 32 ways/AQE)
-      withMicroBatchConf(s) {
-        DedupOps.ageOffMembers(s, work, h)
-      }
-      // segment 2: the stream resumes from the same checkpoint; the
-      // widened glob admits tranches 2-3 (already-seen files skip)
-      s16RunStream(s, work, staged, "t-*.parquet", ck)
-      val old = lastS17Work.getAndSet(work)
-      if (old != null && old != work) DedupOps.deleteRecursively(old.toFile)
-      s.read.schema(s16FlagsSchema)
-        .parquet(work.resolve("flags").toString + "/b*")
-        .orderBy(col("doc_id"))
-    }
-
-  // ------------- s18: the stream MAINTAINS the CLUSTER index — s16's
-  // fence machinery composed with t42's merge-graph absorb (the
-  // highest-order streamed state: not buckets, whole components)
-
-  private val s18EntryLock = new Object
-  private[graft] val lastS18Work =
-    new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
-
-  /** Per-invocation working copy of the s18 cluster base (t42's build
-    * at the s16 midpoint split, own family so no gate shares a
-    * mutable artifact), plus the `(-1, baseCut)` replay fence. `fam`
-    * keys the pristine base per GATE (s18 maintenance / s19
-    * retention) — order-independence again. */
-  private[graft] def s18WorkingCopy(s: SparkSession, dir: String,
-      fam: String = "s18", withTs: Boolean = false): java.nio.file.Path = {
-    val base = DedupOps.buildT42Index(s, dir, fam, withTs)
-    DedupOps.requireReady(base)
-    val work = Files.createTempDirectory("s18_work_")
-    Seq("labels", "members").foreach { rel =>
-      Files.createDirectories(work.resolve(rel))
-      base.resolve(rel).toFile.listFiles()
-        .filter(_.getName.endsWith(".parquet")).foreach { f =>
-          Files.copy(f.toPath, work.resolve(rel).resolve(f.getName))
-        }
-      // a copy shares its source's schema: seed the read memo so the
-      // per-rep work-dir reads plan with zero inference jobs
-      DedupOps.seedSchemaFrom(s, work.resolve(rel), base.resolve(rel))
-    }
-    Seq("_CUT", "_INDEX_READY").foreach { n =>
-      Files.copy(base.resolve(n), work.resolve(n))
-    }
-    Files.write(work.resolve("_BATCH"),
-      s"-1 ${DedupOps.cutOf(base)}".getBytes("UTF-8"))
-    work
-  }
-
-  /** ONE micro-batch of the s18 cluster maintenance — s16's protocol
-    * with the absorb swapped:
-    *  0. RESTART REPAIR: un-fenced `append-*` generations in labels
-    *     AND members are a crashed attempt's debris — clear them, and
-    *     REWIND `_CUT` to the fenced cut when it ran ahead (the fence
-    *     is the truth; a `_CUT` past it belongs to a commit that
-    *     never fenced, and the absorb's own `doc_id > cut` replay
-    *     filter would otherwise silently skip the re-delivered
-    *     batch whose generation step 0 just deleted).
-    *  1. REPLAY FENCE + the monotone assert (s16's rule verbatim).
-    *  2-3. PROBE + ABSORB are ONE call — [[DedupOps.t42AbsorbDelta]]
-    *     converges the batch's merge graph, writes the batch docs'
-    *     cluster assignments AT ABSORB TIME to `flags/b<id>` BEFORE
-    *     the commit (a retry rewrites them identically), and commits
-    *     the generation (cleared-first, `_CUT`-conditional).
-    *  4. Fence LAST, carrying the post-commit cut. */
-  private[graft] def s18ProcessBatch(s: SparkSession,
-      work: java.nio.file.Path, batch: DataFrame, batchId: Long): Unit = {
-    val parts = new String(Files.readAllBytes(work.resolve("_BATCH")),
-      "UTF-8").trim.split("\\s+")
-    val (lastBatch, fencedCut) = (parts(0).toLong, parts(1).toLong)
-    if (batchId > lastBatch) {
-      // debris: a crashed commit's own generation — `append-<tag>` in
-      // both relations, plus the `relabel-a<tag>` labels a post-forget
-      // absorb folds into an active replacement (s19's retention
-      // composition): leftovers above the fence would pollute the
-      // re-absorb's current-labels read exactly like a bucket would
-      Seq("labels", "members").foreach { rel =>
-        Option(work.resolve(rel).toFile.listFiles()).foreach(
-          _.filter { f =>
-            val n = f.getName
-            (n.startsWith("append-") &&
-              n.split("-")(1).toLong > fencedCut) ||
-            (n.startsWith("relabel-a") &&
-              n.stripPrefix("relabel-a").split("-")(0).toLong > fencedCut)
-          }.foreach(f => { f.delete(); () }))
-      }
-      if (DedupOps.cutOf(work) > fencedCut)
-        Files.write(work.resolve("_CUT"),
-          fencedCut.toString.getBytes("UTF-8"))
-      // a `_FOLD` intent marker is a crash inside the auto-compact's
-      // commit — re-run the idempotent repair (s16's step 0b), then
-      // the policy itself bounds the fenced generation count
-      // fold repair + policy fold under the cross-process lease
-      // (they delete committed generations — s16's rule; the policy
-      // fold takes the lease inside, only when a fold triggers)
-      if (Files.exists(work.resolve("_FOLD"))) {
-        val cut = new String(Files.readAllBytes(work.resolve("_FOLD")),
-          "UTF-8").trim.toLong
-        DedupOps.artifactLock(work).synchronized {
-          DedupOps.withArtifactLease(work) {
-            s18FoldCommit(s, work, cut)
-          }
-        }
-      }
-      DedupOps.artifactLock(work).synchronized {
-        s18MaybeFold(s, work, fencedCut)
-      }
-      val hiRow = batch.agg(max(col("doc_id"))).head()
-      if (!hiRow.isNullAt(0))
-        require(hiRow.getLong(0) >= fencedCut,
-          s"out-of-order batch: batch $batchId max doc_id " +
-            s"${hiRow.getLong(0)} is below the fenced cut $fencedCut — " +
-            "the fence/debris protocol requires monotone batch id ranges")
-      DedupOps.artifactLock(work).synchronized {
-        // knownHi: the monotone assert just computed the batch max —
-        // the absorb's own identical agg is one redundant fixed-cost
-        // job per micro-batch (Long.MinValue = empty batch, which the
-        // absorb maps to its no-op path exactly like its own agg did)
-        DedupOps.t42AbsorbDelta(s, work,
-          batch.select(col("doc_id"), col("text")),
-          flags = work.resolve("flags").resolve(s"b$batchId"),
-          knownHi = Some(if (hiRow.isNullAt(0)) Long.MinValue
-                         else hiRow.getLong(0)))
-      }
-      Files.write(work.resolve("_BATCH"),
-        s"$batchId ${DedupOps.cutOf(work)}".getBytes("UTF-8"))
-      ()
-    }
-  }
-
-  private[graft] def s18RunStream(s: SparkSession,
-      work: java.nio.file.Path, staged: java.nio.file.Path,
-      glob: String, checkpoint: String): Unit =
-    runForeachBatchStream(s, staged, glob, checkpoint)(
-      (b, id) => s18ProcessBatch(s, work, b, id))
+    runGate(s, dir, s17Gate)
 
   /** s18: STREAMED CLUSTER MAINTENANCE — the stream maintains whole
     * COMPONENTS, not just buckets: each micro-batch converges its
@@ -1613,101 +1312,41 @@ object StreamingOps {
     * immutable facts about absorb time — a later batch may merge a
     * doc's cluster downward, and the oracle reproduces exactly that:
     * tranche j's docs label under the CC over docs at or below
-    * tranche j's cut, three closures, never revised.
-    *
-    * Generation growth is BOUNDED: s16's fenced fold-at-batch-start
-    * transfers ([[s18MaybeFold]] — labels min-fold per node, members
-    * concat, two-phase `_FOLD` intent with restart-mid-fold repair),
-    * so the working labels dir holds at most `autoCompactMax` served
-    * generations forever instead of one per batch. `relabel-*`
-    * replacement files never fold (an active retention forget keeps
-    * its prefer-replacement read byte-exact) and are retired by
-    * compaction, bounded at one active replacement by t43's refusal
-    * discipline. */
+    * tranche j's cut, three closures, never revised. Generation growth
+    * is BOUNDED by the fenced fold on both sides of `labels`;
+    * `relabel-f` replacement files never fold (an active retention
+    * forget keeps its prefer-replacement read byte-exact) and are
+    * retired by compaction, bounded at one active replacement by
+    * t43's refusal discipline. */
+  private[graft] val s18Gate = new Gate(cluster,
+    (s, dir) => DedupOps.buildT42Index(s, dir, "s18", false))
+
   def streamedClusterMaintenance(s: SparkSession, dir: String)
-      : DataFrame = s18EntryLock.synchronized {
-    val staged = stageS16Tail(s, dir)
-    val work = s18WorkingCopy(s, dir)
-    s18RunStream(s, work, staged, "t-*.parquet",
-      work.resolve("ckpt").toString)
-    val old = lastS18Work.getAndSet(work)
-    if (old != null && old != work) DedupOps.deleteRecursively(old.toFile)
-    s.read.schema(s18FlagsSchema)
-      .parquet(work.resolve("flags").toString + "/b*")
-      .orderBy(col("doc_id"))
-  }
+      : DataFrame = runGate(s, dir, s18Gate)
 
-  // ------------- s19: RETENTION between CLUSTER-stream batches — the
-  // s17 row on the s18 column, the last policy × streaming cell
-
-  private val s19EntryLock = new Object
-  private[graft] val lastS19Work =
-    new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
-
-  /** s19: retention age-off ON THE STREAMED CLUSTER INDEX — the
-    * horizon advance landing BETWEEN s18's micro-batches. Tranche 1
-    * absorbs against the pristine base (s18's machinery verbatim);
-    * then the policy horizon advances through the CLUSTER shelf's
-    * retention verb ([[DedupOps.t45AgeOff]] — NOT the membership
-    * shelves' plain tombstone, because expiry can SPLIT a component
-    * and RAISE labels: the expired docs tombstone in `members` and
-    * the affected components re-derive over the survivors into a
-    * `relabel-*` replacement, t43's machinery; the `_BATCH` fence and
-    * `_CUT` are untouched — a policy advance is not a batch); then
-    * the stream resumes (same checkpoint, widened glob) and tranches
-    * 2-3 absorb against the SURVIVING state: their merge graphs probe
-    * [[DedupOps.aliveMembers]] (an expired bucket-mate never edges)
-    * and the replacement-aware current labels (a raised label serves
-    * raised), while tranche 1's emitted assignments STAND — immutable
-    * facts about absorb time; retention changes what the index
-    * serves, never history. s18's fenced auto-fold composes UNTOUCHED
-    * across the advance: the fold min-folds plain generations only,
-    * which commutes with the replacement's anti-join, so batch 3's
+  /** s19: retention age-off ON THE STREAMED CLUSTER INDEX — the s17
+    * row on the s18 column. The horizon advances through the CLUSTER
+    * shelf's retention verb ([[DedupOps.t45AgeOff]] — NOT the
+    * membership shelves' plain tombstone, because expiry can SPLIT a
+    * component and RAISE labels: the expired docs tombstone in
+    * `members` and the affected components re-derive over the
+    * survivors into a `relabel-*` replacement, t43's machinery). Later
+    * batches absorb against the SURVIVING state: their merge graphs
+    * probe [[DedupOps.aliveMembers]] (an expired bucket-mate never
+    * edges) and the replacement-aware current labels (a raised label
+    * serves raised), while tranche 1's emitted assignments STAND. The
+    * fenced fold composes untouched across the advance, so batch 3's
     * fold-at-start runs with the active replacement in place — the
-    * exact fold × forget interaction the r18 scoping called out,
-    * exercised by this gate every run. The horizon derives from the
-    * index's own members bounds (s17's rule — no corpus scan).
+    * fold × forget interaction exercised by this gate every run.
     * Oracle: s18's three materialized closures with the post-advance
     * states restricted to survivors (docs above h). */
+  private[graft] val s19Gate = new Gate(cluster,
+    (s, dir) => DedupOps.buildT42Index(s, dir, "s19", false),
+    Some(idSpanAdvance((s, work, h) =>
+      DedupOps.t45AgeOff(s, work, h, tsCol = "doc_id"))))
+
   def streamedClusterRetention(s: SparkSession, dir: String): DataFrame =
-    s19EntryLock.synchronized {
-      val staged = stageS16Tail(s, dir)
-      val work = s18WorkingCopy(s, dir, "s19")
-      val ck = work.resolve("ckpt").toString
-      // base cut and the index-derived policy horizon, captured
-      // BEFORE any batch advances _CUT
-      val mid = DedupOps.cutOf(work)
-      val lo = DedupOps.readStable(s, work.resolve("members").toString)
-        .agg(min(col("doc_id"))).head().getLong(0)
-      val h = lo + (mid - lo) / 2
-      // segment 1: tranche 1 absorbed against the pristine base
-      s18RunStream(s, work, staged, "t-000.parquet", ck)
-      // the retention advance, between batches (id-span horizon — the
-      // event-time form is s20's gate; the streamed composition is
-      // what this one pins). The forget runs under the micro-batch
-      // conf: its relations are micro-batch-sized (expired ids,
-      // affected components), so 32-way exchanges and AQE's
-      // per-stage jobs pay scheduling overhead for zero win
-      withMicroBatchConf(s) {
-        DedupOps.t45AgeOff(s, work, h, tsCol = "doc_id")
-      }
-      // segment 2: the stream resumes from the same checkpoint
-      s18RunStream(s, work, staged, "t-*.parquet", ck)
-      val old = lastS19Work.getAndSet(work)
-      if (old != null && old != work)
-        DedupOps.deleteRecursively(old.toFile)
-      s.read.schema(s18FlagsSchema)
-        .parquet(work.resolve("flags").toString + "/b*")
-        .orderBy(col("doc_id"))
-    }
-
-  // ------------- s20: EVENT-TIME retention on the cluster stream —
-  // s19's composition with t41's horizon form, the remaining
-  // policy-shape × streaming cell
-
-  private val s20EntryLock = new Object
-  private[graft] val lastS20Work =
-    new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
+    runGate(s, dir, s19Gate)
 
   /** s20: s19's mid-stream retention advance with the horizon in
     * EVENT TIME over the members relation's own persisted
@@ -1720,38 +1359,18 @@ object StreamingOps {
     * [[DedupOps.t45AgeOff]] at its DEFAULT `tsCol = "ingest_ts"`,
     * the constant policy horizon `T41H1` (no bounds scan on either
     * side) — expires an interleaved subset of base AND tranche-1
-    * docs alike. Everything else is s19 verbatim: fence and `_CUT`
-    * untouched by the advance, later batches probe `aliveMembers` +
-    * replacement-aware labels, emitted assignments stand, the
-    * fenced fold runs with the active replacement. Oracle = s18's
+    * docs alike. Everything else is s19 verbatim. Oracle = s18's
     * three closures with the post-advance states restricted to
     * survivors — here `{ID} > c1 OR derived_ts({ID}) > H1` (docs
-    * absorbed after the advance were never subject to it; expired
-    * docs are those at or below tranche 1's cut whose derived time
-    * lags the horizon). Interleaved expired/surviving, raised-canon
-    * re-election, and flags-stand pinned on a crafted corpus in
-    * StreamingGateSpec. */
+    * absorbed after the advance were never subject to it). Interleaved
+    * expired/surviving, raised-canon re-election, and flags-stand
+    * pinned on a crafted corpus in StreamingGateSpec. */
+  private val s20Gate = new Gate(cluster,
+    (s, dir) => DedupOps.buildT42Index(s, dir, "s20", true),
+    Some((s, work) => () => DedupOps.t45AgeOff(s, work, DedupOps.T41H1)))
+
   def streamedClusterRetentionEventTime(s: SparkSession, dir: String)
-      : DataFrame =
-    s20EntryLock.synchronized {
-      val staged = stageS16Tail(s, dir)
-      val work = s18WorkingCopy(s, dir, "s20", withTs = true)
-      val ck = work.resolve("ckpt").toString
-      s18RunStream(s, work, staged, "t-000.parquet", ck)
-      // the event-time advance between batches, under the micro-batch
-      // conf (the forget's relations are micro-batch-sized — s19's
-      // call)
-      withMicroBatchConf(s) {
-        DedupOps.t45AgeOff(s, work, DedupOps.T41H1)
-      }
-      s18RunStream(s, work, staged, "t-*.parquet", ck)
-      val old = lastS20Work.getAndSet(work)
-      if (old != null && old != work)
-        DedupOps.deleteRecursively(old.toFile)
-      s.read.schema(s18FlagsSchema)
-        .parquet(work.resolve("flags").toString + "/b*")
-        .orderBy(col("doc_id"))
-    }
+      : DataFrame = runGate(s, dir, s20Gate)
 
   /** s7: EXACTLY-ONCE ingest from at-least-once delivery — the
     * contract every real event pipeline needs at the front door. The

@@ -291,13 +291,13 @@ class IndexAppendSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = DedupOps.t40IndexPath(spark, tmp)
     DedupOps.buildBandIndexAt(spark, tmp, out)
-    assert(DedupOps.generationCount(out) === 1)
+    assert(Generations.count(out.resolve("buckets")) === 1)
     // append 1 → two generations: AT the threshold, the policy must
     // NOT fire (fold only when count exceeds it)
     DedupOps.appendBandIndexAt(spark, tmp, out, upTo = 110L,
       autoCompactMax = 2)
     val names1 = out.resolve("buckets").toFile.listFiles().map(_.getName)
-    assert(DedupOps.generationCount(out) === 2)
+    assert(Generations.count(out.resolve("buckets")) === 2)
     assert(!names1.exists(_.startsWith("compact-")) &&
       names1.exists(_.startsWith("append-101")) &&
       names1.exists(_.startsWith("part-")), names1.toSeq.sorted)
@@ -306,7 +306,7 @@ class IndexAppendSpec extends SparkSpec {
     DedupOps.appendBandIndexAt(spark, tmp, out, upTo = Long.MaxValue,
       autoCompactMax = 2)
     val names2 = out.resolve("buckets").toFile.listFiles().map(_.getName)
-    assert(DedupOps.generationCount(out) === 1, names2.toSeq.sorted)
+    assert(Generations.count(out.resolve("buckets")) === 1, names2.toSeq.sorted)
     assert(names2.forall(n => !n.endsWith(".parquet") ||
       n.startsWith("compact-152")), names2.toSeq.sorted)
     assert(DedupOps.cutOf(out) === 152L,

@@ -372,10 +372,10 @@ class StreamingGateSpec extends SparkSpec {
     // the source must deliver ONLY the third tranche (as batch 2)
     val work = StreamingOps.s16WorkingCopy(spark, dir)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s16RunStream(spark, work, staged, "t-00[01].parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim.split("\\s+")(0).toLong === 1L)
-    StreamingOps.s16RunStream(spark, work, staged, "t-*.parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-*.parquet", ckpt)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim.split("\\s+")(0).toLong === 2L)
     def flags(w: java.nio.file.Path) =
@@ -394,7 +394,7 @@ class StreamingGateSpec extends SparkSpec {
       work.resolve("_INDEX_READY")), "UTF-8")
     val files0 = work.resolve("buckets").toFile.listFiles()
       .map(_.getName).sorted.toSeq
-    StreamingOps.s16RunStream(spark, work, staged, "t-*.parquet",
+    StreamingOps.band.runStream(spark, work, staged, "t-*.parquet",
       work.resolve("ckpt2").toString)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_INDEX_READY")), "UTF-8") === nonce0,
@@ -443,7 +443,7 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s16WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s16RunStream(spark, work, staged, "t-00[01].parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     val fence1 = java.nio.file.Files.readAllBytes(work.resolve("_BATCH"))
     assert(new String(fence1, "UTF-8").trim === "1 120")
     // simulate a crash INSIDE batch 2's commit: run the batch to
@@ -451,7 +451,7 @@ class StreamingGateSpec extends SparkSpec {
     // on disk that is exactly "generation committed, _CUT advanced,
     // batch never fenced", the state the ADVICE scenario describes
     val batch2 = spark.read.parquet(staged.resolve("t-002.parquet").toString)
-    StreamingOps.s16ProcessBatch(spark, work, batch2, 2L)
+    StreamingOps.band.processBatch(spark, work, batch2, 2L)
     DedupOps.deleteRecursively(work.resolve("flags").resolve("b2").toFile)
     java.nio.file.Files.write(work.resolve("_BATCH"), fence1)
     java.nio.file.Files.deleteIfExists(work.resolve("_INDEX_READY"))
@@ -461,7 +461,7 @@ class StreamingGateSpec extends SparkSpec {
     // probe would read the crashed attempt's own generation — the
     // within-batch twins 152/153 would flag and 150 could resolve to
     // a same-batch doc
-    StreamingOps.s16ProcessBatch(spark, work, batch2, 2L)
+    StreamingOps.band.processBatch(spark, work, batch2, 2L)
     assert(s16Flags(work) === Seq((120L, 100L), (150L, 100L), (151L, 1L)))
     // and the retried commit restored the full converged state
     assert(new String(java.nio.file.Files.readAllBytes(
@@ -476,7 +476,7 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s16WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s16RunStream(spark, work, staged, "t-00[01].parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     // takedown of doc 100 — batch 0's absorbed canon — landing BETWEEN
     // absorbed batches, through the shared tombstone mechanics
     StreamingOps.s16Takedown(spark, work, Seq(100L))
@@ -491,7 +491,7 @@ class StreamingGateSpec extends SparkSpec {
     // resume: batch 2's 150 must flag against the RE-ELECTED canon
     // (batch 1's 120), never the erased 100; the untouched families
     // (151 vs base 1) serve through the same read
-    StreamingOps.s16RunStream(spark, work, staged, "t-*.parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-*.parquet", ckpt)
     assert(s16Flags(work) ===
       Seq((120L, 100L), (150L, 120L), (151L, 1L)),
       "batch 2 must see the re-elected canon 120 for the X-family")
@@ -551,10 +551,10 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s16WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s16RunStream(spark, work, staged, "t-00[01].parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     assert(s16Flags(work) === Seq((120L, 100L)))
     StreamingOps.s16Takedown(spark, work, Seq(100L))
-    StreamingOps.s16RunStream(spark, work, staged, "t-*.parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-*.parquet", ckpt)
     assert(s16Flags(work) === Seq((120L, 100L), (150L, 101L)),
       "the erased canon's same-generation twin must win re-election " +
         "(101 < 120) — the membership relation's whole point")
@@ -596,7 +596,7 @@ class StreamingGateSpec extends SparkSpec {
     assert(out === Seq((95L, 1L), (120L, 50L), (150L, 100L)),
       "95's pre-advance flag stands; 120 re-elects to the survivor " +
         "50; 130's bucket vanished; absorbed state untouched")
-    val work = StreamingOps.lastS17Work.get()
+    val work = StreamingOps.s17Gate.lastWork.get()
     // the advance landed through the shared per-horizon takedown
     // mechanics, and it is not a batch: the fence shows only batches
     assert(java.nio.file.Files.exists(work.resolve("_TAKEDOWN_41")),
@@ -653,7 +653,7 @@ class StreamingGateSpec extends SparkSpec {
         s"the tranche-3 bridge gets the MERGED min; 163 emits nothing: $got")
     // the working index converged to exactly the full-corpus clusters
     // (emitted flags stay as absorbed; the STATE merged downward)
-    val work = StreamingOps.lastS18Work.get()
+    val work = StreamingOps.s18Gate.lastWork.get()
     val folded = DedupOps.ccClustersOfFolded(spark, work)
       .collect().map(_.toSeq.toVector).toSeq
     val rebuild = DedupOps.rebuildBucketClusters(spark, tmp.toString)
@@ -687,19 +687,19 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s18WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s18RunStream(spark, work, staged, "t-00[01].parquet", ckpt)
+    StreamingOps.cluster.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 121")
     // crash INSIDE the fold's commit: phase A (temp dirs + `_FOLD`
     // intent) completed, phase B never ran
-    StreamingOps.s18FoldPhaseA(spark, work, 121L)
+    StreamingOps.cluster.foldPhaseA(spark, work, 121L)
     assert(java.nio.file.Files.exists(work.resolve("_FOLD")))
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 121",
       "the fold must never touch the replay fence")
     // the restart delivers batch 2: step 0's repair completes the
     // fold, the absorb reads the folded base, assignments are exact
-    StreamingOps.s18RunStream(spark, work, staged, "t-*.parquet", ckpt)
+    StreamingOps.cluster.runStream(spark, work, staged, "t-*.parquet", ckpt)
     val flags = spark.read
       .parquet(work.resolve("flags").toString + "/b*")
       .orderBy(col("doc_id")).collect()
@@ -730,7 +730,7 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s18WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s18RunStream(spark, work, staged, "t-00[01].parquet", ckpt)
+    StreamingOps.cluster.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 121")
     val before = DedupOps.ccClustersOfFolded(spark, work)
@@ -740,7 +740,7 @@ class StreamingGateSpec extends SparkSpec {
     java.nio.file.Files.write(work.resolve("_BATCH"),
       "0 101".getBytes("UTF-8"))
     val b1 = spark.read.parquet(staged.resolve("t-001.parquet").toString)
-    StreamingOps.s18ProcessBatch(spark, work, b1, 1L)
+    StreamingOps.cluster.processBatch(spark, work, b1, 1L)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 121",
       "the repair must re-fence the re-delivered batch")
@@ -749,7 +749,7 @@ class StreamingGateSpec extends SparkSpec {
       "debris rewind + re-absorb must reproduce the exact state")
     // resume the real stream for the final tranche: the bridge still
     // merges through the repaired state
-    StreamingOps.s18RunStream(spark, work, staged, "t-*.parquet", ckpt)
+    StreamingOps.cluster.runStream(spark, work, staged, "t-*.parquet", ckpt)
     val flags = spark.read
       .parquet(work.resolve("flags").toString + "/b*")
       .orderBy(col("doc_id")).collect()
@@ -805,7 +805,7 @@ class StreamingGateSpec extends SparkSpec {
         s"the survivors under the RAISED min 50 (canon 40 expired); " +
         s"the bridge 150 merges to 50; tranche 1's assignments " +
         s"stand: $got")
-    val work = StreamingOps.lastS19Work.get()
+    val work = StreamingOps.s19Gate.lastWork.get()
     // the advance landed through the cluster shelf's forget (horizon
     // marker + member tombstones + a relabel replacement), not a batch
     assert(java.nio.file.Files.exists(work.resolve("_FORGOTTEN_h41")))
@@ -847,7 +847,7 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s18WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s18RunStream(spark, work, staged, "t-000.parquet", ckpt)
+    StreamingOps.cluster.runStream(spark, work, staged, "t-000.parquet", ckpt)
     import spark.implicits._
     DedupOps.t43ForgetExternal(spark, work,
       Seq(1L, 1L, 999L).toDF("doc_id"))
@@ -867,7 +867,7 @@ class StreamingGateSpec extends SparkSpec {
     assert(e.getMessage.contains("compact first"))
     // the stream resumes across the replacement; the fence never saw
     // the takedown
-    StreamingOps.s18RunStream(spark, work, staged, "t-*.parquet", ckpt)
+    StreamingOps.cluster.runStream(spark, work, staged, "t-*.parquet", ckpt)
     val flags = spark.read
       .parquet(work.resolve("flags").toString + "/b*")
       .orderBy(col("doc_id")).collect()
@@ -919,7 +919,7 @@ class StreamingGateSpec extends SparkSpec {
     val d = spark.read.parquet(tmp.resolve("documents.parquet").toString)
     Seq(90L, 95L, 100L, 105L, 110L).zipWithIndex.foreach {
       case (id, b) =>
-        StreamingOps.s18ProcessBatch(spark, work,
+        StreamingOps.cluster.processBatch(spark, work,
           d.filter(col("doc_id") === id), b.toLong)
     }
     val names = work.resolve("labels").toFile.listFiles()
@@ -998,10 +998,10 @@ class StreamingGateSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(work.resolve("relabel_nodes")))
     // the later plain-side fold: relabel side has nothing fenced —
     // phase A must clear the debris, the commit must copy nothing in
-    StreamingOps.s18FoldPhaseA(spark, work, 999L)
+    StreamingOps.cluster.foldPhaseA(spark, work, 999L)
     assert(!java.nio.file.Files.exists(work.resolve("labels_relfold")),
       "phase A must delete a relfold temp it did not rewrite")
-    StreamingOps.s18FoldCommit(spark, work, 999L)
+    StreamingOps.cluster.foldCommit(spark, work, 999L)
     val names = work.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).toSeq
     assert(!names.exists(_.startsWith("relabel-")),
@@ -1056,7 +1056,7 @@ class StreamingGateSpec extends SparkSpec {
       withTs = true)
     val d = spark.read.parquet(tmp.resolve("documents.parquet").toString)
     // batch 0 BEFORE the advance: 110 joins E under the original min
-    StreamingOps.s18ProcessBatch(spark, work,
+    StreamingOps.cluster.processBatch(spark, work,
       d.filter(col("doc_id") === 110L), 0L)
     def flags: Seq[(Long, Long)] = spark.read
       .parquet(work.resolve("flags").toString + "/b*")
@@ -1080,9 +1080,9 @@ class StreamingGateSpec extends SparkSpec {
     // post-advance batches: 150 joins the re-derived component under
     // the RAISED min; the singleton 199 emits nothing; batch 0's
     // emitted flag STANDS (immutable fact about absorb time)
-    StreamingOps.s18ProcessBatch(spark, work,
+    StreamingOps.cluster.processBatch(spark, work,
       d.filter(col("doc_id") === 150L), 1L)
-    StreamingOps.s18ProcessBatch(spark, work,
+    StreamingOps.cluster.processBatch(spark, work,
       d.filter(col("doc_id") === 160L), 2L)
     assert(flags === Seq((110L, 6L), (150L, 10L), (160L, 10L)),
       flags.toString)
@@ -1119,7 +1119,7 @@ class StreamingGateSpec extends SparkSpec {
     assert(expired2 === Set(11L, 110L),
       s"the second horizon must expire the lagging absorbed docs: " +
         s"$expired2")
-    StreamingOps.s18ProcessBatch(spark, work,
+    StreamingOps.cluster.processBatch(spark, work,
       d.filter(col("doc_id") === 199L), 3L)
     assert(flags === Seq((110L, 6L), (150L, 10L), (160L, 10L)),
       "emitted flags stand across compact + second advance; the " +
@@ -1135,17 +1135,17 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s16WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s16RunStream(spark, work, staged, "t-00[01].parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     // simulate a crash INSIDE the fold's commit: phase A (temp dirs +
     // the _FOLD intent marker) completed, phase B never ran
-    StreamingOps.s16FoldPhaseA(spark, work, 120L)
+    StreamingOps.band.foldPhaseA(spark, work, 120L)
     assert(java.nio.file.Files.exists(work.resolve("_FOLD")))
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 120",
       "the fold must never touch the replay fence")
     // the restart delivers batch 2: step 0b repairs the fold, the
     // probe reads the completed base, the flags are exact
-    StreamingOps.s16RunStream(spark, work, staged, "t-*.parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-*.parquet", ckpt)
     assert(s16Flags(work) === Seq((120L, 100L), (150L, 100L), (151L, 1L)))
     assert(!java.nio.file.Files.exists(work.resolve("_FOLD")))
     Seq("buckets", "members").foreach { rel =>
@@ -1170,7 +1170,7 @@ class StreamingGateSpec extends SparkSpec {
     val staged = StreamingOps.stageS16Tail(spark, tmp.toString)
     val work = StreamingOps.s16WorkingCopy(spark, tmp.toString)
     val ckpt = work.resolve("ckpt").toString
-    StreamingOps.s16RunStream(spark, work, staged, "t-000.parquet", ckpt)
+    StreamingOps.band.runStream(spark, work, staged, "t-000.parquet", ckpt)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "0 100")
     val prevTtl = sys.props.get("graft.artifact.leaseTtlMs")
@@ -1182,7 +1182,7 @@ class StreamingGateSpec extends SparkSpec {
       java.nio.file.Files.write(work.resolve("_LEASE"),
         "live@second-process".getBytes("UTF-8"))
       val e = intercept[IllegalStateException] {
-        StreamingOps.s16ProcessBatch(spark, work, b1, 1L)
+        StreamingOps.band.processBatch(spark, work, b1, 1L)
       }
       assert(e.getMessage.contains("could not acquire"))
       assert(new String(java.nio.file.Files.readAllBytes(
@@ -1205,7 +1205,7 @@ class StreamingGateSpec extends SparkSpec {
       }
     }
     // the foreign holder released: the re-delivered batch lands exactly
-    StreamingOps.s16ProcessBatch(spark, work, b1, 1L)
+    StreamingOps.band.processBatch(spark, work, b1, 1L)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 120")
     assert(s16Flags(work) === Seq((120L, 100L)))

@@ -1,12 +1,17 @@
 #!/usr/bin/env python3
 """Local pre-flight for the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir> [query ...]
 
 Mimics the driver: registers each parquet table in <sfDir> as a DuckDB
 view, runs every SQL in <verifyOutDir>/oracle_sql.json, loads the
 Spark result parquet for the same query name, sorts columns by name and
 rows by all columns, and compares values exactly.
+
+Query names after the two directories restrict the compare to those
+entries, matching a `graft.Verify <sfDir> <outDir> <query ...>` dump
+(oracle_sql.json always lists every entry). A named query without an
+oracle is a FAIL.
 """
 import json
 import sys
@@ -26,13 +31,18 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> None:
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    sf_dir, out_dir, only = sys.argv[1], sys.argv[2], set(sys.argv[3:])
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = 0
+    missing = sorted(only - oracle.keys())
+    for name in missing:
+        print(f"FAIL {name}: no oracle SQL")
+    if only:
+        oracle = {k: v for k, v in oracle.items() if k in only}
     for name, sql in sorted(oracle.items()):
         try:
             exp = con.sql(sql).df()
@@ -71,7 +81,7 @@ def main() -> None:
         else:
             n_ok += 1
             print(f"OK   {name} ({len(got)} rows)")
-    print(f"\n{n_ok}/{len(oracle)} queries match")
+    print(f"\n{n_ok}/{len(oracle) + len(missing)} queries match")
 
 
 if __name__ == "__main__":
