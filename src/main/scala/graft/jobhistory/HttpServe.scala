@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   * [[JobHistoryReader]] → [[Reports.timeline]] → [[ChartSink]].
   * Requests are served sequentially on the dispatch thread (the
   * reference groovlet is likewise one-request-per-worker); the
-  * per-request event cache is dropped once the chart is rendered.
+  * per-request caches (the events and the views the chart reads) are
+  * dropped once the chart is rendered.
   *
   * SECURITY BOUNDARY: the loopback bind below IS the access control.
   * `url=` makes the server fetch caller-chosen URLs (including

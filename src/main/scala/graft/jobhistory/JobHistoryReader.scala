@@ -76,13 +76,13 @@ object JobHistoryReader {
     try readString(spark, src.mkString) finally src.close()
   }
 
-  /** S3/S4: in-memory log text (stdin / CGI `log=` param surface). */
+  /** S3/S4: in-memory log text (stdin / CGI `log=` param surface), as
+    * one partition: the text already sits on the driver, and one
+    * partition is what [[JobHistoryViews]] plans without exchanges. */
   def readString(spark: SparkSession, log: String): DataFrame = {
-    import spark.implicits._
     val recs = log.split(" \\.\n", -1).toSeq.filter(_.nonEmpty)
-    parse(recs.zipWithIndex
-      .map { case (r, i) => (i.toLong, r) }
-      .toDF("line_no", "record"))
+    val rows = recs.zipWithIndex.map { case (r, i) => Row(i.toLong, r) }
+    parse(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), rawSchema))
   }
 
   /** Attr-map regex — reference parity: `([^=]+)="([^"]*)" *`

@@ -3,6 +3,8 @@ package graft.jobhistory
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import JobHistoryViews.keyedJoin
+
 /** The reference's four report surfaces + the python bytes report
   * (SURVEY §3), as DataFrames.
   *
@@ -12,10 +14,15 @@ import org.apache.spark.sql.functions._
   * BigDecimals — i.e. `(f_ms - s_ms) DIV scale`. The two differ by ±1
   * (proof: vis/grap/map.d:1 elapsed 8843 ≠ 1289551128-1289542284).
   *
-  * Scale notes: every join here is keyed on task/attempt id and the
-  * right sides (finals, attempt times) are task-cardinality — at 100 TB
-  * (many logs) these become co-partitioned shuffle joins on the same
-  * key, and the single-row `bounds` scalar is broadcast (J5).
+  * Plan shape: every join here is keyed on task/attempt id, the right
+  * sides (finals, attempt times) are task-cardinality, and no join
+  * broadcasts (`JobHistoryViews.keyedJoin`). On a one-partition input
+  * (see [[JobHistoryViews]]) both sides already sit in one partition,
+  * so a report runs as a single job; at 100 TB (many logs) these are
+  * co-partitioned shuffle joins on the same key. Single-row scalars
+  * (`bounds`, the summary's aggregates) attach as a cartesian product
+  * ([[withScalars]], J5), and the timeline's zero fill is a union with
+  * the spine, not a join.
   */
 object Reports {
 
@@ -26,25 +33,32 @@ object Reports {
     df.write.mode("overwrite").option("sep", sep).option("header", "true")
       .csv(path)
 
-  /** `-m` (bin/job_history:426-436; golden vis/grap/map.d). */
-  def mapDetails(v: JobHistoryViews): DataFrame =
+  /** Attach a one-row relation's columns to every row of `df`: a
+    * cartesian product with a one-partition side needs no exchange and,
+    * unlike a broadcast, no job of its own. */
+  private def withScalars(v: JobHistoryViews, df: DataFrame,
+      scalars: DataFrame): DataFrame =
+    v.onePartitioned(df.crossJoin(scalars.hint("shuffle_replicate_nl")))
+
+  /** `-m` (bin/job_history:426-436; golden vis/grap/map.d). A frame of
+    * the views: the Gantt reads it again. */
+  def mapDetails(v: JobHistoryViews): DataFrame = v.frame("mapDetails") {
     detailsBase(v.mapTasks, v.scale)
       .select(col("task_id"), col("start_time"), col("end_time"),
         col("elapsed"), col("num_attempts"))
       .orderBy(col("task_id"))
+  }
 
   /** `-r`, current 7-column format (bin/job_history:438-458); golden
     * vis/grap/reduce.d carries the legacy 6 columns (drop
     * maps_complete). shuffle_finish is the *final attempt's*
-    * SHUFFLE_FINISHED (J1: task ⋈ finalAttempt ⋈ attempt times). */
-  def reduceDetails(v: JobHistoryViews): DataFrame = {
-    val shuffleOfFinal = v.finalAttempts
-      .join(v.reduceAttemptTimes.select(col("attempt_id"), col("shuffle_u")),
-        Seq("attempt_id"))
-      .select(col("task_id"), col("shuffle_u"))
-    detailsBase(v.reduceTasks, v.scale)
-      .join(shuffleOfFinal, Seq("task_id"), "left")
-      .crossJoin(broadcast(allMapsComplete(v)))
+    * SHUFFLE_FINISHED (J1: task ⋈ finalAttempt ⋈ attempt times). A
+    * frame of the views: the Gantt reads it again. */
+  def reduceDetails(v: JobHistoryViews): DataFrame = v.frame("reduceDetails") {
+    withScalars(v,
+      keyedJoin(detailsBase(v.reduceTasks, v.scale), v.finalReduceTimes,
+        Seq("task_id"), "left"),
+      allMapsComplete(v))
       .select(col("task_id"), col("start_time"), col("maps_complete"),
         col("shuffle_u").as("shuffle_finish"), col("end_time"),
         col("elapsed"), col("num_attempts"))
@@ -86,12 +100,7 @@ object Reports {
     // totalShuffleTime += (long)(shuffle_u - START_TIME/scale): the
     // reference subtracts an exact quotient from the already-truncated
     // attempt unit, then truncates — ≡ (shuffle_u*scale - start_ms) DIV scale.
-    val shuffleOfFinal = v.finalAttempts
-      .join(v.reduceAttemptTimes.select(col("attempt_id"), col("shuffle_u")),
-        Seq("attempt_id"))
-      .select(col("task_id"), col("shuffle_u"))
-    val reduces = v.reduceTasks
-      .join(shuffleOfFinal, Seq("task_id"), "left")
+    val reduces = keyedJoin(v.reduceTasks, v.finalReduceTimes, Seq("task_id"), "left")
       .agg(
         count(when(finished, 1)).as("num_reduces"),
         sum(when(finished, elapsed)).as("total_reduce_time"),
@@ -99,15 +108,14 @@ object Reports {
           ((col("shuffle_u") * scale - ms("START_TIME")) / scale).cast("long")))
           .as("total_shuffle_time"))
 
-    v.job.select(
+    val job = v.job.select(
       col("attrs").getItem("JOBID").as("job_id"),
       col("attrs").getItem("JOBNAME").as("job_name"),
       col("attrs").getItem("USER").as("user"),
       col("attrs").getItem("JOB_STATUS").as("job_status"),
       ((ms("FINISH_TIME") - ms("LAUNCH_TIME")) / scale).cast("long")
         .as("total_time"))
-      .crossJoin(broadcast(maps))
-      .crossJoin(broadcast(reduces))
+    withScalars(v, withScalars(v, job, maps), reduces)
       .withColumn("avg_map_time",
         col("total_map_time").cast("double") / col("num_maps"))
       .withColumn("avg_shuffle_time",
@@ -121,12 +129,9 @@ object Reports {
     * bytes written + the final attempt's shuffle/end times relative to
     * job submit. */
   def bytesReport(v: JobHistoryViews): DataFrame =
-    v.reduceBytes
-      .join(v.finalAttempts, Seq("task_id"), "left")
-      .join(v.reduceAttemptTimes
-        .select(col("attempt_id"), col("shuffle_u"), col("end_u")),
-        Seq("attempt_id"), "left")
-      .crossJoin(broadcast(v.bounds))
+    withScalars(v,
+      keyedJoin(v.reduceBytes, v.finalReduceTimes, Seq("task_id"), "left"),
+      v.bounds)
       .select(
         col("task_id"),
         col("reduce_output_bytes"),
@@ -214,24 +219,14 @@ object Reports {
   /** Classified (job_id, phase, lo, hi) interval rows for a multi-job
     * stream — each attempt joined to its own job's bounds (keyed
     * through the id-embedded job, J5 becomes a keyed join instead of a
-    * scalar broadcast). Shared by both fleet timeline variants.
-    * Memoized + persisted per views object like [[intervals]]: the
-    * sweep-line variant consumes it twice (+1/-1 deltas), and without
-    * the memo every execution re-ran the whole classification join
-    * stack (measured: jh_timeline_per_job warm 2.5 s vs the global
-    * sweep's 0.5 s at the same output). Attempt-cardinality rows. */
-  private val intervalsPerJobMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[JobHistoryViews, DataFrame]())
-
-  private def intervalsPerJob(v: JobHistoryViews): DataFrame = {
-    val df = intervalsPerJobMemo.computeIfAbsent(v, v2 => computeIntervalsPerJob(v2))
-    // re-pin per call: clearCache() drops the registration permanently
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
-
-  private def computeIntervalsPerJob(v: JobHistoryViews): DataFrame = {
+    * scalar broadcast). Shared by both fleet timeline variants, and
+    * pinned per views object like [[intervals]]
+    * (`JobHistoryViews.intervalsPerJob`): the sweep-line variant
+    * consumes it twice (+1/-1 deltas), and without the pin every
+    * execution re-ran the whole classification join stack (measured:
+    * jh_timeline_per_job warm 2.5 s vs the global sweep's 0.5 s at the
+    * same output). Attempt-cardinality rows. */
+  private[jobhistory] def classifyPerJob(v: JobHistoryViews): DataFrame = {
     val bounds = v.boundsPerJob
     val finals = v.finalAttempts.select(col("attempt_id"), lit(true).as("is_final"))
     def rel(c: Column): Column = c - col("submit_u")
@@ -279,7 +274,7 @@ object Reports {
     * lengths) generated rows — see [[timelinePerJobSweepLine]] for the
     * fleet-scale path. */
   def timelinePerJob(v: JobHistoryViews): DataFrame = {
-    val expanded = intervalsPerJob(v).select(col("job_id"), col("phase"),
+    val expanded = v.intervalsPerJob.select(col("job_id"), col("phase"),
       explode(sequence(col("lo"), col("hi"))).as("time"))
     val aggs = phaseNames.map(p =>
       coalesce(sum(when(col("phase") === p, 1L)), lit(0L)).as(p))
@@ -303,7 +298,7 @@ object Reports {
     * [[timelinePerJob]] (asserted in MultiLogSpec). */
   def timelinePerJobSweepLine(v: JobHistoryViews): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val deltas = intervalsPerJob(v)
+    val deltas = v.intervalsPerJob
       .select(col("job_id"), col("phase"), explode(array(
         struct(col("lo").as("time"), lit(1L).as("d")),
         struct((col("hi") + 1).as("time"), lit(-1L).as("d")))).as("td"))
@@ -341,54 +336,34 @@ object Reports {
     * final attempts drive the real-work series, non-final attempts are
     * waste (J2/J3 as a left join on attempt_id).
     *
-    * Memoized + persisted per views object (same weak-key pattern as
-    * the per-session event cache): the sweep-line timeline references
-    * it twice (+1/-1 deltas) and `timeline`/`timelineSweepLine` share
-    * one classification pass instead of re-joining finals per caller.
-    * Attempt-cardinality rows — tiny relative to the raw log. */
-  private val intervalsMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[JobHistoryViews, DataFrame]())
+    * Pinned per views object (`JobHistoryViews.intervals`): the
+    * sweep-line timeline references it twice (+1/-1 deltas) and
+    * `timeline`/`timelineSweepLine` share one classification pass
+    * instead of re-joining finals per caller. Attempt-cardinality rows
+    * — tiny relative to the raw log. */
+  private[jobhistory] def intervals(v: JobHistoryViews): DataFrame = v.intervals
 
-  private[jobhistory] def intervals(v: JobHistoryViews): DataFrame = {
-    val df = intervalsMemo.computeIfAbsent(v, v2 => computeIntervals(v2))
-    // re-pin per call: clearCache() drops the registration permanently
-    // (same failure mode as the events cache — see Views.ensureCached)
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
-
-  /** Drop the memoized interval classification (and its persisted
-    * blocks) for a retiring views object — the counterpart of
-    * [[JobHistoryViews.release]] for short-lived (e.g. per-request)
-    * views, where waiting for the weak map to collect would leave the
-    * cache registration pinned indefinitely. */
-  private[jobhistory] def releaseIntervals(v: JobHistoryViews): Unit = {
-    val df = intervalsMemo.remove(v)
-    if (df != null) df.unpersist()
-    val pj = intervalsPerJobMemo.remove(v)
-    if (pj != null) pj.unpersist()
-  }
-
-  private def computeIntervals(v: JobHistoryViews): DataFrame = {
+  private[jobhistory] def classify(v: JobHistoryViews): DataFrame = {
     val finals = v.finalAttempts.select(col("attempt_id"), lit(true).as("is_final"))
     def rel(c: Column): Column = c - col("submit_u")
     def clamp0(c: Column): Column = greatest(lit(0L), c)
     def capped(c: Column): Column = rel(least(c, col("finish_u")))
 
-    val maps = v.mapAttemptTimes
-      .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left")
-      .crossJoin(broadcast(v.bounds))
+    val maps = withScalars(v,
+      keyedJoin(v.mapAttemptTimes
+        .filter(col("start_u").isNotNull && col("end_u").isNotNull),
+        finals, Seq("attempt_id"), "left"),
+      v.bounds)
       .select(
         when(col("is_final"), "maps").otherwise("waste").as("phase"),
         clamp0(rel(col("start_u"))).as("lo"),
         capped(col("end_u")).as("hi"))
 
-    val reduces = v.reduceAttemptTimes
-      .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left")
-      .crossJoin(broadcast(v.bounds))
+    val reduces = withScalars(v,
+      keyedJoin(v.reduceAttemptTimes
+        .filter(col("start_u").isNotNull && col("end_u").isNotNull),
+        finals, Seq("attempt_id"), "left"),
+      v.bounds)
     // shuffle_u/sort_u must exist for the phase split: with NULLs,
     // greatest/least would silently produce [start, job_finish] /
     // [0, …] intervals (the reference NPEs loudly here — we drop the
@@ -425,13 +400,25 @@ object Reports {
 
   private val phaseNames = Seq("maps", "shuffle", "merge", "reduce", "waste")
 
-  /** T4: pivot phase rows to the wide `maps/shuffle/merge/reduce/waste`
-    * series via conditional aggregation (static pivot — no extra pass
-    * to discover pivot values). */
-  private def widen(perPhase: DataFrame, counts: Column): DataFrame = {
+  /** T4: pivot `(time, phase)` rows weighted by `n` to the wide
+    * `maps/shuffle/merge/reduce/waste` series via conditional
+    * aggregation (static pivot — no extra pass to discover pivot
+    * values), zero-filled over the dense spine. The spine enters as
+    * flagged rows of the same aggregation instead of a left join from
+    * it: exactly the spine's times survive, as the join would keep,
+    * with no join to plan (a spine of a few thousand rows would be
+    * broadcast, one more job). */
+  private def onSpine(v: JobHistoryViews, perPhase: DataFrame, n: Column): DataFrame = {
+    val rows = perPhase
+      .select(col("time"), col("phase"), n.as("n"), lit(false).as("on_spine"))
+      .unionByName(spine(v).select(col("time"), lit(null).cast("string").as("phase"),
+        lit(0L).as("n"), lit(true).as("on_spine")))
     val aggs = phaseNames.map(p =>
-      coalesce(sum(when(col("phase") === p, counts)), lit(0L)).as(p))
-    perPhase.groupBy(col("time")).agg(aggs.head, aggs.tail: _*)
+      coalesce(sum(when(col("phase") === p, col("n"))), lit(0L)).as(p))
+    rows.groupBy(col("time")).agg(max(col("on_spine")).as("on_spine"), aggs: _*)
+      .filter(col("on_spine"))
+      .select(col("time") +: phaseNames.map(col): _*)
+      .orderBy(col("time"))
   }
 
   /** T1-T4 by interval expansion — the reference's exact dataflow
@@ -441,10 +428,7 @@ object Reports {
   def timeline(v: JobHistoryViews): DataFrame = {
     val expanded = intervals(v)
       .select(col("phase"), explode(sequence(col("lo"), col("hi"))).as("time"))
-    val counts = widen(expanded, lit(1L))
-    spine(v).join(counts, Seq("time"), "left")
-      .select(col("time") +: phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("time"))
+    onSpine(v, expanded, lit(1L))
   }
 
   /** Batch completion of the STREAMING timeline: pivots a converged
@@ -456,9 +440,7 @@ object Reports {
     * the stream's own output, including the zero rows its
     * retractions net out to. */
   def timelineFromPhaseCounts(v: JobHistoryViews, perPhase: DataFrame): DataFrame =
-    spine(v).join(widen(perPhase, col("count")), Seq("time"), "left")
-      .select(col("time") +: phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("time"))
+    onSpine(v, perPhase, col("count"))
 
   /** W2: the same timeline via sweep-line running sums — +1 at lo,
     * -1 at hi+1, cumulative per phase. Only the O(attempts) sparse
@@ -486,8 +468,8 @@ object Reports {
     // highest delta per phase always closes to running = 0 — every
     // surviving step has a next delta, and the closing -1 sits at
     // hi+1 <= duration+1 (intervals are clamped to the job bounds), so
-    // no step outruns the spine. The spine left join below remains the
-    // outer clamp for degenerate (empty/inverted-bounds) logs.
+    // no step outruns the spine. The spine below remains the outer
+    // clamp for degenerate (empty/inverted-bounds) logs.
     val steps = deltas
       .withColumn("running", sum(col("d"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -497,8 +479,6 @@ object Reports {
         (col("next_t") - 1).as("hi"))
     val filled = steps.select(col("phase"), col("running"),
       explode(sequence(col("lo"), col("hi"))).as("time"))
-    spine(v).join(widen(filled, col("running")), Seq("time"), "left")
-      .select(col("time") +: phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
-      .orderBy(col("time"))
+    onSpine(v, filled, col("running"))
   }
 }

@@ -272,7 +272,7 @@ object Streaming {
   }
 
   /** Re-derive the full desired interval set from state — the exact
-    * dataflow of Reports.computeIntervals, per job. */
+    * dataflow of Reports.classify, per job. */
   private def desiredIntervals(st: JobTimelineState, scale: Long): Map[String, (Long, Long)] =
     (st.submit_ms, st.finish_ms) match {
       case (Some(submitMs), Some(finishMs)) =>

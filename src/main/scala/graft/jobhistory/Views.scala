@@ -1,7 +1,13 @@
 package graft.jobhistory
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import JobHistoryViews.keyedJoin
 
 /** Entity views over the parsed event stream (SURVEY §1.2, §2.2-2.4).
   *
@@ -10,15 +16,32 @@ import org.apache.spark.sql.functions._
   * aggregation keyed on the entity id:
   *
   *  - Last-write-wins attribute merge (A1) = `max_by(value, line_no)`
-  *    per (entity, key) — an ordered reduce that shuffles once on the
-  *    entity key and map-side-combines, so it scales to arbitrarily
-  *    many tasks/attempts per log and arbitrarily many logs.
+  *    per (entity, key) — an ordered reduce that map-side-combines, so
+  *    it scales to arbitrarily many tasks/attempts per log and
+  *    arbitrarily many logs.
   *  - Attempt counting (A2) = `countDistinct(attempt_id)` (the
   *    reference increments on first sighting of each attempt id).
   *  - Final-attempt selection (A3) = `max_by(attempt_id, line_no)` over
   *    SUCCESS-finish records per task: the *last* SUCCESS attempt wins,
   *    superseded finals and non-SUCCESS attempts become "wasted"
   *    (modeled downstream as an anti-join, J3).
+  *
+  * One-partition rule: an input that already runs as one partition (a
+  * single log below one input split, or [[JobHistoryReader.readString]]
+  * text) is cached as `coalesce(1)`, which moves no data but tells the
+  * planner so: every aggregation, join and sort over it is then
+  * satisfied without an exchange, and a report runs as one job instead
+  * of one job per shuffle stage. Multi-partition inputs (fleets, globs)
+  * are cached as they come and keep keyed shuffles on the entity id.
+  *
+  * The events and the views several reports read (`bounds`, the task
+  * views, `finalAttempts`, `reduceAttemptTimes`, `finalReduceTimes`,
+  * the timeline classification) are derived once per views object:
+  * each is persisted and filled in one job when first used ([[pin]]),
+  * and the reports read the filled caches without a job of their own.
+  * Views the report set reads once (`job`, `reduceBytes`,
+  * `mapAttemptTimes`) are not persisted: a cache would cost a job and
+  * save no scan.
   *
   * Timestamps: the reference divides by `scale` *before* any
   * subtraction, with Groovy `(long)` truncation (SURVEY §7.4, P9).
@@ -28,39 +51,93 @@ import org.apache.spark.sql.functions._
   */
 final class JobHistoryViews(
     spark: SparkSession,
-    val events: DataFrame,
+    input: DataFrame,
     val scale: Long = 1000L) {
 
   import spark.implicits._
 
+  /** Whether the input runs as one partition (the rule above). */
+  private val onePartition = JobHistoryViews.onePartition(input)
+
+  /** The one-partition rule for a relation derived from one-partition
+    * events. A full outer join or a cartesian product reports an unknown
+    * partitioning even over one partition, and the next aggregation,
+    * join or sort would shuffle its output; `coalesce(1)` moves no data
+    * and restores the single partition. Multi-partition views leave
+    * `df` as it is. */
+  private[jobhistory] def onePartitioned(df: DataFrame): DataFrame =
+    if (onePartition) df.coalesce(1) else df
+
+  /** The parsed events every view reads, cached for the life of these
+    * views. */
+  val events: DataFrame = onePartitioned(input)
+
   private val ev = events
 
-  /** Pin (or re-pin) the parsed-event cache. A one-shot `.cache()`
-    * registration is dropped permanently by
-    * `spark.catalog.clearCache()` (or an explicit unpersist elsewhere
-    * in the session), after which every report silently re-runs the
-    * text-parse pipeline once per referencing subtree — the timeline
-    * reports touch the event stream from 4-6 subtrees, so an evicted
-    * cache means 4-6 full re-parses per execution. Callers that hand
-    * out memoized views (JobHistoryOps) re-check before every query.
-    * `storageLevel` is NONE exactly when no registration exists, so
-    * this never double-caches. */
-  def ensureCached(): this.type = {
-    if (ev.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      ev.cache()
+  /** Everything these views persist, each after what it reads: the
+    * events, then the views pinned by [[pin]] in the order of first use. */
+  private val pins = mutable.ArrayBuffer[DataFrame](ev)
+
+  /** Report frames built once per views object ([[frame]]). */
+  private val frames = mutable.HashMap.empty[String, DataFrame]
+
+  /** Pin (or re-pin) every cache of these views. A `persist`
+    * registration is dropped permanently by `spark.catalog.clearCache()`
+    * (or an explicit unpersist elsewhere in the session), after which
+    * every report silently re-derives the events — and each view — once
+    * per referencing subtree. Callers that hand out memoized views
+    * (JobHistoryOps) re-check before every query. Re-pinning follows
+    * creation order, so each view's cached plan reads the re-pinned
+    * events. The re-pinned caches fill when a report next reads them,
+    * and that report shuffles them (an unfilled cache reports no
+    * partitioning, see [[pin]]); report frames planned against the
+    * dropped caches are rebuilt. `storageLevel` is NONE exactly when no
+    * registration exists, so this never double-caches. */
+  def ensureCached(): this.type = synchronized {
+    val dropped = pins.filter(_.storageLevel == StorageLevel.NONE)
+    dropped.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    if (dropped.nonEmpty) frames.clear()
     this
   }
   ensureCached()
 
-  /** Unpin everything this views object cached (the event cache and
-    * the memoized interval classification). Session-scoped views live
-    * for the session and never call this; short-lived views — one HTTP
-    * request, one CLI run — must, or each one leaks a cache
-    * registration the weak maps cannot reclaim. */
-  def release(): Unit = {
-    Reports.releaseIntervals(this)
-    ev.unpersist()
+  /** Unpin everything this views object cached (the events, the pinned
+    * views and the timeline classifications) and drop its report
+    * frames. Session-scoped views live for the session and never call
+    * this; short-lived views — one HTTP request, one CLI run — must, or
+    * each one leaks its cache registrations. Dependents go first, so no
+    * remaining cache is re-planned against a dropped one. */
+  def release(): Unit = synchronized {
+    frames.clear()
+    pins.reverseIterator.foreach(_.unpersist())
   }
+
+  /** Persist `df` (the one-partition rule applied) for the life of these
+    * views and fill the cache now, in one job: executing the pinned
+    * relation's own plan runs the adaptive stage that fills it, and no
+    * row is read. Filled, the cache reports its plan's partitioning and
+    * its real size, so a report planned on it needs no exchange;
+    * unfilled, it reports neither, and the report would shuffle it. The
+    * first pin fills the events' cache before it, in a job of its own:
+    * otherwise each scan of the events in the view's plan would start
+    * one. */
+  private[jobhistory] def pin(df: DataFrame): DataFrame = synchronized {
+    if (pins.size == 1) ev.write.format("noop").mode("overwrite").save()
+    val pinned = onePartitioned(df).persist(StorageLevel.MEMORY_AND_DISK)
+    pins += pinned
+    pinned.queryExecution.toRdd
+    pinned
+  }
+
+  /** The report frame `name`, built once per views object: a report the
+    * charts read again (the Gantt re-reads the details) reuses its
+    * planned query instead of planning it twice. */
+  private[jobhistory] def frame(name: String)(build: => DataFrame): DataFrame =
+    synchronized(frames.getOrElse(name, {
+      val df = build
+      frames(name) = df
+      df
+    }))
 
   /** Scaled time unit: Groovy `(long)(x.toLong()/scale)` ≡ truncating
     * integral division (all fixture timestamps are positive). */
@@ -86,13 +163,13 @@ final class JobHistoryViews(
   /** A4: global job bounds in scaled units. `finish_u` only from Job
     * records carrying FINISH_TIME but not SUBMIT_TIME (the reference's
     * if/else-if, bin/job_history:236-240). */
-  lazy val bounds: DataFrame =
+  lazy val bounds: DataFrame = pin(
     ev.filter($"event" === "Job")
       .agg(
         u(lastWhen(a("SUBMIT_TIME").isNotNull, a("SUBMIT_TIME")))
           .as("submit_u"),
         u(lastWhen(a("SUBMIT_TIME").isNull && a("FINISH_TIME").isNotNull,
-          a("FINISH_TIME"))).as("finish_u"))
+          a("FINISH_TIME"))).as("finish_u")))
 
   /** [[bounds]] keyed by JOBID — the fleet (multi-job) variant with the
     * same if/else-if semantics. */
@@ -111,9 +188,10 @@ final class JobHistoryViews(
     * Groovy-canonical; bin/job_history:242-244). Records *without* a
     * TASK_TYPE are kept, as in the reference (null != "SETUP") — a bare
     * `!isin` would evaluate to NULL and silently drop them. */
-  lazy val mapAttemptEvents: DataFrame =
-    ev.filter($"event" === "MapAttempt" &&
-      coalesce(!a("TASK_TYPE").isin("SETUP", "CLEANUP"), lit(true)))
+  lazy val mapAttemptEvents: DataFrame = ev.filter(isMapAttempt)
+
+  private def isMapAttempt: Column = $"event" === "MapAttempt" &&
+    coalesce(!a("TASK_TYPE").isin("SETUP", "CLEANUP"), lit(true))
 
   lazy val reduceAttemptEvents: DataFrame =
     ev.filter($"event" === "ReduceAttempt")
@@ -140,12 +218,23 @@ final class JobHistoryViews(
     * their finish records (bin/job_history:310-313). */
   lazy val reduceAttemptTimes: DataFrame = {
     val isFinish = a("START_TIME").isNull && a("FINISH_TIME").isNotNull
-    attemptTimes(reduceAttemptEvents, Seq(
+    pin(attemptTimes(reduceAttemptEvents, Seq(
       "shuffle_u" -> u(lastWhen(isFinish && a("SHUFFLE_FINISHED").isNotNull,
         a("SHUFFLE_FINISHED"))),
       "sort_u" -> u(lastWhen(isFinish && a("SORT_FINISHED").isNotNull,
-        a("SORT_FINISHED")))))
+        a("SORT_FINISHED"))))))
   }
+
+  /** J1: per task, its final attempt's reduce times (`shuffle_u`,
+    * `end_u`; null when the final attempt has no ReduceAttempt record).
+    * One row per task: a task has one final attempt, an attempt one
+    * times row. Pinned: three reports join it, and a pinned relation's
+    * size is known, where a join's estimated size is the product of its
+    * sides' and a report joining that estimate would shuffle it for
+    * parallelism. */
+  lazy val finalReduceTimes: DataFrame = pin(keyedJoin(finalAttempts,
+    reduceAttemptTimes.select($"attempt_id", $"shuffle_u", $"end_u"),
+    Seq("attempt_id"), "left"))
 
   /** A3: per task, the attempt id of the last SUCCESS finish record —
     * across map AND reduce attempts (one shared finalAttempt map,
@@ -153,10 +242,10 @@ final class JobHistoryViews(
   lazy val finalAttempts: DataFrame = {
     val isSuccessFinish = a("START_TIME").isNull &&
       a("FINISH_TIME").isNotNull && a("TASK_STATUS") === "SUCCESS"
-    mapAttemptEvents.unionByName(reduceAttemptEvents)
+    pin(ev.filter(isMapAttempt || $"event" === "ReduceAttempt")
       .filter(isSuccessFinish)
       .groupBy(a("TASKID").as("task_id"))
-      .agg(max_by(a("TASK_ATTEMPT_ID"), $"line_no").as("attempt_id"))
+      .agg(max_by(a("TASK_ATTEMPT_ID"), $"line_no").as("attempt_id")))
   }
 
   // -------------------------------------------------------------- tasks
@@ -181,10 +270,10 @@ final class JobHistoryViews(
     * from attempt records) + NUM_ATTEMPTS. Task ids seen only via
     * attempts still appear (reference creates the entry), with null
     * attrs. */
-  lazy val mapTasks: DataFrame =
+  lazy val mapTasks: DataFrame = pin(
     mergedTasks("MAP").join(attemptCounts(mapAttemptEvents),
       Seq("task_id"), "full_outer")
-      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L)))
+      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L))))
 
   /** A9: HDFS_BYTES_WRITTEN of the reduce task's last COUNTERS-bearing
     * Task record; missing counter → 0 (py semantics,
@@ -223,13 +312,40 @@ final class JobHistoryViews(
   lazy val malformedRecords: DataFrame =
     ev.filter(size($"attrs") === 0)
 
-  lazy val reduceTasks: DataFrame =
+  lazy val reduceTasks: DataFrame = pin(
     mergedTasks("REDUCE").join(attemptCounts(reduceAttemptEvents),
       Seq("task_id"), "full_outer")
-      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L)))
+      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L))))
+
+  /** T3: the timeline classification ([[Reports.intervals]]), pinned:
+    * both timeline variants read it, the sweep line twice. */
+  private[jobhistory] lazy val intervals: DataFrame = pin(Reports.classify(this))
+
+  /** The fleet classification ([[Reports.timelinePerJob]]), pinned. */
+  private[jobhistory] lazy val intervalsPerJob: DataFrame =
+    pin(Reports.classifyPerJob(this))
 }
 
 object JobHistoryViews {
+
+  /** A keyed join that never broadcasts. On a one-partition input both
+    * sides are already in one partition, so the hash join runs inside
+    * its query's job, where a broadcast would start a job of its own;
+    * multi-partition inputs shuffle both sides on the key. */
+  private[jobhistory] def keyedJoin(left: DataFrame, right: DataFrame,
+      keys: Seq[String], how: String): DataFrame =
+    left.join(right.hint("shuffle_hash"), keys, how)
+
+  /** Whether `df` runs as one partition without shuffling. Read from its
+    * physical plan, which lists the input but runs nothing; an input
+    * that shuffles itself (an adaptive plan) counts as many partitions,
+    * since its partition count is known only once it runs. */
+  private def onePartition(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan match {
+      case _: AdaptiveSparkPlanExec => false
+      case p => p.execute().getNumPartitions == 1
+    }
+
   def fromFile(spark: SparkSession, path: String, scale: Long = 1000L): JobHistoryViews =
     new JobHistoryViews(spark, JobHistoryReader.read(spark, path), scale)
 }

@@ -44,7 +44,7 @@ object JobHistoryOps {
 
   private def v(s: SparkSession): JobHistoryViews =
     // ensureCached per query call: a clearCache() between queries (the
-    // bench's isolation step) must re-pin the parsed-event cache, not
+    // bench's isolation step) must re-pin the event and view caches, not
     // degrade every later report to one re-parse per subtree
     memo.computeIfAbsent(s, s2 => JobHistoryViews.fromFile(s2, fixture()))
       .ensureCached()

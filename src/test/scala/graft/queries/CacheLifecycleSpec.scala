@@ -3,9 +3,11 @@ package graft.queries
 import graft.{SparkEntry, SparkSpec}
 
 /** Cache-lifecycle guard: the only persisted blocks in the engine are
-  * the three session-scoped job-history views caches (the parsed event
-  * stream, `Views.scala`'s `events.cache()`, and the memoized interval
-  * classifications, `Reports.intervals` + `Reports.intervalsPerJob`).
+  * the session-scoped job-history views caches, at most nine (the parsed
+  * event stream, the six entity views `Views.scala` pins — bounds, both
+  * task views, finals, reduce attempt times, final reduce times — and
+  * the two interval classifications, `Views.intervals` +
+  * `Views.intervalsPerJob`).
   * Every other operator — in
   * particular the dedup/text pipelines whose round-5 persist removal
   * relies on AQE exchange reuse instead — must leave nothing behind in
@@ -29,11 +31,12 @@ class CacheLifecycleSpec extends SparkSpec {
     val (jh, rest) = SparkEntry.queries.keys.toSeq.sorted
       .partition(_.startsWith("jh_"))
     // Materialize the job-history family first: it is ALLOWED to pin
-    // its three views-scoped caches (events + both interval memos)...
+    // its nine views-scoped caches (events + six entity views + both
+    // interval classifications)...
     jh.foreach(run)
     val afterJh = spark.sparkContext.getPersistentRDDs.keySet
-    assert((afterJh -- before).size <= 3,
-      s"expected at most events+intervals caches, got ${afterJh -- before}")
+    assert((afterJh -- before).size <= 9,
+      s"expected at most the views' nine caches, got ${afterJh -- before}")
     // ...then every other operator must add nothing: same persistent
     // RDD set before and after the full non-jh sweep.
     rest.foreach(run)
