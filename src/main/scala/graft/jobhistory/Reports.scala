@@ -3,8 +3,6 @@ package graft.jobhistory
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import JobHistoryViews.keyedJoin
-
 /** The reference's four report surfaces + the python bytes report
   * (SURVEY §3), as DataFrames.
   *
@@ -14,15 +12,16 @@ import JobHistoryViews.keyedJoin
   * BigDecimals — i.e. `(f_ms - s_ms) DIV scale`. The two differ by ±1
   * (proof: vis/grap/map.d:1 elapsed 8843 ≠ 1289551128-1289542284).
   *
-  * Plan shape: every join here is keyed on task/attempt id, the right
-  * sides (finals, attempt times) are task-cardinality, and no join
-  * broadcasts (`JobHistoryViews.keyedJoin`). On a one-partition input
-  * (see [[JobHistoryViews]]) both sides already sit in one partition,
-  * so a report runs as a single job; at 100 TB (many logs) these are
-  * co-partitioned shuffle joins on the same key. Single-row scalars
-  * (`bounds`, the summary's aggregates) attach as a cartesian product
-  * ([[withScalars]], J5), and the timeline's zero fill is a union with
-  * the spine, not a join.
+  * Plan shape: every join here is keyed on task/attempt id and the
+  * right sides (finals, attempt times) are task-cardinality. On a
+  * one-partition input (see [[JobHistoryViews]]) no join broadcasts
+  * (`JobHistoryViews.keyedJoin`) and single-row scalars (`bounds`, the
+  * summary's aggregates) attach as a cartesian product
+  * (`JobHistoryViews.withScalars`, J5): both sides already sit in one
+  * partition, so a report runs as a single job. Multi-partition inputs
+  * (at 100 TB, many logs) keep co-partitioned shuffle joins on the
+  * same key and broadcast the scalars. The timeline's zero fill is a
+  * union with the spine, not a join.
   */
 object Reports {
 
@@ -33,37 +32,26 @@ object Reports {
     df.write.mode("overwrite").option("sep", sep).option("header", "true")
       .csv(path)
 
-  /** Attach a one-row relation's columns to every row of `df`: a
-    * cartesian product with a one-partition side needs no exchange and,
-    * unlike a broadcast, no job of its own. */
-  private def withScalars(v: JobHistoryViews, df: DataFrame,
-      scalars: DataFrame): DataFrame =
-    v.onePartitioned(df.crossJoin(scalars.hint("shuffle_replicate_nl")))
-
-  /** `-m` (bin/job_history:426-436; golden vis/grap/map.d). A frame of
-    * the views: the Gantt reads it again. */
-  def mapDetails(v: JobHistoryViews): DataFrame = v.frame("mapDetails") {
+  /** `-m` (bin/job_history:426-436; golden vis/grap/map.d). */
+  def mapDetails(v: JobHistoryViews): DataFrame =
     detailsBase(v.mapTasks, v.scale)
       .select(col("task_id"), col("start_time"), col("end_time"),
         col("elapsed"), col("num_attempts"))
       .orderBy(col("task_id"))
-  }
 
   /** `-r`, current 7-column format (bin/job_history:438-458); golden
     * vis/grap/reduce.d carries the legacy 6 columns (drop
     * maps_complete). shuffle_finish is the *final attempt's*
-    * SHUFFLE_FINISHED (J1: task ⋈ finalAttempt ⋈ attempt times). A
-    * frame of the views: the Gantt reads it again. */
-  def reduceDetails(v: JobHistoryViews): DataFrame = v.frame("reduceDetails") {
-    withScalars(v,
-      keyedJoin(detailsBase(v.reduceTasks, v.scale), v.finalReduceTimes,
+    * SHUFFLE_FINISHED (J1: task ⋈ finalAttempt ⋈ attempt times). */
+  def reduceDetails(v: JobHistoryViews): DataFrame =
+    v.withScalars(
+      v.keyedJoin(detailsBase(v.reduceTasks, v.scale), v.finalReduceTimes,
         Seq("task_id"), "left"),
       allMapsComplete(v))
       .select(col("task_id"), col("start_time"), col("maps_complete"),
         col("shuffle_u").as("shuffle_finish"), col("end_time"),
         col("elapsed"), col("num_attempts"))
       .orderBy(col("task_id"))
-  }
 
   private def detailsBase(tasks: DataFrame, scale: Long): DataFrame = {
     val s = col("attrs").getItem("START_TIME").cast("long")
@@ -100,7 +88,7 @@ object Reports {
     // totalShuffleTime += (long)(shuffle_u - START_TIME/scale): the
     // reference subtracts an exact quotient from the already-truncated
     // attempt unit, then truncates — ≡ (shuffle_u*scale - start_ms) DIV scale.
-    val reduces = keyedJoin(v.reduceTasks, v.finalReduceTimes, Seq("task_id"), "left")
+    val reduces = v.keyedJoin(v.reduceTasks, v.finalReduceTimes, Seq("task_id"), "left")
       .agg(
         count(when(finished, 1)).as("num_reduces"),
         sum(when(finished, elapsed)).as("total_reduce_time"),
@@ -115,7 +103,7 @@ object Reports {
       col("attrs").getItem("JOB_STATUS").as("job_status"),
       ((ms("FINISH_TIME") - ms("LAUNCH_TIME")) / scale).cast("long")
         .as("total_time"))
-    withScalars(v, withScalars(v, job, maps), reduces)
+    v.withScalars(v.withScalars(job, maps), reduces)
       .withColumn("avg_map_time",
         col("total_map_time").cast("double") / col("num_maps"))
       .withColumn("avg_shuffle_time",
@@ -129,8 +117,8 @@ object Reports {
     * bytes written + the final attempt's shuffle/end times relative to
     * job submit. */
   def bytesReport(v: JobHistoryViews): DataFrame =
-    withScalars(v,
-      keyedJoin(v.reduceBytes, v.finalReduceTimes, Seq("task_id"), "left"),
+    v.withScalars(
+      v.keyedJoin(v.reduceBytes, v.finalReduceTimes, Seq("task_id"), "left"),
       v.bounds)
       .select(
         col("task_id"),
@@ -349,8 +337,8 @@ object Reports {
     def clamp0(c: Column): Column = greatest(lit(0L), c)
     def capped(c: Column): Column = rel(least(c, col("finish_u")))
 
-    val maps = withScalars(v,
-      keyedJoin(v.mapAttemptTimes
+    val maps = v.withScalars(
+      v.keyedJoin(v.mapAttemptTimes
         .filter(col("start_u").isNotNull && col("end_u").isNotNull),
         finals, Seq("attempt_id"), "left"),
       v.bounds)
@@ -359,8 +347,8 @@ object Reports {
         clamp0(rel(col("start_u"))).as("lo"),
         capped(col("end_u")).as("hi"))
 
-    val reduces = withScalars(v,
-      keyedJoin(v.reduceAttemptTimes
+    val reduces = v.withScalars(
+      v.keyedJoin(v.reduceAttemptTimes
         .filter(col("start_u").isNotNull && col("end_u").isNotNull),
         finals, Seq("attempt_id"), "left"),
       v.bounds)

@@ -1,13 +1,13 @@
 package graft.jobhistory
 
 import scala.collection.mutable
+import scala.concurrent.{blocking, Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-
-import JobHistoryViews.keyedJoin
 
 /** Entity views over the parsed event stream (SURVEY §1.2, §2.2-2.4).
   *
@@ -31,17 +31,19 @@ import JobHistoryViews.keyedJoin
   * text) is cached as `coalesce(1)`, which moves no data but tells the
   * planner so: every aggregation, join and sort over it is then
   * satisfied without an exchange, and a report runs as one job instead
-  * of one job per shuffle stage. Multi-partition inputs (fleets, globs)
-  * are cached as they come and keep keyed shuffles on the entity id.
-  *
-  * The events and the views several reports read (`bounds`, the task
-  * views, `finalAttempts`, `reduceAttemptTimes`, `finalReduceTimes`,
-  * the timeline classification) are derived once per views object:
-  * each is persisted and filled in one job when first used ([[pin]]),
-  * and the reports read the filled caches without a job of their own.
-  * Views the report set reads once (`job`, `reduceBytes`,
+  * of one job per shuffle stage. On such an input the views several
+  * reports read (`bounds`, the task views, `finalAttempts`,
+  * `reduceAttemptTimes`, `finalReduceTimes`) are derived once per views
+  * object: each is persisted and filled in one job when first used
+  * ([[pin]]; the five that read only the events fill side by side), and
+  * the reports read the filled caches without a job of their own. Views the report set reads once (`job`, `reduceBytes`,
   * `mapAttemptTimes`) are not persisted: a cache would cost a job and
   * save no scan.
+  *
+  * Multi-partition inputs (fleets, globs) keep keyed shuffles on the
+  * entity id, the planner's join choice and broadcast scalars, and
+  * persist only the events and the timeline classifications, each
+  * filled by the first report that reads it.
   *
   * Timestamps: the reference divides by `scale` *before* any
   * subtraction, with Groovy `(long)` truncation (SURVEY §7.4, P9).
@@ -65,7 +67,7 @@ final class JobHistoryViews(
     * join or sort would shuffle its output; `coalesce(1)` moves no data
     * and restores the single partition. Multi-partition views leave
     * `df` as it is. */
-  private[jobhistory] def onePartitioned(df: DataFrame): DataFrame =
+  private def onePartitioned(df: DataFrame): DataFrame =
     if (onePartition) df.coalesce(1) else df
 
   /** The parsed events every view reads, cached for the life of these
@@ -74,12 +76,10 @@ final class JobHistoryViews(
 
   private val ev = events
 
-  /** Everything these views persist, each after what it reads: the
-    * events, then the views pinned by [[pin]] in the order of first use. */
-  private val pins = mutable.ArrayBuffer[DataFrame](ev)
-
-  /** Report frames built once per views object ([[frame]]). */
-  private val frames = mutable.HashMap.empty[String, DataFrame]
+  /** Everything these views persist, each group after what it reads:
+    * the events, then the views of each [[pin]] call in the order of
+    * first use. */
+  private val pins = mutable.ArrayBuffer[Seq[DataFrame]](Seq(ev))
 
   /** Pin (or re-pin) every cache of these views. A `persist`
     * registration is dropped permanently by `spark.catalog.clearCache()`
@@ -88,56 +88,89 @@ final class JobHistoryViews(
     * per referencing subtree. Callers that hand out memoized views
     * (JobHistoryOps) re-check before every query. Re-pinning follows
     * creation order, so each view's cached plan reads the re-pinned
-    * events. The re-pinned caches fill when a report next reads them,
-    * and that report shuffles them (an unfilled cache reports no
-    * partitioning, see [[pin]]); report frames planned against the
-    * dropped caches are rebuilt. `storageLevel` is NONE exactly when no
+    * events. On a one-partition input each re-pinned group is filled, as
+    * [[pin]] fills it, before the next one is pinned: a view's cached
+    * plan is fixed when it is pinned, and planned over an unfilled cache
+    * it would shuffle it. `storageLevel` is NONE exactly when no
     * registration exists, so this never double-caches. */
   def ensureCached(): this.type = synchronized {
-    val dropped = pins.filter(_.storageLevel == StorageLevel.NONE)
-    dropped.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
-    if (dropped.nonEmpty) frames.clear()
+    pins.foreach { group =>
+      val dropped = group.filter(_.storageLevel == StorageLevel.NONE)
+      dropped.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+      if (onePartition && pins.size > 1) fill(dropped)
+    }
     this
   }
   ensureCached()
 
   /** Unpin everything this views object cached (the events, the pinned
-    * views and the timeline classifications) and drop its report
-    * frames. Session-scoped views live for the session and never call
-    * this; short-lived views — one HTTP request, one CLI run — must, or
-    * each one leaks its cache registrations. Dependents go first, so no
-    * remaining cache is re-planned against a dropped one. */
+    * views and the timeline classifications). Session-scoped views live
+    * for the session and never call this; short-lived views — one HTTP
+    * request, one CLI run — must, or each one leaks its cache
+    * registrations. Dependents go first, so no remaining cache is
+    * re-planned against a dropped one. */
   def release(): Unit = synchronized {
-    frames.clear()
-    pins.reverseIterator.foreach(_.unpersist())
+    pins.reverseIterator.flatMap(_.reverseIterator).foreach(_.unpersist())
   }
 
-  /** Persist `df` (the one-partition rule applied) for the life of these
-    * views and fill the cache now, in one job: executing the pinned
-    * relation's own plan runs the adaptive stage that fills it, and no
-    * row is read. Filled, the cache reports its plan's partitioning and
-    * its real size, so a report planned on it needs no exchange;
-    * unfilled, it reports neither, and the report would shuffle it. The
-    * first pin fills the events' cache before it, in a job of its own:
-    * otherwise each scan of the events in the view's plan would start
-    * one. */
-  private[jobhistory] def pin(df: DataFrame): DataFrame = synchronized {
-    if (pins.size == 1) ev.write.format("noop").mode("overwrite").save()
-    val pinned = onePartitioned(df).persist(StorageLevel.MEMORY_AND_DISK)
+  /** Persist each of `dfs` (the one-partition rule applied) for the
+    * life of these views. On a one-partition input the caches are filled
+    * now ([[fill]]), the events' before the first view's and the views
+    * of one call together: filled, a cache reports its plan's
+    * partitioning and its real size, so a report planned on it needs no
+    * exchange; unfilled, it reports neither, and the report would
+    * shuffle it. A multi-partition input's cache fills when a report
+    * first reads it. */
+  private def pin(dfs: DataFrame*): Seq[DataFrame] = synchronized {
+    if (onePartition && pins.size == 1) fill(Seq(ev))
+    val pinned = dfs.map(onePartitioned(_).persist(StorageLevel.MEMORY_AND_DISK))
     pins += pinned
-    pinned.queryExecution.toRdd
+    if (onePartition) fill(pinned)
     pinned
   }
 
-  /** The report frame `name`, built once per views object: a report the
-    * charts read again (the Gantt re-reads the details) reuses its
-    * planned query instead of planning it twice. */
-  private[jobhistory] def frame(name: String)(build: => DataFrame): DataFrame =
-    synchronized(frames.getOrElse(name, {
-      val df = build
-      frames(name) = df
-      df
-    }))
+  /** The entity views that read only the events and that the reports
+    * share: `bounds`, both task views, `finalAttempts` and
+    * `reduceAttemptTimes`. On a one-partition input the first use of any
+    * of them pins all five, and their one-task fills run side by side
+    * instead of one after another (each report reads two to four of
+    * them); a multi-partition input leaves them plans, which each report
+    * derives inside its own shuffle stages. */
+  private lazy val entities: IndexedSeq[DataFrame] = {
+    val plans = IndexedSeq(boundsPlan, mapTasksPlan, reduceTasksPlan,
+      finalAttemptsPlan, reduceAttemptTimesPlan)
+    if (onePartition) pin(plans: _*).toIndexedSeq else plans
+  }
+
+  /** Fill the caches of pinned relations side by side, one job each.
+    * The events' plan is not adaptive and runs only when written (a noop
+    * write); a view's plan is, and executing a fresh plan of it runs just
+    * the adaptive stage that fills its cache, reading no row. */
+  private def fill(dfs: Seq[DataFrame]): Unit = {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Await.result(Future.traverse(dfs)(df => Future(blocking {
+      if (df eq ev) ev.write.format("noop").mode("overwrite").save()
+      else spark.sessionState.executePlan(df.queryExecution.logical).toRdd
+    })), Duration.Inf)
+  }
+
+  /** A keyed join that never broadcasts on a one-partition input: both
+    * sides already sit in one partition, so the hash join runs inside
+    * its query's job, where a broadcast would start a job of its own.
+    * Multi-partition inputs join as the planner chooses (a keyed
+    * shuffle, or a broadcast of a small side). */
+  private[jobhistory] def keyedJoin(left: DataFrame, right: DataFrame,
+      keys: Seq[String], how: String): DataFrame =
+    if (onePartition) left.join(right.hint("shuffle_hash"), keys, how)
+    else left.join(right, keys, how)
+
+  /** Attach a one-row relation's columns to every row of `df` (J5). On a
+    * one-partition input a cartesian product with it needs no exchange
+    * and, unlike a broadcast, no job of its own; a multi-partition input
+    * broadcasts it. */
+  private[jobhistory] def withScalars(df: DataFrame, scalars: DataFrame): DataFrame =
+    if (onePartition) df.crossJoin(scalars.hint("shuffle_replicate_nl")).coalesce(1)
+    else df.crossJoin(broadcast(scalars))
 
   /** Scaled time unit: Groovy `(long)(x.toLong()/scale)` ≡ truncating
     * integral division (all fixture timestamps are positive). */
@@ -163,13 +196,15 @@ final class JobHistoryViews(
   /** A4: global job bounds in scaled units. `finish_u` only from Job
     * records carrying FINISH_TIME but not SUBMIT_TIME (the reference's
     * if/else-if, bin/job_history:236-240). */
-  lazy val bounds: DataFrame = pin(
+  lazy val bounds: DataFrame = entities(0)
+
+  private def boundsPlan: DataFrame =
     ev.filter($"event" === "Job")
       .agg(
         u(lastWhen(a("SUBMIT_TIME").isNotNull, a("SUBMIT_TIME")))
           .as("submit_u"),
         u(lastWhen(a("SUBMIT_TIME").isNull && a("FINISH_TIME").isNotNull,
-          a("FINISH_TIME"))).as("finish_u")))
+          a("FINISH_TIME"))).as("finish_u"))
 
   /** [[bounds]] keyed by JOBID — the fleet (multi-job) variant with the
     * same if/else-if semantics. */
@@ -216,36 +251,43 @@ final class JobHistoryViews(
 
   /** Reduce attempts also carry SHUFFLE_FINISHED / SORT_FINISHED on
     * their finish records (bin/job_history:310-313). */
-  lazy val reduceAttemptTimes: DataFrame = {
+  lazy val reduceAttemptTimes: DataFrame = entities(4)
+
+  private def reduceAttemptTimesPlan: DataFrame = {
     val isFinish = a("START_TIME").isNull && a("FINISH_TIME").isNotNull
-    pin(attemptTimes(reduceAttemptEvents, Seq(
+    attemptTimes(reduceAttemptEvents, Seq(
       "shuffle_u" -> u(lastWhen(isFinish && a("SHUFFLE_FINISHED").isNotNull,
         a("SHUFFLE_FINISHED"))),
       "sort_u" -> u(lastWhen(isFinish && a("SORT_FINISHED").isNotNull,
-        a("SORT_FINISHED"))))))
+        a("SORT_FINISHED")))))
   }
 
   /** J1: per task, its final attempt's reduce times (`shuffle_u`,
     * `end_u`; null when the final attempt has no ReduceAttempt record).
     * One row per task: a task has one final attempt, an attempt one
-    * times row. Pinned: three reports join it, and a pinned relation's
-    * size is known, where a join's estimated size is the product of its
-    * sides' and a report joining that estimate would shuffle it for
-    * parallelism. */
-  lazy val finalReduceTimes: DataFrame = pin(keyedJoin(finalAttempts,
-    reduceAttemptTimes.select($"attempt_id", $"shuffle_u", $"end_u"),
-    Seq("attempt_id"), "left"))
+    * times row. Pinned on a one-partition input: three reports join it,
+    * and a pinned relation's size is known, where a join's estimated size is
+    * the product of its sides' and a report joining that estimate would
+    * shuffle it for parallelism even over one partition. */
+  lazy val finalReduceTimes: DataFrame = {
+    val df = keyedJoin(finalAttempts,
+      reduceAttemptTimes.select($"attempt_id", $"shuffle_u", $"end_u"),
+      Seq("attempt_id"), "left")
+    if (onePartition) pin(df).head else df
+  }
 
   /** A3: per task, the attempt id of the last SUCCESS finish record —
     * across map AND reduce attempts (one shared finalAttempt map,
     * bin/job_history:276-282, 300-308). */
-  lazy val finalAttempts: DataFrame = {
+  lazy val finalAttempts: DataFrame = entities(3)
+
+  private def finalAttemptsPlan: DataFrame = {
     val isSuccessFinish = a("START_TIME").isNull &&
       a("FINISH_TIME").isNotNull && a("TASK_STATUS") === "SUCCESS"
-    pin(ev.filter(isMapAttempt || $"event" === "ReduceAttempt")
+    ev.filter(isMapAttempt || $"event" === "ReduceAttempt")
       .filter(isSuccessFinish)
       .groupBy(a("TASKID").as("task_id"))
-      .agg(max_by(a("TASK_ATTEMPT_ID"), $"line_no").as("attempt_id")))
+      .agg(max_by(a("TASK_ATTEMPT_ID"), $"line_no").as("attempt_id"))
   }
 
   // -------------------------------------------------------------- tasks
@@ -270,10 +312,12 @@ final class JobHistoryViews(
     * from attempt records) + NUM_ATTEMPTS. Task ids seen only via
     * attempts still appear (reference creates the entry), with null
     * attrs. */
-  lazy val mapTasks: DataFrame = pin(
+  lazy val mapTasks: DataFrame = entities(1)
+
+  private def mapTasksPlan: DataFrame =
     mergedTasks("MAP").join(attemptCounts(mapAttemptEvents),
       Seq("task_id"), "full_outer")
-      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L))))
+      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L)))
 
   /** A9: HDFS_BYTES_WRITTEN of the reduce task's last COUNTERS-bearing
     * Task record; missing counter → 0 (py semantics,
@@ -312,29 +356,23 @@ final class JobHistoryViews(
   lazy val malformedRecords: DataFrame =
     ev.filter(size($"attrs") === 0)
 
-  lazy val reduceTasks: DataFrame = pin(
+  lazy val reduceTasks: DataFrame = entities(2)
+
+  private def reduceTasksPlan: DataFrame =
     mergedTasks("REDUCE").join(attemptCounts(reduceAttemptEvents),
       Seq("task_id"), "full_outer")
-      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L))))
+      .withColumn("num_attempts", coalesce($"num_attempts", lit(0L)))
 
-  /** T3: the timeline classification ([[Reports.intervals]]), pinned:
-    * both timeline variants read it, the sweep line twice. */
-  private[jobhistory] lazy val intervals: DataFrame = pin(Reports.classify(this))
+  /** T3: the timeline classification ([[Reports.intervals]]), pinned on
+    * every input: both timeline variants read it, the sweep line twice. */
+  private[jobhistory] lazy val intervals: DataFrame = pin(Reports.classify(this)).head
 
   /** The fleet classification ([[Reports.timelinePerJob]]), pinned. */
   private[jobhistory] lazy val intervalsPerJob: DataFrame =
-    pin(Reports.classifyPerJob(this))
+    pin(Reports.classifyPerJob(this)).head
 }
 
 object JobHistoryViews {
-
-  /** A keyed join that never broadcasts. On a one-partition input both
-    * sides are already in one partition, so the hash join runs inside
-    * its query's job, where a broadcast would start a job of its own;
-    * multi-partition inputs shuffle both sides on the key. */
-  private[jobhistory] def keyedJoin(left: DataFrame, right: DataFrame,
-      keys: Seq[String], how: String): DataFrame =
-    left.join(right.hint("shuffle_hash"), keys, how)
 
   /** Whether `df` runs as one partition without shuffling. Read from its
     * physical plan, which lists the input but runs nothing; an input

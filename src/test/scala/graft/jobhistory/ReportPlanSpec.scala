@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -90,14 +91,20 @@ class ReportPlanSpec extends SparkSpec {
     "timeline" -> Reports.timeline(v),
     "timelineSweepLine" -> Reports.timelineSweepLine(v))
 
-  test("one-partition log: the report plans hold no exchange") {
+  test("one-partition log: the report plans hold no exchange, also after clearCache") {
     val v = views()
+    def exchanges(round: String): Seq[String] = reports(v).flatMap { case (name, df) =>
+      df.collect()
+      nodes(df.queryExecution.executedPlan).collect { case e: Exchange => e }
+        .map(e => s"$round $name: ${e.simpleStringWithNodeId()} over " +
+          e.child.simpleStringWithNodeId())
+    }
     try {
-      val found = reports(v).flatMap { case (name, df) =>
-        df.collect()
-        nodes(df.queryExecution.executedPlan).collect { case e: Exchange => e }
-          .map(e => s"$name: ${e.simpleStringWithNodeId()} over ${e.child.simpleStringWithNodeId()}")
-      }
+      val first = exchanges("first")
+      // the session memo's path: clearCache, then ensureCached re-pins
+      spark.catalog.clearCache()
+      v.ensureCached()
+      val found = first ++ exchanges("re-pinned")
       assert(found.isEmpty, found.mkString("\n"))
     } finally v.release()
   }
@@ -155,6 +162,13 @@ class ReportPlanSpec extends SparkSpec {
       val md = Reports.mapDetails(three)
       md.collect()
       assert(nodes(md.queryExecution.executedPlan).exists(_.isInstanceOf[ShuffleExchangeExec]))
+      // the one-partition plan shapes stay with one-partition inputs: the
+      // multi-partition summary broadcasts its scalars, no cartesian product
+      val sm = Reports.summary(three)
+      sm.collect()
+      val smNodes = nodes(sm.queryExecution.executedPlan)
+      assert(smNodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+      assert(!smNodes.exists(_.isInstanceOf[CartesianProductExec]))
 
       // the crafted log exercises what it claims to
       val s = Reports.summary(one).collect().head

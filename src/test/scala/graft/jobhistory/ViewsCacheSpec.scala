@@ -53,9 +53,28 @@ class ViewsCacheSpec extends SparkSpec {
       assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK, name)
     }
     assert(cacheEntries - entries === pinned(v).size)
+    // filled again at once (a filled cache has its RDD), not by the next report
+    assert((persisted -- rdds).size === pinned(v).size)
     assert(reportRows(v) === want)
     assert((persisted -- rdds).size === pinned(v).size)
     v.release()
+    assert(persisted -- rdds === Set.empty)
+    assert(cacheEntries === entries)
+  }
+
+  test("a multi-partition input persists only the events and the timeline classification") {
+    val (rdds, entries) = (persisted, cacheEntries)
+    val v = new JobHistoryViews(spark,
+      JobHistoryReader.readString(spark, CraftedLog.text).repartition(3))
+    try {
+      reportRows(v)
+      val entityViews = pinned(v).filterNot { case (n, _) => n == "events" || n == "intervals" }
+      entityViews.foreach { case (name, df) =>
+        assert(df.storageLevel === StorageLevel.NONE, name)
+      }
+      assert(cacheEntries - entries === 2)
+      assert((persisted -- rdds).size === 2)
+    } finally v.release()
     assert(persisted -- rdds === Set.empty)
     assert(cacheEntries === entries)
   }
