@@ -160,7 +160,7 @@ object Bench {
       Set("v20_knn_delta_append") ->
         (() => { graft.queries.DedupOps.nearDupSplitAssign(spark, sfDir); () }),
       // t35's build AND first append are maintenance-time work (their
-      // walls are measured in ScaleDemo's inc phase); the timed reps
+      // walls are BASELINE.md's fleet-scale `t35` row); the timed reps
       // measure the converged serve
       Set("t35_index_append") ->
         (() => { graft.queries.DedupOps.buildRwBandIndex(spark, sfDir)
@@ -177,8 +177,8 @@ object Bench {
         (() => { graft.queries.StreamingOps.stageS16Tail(spark, sfDir)
                  graft.queries.StreamingOps.s16BuildBase(spark, sfDir)
                  () }),
-      // t36's build/append/compact are maintenance-time (measured in
-      // ScaleDemo's inc phase); the timed reps measure the compacted
+      // t36's build/append/compact are maintenance-time (BASELINE.md's
+      // fleet-scale `t36` row); the timed reps measure the compacted
       // single-generation serve
       Set("t36_index_compact") ->
         (() => { // build/append/compact are eager side effects; the
@@ -202,9 +202,10 @@ object Bench {
         (() => { graft.queries.MultimodalOps.buildRwMediaIndex(spark, sfDir)
                  graft.queries.MultimodalOps.appendMediaIndex(spark, sfDir); () }),
       // the compaction/retraction families' build/append/compact (or
-      // build/append/retract) are maintenance-time — their walls are
-      // ScaleDemo inc-phase rows; the timed reps measure the
-      // steady-state serve of the compacted/retracted artifact
+      // build/append/retract) are maintenance-time — BASELINE.md's
+      // fleet-scale t35-t37 rows time that kind of work; the timed
+      // reps measure the steady-state serve of the compacted/retracted
+      // artifact
       Set("q37_partials_compact", "q37_partials_compact_sql") ->
         (() => { graft.queries.Relational.q37Append(spark, sfDir)
                  graft.queries.Relational.q37Compact(spark, sfDir); () }),
@@ -213,8 +214,9 @@ object Bench {
       Set("q39_agg_retract") ->
         (() => { graft.queries.Relational.q39Retract(spark, sfDir); () }),
       // the r17 policy/deletion families: builds, takedowns, age-offs,
-      // auto-folds and re-sketches are maintenance-time (ScaleDemo inc
-      // phase); the timed reps measure the steady-state serves
+      // auto-folds and re-sketches are maintenance-time (BASELINE.md's
+      // fleet-scale `t38`/`t40` rows); the timed reps measure the
+      // steady-state serves
       Set("t38_index_ageoff") ->
         (() => { graft.queries.DedupOps.indexAgeOff(spark, sfDir); () }),
       Set("t39_takedown_external") ->
@@ -268,7 +270,8 @@ object Bench {
     // build-time work, and since r12 (judge-endorsed) it must never
     // land inside a timed rep where its I/O and compute churn the
     // neighbors. The cold-cascade costs remain measured where they
-    // belong: ScaleDemo's knn/cc phases in fresh sessions.
+    // belong: BASELINE.md's fleet-scale `v15`/`v19` and `t33` rows,
+    // each from a fresh session.
     var staged = false
     stagers.foreach { case (names, run) =>
       if (only.isEmpty || names.exists(only)) {

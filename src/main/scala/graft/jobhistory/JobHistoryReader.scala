@@ -49,11 +49,8 @@ object JobHistoryReader {
   def read(spark: SparkSession, path: String): DataFrame =
     parse(readRaw(spark, path))
 
-  /** The unparsed (line_no, record) relation behind [[read]] — public
-    * within the project so the streaming fleet measurement can stage
-    * records to a streamable store with the same framing and offsets
-    * a live `readStream` source would provide. */
-  private[graft] def readRaw(spark: SparkSession, path: String): DataFrame = {
+  /** The unparsed (line_no, record) relation behind [[read]]. */
+  private def readRaw(spark: SparkSession, path: String): DataFrame = {
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
     conf.set("textinputformat.record.delimiter", RecordSep)

@@ -2309,8 +2309,9 @@ object DedupOps {
     * relation — because compaction must be invisible in the result;
     * what it changes is the READ side, which IndexAppendSpec pins
     * (file-generation drop, byte-identical serve, crash degrading to
-    * rebuild, appends resuming after) and ScaleDemo's inc phase
-    * measures (N-generation read amplification before vs after).
+    * rebuild, appends resuming after) and BASELINE.md's fleet-scale
+    * `t36` row records (N-generation read amplification before vs
+    * after, 500k docs).
     * Idempotent: once compacted, the append no-ops (cut at corpus
     * max) and the compaction no-ops (no append generation), so the
     * steady-state serve is a plain single-generation read. */
@@ -2975,7 +2976,7 @@ object DedupOps {
     * vs linear under a 512 cap). Since round 10 the HIERARCHICAL
     * route past [[NearDupBruteKMax]] removed that wall — O(n·√k)
     * distances, measured on 200k vectors with hash seeds: k=2048
-    * routed 55.9 s BEATS k=512 brute 106.1 s — so the default cap
+    * routed 55.9 s BEATS k=512 brute 106.1 s — so the cap
     * rose 512 → 4096: cells stay ≈ [[NearDupCellTarget]]-sized up to
     * ~200k vectors (finer cells = more recall headroom before the
     * sub-bucket split engages) at equal-or-better wall. Past the cap
@@ -3004,14 +3005,14 @@ object DedupOps {
   private[graft] val NearDupProbes = 2
   /** Brute-assignment ceiling: at or below this k every centroid is
     * scanned per vector (the oracle-replicable argmin). Above it —
-    * reachable only when `graft.neardup.kcap` raises the default
-    * [[NearDupKCap]] — assignment routes HIERARCHICALLY: ⌈√k⌉ coarse
+    * once the corpus passes 256 × [[NearDupCellTarget]] = 12,800
+    * vectors — assignment routes HIERARCHICALLY: ⌈√k⌉ coarse
     * groups over the fine centroids (built driver-side from the
     * already-collected ≤k rows), each vector scans the coarse list
     * and then only the fine centroids of its [[NearDupCoarseProbes]]
     * nearest groups — O(√k) distances per vector instead of O(k), the
     * v4 IVF routing applied to the blocking quantizer itself. That is
-    * what lets a cluster deployment raise the cap (finer cells, same
+    * what lets [[NearDupKCap]] sit at 4096 (finer cells, same
     * per-cell pair bound) without the O(n·k) brute assignment wall.
     * Overridable via `graft.neardup.bruteKMax` (tests force the
     * hierarchical path at toy scale with it). Lowered 512 → 256 with
@@ -3054,9 +3055,9 @@ object DedupOps {
     * registry's most expensive per-action cost at ~5 s of the round-8
     * warm 6-8 s), and the ≤ [[NearDupKCap]]-row result lands in a
     * local relation every later action broadcasts for free. The
-    * collect is BOUNDED by the k cap (512 × dims doubles), the same
-    * bounded-materialization budget as [[connectedComponentsOf]]'s
-    * small-graph spill. Centroid VALUES are unchanged — the plan
+    * collect is BOUNDED by the k cap ([[NearDupKCap]] × dims
+    * doubles), the same bounded-materialization budget as
+    * [[connectedComponentsOf]]'s small-graph spill. Centroid VALUES are unchanged — the plan
     * below is exactly the one that previously ran lazily, so the
     * DuckDB oracle's unrolled CTE chain still reproduces them. */
   private[graft] def nearDupCentroids(en: DataFrame): DataFrame = {
@@ -3064,8 +3065,7 @@ object DedupOps {
     def local(df: DataFrame): DataFrame =
       s.createDataFrame(df.collectAsList(), df.schema)
     val n = en.count()
-    val kCap = s.conf.get("graft.neardup.kcap", NearDupKCap.toString).toLong
-    val k = math.min(kCap,
+    val k = math.min(NearDupKCap,
       math.max(8L, math.ceil(n / NearDupCellTarget.toDouble).toLong))
     val bruteMax =
       s.conf.get("graft.neardup.bruteKMax", NearDupBruteKMax.toString).toLong
@@ -4008,7 +4008,8 @@ object DedupOps {
          |FROM bands GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // compaction must be INVISIBLE in the result — t35's oracle
     // verbatim; what t36 changes (the generation count the serve
-    // reads) is pinned in IndexAppendSpec and measured in ScaleDemo
+    // reads) is pinned in IndexAppendSpec and measured in BASELINE.md's
+    // fleet-scale `t36` row
     "t36_index_compact" ->
       s"""$bandsCtes
          |SELECT band, sig, min(doc_id) AS canon

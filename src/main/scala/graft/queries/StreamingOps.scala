@@ -150,9 +150,8 @@ object StreamingOps {
         val Array(lo, hi) = ev.agg(min(col("ts")), max(col("ts")))
           .head().toSeq.map(_.asInstanceOf[Long]).toArray
         val cut = lo + (hi - lo) / 2
-        // partitioned write + rename (the fleet-scale restart phase's
-        // idiom) — no single-task coalesce; the tranche globs match
-        // every moved part file
+        // partitioned write + rename — no single-task coalesce; the
+        // tranche globs match every moved part file
         Seq("a" -> ev.filter(col("ts") <= cut),
             "b" -> ev.filter(col("ts") > cut)).foreach { case (tag, half) =>
           val tmp = out.resolve(s"tmp_$tag")

@@ -218,8 +218,8 @@ object VectorOps {
     * fraction of the corpus by nprobe/num_cells, never the whole.
     *
     * The cells are the table's `label` column — routing only recalls
-    * what the cells geometrically encode. ScaleDemo's `ann` phase
-    * measures both sides at 200k vectors: raw arbitrary labels recall
+    * what the cells geometrically encode. BASELINE.md's ANN-recall
+    * row measures both sides at 200k vectors: raw arbitrary labels recall
     * 0.00 (the honest negative), and one [[kmFinalAssign]] k-means
     * pass relabeling the corpus (the IVF index build) restores
     * threshold recall@3 = 1.00 at nprobe=1. */
@@ -310,7 +310,7 @@ object VectorOps {
     * geometry — see BASELINE.md's ANN-recall rows); a real IVF index
     * build LEARNS its cells. Here the cells are v7's deterministic
     * k-means assignment ([[kmFinalAssign]] — the measured-1.00-recall
-    * path ScaleDemo's ann phase exercises), the routing centroids are
+    * path of the same BASELINE.md rows), the routing centroids are
     * one more [[kmRecompute]] over that final assignment (rounded to
     * 6 like every centroid literal), and a query routes to its
     * nearest learned centroid by cosine (nprobe=1) and probes only
@@ -1425,7 +1425,7 @@ object VectorOps {
     * directly — no corpus self-join); routing centroids and
     * codebooks are tiny memoized broadcasts. Recall trades at the
     * cell boundary (nprobe) and the codebook resolution — both
-    * measured honestly in ScaleDemo's ann phase. */
+    * measured in BASELINE.md's ANN-recall row. */
   def pqIvfSearch(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorDotProduct.register(s)
     // the stored index: cell + 4 codes per vector, one corpus pass
@@ -1508,8 +1508,8 @@ object VectorOps {
     * corpus never shuffles, the cut moves 20-byte triples, and
     * stage 2 touches ≤ queries × [[Int8Keep]] raw vectors through a
     * broadcast semi-join. Recall trades only at the quantization
-    * resolution — measured against brute in the ScaleDemo ann
-    * harness like every other variant. */
+    * resolution — measured against brute in BASELINE.md's `v18`
+    * row like every other variant. */
   private[queries] val Int8Keep = 25
   def annInt8Rerank(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorDotProduct.register(s)
