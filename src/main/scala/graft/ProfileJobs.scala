@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -8,10 +9,12 @@ import org.apache.spark.sql.SparkSession
   * through the same session config and noop sink as the bench for N
   * reps and prints, for the LAST rep, every Spark job the action
   * cascade scheduled — call site, wall ms, task count — plus per-rep
-  * totals. The per-batch/per-verb job counts of the streamed cluster
-  * gates (s18/s19/s20) are pure scheduling overhead at micro-batch
-  * sizes, so "which call site schedules how many jobs" is the number
-  * the optimization rounds steer by.
+  * totals: wall, jobs, summed job wall and the generated classes the
+  * rep compiled (a warm rep whose classes all sit in Spark's codegen
+  * cache compiles none). The per-batch/per-verb job counts of the
+  * streamed cluster gates (s18/s19/s20) are pure scheduling overhead
+  * at micro-batch sizes, so "which call site schedules how many jobs"
+  * is the number the optimization rounds steer by.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.ProfileJobs s19_stream_cluster_retention 2"
@@ -64,14 +67,17 @@ object ProfileJobs {
       jobs.clear(); order.clear()
       val last = rep == reps
       recording.set(true)
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       recording.set(false)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       import scala.jdk.CollectionConverters._
       val js = order.asScala.toSeq
       println(f"== rep $rep%d: wall $wall%.2f s, ${js.size}%d jobs, " +
-        f"${js.map(_.wallMs.max(0)).sum}%d ms summed job wall")
+        f"${js.map(_.wallMs.max(0)).sum}%d ms summed job wall, " +
+        f"$compiled%d classes compiled")
       if (last) {
         // gap = driver-side time since the previous job ended (plan,
         // commit/file I/O, stream bookkeeping) — where wall hides when

@@ -15,6 +15,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is parquet TIMESTAMP(NANOS): read as BIGINT nanos
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

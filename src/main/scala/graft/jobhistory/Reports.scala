@@ -222,20 +222,26 @@ object Reports {
     def capped(c: Column): Column = rel(least(c, col("finish_u")))
 
     def withBounds(df: DataFrame): DataFrame =
-      df.withColumn("job_id", jobIdOf(col("attempt_id")))
-        .join(bounds, Seq("job_id"))
+      v.keyedJoin(df.withColumn("job_id", jobIdOf(col("attempt_id"))), bounds,
+        Seq("job_id"), "inner")
 
-    val maps = withBounds(v.mapAttemptTimes
-      .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left"))
+    val maps = withBounds(v.keyedJoin(v.mapAttemptTimes
+      .filter(col("start_u").isNotNull && col("end_u").isNotNull),
+      finals, Seq("attempt_id"), "left"))
       .select(col("job_id"),
         when(col("is_final"), "maps").otherwise("waste").as("phase"),
         clamp0(rel(col("start_u"))).as("lo"), capped(col("end_u")).as("hi"))
-    val reduces = withBounds(v.reduceAttemptTimes
+    // final and wasted reduce attempts by a semi and an anti join, whose
+    // estimated size is the attempts' own: a join's estimate is the
+    // product of its sides', and above `spark.sql.maxSinglePartitionBytes`
+    // Spark shuffles the next keyed join even over one partition
+    val reduceTimes = v.reduceAttemptTimes
       .filter(col("start_u").isNotNull && col("end_u").isNotNull)
-      .join(finals, Seq("attempt_id"), "left"))
-    val finalReduces = reduces.filter(col("is_final") &&
-      col("shuffle_u").isNotNull && col("sort_u").isNotNull)
+    def reduces(how: String): DataFrame =
+      withBounds(v.keyedJoin(reduceTimes, finals.select(col("attempt_id")),
+        Seq("attempt_id"), how))
+    val finalReduces = reduces("left_semi")
+      .filter(col("shuffle_u").isNotNull && col("sort_u").isNotNull)
       .select(col("job_id"), explode(array(
         struct(lit("shuffle").as("phase"), clamp0(rel(col("start_u"))).as("lo"),
           capped(col("shuffle_u")).as("hi")),
@@ -244,7 +250,7 @@ object Reports {
         struct(lit("reduce").as("phase"), clamp0(rel(col("sort_u"))).as("lo"),
           capped(col("end_u")).as("hi")))).as("iv"))
       .select(col("job_id"), col("iv.phase"), col("iv.lo"), col("iv.hi"))
-    val wastedReduces = reduces.filter(col("is_final").isNull)
+    val wastedReduces = reduces("left_anti")
       .select(col("job_id"), lit("waste").as("phase"),
         clamp0(rel(col("start_u"))).as("lo"), capped(col("end_u")).as("hi"))
 
@@ -268,7 +274,7 @@ object Reports {
       coalesce(sum(when(col("phase") === p, 1L)), lit(0L)).as(p))
     val counts = expanded.groupBy(col("job_id"), col("time"))
       .agg(aggs.head, aggs.tail: _*)
-    spinePerJob(v).join(counts, Seq("job_id", "time"), "left")
+    v.keyedJoin(spinePerJob(v), counts, Seq("job_id", "time"), "left")
       .select(col("job_id") +: col("time") +:
         phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
       .orderBy(col("job_id"), col("time"))
@@ -310,7 +316,7 @@ object Reports {
       coalesce(sum(when(col("phase") === p, col("running"))), lit(0L)).as(p))
     val counts = filled.groupBy(col("job_id"), col("time"))
       .agg(aggs.head, aggs.tail: _*)
-    spinePerJob(v).join(counts, Seq("job_id", "time"), "left")
+    v.keyedJoin(spinePerJob(v), counts, Seq("job_id", "time"), "left")
       .select(col("job_id") +: col("time") +:
         phaseNames.map(p => coalesce(col(p), lit(0L)).as(p)): _*)
       .orderBy(col("job_id"), col("time"))

@@ -16,6 +16,7 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "target/spark-warehouse")
+    .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

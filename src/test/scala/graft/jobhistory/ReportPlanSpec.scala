@@ -109,6 +109,21 @@ class ReportPlanSpec extends SparkSpec {
     } finally v.release()
   }
 
+  test("one-partition log: the fleet timelines' plans hold no exchange") {
+    val v = views()
+    try {
+      val found = Seq("timelinePerJob" -> Reports.timelinePerJob(v),
+        "timelinePerJobSweepLine" -> Reports.timelinePerJobSweepLine(v)).flatMap {
+        case (name, df) =>
+          assert(df.collect().nonEmpty, name)
+          nodes(df.queryExecution.executedPlan).collect { case e: Exchange => e }
+            .map(e => s"$name: ${e.simpleStringWithNodeId()} over " +
+              e.child.simpleStringWithNodeId())
+      }
+      assert(found.isEmpty, found.mkString("\n"))
+    } finally v.release()
+  }
+
   test("one-partition log: the CLI report set and both charts stay within 15 jobs") {
     // 15 = 8 cache fills (the events, mapTasks, reduceTasks, finalAttempts,
     // reduceAttemptTimes, finalReduceTimes, bounds, the timeline
