@@ -184,12 +184,6 @@ object Bench {
         (() => { // build/append/compact are eager side effects; the
                  // returned (lazy) serve plan is discarded
                  graft.queries.DedupOps.indexCompactServe(spark, sfDir); () }),
-      // t37's membership build + takedown are maintenance-time; the
-      // timed reps measure the tombstone-aware serve (anti-join +
-      // fold)
-      Set("t37_tombstone_reelect") ->
-        (() => { graft.queries.DedupOps.buildMembersIndex(spark, sfDir)
-                 graft.queries.DedupOps.tombstoneTakedown(spark, sfDir); () }),
       Set("q34_incremental_distinct") ->
         (() => { graft.queries.Relational.q34MergedEstimates(spark, sfDir); () }),
       Set("q35_agg_append") ->
@@ -217,10 +211,6 @@ object Bench {
       // auto-folds and re-sketches are maintenance-time (BASELINE.md's
       // fleet-scale `t38`/`t40` rows); the timed reps measure the
       // steady-state serves
-      Set("t38_index_ageoff") ->
-        (() => { graft.queries.DedupOps.indexAgeOff(spark, sfDir); () }),
-      Set("t39_takedown_external") ->
-        (() => { graft.queries.DedupOps.takedownExternal(spark, sfDir); () }),
       Set("t40_auto_compact") ->
         (() => { graft.queries.DedupOps.autoCompactServe(spark, sfDir); () }),
       Set("q40_sketch_retract") ->
@@ -232,8 +222,6 @@ object Bench {
                  graft.queries.Relational
                    .appendPartialsResketchAware(spark, sfDir, "q42hll")
                  () }),
-      Set("t41_time_ageoff") ->
-        (() => { graft.queries.DedupOps.indexTimeAgeOff(spark, sfDir); () }),
       Set("q43_resketch_compact") ->
         (() => { graft.queries.Relational.q42Retract(spark, sfDir, "q43hll")
                  graft.queries.Relational
@@ -241,28 +229,19 @@ object Bench {
                  graft.queries.Relational.compactResketchArtifact(spark,
                    graft.queries.Relational.q43RwPath(spark, sfDir))
                  () }),
-      Set("m12_media_ageoff") ->
-        (() => { graft.queries.MultimodalOps.mediaAgeOff(spark, sfDir); () }),
       Set("m10_media_index_compact") ->
         (() => { graft.queries.MultimodalOps.mediaIndexCompactServe(spark, sfDir); () }),
-      Set("m11_media_tombstone_reelect") ->
-        (() => { graft.queries.MultimodalOps.stageMediaTombstones(spark, sfDir); () }),
-      Set("v21_vector_forget") ->
-        (() => { graft.queries.VectorOps.stageVectorForget(spark, sfDir); () }),
-      Set("m14_media_takedown_external") ->
-        (() => { graft.queries.MultimodalOps
-                   .stageMediaTakedownExternal(spark, sfDir); () }),
-      Set("v24_vector_takedown_external") ->
-        (() => { graft.queries.VectorOps
-                   .stageVectorTakedownExternal(spark, sfDir); () }),
-      Set("v22_vector_ageoff") ->
-        (() => { graft.queries.VectorOps.stageVectorAgeOff(spark, sfDir); () }),
       // t47's four maintenance legs (build + fingerprint-keyed
       // takedown per shelf) run eagerly inside the call; the returned
       // summary plan stays lazy, so this stages without serving —
       // the timed reps then measure the four O(index) summary aggs
       Set("t47_takedown_fanout") ->
-        (() => { graft.queries.DedupOps.takedownFanout(spark, sfDir); () }))
+        (() => { graft.queries.DedupOps.takedownFanout(spark, sfDir); () })) ++
+      // the member shelves' builds and takedowns/age-offs
+      // (t37-t41, m11-m14, v21-v24) are maintenance-time; the timed
+      // reps measure the tombstone-aware serve (anti-join + fold)
+      graft.queries.MemberShelf.entries.map(e => Set(e.query) ->
+        (() => { graft.queries.MemberShelf.stage(spark, sfDir, e); () }))
     // Note: some stagers intentionally warm session memos shared with
     // in-query operators (buildNearDupIndex populates t9/v15's
     // centroid memo, buildCcIndex populates t13's label memo) — that

@@ -1643,7 +1643,7 @@ object DedupOps {
     buildT42Index(s, dir, "t46")
     t42Append(s, dir, "t46")
     val out = requireReady(t42IndexPath(s, dir, "t46"))
-    val ext = stageT39Erasures(s, dir)
+    val ext = stageErasures(s, dir, "documents", "doc_id")
     t43ForgetExternal(s, out,
       readStable(s, ext.resolve("erasures").toString))
     ccClustersOfFolded(s, out)
@@ -1674,17 +1674,15 @@ object DedupOps {
     * O(index) aggregation per shelf (the corpus never rejoins any
     * steady-state read). */
   def takedownFanout(s: SparkSession, dir: String): DataFrame = {
-    val ext = stageT39Erasures(s, dir)
+    val ext = stageErasures(s, dir, "documents", "doc_id")
     val list = readStable(s, ext.resolve("erasures").toString)
     // ONE fingerprint job for the whole fan-out: the tag depends only
     // on the id VALUES, so every shelf (including the sum leg's
     // user_id rename) shares it — four re-computations would be fixed
     // per-rep job overhead of exactly the class the stream gates shed
     val tag = erasureFingerprint(list)
-    val band = t39IndexPath(s, dir)
-    buildMembersIndexAt(s, dir, band)
-    applyTakedownExternal(s, band, list, tag = tag)
-    MultimodalOps.stageMediaTakedownExternal(s, dir, tag = tag)
+    val band = MemberShelf.stage(s, dir, MemberShelf.t39, tag)
+    val media = MemberShelf.stage(s, dir, MemberShelf.m14, tag)
     buildT42Index(s, dir, "t46")
     t42Append(s, dir, "t46")
     val cc = requireReady(t42IndexPath(s, dir, "t46"))
@@ -1702,8 +1700,7 @@ object DedupOps {
         sum(col("doc_id")).as("checksum"))
       .select(lit("cluster").as("shelf"), col("n_groups"),
         col("n_rows"), col("checksum"))
-    val mediaSum = aliveMembers(s,
-        requireReady(MultimodalOps.m14IndexPath(s, dir))).agg(
+    val mediaSum = aliveMembers(s, requireReady(media)).agg(
         countDistinct(col("ahash")).as("n_groups"),
         count(lit(1)).as("n_rows"),
         sum_distinct(col("doc_id")).as("checksum"))
@@ -2326,58 +2323,9 @@ object DedupOps {
       .orderBy(col("band"), col("sig"))
   }
 
-  // ------------ t37: DELETION from a living index (tombstones +
-  // re-election)
-
-  /** Where t37's MEMBERSHIP band index lives. canon = min is not
-    * INVERTIBLE: the canon-only relation t34/t35/t36 serve cannot
-    * answer "who is the next-min member?" when a canon doc is taken
-    * down (GDPR erasure, copyright takedown) — the index would keep
-    * pointing at a ghost, and re-deriving the answer needs either the
-    * corpus (an O(corpus) re-band, exactly what an index exists to
-    * avoid) or the deleted doc's text (which an erasure request means
-    * you may no longer HOLD). t37's artifact therefore persists the
-    * full bucket MEMBERSHIP `(band, sig, doc_id)` instead of the
-    * folded canon: deletion becomes index-local — an O(deleted)
-    * tombstone write at takedown time and one anti-join at read time,
-    * with re-election falling out of the same min-aggregate the serve
-    * path already runs. The storage price is the duplicate mass: for
-    * a mostly-singleton bucket distribution the membership relation
-    * has nearly the same row count as the folded one (one row per
-    * (doc, band) either way); only duplicated docs add rows — the
-    * deliberate trade for invertibility. */
-  private[graft] def t37IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_members_t37",
-      s"bandmembers:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** BUILD the membership artifact: the full corpus's banded rows,
-    * unfolded — one `(band, sig, doc_id)` row per doc per band, the
-    * relation every later takedown anti-joins against. Idempotent
-    * under the nonce-marker contract. */
-  private[graft] def buildMembersIndex(s: SparkSession, dir: String): String =
-    buildMembersIndexAt(s, dir, t37IndexPath(s, dir))
-
-  private[graft] def buildMembersIndexAt(s: SparkSession, dir: String,
-      out: java.nio.file.Path): String = {
-    ensureArtifact(out) {
-      bandedSignaturesOf(docs(s, dir))
-        .select(col("band"), col("sig"), col("doc_id"))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-  }
-
-  /** t37's deterministic takedown list, derived from the INDEX alone
-    * (production receives it from outside; the fixture needs it
-    * reproducible in the oracle): every doc that is the canon of a
-    * multi-member bucket — the worst case for deletion, because every
-    * such takedown forces a re-election. An index-only scan: the
-    * corpus is never touched, and no deleted doc's text is needed. */
-  private def t37TakedownSet(members: DataFrame): DataFrame =
-    members.groupBy(col("band"), col("sig"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n"))
-      .filter(col("n") >= 2)
-      .select(col("doc_id")).distinct()
+  // ------------ DELETION from a living index (tombstones +
+  // re-election): the shared verbs the member shelves (MemberShelf),
+  // the cluster shelf and the stream gates compose
 
   /** Apply a takedown ONCE per (artifact, `marker`) — the deletion
     * mechanics SHARED by every family that buys invertibility by
@@ -2446,9 +2394,6 @@ object DedupOps {
       }
     } }
   }
-
-  private[graft] def tombstoneTakedown(s: SparkSession, dir: String): Unit =
-    applyTakedown(s, t37IndexPath(s, dir))(t37TakedownSet)
 
   /** DISTINCT-id-set fingerprint of an erasure request — the
     * compliance key shared by every external-list verb (the q44/s16
@@ -2530,6 +2475,39 @@ object DedupOps {
       _ => ids.select(col(idCol)).distinct())
   }
 
+  /** Stage the fixture's EXTERNAL erasure list over `table`'s ids — in
+    * production the ids arrive from outside (a legal-hold queue, a
+    * GDPR request log) as a relation beside the corpus, NOT derived
+    * from any index. The list is deterministic so the oracles can
+    * reproduce it: every in-range id divisible by 7, PLUS an id absent
+    * from the table (`hi + 1000` — a takedown must no-op on it, not
+    * error) and a REPEATED id (a re-submitted request must be
+    * idempotent). One list per table (`t39_erasures` over documents,
+    * `v24_erasures` over embeddings, `q44_erasures` over events),
+    * staged once per fingerprint under the nonce-marker contract. */
+  private[graft] def stageErasures(s: SparkSession, dir: String,
+      table: String, idCol: String): java.nio.file.Path = {
+    val name = Map("documents" -> "t39", "embeddings" -> "v24",
+      "events" -> "q44")(table)
+    val out = artifactDir(s"${name}_erasures",
+      s"${name}erasures:$dir@${pathFingerprint(s, s"$dir/$table.parquet")}")
+    ensureArtifact(out) {
+      val Array(lo, hi) = Tables(s, dir, table)
+        .agg(min(col(idCol)), max(col(idCol)))
+        .head().toSeq.map(_.asInstanceOf[Long]).toArray
+      // ceiling via floor division: (lo + 6) / 7 truncates toward zero,
+      // which for a negative lo SKIPS the first in-range multiple of 7
+      // and diverges from the `id % 7 <> 0` oracles
+      val first = Math.floorDiv(lo + 6, 7) * 7
+      import s.implicits._
+      s.range(first, hi + 1, 7).select(col("id").as(idCol))
+        .unionAll(Seq(hi + 1000L, first).toDF(idCol))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(out.resolve("erasures").toString)
+    }
+    out
+  }
+
   /** The tombstone-aware membership read, shared by the deletable
     * families' serves: anti-join the tombstones on `idCol` when a
     * delete generation exists — a compacted (or never-deleted-from)
@@ -2547,31 +2525,15 @@ object DedupOps {
         .select(col(idCol)), Seq(idCol), "left_anti")
   }
 
-  /** The tombstone-aware serve: surviving membership, then the usual
-    * min fold — RE-ELECTION is nothing extra, it IS the fold over the
-    * surviving members (a bucket whose canon died yields its next-min
-    * member; a bucket with no survivors vanishes, rows and all). */
-  private[graft] def tombstoneServedBuckets(s: SparkSession, dir: String)
-      : DataFrame =
-    aliveMembers(s, requireReady(t37IndexPath(s, dir)))
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("doc_id")).as("canon"))
-
-  /** t37: takedown + re-election, served — build the membership
-    * artifact, apply the deterministic takedown (every multi-member
-    * bucket's canon dies), serve the re-elected bucket relation. The
-    * oracle is the REBUILD over corpus-minus-deleted: deletion must
-    * be exactly as if the docs had never been ingested, which holds
-    * because dropping a doc's membership rows is precisely what
-    * re-banding the corpus without it would have produced. The
-    * compaction complement ([[compactTombstoneIndex]]) folds the
-    * tombstones into the membership files and drops the delete-*
-    * generation — byte-identical serve, pinned in TombstoneSpec. */
-  def tombstoneReelect(s: SparkSession, dir: String): DataFrame = {
-    buildMembersIndex(s, dir)
-    tombstoneTakedown(s, dir)
-    tombstoneServedBuckets(s, dir).orderBy(col("band"), col("sig"))
-  }
+  /** t37: takedown + re-election on the band shelf, served
+    * ([[MemberShelf.t37]]): every multi-member bucket's canon dies and
+    * the re-elected bucket relation is served. The oracle is the
+    * REBUILD over corpus-minus-deleted: dropping a doc's membership rows
+    * is precisely what re-banding the corpus without it would produce.
+    * [[compactTombstoneIndex]] folds the tombstones into the members —
+    * byte-identical serve, pinned in TombstoneSpec. */
+  def tombstoneReelect(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.t37)
 
   /** Fold the tombstones in: rewrite `members` minus the tombstoned
     * docs as one fresh generation and DROP the delete-* files — the
@@ -2607,41 +2569,6 @@ object DedupOps {
     }
   } }
 
-  // ------------ t38: RETENTION (TTL age-off — takedown by predicate)
-
-  /** t38's OWN membership artifact (t37 holds the canon-takedown's
-    * tombstones; gates stay order-independent by never sharing a
-    * mutable artifact). The build also persists `_HORIZONS` — the two
-    * deterministic age-off horizons (`lo + span/5`, `lo + 2·span/5`
-    * over the doc-id span) — so the steady-state gate never re-scans
-    * the corpus for bounds (q33's lesson: re-aggregating min/max per
-    * serve is itself a full-column scan at 100 TB). In production the
-    * horizon is an INPUT — the retention policy's cutoff, advanced by
-    * a scheduler; the derivation here exists only to make the
-    * fixture's horizons reproducible inside static oracle SQL. */
-  private[graft] def t38IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_members_t38",
-      s"bandmemberst38:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  private[graft] def buildAgeOffIndex(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = t38IndexPath(s, dir)
-    ensureArtifact(out) {
-      val d = docs(s, dir)
-      // one-time bounds read, confined to the build
-      val Array(lo, hi) = d.agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      bandedSignaturesOf(d)
-        .select(col("band"), col("sig"), col("doc_id"))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-      java.nio.file.Files.write(out.resolve("_HORIZONS"),
-        s"${lo + (hi - lo) / 5} ${lo + (hi - lo) * 2 / 5}"
-          .getBytes("UTF-8"))
-    }
-    out
-  }
-
   /** AGE OFF everything at or below `horizon` — a takedown whose id
     * list is a PREDICATE over the index's own columns, composed
     * through the SAME [[applyTakedown]] hook every erasure flows
@@ -2666,55 +2593,22 @@ object DedupOps {
       _.filter(col(Option(tsCol).getOrElse(idCol)) <= horizon)
         .select(col(idCol)).distinct())
 
-  /** t38: retention/TTL age-off, served — build the membership
-    * artifact, advance the horizon TWICE (two age-off generations on
-    * disk — the steady state of a scheduled retention job), serve the
-    * re-elected bucket relation over the survivors. The oracle is the
-    * REBUILD over corpus-minus-expired (docs above the second
-    * horizon): age-off must be exactly as if the expired tranche had
-    * never been ingested. Re-election is the same min fold deletion
-    * already pays ([[aliveMembers]]); multi-generation fold +
-    * horizon idempotence pinned in TombstoneSpec. */
-  def indexAgeOff(s: SparkSession, dir: String): DataFrame = {
-    val out = buildAgeOffIndex(s, dir)
-    val Array(h1, h2) = new String(java.nio.file.Files.readAllBytes(
-      out.resolve("_HORIZONS")), "UTF-8").trim.split("\\s+").map(_.toLong)
-    ageOffMembers(s, out, h1)
-    ageOffMembers(s, out, h2)
-    aliveMembers(s, requireReady(out))
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("doc_id")).as("canon"))
-      .orderBy(col("band"), col("sig"))
-  }
+  /** t38: retention/TTL age-off on the band shelf, served
+    * ([[MemberShelf.t38]]): the horizon advances TWICE (two age-off
+    * generations on disk — the steady state of a scheduled retention
+    * job) and the re-elected bucket relation over the survivors is
+    * served. The oracle is the REBUILD over corpus-minus-expired (docs
+    * above the second horizon). Multi-generation fold + horizon
+    * idempotence pinned in TombstoneSpec. */
+  def indexAgeOff(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.t38)
 
-  // ------------ t41: EVENT-TIME retention (TTL over a timestamp the
-  // members relation CARRIES, not an id-span predicate)
-
-  /** t41's OWN membership artifact. t38's horizon is an id-span
-    * predicate; real retention policies are EVENT-TIME — "expire
-    * everything crawled before T" — and crawl time is NOT monotone
-    * with doc id, so the expired set is non-contiguous in id space.
-    * The documents fixture carries no timestamp column, so the build
-    * derives a deterministic ingest time per doc (the t16 md5 idiom —
-    * a 32-bit value both engines reproduce bit-identically from the
-    * id; in production this is the real crawl/ingest timestamp the
-    * build has in hand) and PERSISTS IT IN THE MEMBERS RELATION: the
-    * nightly age-off then filters the index's own `ingest_ts` column —
-    * index-local, no corpus re-read, no doc text — exactly t38's verb
-    * with the predicate column swapped ([[ageOffMembers]]' `tsCol`). */
-  private[graft] def t41IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_members_t41",
-      s"bandmemberst41:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** The derived per-doc ingest time: the first 8 md5 hex digits of
-    * the decimal id as a BIGINT — uniform over [0, 2^32), reproduced
-    * verbatim by the oracle's `('0x' || substr(md5(...)))::BIGINT`. */
   /** The derived per-id ingest time shared by every event-time
-    * retention fixture (t41 band, m13 media, v23 vector): the first 8
-    * md5 hex digits of the decimal id as a BIGINT — uniform over
-    * [0, 2^32), reproduced verbatim by the oracle's
-    * `('0x' || substr(md5(...)))::BIGINT`. */
+    * retention fixture (t41 band, m13 media, v23 vector, t45
+    * cluster): the first 8 md5 hex digits of the decimal id as a
+    * BIGINT — uniform over [0, 2^32), reproduced verbatim by the
+    * oracle's `('0x' || substr(md5(...)))::BIGINT`. In production this
+    * is the real crawl/ingest timestamp the build has in hand. */
   private[graft] def ingestTsExpr(idCol: String): String =
     s"CAST(conv(substr(md5(CAST($idCol AS STRING)), 1, 8), 16, 10) " +
       "AS BIGINT)"
@@ -2735,97 +2629,21 @@ object DedupOps {
   private[graft] val T41H1 = 858993459L
   private[graft] val T41H2 = 1717986918L
 
-  private[graft] def buildTimeAgeOffIndex(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = t41IndexPath(s, dir)
-    ensureArtifact(out) {
-      bandedSignaturesOf(docs(s, dir))
-        .select(col("band"), col("sig"), col("doc_id"))
-        .withColumn("ingest_ts", org.apache.spark.sql.functions
-          .expr(t41IngestTs))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-    out
-  }
+  /** t41: EVENT-TIME retention on the band shelf, served
+    * ([[MemberShelf.t41]]): crawl time is not monotone with doc id, so
+    * the expired set is NON-CONTIGUOUS in id space (pinned in
+    * TombstoneSpec) and the timestamp rides IN the members. Oracle =
+    * the rebuild over docs above the second time horizon. */
+  def indexTimeAgeOff(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.t41)
 
-  /** t41: EVENT-TIME retention, served — build the timestamp-carrying
-    * membership artifact, advance the TIME horizon twice through the
-    * same [[ageOffMembers]] verb (per-horizon markers, per-horizon
-    * `delete-h*` generations — t38's idempotence and fold story
-    * verbatim), serve the re-elected buckets over the survivors. The
-    * expired set is NON-CONTIGUOUS in id space (the hash-time
-    * interleaves expired and surviving ids — pinned in TombstoneSpec),
-    * which is precisely what the id-span predicate cannot express and
-    * why the timestamp must ride IN the index: at 100 TB the age-off
-    * stays O(expired) + index-local either way. Oracle = the rebuild
-    * over docs above the second time horizon. */
-  def indexTimeAgeOff(s: SparkSession, dir: String): DataFrame = {
-    val out = buildTimeAgeOffIndex(s, dir)
-    ageOffMembers(s, out, T41H1, tsCol = "ingest_ts")
-    ageOffMembers(s, out, T41H2, tsCol = "ingest_ts")
-    aliveMembers(s, requireReady(out))
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("doc_id")).as("canon"))
-      .orderBy(col("band"), col("sig"))
-  }
-
-  // ------------ t39: EXTERNALLY-SUPPLIED takedown list, end-to-end
-
-  private[graft] def t39IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_members_t39",
-      s"bandmemberst39:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** Stage t39's EXTERNAL erasure list as an input relation — in
-    * production the ids arrive from outside (a legal-hold queue, a
-    * GDPR request log): a parquet relation beside the corpus, NOT
-    * derived from the index. The fixture's list is deterministic so
-    * the oracle can reproduce it: every corpus-range id divisible by
-    * 7, PLUS an id absent from the index (`hi + 1000` — the takedown
-    * must no-op on it, not error) and a REPEATED id (a re-submitted
-    * request must be idempotent). Staged once per fingerprint under
-    * the nonce-marker contract. */
-  private[graft] def stageT39Erasures(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = artifactDir("t39_erasures",
-      s"t39erasures:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-    ensureArtifact(out) {
-      val Array(lo, hi) = docs(s, dir)
-        .agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      // ceiling via floor division: (lo + 6) / 7 truncates toward zero,
-      // which for a negative lo SKIPS the first in-range multiple of 7
-      // and diverges from the doc_id % 7 <> 0 oracle
-      val first = Math.floorDiv(lo + 6, 7) * 7
-      import s.implicits._
-      s.range(first, hi + 1, 7).select(col("id").as("doc_id"))
-        .unionAll(Seq(hi + 1000L, first).toDF("doc_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(out.resolve("erasures").toString)
-    }
-    out
-  }
-
-  /** t39: the takedown ids arrive as an INPUT RELATION and flow
-    * through [[applyTakedown]] unchanged — `takedownOf` simply
-    * ignores the members relation and returns the external list
-    * (production's shape; t37/t38 derive theirs index-side only for
-    * fixture reproducibility). The edge semantics fall out of the
-    * anti-join: an id absent from the index matches no member row
-    * (no-op, never an error), a repeated id matches the same rows
-    * once — both pinned in TombstoneSpec. Oracle = the rebuild over
-    * corpus minus the PRESENT listed docs. */
-  def takedownExternal(s: SparkSession, dir: String): DataFrame = {
-    val out = t39IndexPath(s, dir)
-    buildMembersIndexAt(s, dir, out)
-    val ext = stageT39Erasures(s, dir)
-    applyTakedownExternal(s, out,
-      readStable(s, ext.resolve("erasures").toString))
-    aliveMembers(s, requireReady(out))
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("doc_id")).as("canon"))
-      .orderBy(col("band"), col("sig"))
-  }
+  /** t39: the staged EXTERNAL erasure list on the band shelf, served
+    * ([[MemberShelf.t39]]). An id absent from the index no-ops and a
+    * repeated id matches the same rows once — both pinned in
+    * TombstoneSpec. Oracle = the rebuild over corpus minus the PRESENT
+    * listed docs. */
+  def takedownExternal(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.t39)
 
   // ------------ t40: AUTO-COMPACTION policy (fold when generations
   // exceed a threshold)

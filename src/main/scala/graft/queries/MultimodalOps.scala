@@ -341,214 +341,39 @@ object MultimodalOps {
       .orderBy(col("ahash"))
   }
 
-  // ---------------- m11: media-index DELETION (t37's tombstones here)
+  // ---------------- m11-m14: the media MEMBER shelf (MemberShelf.media
+  // — the band shelf's four deletion verbs on `(ahash, doc_id)`)
 
-  /** Where m11's MEMBERSHIP media-hash index lives. Like the band
-    * index (t37), the folded `(ahash, canon)` relation m8/m9/m10
-    * serve is not invertible — a takedown of a canon would leave it
-    * pointing at a ghost, and re-deriving the next-min needs the
-    * payload bytes an erasure request means you no longer hold. The
-    * deletable media index persists membership `(ahash, doc_id)`
-    * unfolded instead; for the mostly-singleton hash distribution the
-    * row count is nearly the folded relation's — only duplicated
-    * payloads add rows (the invertibility premium, measured for the
-    * band family in BASELINE.md). */
-  private[graft] def m11IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("media_members_m11",
-      s"mediamembers:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** BUILD the media membership artifact: every doc's perceptual
-    * hash, unfolded — one `(ahash, doc_id)` row per doc, the relation
-    * every later takedown anti-joins against. Nonce-marker
-    * idempotent. */
-  private[graft] def buildMediaMembers(s: SparkSession, dir: String): String = {
-    val out = m11IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      mediaAhashOf(mediaTable(s, dir)
-          .select(col("doc_id"), col("payload")))
-        .select(col("ahash"), col("doc_id"))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-  }
-
-  /** m11's deterministic takedown list (production receives it from
-    * outside): every canon of a multi-member hash bucket — the worst
-    * case, each forcing a re-election. Index-only; the corpus and the
-    * payload bytes are never touched. */
-  private def m11TakedownSet(members: DataFrame): DataFrame =
-    members.groupBy(col("ahash"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n"))
-      .filter(col("n") >= 2)
-      .select(col("doc_id")).distinct()
-
-  /** The tombstone-aware media serve: surviving membership, min fold
-    * — re-election IS the fold (t37's rule on the hash shelf). */
-  private[graft] def mediaTombstoneServed(s: SparkSession, dir: String)
-      : DataFrame =
-    DedupOps.aliveMembers(s, DedupOps.requireReady(m11IndexPath(s, dir)))
-      .groupBy(col("ahash"))
-      .agg(min(col("doc_id")).as("canon"))
-
-  /** m11: DELETION from the media index — build the membership
-    * artifact, apply the deterministic takedown through the SHARED
-    * [[DedupOps.applyTakedown]] mechanics (O(deleted) tombstone
-    * write, `_TAKEDOWN` once-per-artifact, marker-last), serve the
-    * re-elected `(ahash, canon)` relation. Oracle = the rebuild over
-    * corpus-minus-deleted: dropping a doc's membership row is exactly
-    * what re-hashing the corpus without it would produce (the decode
-    * is per-doc). [[DedupOps.compactTombstoneIndex]] folds the
-    * tombstones in; re-election + compaction pinned in
+  /** m11: DELETION from the media index, served ([[MemberShelf.m11]]):
+    * every multi-member hash bucket's canon is taken down and the
+    * re-elected `(ahash, canon)` relation is served. Oracle = the
+    * rebuild over corpus-minus-deleted: dropping a doc's membership row
+    * is exactly what re-hashing the corpus without it would produce
+    * (the decode is per-doc). Re-election + compaction pinned in
     * TombstoneSpec. */
-  def mediaTombstoneReelect(s: SparkSession, dir: String): DataFrame = {
-    stageMediaTombstones(s, dir)
-    mediaTombstoneServed(s, dir).orderBy(col("ahash"))
-  }
+  def mediaTombstoneReelect(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.m11)
 
-  /** m11's maintenance path alone (build + takedown), exposed for the
-    * bench pre-stager: the timed reps measure the tombstone-aware
-    * serve. */
-  private[graft] def stageMediaTombstones(s: SparkSession, dir: String): Unit = {
-    buildMediaMembers(s, dir)
-    DedupOps.applyTakedown(s, m11IndexPath(s, dir))(m11TakedownSet)
-  }
+  /** m14: the staged external erasure list on the media shelf
+    * ([[MemberShelf.m14]]) — the same list the band and cluster
+    * shelves erase, because an erasure request names DOCUMENTS: one
+    * list fans out to every index holding the doc's derived state. The
+    * payload bytes are never touched. Oracle = the re-hash over docs
+    * not divisible by 7. */
+  def mediaTakedownExternal(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.m14)
 
-  // ---------------- m14: EXTERNAL takedown list on the media shelf
-  // (t39's input-relation shape — m11 derives its list index-side for
-  // fixture reproducibility; production's erasures arrive from a
-  // legal-hold queue as a staged relation)
-
-  private[graft] def m14IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("media_members_m14",
-      s"mediamembersm14:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** m14: the staged t39 erasure relation (corpus-range multiples of
-    * 7, plus an absent id that must no-op and a repeated id that must
-    * be idempotent — the same staged list the band/cluster shelves
-    * erase, because an erasure request names DOCUMENTS, not shelves:
-    * one list fans out to every index holding the doc's derived
-    * state) applied to the media membership through the SHARED
-    * [[DedupOps.applyTakedown]], re-elected canons served. The
-    * payload bytes are never touched — the membership rows carry the
-    * hash, which is the point: honoring the erasure needs no decode.
-    * Oracle = the re-hash over docs not divisible by 7. */
-  def mediaTakedownExternal(s: SparkSession, dir: String): DataFrame = {
-    stageMediaTakedownExternal(s, dir)
-    DedupOps.aliveMembers(s, DedupOps.requireReady(m14IndexPath(s, dir)))
-      .groupBy(col("ahash"))
-      .agg(min(col("doc_id")).as("canon"))
-      .orderBy(col("ahash"))
-  }
-
-  /** m14's maintenance path alone (members copy + external-list
-    * takedown), exposed for the bench pre-stager. */
-  private[graft] def stageMediaTakedownExternal(s: SparkSession,
-      dir: String, tag: String = null): Unit = {
-    val out = m14IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      mediaAhashOf(mediaTable(s, dir)
-          .select(col("doc_id"), col("payload")))
-        .select(col("ahash"), col("doc_id"))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-    val ext = DedupOps.stageT39Erasures(s, dir)
-    DedupOps.applyTakedownExternal(s, out,
-      DedupOps.readStable(s, ext.resolve("erasures").toString), tag = tag)
-  }
-
-  /** m12's OWN membership copy (m11 holds the canon-takedown's
-    * tombstones; gates never share a mutable artifact). `_HORIZONS`
-    * persists the fixture's two retention cutoffs at build time —
-    * t38's rule: the steady-state serve never re-scans the corpus for
-    * bounds; in production the horizon is the retention policy's
-    * input. */
-  private[graft] def m12IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("media_members_m12",
-      s"mediamembersm12:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  private[graft] def buildMediaAgeOffIndex(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = m12IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      val m = mediaTable(s, dir)
-      // one-time bounds read, confined to the build
-      val Array(lo, hi) = m.agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      mediaAhashOf(m.select(col("doc_id"), col("payload")))
-        .select(col("ahash"), col("doc_id"))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-      java.nio.file.Files.write(out.resolve("_HORIZONS"),
-        s"${lo + (hi - lo) / 5} ${lo + (hi - lo) * 2 / 5}"
-          .getBytes("UTF-8"))
-    }
-    out
-  }
-
-  /** m12: retention/TTL age-off on the MEDIA shelf — the policy verb
-    * is shelf-agnostic by construction: [[DedupOps.ageOffMembers]]
-    * filters the membership relation on `doc_id` alone, so the
-    * identical horizon-generation mechanics (per-horizon
-    * `delete-h<horizon>-*` tombstones + `_TAKEDOWN_<horizon>`
-    * markers, one compaction folding any number of them) apply to the
-    * `(ahash, doc_id)` members unchanged — no media-specific deletion
-    * code exists, which is the point of sharing `applyTakedown`.
-    * Re-election is the same min fold the m11 serve runs. Oracle =
-    * the re-hash over media above the second horizon (age-off must be
-    * exactly as if the expired media had never been ingested; the
+  /** m12: id-span retention on the media shelf ([[MemberShelf.m12]]).
+    * Oracle = the re-hash over media above the second horizon (the
     * expired payload bytes never rejoin any plan). */
-  def mediaAgeOff(s: SparkSession, dir: String): DataFrame = {
-    val out = buildMediaAgeOffIndex(s, dir)
-    val Array(h1, h2) = new String(java.nio.file.Files.readAllBytes(
-      out.resolve("_HORIZONS")), "UTF-8").trim.split("\\s+").map(_.toLong)
-    DedupOps.ageOffMembers(s, out, h1)
-    DedupOps.ageOffMembers(s, out, h2)
-    DedupOps.aliveMembers(s, DedupOps.requireReady(out))
-      .groupBy(col("ahash"))
-      .agg(min(col("doc_id")).as("canon"))
-      .orderBy(col("ahash"))
-  }
+  def mediaAgeOff(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.m12)
 
-  /** m13's OWN membership copy carrying the derived `ingest_ts`
-    * column (t41's md5 idiom — in production the real capture time
-    * the build has in hand). Horizons are the shared compile-time
-    * fifths of the 2^32 time range — no bounds scan even at build. */
-  private[graft] def m13IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("media_members_m13",
-      s"mediamembersm13:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  private[graft] def buildMediaTimeAgeOffIndex(s: SparkSession,
-      dir: String): java.nio.file.Path = {
-    val out = m13IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      mediaAhashOf(mediaTable(s, dir).select(col("doc_id"), col("payload")))
-        .select(col("ahash"), col("doc_id"))
-        .withColumn("ingest_ts", expr(DedupOps.t41IngestTs))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-    out
-  }
-
-  /** m13: EVENT-TIME retention on the media shelf — t41's verb with
-    * zero media-specific code: capture time is not monotone with doc
-    * id (the expired set is non-contiguous in id space, which m12's
-    * id-span predicate cannot express), so the timestamp rides IN the
-    * members relation and [[DedupOps.ageOffMembers]]' `tsCol` filters
-    * it index-locally — per-horizon markers/generations exactly as
-    * t41, the expired payload bytes never rejoin any plan. Oracle =
-    * the re-hash over media whose derived capture time survives the
-    * second horizon. */
-  def mediaTimeAgeOff(s: SparkSession, dir: String): DataFrame = {
-    val out = buildMediaTimeAgeOffIndex(s, dir)
-    DedupOps.ageOffMembers(s, out, DedupOps.T41H1, tsCol = "ingest_ts")
-    DedupOps.ageOffMembers(s, out, DedupOps.T41H2, tsCol = "ingest_ts")
-    DedupOps.aliveMembers(s, DedupOps.requireReady(out))
-      .groupBy(col("ahash"))
-      .agg(min(col("doc_id")).as("canon"))
-      .orderBy(col("ahash"))
-  }
+  /** m13: event-time retention on the media shelf ([[MemberShelf.m13]]):
+    * capture time rides in the members. Oracle = the re-hash over media
+    * whose derived capture time survives the second horizon. */
+  def mediaTimeAgeOff(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.m13)
 
   def phashDedup(s: SparkSession, dir: String): DataFrame = {
     val h = mediaAhash(s, dir)

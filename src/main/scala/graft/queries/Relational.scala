@@ -997,7 +997,7 @@ object Relational {
     * retraction would re-apply. These artifacts fold the rule
     * version into their key and are abandoned/rebuilt on a rule
     * change (the same migration contract as the cluster shelf). */
-  private val erasureFpTaggedFams = Set("t47agg")
+  private val erasureFpTaggedFams = Set("q44agg", "t47agg")
 
   /** Where a family's READ-WRITE partials artifact lives. q33/q34's
     * artifacts stay read-only for the same reason t34's does beside
@@ -1802,33 +1802,6 @@ object Relational {
   private[graft] def q44RwPath(s: SparkSession, dir: String) =
     rwPartialsPath(s, dir, "q44agg")
 
-  /** Stage q44's EXTERNAL erasure list — user ids arriving from
-    * outside (a GDPR request log; t39's staging idiom on the events
-    * dimension): every in-range user_id divisible by 7, PLUS an id
-    * absent from the corpus (the erasure must no-op on it, never
-    * error) and a REPEATED id (a re-submitted request — the semi
-    * join matches its rows once, so repetition inside one list is
-    * harmless by construction). Staged once per fingerprint under
-    * the nonce-marker contract; floor division so a negative id
-    * range still starts at the first in-range multiple. */
-  private[graft] def stageQ44Erasures(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = DedupOps.artifactDir("q44_erasures",
-      s"q44erasures:$dir@${DedupOps.pathFingerprint(s, s"$dir/events.parquet")}")
-    DedupOps.ensureArtifact(out) {
-      val Array(lo, hi) = t(s, dir, "events")
-        .agg(min(col("user_id")), max(col("user_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val first = Math.floorDiv(lo + 6, 7) * 7
-      import s.implicits._
-      s.range(first, hi + 1, 7).select(col("id").as("user_id"))
-        .unionAll(Seq(hi + 1000L, first).toDF("user_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(out.resolve("erasures").toString)
-    }
-    out
-  }
-
   /** Erase the LISTED USERS' events from the living sum aggregate —
     * the external-takedown verb (t39's input-relation shape) on the
     * INVERTIBLE shelf: the erasure ids arrive as a relation, the
@@ -1908,18 +1881,15 @@ object Relational {
   private[graft] def q44Takedown(s: SparkSession, dir: String): Unit = {
     buildRwPartials(s, dir, "q44agg")(q33Partial)
     appendPartials(s, dir, "q44agg")(q33Partial)
-    val ext = stageQ44Erasures(s, dir)
-    val erasures = DedupOps.readStable(s, ext.resolve("erasures").toString)
-    // the tag keys on the list's CONTENT (sorted distinct ids), not a
+    val erasures = DedupOps.readStable(s,
+      DedupOps.stageErasures(s, dir, "events", "user_id")
+        .resolve("erasures").toString)
+    // the tag keys on the list's CONTENT (its distinct id set), not a
     // file fingerprint: a re-staged byte-identical list (new mtime)
     // must stay the SAME takedown — a fingerprint-keyed marker would
-    // re-apply it and silently double-subtract. One scalar agg; an
-    // erasure request list is bounded by its nature
-    val tag = erasures
-      .agg(expr("md5(array_join(transform(sort_array(" +
-        "collect_set(user_id)), x -> CAST(x AS STRING)), ','))").as("h"))
-      .head().getString(0).take(12)
-    q44Erase(s, dir, erasures, tag)
+    // re-apply it and silently double-subtract
+    q44Erase(s, dir, erasures,
+      DedupOps.erasureFingerprint(erasures, idCol = "user_id"))
   }
 
   /** q37's fold on q44's artifact: the `retractx*` generations carry

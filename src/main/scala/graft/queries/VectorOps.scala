@@ -901,7 +901,9 @@ object VectorOps {
       assigned, DedupOps.NearDupCellCap))
   }
 
-  // ------------- v21: vector FORGET (t37's tombstones on the kNN shelf)
+  // ------------- v21-v24: the vector MEMBER shelf (MemberShelf.vector
+  // — the band shelf's four deletion verbs on the `assign` inverted
+  // file; the learned cells stay frozen, re-election is re-ranking)
 
   /** v21's deterministic erasure batch: every 13th vector — a
     * "random" GDPR/takedown slice, index-derivable (production
@@ -910,241 +912,38 @@ object VectorOps {
     * many survivors lose a top-3 neighbor and must re-rank. */
   private[graft] val V21ForgetMod = 13L
 
-  /** Where v21's membership vector index lives — its OWN copy of the
-    * v19 `assign` inverted file (the rw-family rule: v19's read-only
-    * artifact must stay untouched so the gates are
-    * order-independent). The assign relation is ALREADY unfolded —
-    * one (cluster, vec_id, embedding) row per probe — so unlike the
-    * folded band/media indexes (t37/m11 pay a membership premium for
-    * invertibility), the vector index is invertible for free:
-    * deletion needs no new state, only tombstones. */
-  private[graft] def v21IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("vec_members_v21",
-      s"vecmembers:$dir@${DedupOps.pathFingerprint(s, s"$dir/embeddings.parquet")}")
+  /** v21: FORGET vectors from the living kNN index, served
+    * ([[MemberShelf.v21]]): the erasure batch is tombstoned and the
+    * graph runs over the SURVIVING members — one anti-join before the
+    * identical within-cell pair join + directed top-3 tail. The oracle
+    * runs the full-corpus Lloyd chain and filters membership AFTER
+    * assignment, exactly the engine's dataflow
+    * ([[DedupOps.nearDupPairsCtesWhere]]); bucket sub-splits recompute
+    * over survivors on both sides. Re-rank + compaction pinned in
+    * TombstoneSpec. */
+  def vectorForget(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.v21)
 
-  private[graft] def buildVecMembers(s: SparkSession, dir: String): String = {
-    val out = v21IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      val idx = DedupOps.buildNearDupIndex(s, dir)
-      DedupOps.readStable(s, s"$idx/assign")
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-  }
+  /** v24: the staged external erasure list over the embeddings id
+    * range, served ([[MemberShelf.v24]]). Oracle = the v15 chain with
+    * the mod-7 survivors filtered AFTER the frozen full-corpus
+    * assignment. */
+  def vectorTakedownExternal(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.v24)
 
-  private def v21ForgetSet(members: DataFrame): DataFrame =
-    members.filter(col("vec_id") % V21ForgetMod === 0)
-      .select(col("vec_id")).distinct()
+  /** v22: id-span retention on the vector shelf ([[MemberShelf.v22]]).
+    * Oracle = the frozen-assignment chain filtered to vec_id above the
+    * second horizon AFTER assignment. */
+  def vectorAgeOff(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.v22)
 
-  /** v21: FORGET vectors from the living kNN index — tombstone the
-    * erasure batch through the SHARED [[DedupOps.applyTakedown]]
-    * mechanics (O(deleted) write, `_TAKEDOWN` once-per-artifact,
-    * marker-last), then serve the graph over the SURVIVING members:
-    * one anti-join before the identical within-cell pair join +
-    * directed top-3 tail. Re-election here is RE-RANKING — a survivor
-    * whose top-3 neighbor was forgotten pulls up its next-best
-    * within-cell candidate, which falls out of the existing
-    * row_number tail over the shrunken candidate set. The learned
-    * state (cells) stays FROZEN — v20's maintenance rule: forgetting
-    * a member must not relearn the quantizer — so the oracle runs the
-    * full-corpus Lloyd chain and filters membership AFTER assignment,
-    * exactly the engine's dataflow ([[DedupOps
-    * .nearDupPairsCtesWhere]]). Bucket sub-splits recompute over
-    * survivors on both sides. Compaction
-    * ([[DedupOps.compactTombstoneIndex]]) folds the tombstones into
-    * the members; re-rank + compaction pinned in TombstoneSpec. */
-  def vectorForget(s: SparkSession, dir: String): DataFrame = {
-    stageVectorForget(s, dir)
-    knnDirectedTop3(DedupOps.cellBlockedPairs(
-      DedupOps.aliveMembers(s,
-        DedupOps.requireReady(v21IndexPath(s, dir)), idCol = "vec_id"),
-      DedupOps.NearDupCellCap))
-  }
-
-  /** v21's maintenance path alone (members copy + forget tombstones),
-    * exposed for the bench pre-stager: the timed reps measure the
-    * surviving-members graph serve. */
-  private[graft] def stageVectorForget(s: SparkSession, dir: String): Unit = {
-    graft.functions.VectorDotProduct.register(s)
-    buildVecMembers(s, dir)
-    DedupOps.applyTakedown(s, v21IndexPath(s, dir))(v21ForgetSet)
-  }
-
-  // ------------- v24: EXTERNAL takedown list on the vector shelf
-  // (t39's input-relation shape — v21's list is index-derived for
-  // fixture reproducibility; production's erasures arrive staged)
-
-  private[graft] def v24IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("vec_members_v24",
-      s"vecmembersv24:$dir@${DedupOps.pathFingerprint(s, s"$dir/embeddings.parquet")}")
-
-  /** Stage v24's external erasure list over the EMBEDDINGS id range
-    * (the vector shelf's own id space): every in-range vec_id
-    * divisible by 7, plus an absent id (must no-op) and a repeated id
-    * (must be idempotent) — t39's exact edge set. Staged once per
-    * fingerprint; `Math.floorDiv` for the first multiple (the t39
-    * negative-lo lesson). */
-  private[graft] def stageV24Erasures(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = DedupOps.artifactDir("v24_erasures",
-      s"v24erasures:$dir@${DedupOps.pathFingerprint(s, s"$dir/embeddings.parquet")}")
-    DedupOps.ensureArtifact(out) {
-      val Array(lo, hi) = graft.Tables(s, dir, "embeddings")
-        .agg(min(col("vec_id")), max(col("vec_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val first = Math.floorDiv(lo + 6, 7) * 7
-      import s.implicits._
-      s.range(first, hi + 1, 7).select(col("id").as("vec_id"))
-        .unionAll(Seq(hi + 1000L, first).toDF("vec_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(out.resolve("erasures").toString)
-    }
-    out
-  }
-
-  /** v24: the vector shelf's external-takedown verb — the staged
-    * erasure relation tombstones the membership inverted file through
-    * the SHARED [[DedupOps.applyTakedown]] (the assign relation is
-    * already unfolded, so deletion needs no new state — v21's
-    * invertible-for-free rule), and the kNN graph re-ranks over the
-    * survivors: a survivor whose top-3 neighbor was erased pulls up
-    * its next-best within-cell candidate from the existing
-    * row_number tail. Learned cells stay FROZEN (v20's rule: an
-    * erasure must not relearn the quantizer). Oracle = the v15 chain
-    * with the mod-7 survivors filtered AFTER the frozen full-corpus
-    * assignment — the engine's exact dataflow. */
-  def vectorTakedownExternal(s: SparkSession, dir: String): DataFrame = {
-    stageVectorTakedownExternal(s, dir)
-    knnDirectedTop3(DedupOps.cellBlockedPairs(
-      DedupOps.aliveMembers(s,
-        DedupOps.requireReady(v24IndexPath(s, dir)), idCol = "vec_id"),
-      DedupOps.NearDupCellCap))
-  }
-
-  /** v24's maintenance path alone, exposed for the bench
-    * pre-stager. */
-  private[graft] def stageVectorTakedownExternal(s: SparkSession,
-      dir: String): Unit = {
-    graft.functions.VectorDotProduct.register(s)
-    val out = v24IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      val idx = DedupOps.buildNearDupIndex(s, dir)
-      DedupOps.readStable(s, s"$idx/assign")
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-    val ext = stageV24Erasures(s, dir)
-    DedupOps.applyTakedownExternal(s, out,
-      DedupOps.readStable(s, ext.resolve("erasures").toString),
-      idCol = "vec_id")
-  }
-
-  /** v22's OWN members copy (v21 holds the erasure-batch tombstones;
-    * gates never share a mutable artifact). `_HORIZONS` derives from
-    * the assign relation's OWN vec_id bounds — fully index-local, the
-    * corpus is not even scanned for the policy staging (t38/m12 pay a
-    * corpus bounds read at build; the vector shelf's members carry
-    * the ids already). */
-  private[graft] def v22IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("vec_members_v22",
-      s"vecmembersv22:$dir@${DedupOps.pathFingerprint(s, s"$dir/embeddings.parquet")}")
-
-  private[graft] def buildVecAgeOffIndex(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = v22IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      val idx = DedupOps.buildNearDupIndex(s, dir)
-      val assign = DedupOps.readStable(s, s"$idx/assign")
-      val Array(lo, hi) = assign
-        .agg(min(col("vec_id")), max(col("vec_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      assign.write.mode("overwrite")
-        .parquet(out.resolve("members").toString)
-      java.nio.file.Files.write(out.resolve("_HORIZONS"),
-        s"${lo + (hi - lo) / 5} ${lo + (hi - lo) * 2 / 5}"
-          .getBytes("UTF-8"))
-    }
-    out
-  }
-
-  /** v22's maintenance path (members copy + two horizon advances),
-    * exposed for the bench pre-stager. */
-  private[graft] def stageVectorAgeOff(s: SparkSession, dir: String): Unit = {
-    graft.functions.VectorDotProduct.register(s)
-    val out = buildVecAgeOffIndex(s, dir)
-    val Array(h1, h2) = new String(java.nio.file.Files.readAllBytes(
-      out.resolve("_HORIZONS")), "UTF-8").trim.split("\\s+").map(_.toLong)
-    DedupOps.ageOffMembers(s, out, h1, idCol = "vec_id")
-    DedupOps.ageOffMembers(s, out, h2, idCol = "vec_id")
-  }
-
-  /** v22: retention/TTL age-off on the VECTOR shelf — the policy verb
-    * completes the matrix: band (t38), media (m12), sum (q41), and
-    * now vectors, all through [[DedupOps.ageOffMembers]] with only
-    * the id column varying. Cells stay FROZEN (v20/v21's rule —
-    * retention must not relearn the quantizer), tombstones land per
-    * horizon, and re-election is RE-RANKING through the existing
-    * top-3 tail over the surviving candidate set, exactly v21's serve
-    * with a different survivor predicate. Oracle = the full-corpus
-    * frozen-assignment chain filtered to vec_id above the second
-    * horizon AFTER assignment — the engine's dataflow. */
-  def vectorAgeOff(s: SparkSession, dir: String): DataFrame = {
-    stageVectorAgeOff(s, dir)
-    knnDirectedTop3(DedupOps.cellBlockedPairs(
-      DedupOps.aliveMembers(s,
-        DedupOps.requireReady(v22IndexPath(s, dir)), idCol = "vec_id"),
-      DedupOps.NearDupCellCap))
-  }
-
-  /** v23's OWN members copy with the derived `ingest_ts` riding in
-    * the assign relation (t41's md5 idiom on vec_id — in production
-    * the embedding job's real run timestamp). Compile-time horizons:
-    * no scan of anything at policy staging. */
-  private[graft] def v23IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("vec_members_v23",
-      s"vecmembersv23:$dir@${DedupOps.pathFingerprint(s, s"$dir/embeddings.parquet")}")
-
-  private[graft] def buildVecTimeAgeOffIndex(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = v23IndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      val idx = DedupOps.buildNearDupIndex(s, dir)
-      DedupOps.readStable(s, s"$idx/assign")
-        .withColumn("ingest_ts",
-          expr(DedupOps.ingestTsExpr("vec_id")))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-    }
-    out
-  }
-
-  private[graft] def stageVectorTimeAgeOff(s: SparkSession,
-      dir: String): Unit = {
-    graft.functions.VectorDotProduct.register(s)
-    val out = buildVecTimeAgeOffIndex(s, dir)
-    DedupOps.ageOffMembers(s, out, DedupOps.T41H1,
-      idCol = "vec_id", tsCol = "ingest_ts")
-    DedupOps.ageOffMembers(s, out, DedupOps.T41H2,
-      idCol = "vec_id", tsCol = "ingest_ts")
-  }
-
-  /** v23: EVENT-TIME retention on the vector shelf — t41's verb
-    * through the same [[DedupOps.ageOffMembers]] with idCol AND tsCol
-    * varying, zero vector-specific deletion code: embedding time is
-    * not monotone with vec_id, so the expired set is non-contiguous
-    * in id space (what v22's id-span horizon cannot express) and the
-    * timestamp must ride IN the members. Cells stay FROZEN (v20/v21's
-    * rule), re-election is re-ranking over survivors. Oracle = the
-    * frozen-assignment chain filtered to surviving derived times
-    * AFTER assignment. */
-  def vectorTimeAgeOff(s: SparkSession, dir: String): DataFrame = {
-    stageVectorTimeAgeOff(s, dir)
-    knnDirectedTop3(DedupOps.cellBlockedPairs(
-      DedupOps.aliveMembers(s,
-        DedupOps.requireReady(v23IndexPath(s, dir)), idCol = "vec_id"),
-      DedupOps.NearDupCellCap))
-  }
+  /** v23: event-time retention on the vector shelf
+    * ([[MemberShelf.v23]]): embedding time is not monotone with vec_id,
+    * so the timestamp rides in the members. Oracle = the
+    * frozen-assignment chain filtered to surviving derived times AFTER
+    * assignment. */
+  def vectorTimeAgeOff(s: SparkSession, dir: String): DataFrame =
+    MemberShelf.serve(s, dir, MemberShelf.v23)
 
   private lazy val knnGraphScaledOracle: String =
     s"""${DedupOps.nearDupPairsCtes},

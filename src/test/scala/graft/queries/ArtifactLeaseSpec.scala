@@ -120,8 +120,7 @@ class ArtifactLeaseSpec extends SparkSpec {
         .toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
     writeDocs(5)
-    val idx1 = DedupOps.buildMembersIndexAt(spark, corpus,
-      DedupOps.t37IndexPath(spark, corpus))
+    val idx1 = MemberShelf.build(spark, corpus, MemberShelf.t37)
     assert(Files.exists(java.nio.file.Paths.get(idx1, "_KEY")),
       "builds must stamp the key the sweep adjudicates from")
     // live fingerprint → the artifact survives the sweep
@@ -134,8 +133,7 @@ class ArtifactLeaseSpec extends SparkSpec {
     assert(swept.contains(idx1), s"stale artifact must be swept: $swept")
     assert(!Files.exists(java.nio.file.Paths.get(idx1)))
     // the family re-derives cleanly at its NEW fingerprint path …
-    val idx2 = DedupOps.buildMembersIndexAt(spark, corpus,
-      DedupOps.t37IndexPath(spark, corpus))
+    val idx2 = MemberShelf.build(spark, corpus, MemberShelf.t37)
     assert(idx2 !== idx1)
     assert(Files.size(java.nio.file.Paths.get(idx2, "_INDEX_READY")) > 0)
     // … and the fresh build is live: a second sweep leaves it alone

@@ -236,6 +236,11 @@ class PartialsCompactSpec extends SparkSpec {
       Vector("mixedu", 1L, 4.00)),
       s"erased users' events must net out exactly: $served")
     val out = Relational.q44RwPath(spark, tmp)
+    // the erasure marker carries the staged list's set fingerprint
+    val list = spark.read.parquet(DedupOps.stageErasures(spark, tmp,
+      "events", "user_id").resolve("erasures").toString)
+    assert(Files.exists(out.resolve(
+      s"_ERASED_${DedupOps.erasureFingerprint(list, idCol = "user_id")}")))
     // exactly one erasure generation, keyed by the staged list
     val names0 = out.resolve("partials").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq

@@ -384,7 +384,11 @@ class PlanSpec extends SparkSpec {
         ("q39_agg_retract", "q39agg_rw", "events.parquet"),
         ("m11_media_tombstone_reelect", "media_members_m11",
           "documents.parquet"),
-        ("v21_vector_forget", "vec_members_v21", "embeddings.parquet"))) {
+        ("v21_vector_forget", "vec_members_v21", "embeddings.parquet"),
+        ("m14_media_takedown_external", "media_members_m14",
+          "documents.parquet"),
+        ("v24_vector_takedown_external", "vec_members_v24",
+          "embeddings.parquet"))) {
       val p = plan(q)
       assert(p.contains(art), s"$q must read its persisted artifact:\n$p")
       assert(!p.contains(corpus), s"$q must never re-scan the corpus:\n$p")
@@ -409,6 +413,8 @@ class PlanSpec extends SparkSpec {
         ("m12_media_ageoff", "media_members_m12", "documents.parquet"),
         ("v22_vector_ageoff", "vec_members_v22", "embeddings.parquet"),
         ("t41_time_ageoff", "band_members_t41", "documents.parquet"),
+        ("m13_media_time_ageoff", "media_members_m13", "documents.parquet"),
+        ("v23_vector_time_ageoff", "vec_members_v23", "embeddings.parquet"),
         ("q41_agg_ageoff", "q41agg_rw", "events.parquet"),
         ("q44_agg_takedown", "q44agg_rw", "events.parquet"),
         ("t42_cc_incremental", "cc_index_t42", "documents.parquet"),

@@ -49,7 +49,7 @@ class TombstoneSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val hits = DedupOps.bandedSignaturesOf(probe)
       .select(col("doc_id"), col("band"), col("sig"))
-      .join(DedupOps.tombstoneServedBuckets(spark, dir), Seq("band", "sig"))
+      .join(MemberShelf.served(spark, dir, MemberShelf.t37), Seq("band", "sig"))
       .groupBy(col("doc_id")).agg(min(col("canon")).as("dup_of"))
       .collect()
     assert(hits.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dup_of")))
@@ -66,7 +66,7 @@ class TombstoneSpec extends SparkSpec {
       .collect().map(_.toSeq.toVector).toSeq === rebuild)
     // the tombstone generation is on disk; the members are NOT
     // rewritten at takedown time (that is compaction's job)
-    val idx = DedupOps.t37IndexPath(spark, dir)
+    val idx = MemberShelf.path(spark, dir, MemberShelf.t37)
     assert(idx.resolve("tombstones").toFile.listFiles()
       .exists(_.getName.startsWith("delete-000-")))
     assert(idx.resolve("members").toFile.listFiles()
@@ -77,7 +77,7 @@ class TombstoneSpec extends SparkSpec {
     val dir = craft()
     val before = DedupOps.tombstoneReelect(spark, dir)
       .collect().map(_.toSeq.toVector).toSeq
-    val idx = DedupOps.t37IndexPath(spark, dir)
+    val idx = MemberShelf.path(spark, dir, MemberShelf.t37)
     assert(DedupOps.compactTombstoneIndex(spark, idx),
       "an index holding tombstones must compact")
     val after = DedupOps.tombstoneReelect(spark, dir)
@@ -90,7 +90,7 @@ class TombstoneSpec extends SparkSpec {
     val memberFiles = idx.resolve("members").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet"))
     assert(memberFiles.forall(_.startsWith("compact-")), memberFiles.toSeq)
-    val plan = DedupOps.tombstoneServedBuckets(spark, dir)
+    val plan = MemberShelf.served(spark, dir, MemberShelf.t37)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("LeftAnti"),
       s"the compacted serve must be a plain scan-and-fold:\n$plan")
@@ -101,7 +101,7 @@ class TombstoneSpec extends SparkSpec {
   test("t37 serve is artifact-only: the corpus never rejoins the plan") {
     val dir = craft()
     DedupOps.tombstoneReelect(spark, dir).collect()
-    val plan = DedupOps.tombstoneServedBuckets(spark, dir)
+    val plan = MemberShelf.served(spark, dir, MemberShelf.t37)
       .queryExecution.executedPlan.toString
     assert(plan.contains("band_members_t37"),
       "serve must read the persisted membership artifact")
@@ -129,12 +129,12 @@ class TombstoneSpec extends SparkSpec {
       .collect().map(_.toSeq.toVector).toSeq
     assert(served === rebuild)
     // compaction folds the tombstones in; the serve plans no anti-join
-    val idx = MultimodalOps.m11IndexPath(spark, dir)
+    val idx = MemberShelf.path(spark, dir, MemberShelf.m11)
     assert(DedupOps.compactTombstoneIndex(spark, idx))
     val after = MultimodalOps.mediaTombstoneReelect(spark, dir)
       .collect().map(_.toSeq.toVector).toSeq
     assert(after === served)
-    assert(!MultimodalOps.mediaTombstoneServed(spark, dir)
+    assert(!MemberShelf.served(spark, dir, MemberShelf.m11)
       .queryExecution.executedPlan.toString.contains("LeftAnti"))
   }
 
@@ -143,7 +143,8 @@ class TombstoneSpec extends SparkSpec {
     // the artifact is fingerprint-keyed and persists across test
     // runs; a prior run's compaction would have folded the tombstones
     // this test pins — start from a fresh lifecycle
-    DedupOps.deleteRecursively(VectorOps.v21IndexPath(spark, dir).toFile)
+    DedupOps.deleteRecursively(
+      MemberShelf.path(spark, dir, MemberShelf.v21).toFile)
     val served = VectorOps.vectorForget(spark, dir).collect()
     // no forgotten vec appears on either side of the graph
     assert(served.forall(r => r.getAs[Long]("src") % 13L != 0 &&
@@ -170,7 +171,7 @@ class TombstoneSpec extends SparkSpec {
     assert(reranked,
       "some survivor must have lost its rank-1 neighbor and re-ranked")
     // compaction folds the tombstones in, serve unchanged, no anti-join
-    val out = VectorOps.v21IndexPath(spark, dir)
+    val out = MemberShelf.path(spark, dir, MemberShelf.v21)
     assert(DedupOps.compactTombstoneIndex(spark, out, idCol = "vec_id"))
     val after = VectorOps.vectorForget(spark, dir)
     assert(after.collect().map(_.toSeq.toVector).toSeq === expected)
@@ -197,7 +198,7 @@ class TombstoneSpec extends SparkSpec {
     val canons = served.map(_.getAs[Long]("canon")).distinct.sorted
     assert(canons.toSeq === Seq(50L, 70L, 100L), canons.toSeq)
     // TWO age-off generations on disk, one per horizon
-    val idx = DedupOps.t38IndexPath(spark, tmp)
+    val idx = MemberShelf.path(spark, tmp, MemberShelf.t38)
     val tombNames = idx.resolve("tombstones").toFile.listFiles()
       .map(_.getName).sorted.toSeq
     assert(tombNames.exists(_.startsWith("delete-h20-")) &&
@@ -267,7 +268,7 @@ class TombstoneSpec extends SparkSpec {
       s"hash-time must interleave ids: maxExpired=$maxExpired " +
         s"minAlive=$minAlive")
     // per-horizon generations + timestamp column persisted in members
-    val idx = DedupOps.t41IndexPath(spark, dir)
+    val idx = MemberShelf.path(spark, dir, MemberShelf.t41)
     val tombNames = idx.resolve("tombstones").toFile.listFiles()
       .map(_.getName).sorted.toSeq
     assert(tombNames.exists(_.startsWith(s"delete-h${DedupOps.T41H1}-")) &&
@@ -285,7 +286,7 @@ class TombstoneSpec extends SparkSpec {
   test("m13/v23: the event-time verb is shelf-agnostic — ts rides in members, per-horizon generations, idempotent") {
     val dir = "/root/testdata/sf0.001"
     MultimodalOps.mediaTimeAgeOff(spark, dir).collect()
-    val m = MultimodalOps.m13IndexPath(spark, dir)
+    val m = MemberShelf.path(spark, dir, MemberShelf.m13)
     assert(spark.read.parquet(m.resolve("members").toString)
       .columns.contains("ingest_ts"),
       "the capture time must ride IN the media members relation")
@@ -298,7 +299,7 @@ class TombstoneSpec extends SparkSpec {
       .map(_.getName).sorted.toSeq === tn,
       "a lagging horizon must no-op on the media shelf too")
     VectorOps.vectorTimeAgeOff(spark, dir).collect()
-    val v = VectorOps.v23IndexPath(spark, dir)
+    val v = MemberShelf.path(spark, dir, MemberShelf.v23)
     assert(spark.read.parquet(v.resolve("members").toString)
       .columns.contains("ingest_ts"))
     val vn = v.resolve("tombstones").toFile.listFiles()
@@ -325,7 +326,7 @@ class TombstoneSpec extends SparkSpec {
     // per-horizon markers) must rebuild and re-derive to the same
     // served relation, because every input to the policy (the corpus,
     // the horizon arithmetic) is deterministic
-    val idx = DedupOps.t38IndexPath(spark, tmp)
+    val idx = MemberShelf.path(spark, tmp, MemberShelf.t38)
     Files.delete(idx.resolve("_INDEX_READY"))
     val recovered = DedupOps.indexAgeOff(spark, tmp)
       .collect().map(_.toSeq.toVector).toSeq
@@ -372,7 +373,7 @@ class TombstoneSpec extends SparkSpec {
     assert(served.map(_.toSeq.toVector).toSeq === rebuild)
     // two horizon generations; ONE compaction folds both (the shared
     // compactTombstoneIndex, no media-specific deletion code)
-    val idx = MultimodalOps.m12IndexPath(spark, tmp)
+    val idx = MemberShelf.path(spark, tmp, MemberShelf.m12)
     val tombNames = idx.resolve("tombstones").toFile.listFiles()
       .map(_.getName).sorted.toSeq
     assert(tombNames.exists(_.startsWith("delete-h20-")) &&
@@ -400,7 +401,7 @@ class TombstoneSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     // the staged input relation really carries the two edge cases: an
     // id ABSENT from the index (hi + 1000) and a REPEATED id
-    val ext = DedupOps.stageT39Erasures(spark, tmp)
+    val ext = DedupOps.stageErasures(spark, tmp, "documents", "doc_id")
     val ids = spark.read.parquet(ext.resolve("erasures").toString)
       .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
     assert(ids === Seq(7L, 7L, 14L, 1020L), ids)
@@ -417,7 +418,7 @@ class TombstoneSpec extends SparkSpec {
       .collect().map(_.toSeq.toVector).toSeq
     assert(served.map(_.toSeq.toVector).toSeq === rebuild)
     // a re-submitted list short-circuits on the marker
-    val idx = DedupOps.t39IndexPath(spark, tmp)
+    val idx = MemberShelf.path(spark, tmp, MemberShelf.t39)
     val nonce0 = new String(Files.readAllBytes(
       idx.resolve("_INDEX_READY")), "UTF-8")
     val again = DedupOps.takedownExternal(spark, tmp)
@@ -446,7 +447,7 @@ class TombstoneSpec extends SparkSpec {
       .collect().map(_.toSeq.toVector).toSeq
     assert(m === mRebuild)
     // the staged vector list carries the t39 edges (absent + repeat)
-    val ext = VectorOps.stageV24Erasures(spark, sf)
+    val ext = DedupOps.stageErasures(spark, sf, "embeddings", "vec_id")
     val ids = spark.read.parquet(ext.resolve("erasures").toString)
       .collect().map(_.getAs[Long]("vec_id")).toSeq
     assert(ids.count(_ == ids.min) === 2, s"repeated id missing: $ids")
@@ -462,9 +463,10 @@ class TombstoneSpec extends SparkSpec {
   test("v22 age-off on the vector shelf: frozen cells, per-horizon tombstones, re-rank over survivors") {
     val dir = "/root/testdata/sf0.001"
     // fingerprint-keyed artifact persists across runs — fresh lifecycle
-    DedupOps.deleteRecursively(VectorOps.v22IndexPath(spark, dir).toFile)
+    DedupOps.deleteRecursively(
+      MemberShelf.path(spark, dir, MemberShelf.v22).toFile)
     val served = VectorOps.vectorAgeOff(spark, dir).collect()
-    val idx = VectorOps.v22IndexPath(spark, dir)
+    val idx = MemberShelf.path(spark, dir, MemberShelf.v22)
     val Array(h1, h2) = new String(Files.readAllBytes(
       idx.resolve("_HORIZONS")), "UTF-8").trim.split("\\s+").map(_.toLong)
     assert(h1 < h2)
@@ -494,7 +496,7 @@ class TombstoneSpec extends SparkSpec {
   test("t37 is idempotent across serves and crash-safe at the takedown window") {
     val dir = craft()
     DedupOps.tombstoneReelect(spark, dir).collect()
-    val idx = DedupOps.t37IndexPath(spark, dir)
+    val idx = MemberShelf.path(spark, dir, MemberShelf.t37)
     val marker = idx.resolve("_INDEX_READY")
     val nonce0 = new String(Files.readAllBytes(marker), "UTF-8")
     val first = DedupOps.tombstoneReelect(spark, dir)
@@ -520,8 +522,8 @@ class TombstoneSpec extends SparkSpec {
     // differing only in duplicate multiplicity) short-circuits.
     val dir = craft() // twins {1, 100}; singletons {2}, {150}
     import spark.implicits._
-    val out = DedupOps.t39IndexPath(spark, dir)
-    DedupOps.buildMembersIndexAt(spark, dir, out)
+    val out = MemberShelf.path(spark, dir, MemberShelf.t39)
+    MemberShelf.build(spark, dir, MemberShelf.t39)
     def canons: Seq[Long] = DedupOps.aliveMembers(
         spark, DedupOps.requireReady(out))
       .groupBy(col("band"), col("sig"))
@@ -563,16 +565,18 @@ class TombstoneSpec extends SparkSpec {
     // the second-different-list behavior pinned above holds for them
     // by construction (one shared verb, zero shelf-specific code).
     val sf = "/root/testdata/sf0.001"
-    MultimodalOps.stageMediaTakedownExternal(spark, sf)
+    MemberShelf.stage(spark, sf, MemberShelf.m14)
     val mTag = DedupOps.erasureFingerprint(spark.read.parquet(
-      DedupOps.stageT39Erasures(spark, sf).resolve("erasures").toString))
-    assert(Files.exists(MultimodalOps.m14IndexPath(spark, sf)
+      DedupOps.stageErasures(spark, sf, "documents", "doc_id")
+        .resolve("erasures").toString))
+    assert(Files.exists(MemberShelf.path(spark, sf, MemberShelf.m14)
       .resolve(s"_TAKEDOWN_X$mTag")))
-    VectorOps.stageVectorTakedownExternal(spark, sf)
+    MemberShelf.stage(spark, sf, MemberShelf.v24)
     val vTag = DedupOps.erasureFingerprint(spark.read.parquet(
-      VectorOps.stageV24Erasures(spark, sf).resolve("erasures").toString),
+      DedupOps.stageErasures(spark, sf, "embeddings", "vec_id")
+        .resolve("erasures").toString),
       idCol = "vec_id")
-    assert(Files.exists(VectorOps.v24IndexPath(spark, sf)
+    assert(Files.exists(MemberShelf.path(spark, sf, MemberShelf.v24)
       .resolve(s"_TAKEDOWN_X$vTag")))
   }
 
@@ -587,16 +591,18 @@ class TombstoneSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     DedupOps.takedownFanout(spark, sf).collect()
     val listDf = spark.read.parquet(
-      DedupOps.stageT39Erasures(spark, sf).resolve("erasures").toString)
+      DedupOps.stageErasures(spark, sf, "documents", "doc_id")
+        .resolve("erasures").toString)
     val listed = listDf.collect().map(_.getAs[Long]("doc_id")).toSet
     def ids(df: org.apache.spark.sql.DataFrame, c: String): Set[Long] =
       df.select(col(c)).distinct().collect().map(_.getLong(0)).toSet
     val expected =
       ids(Tables(spark, sf, "documents"), "doc_id") -- listed
     val band = ids(DedupOps.aliveMembers(spark,
-      DedupOps.requireReady(DedupOps.t39IndexPath(spark, sf))), "doc_id")
+      DedupOps.requireReady(MemberShelf.path(spark, sf, MemberShelf.t39))),
+      "doc_id")
     val media = ids(DedupOps.aliveMembers(spark,
-      DedupOps.requireReady(MultimodalOps.m14IndexPath(spark, sf))),
+      DedupOps.requireReady(MemberShelf.path(spark, sf, MemberShelf.m14))),
       "doc_id")
     assert(band === expected, "band shelf must serve corpus minus listed")
     assert(media === band, "media and band shelves must agree exactly")
