@@ -140,8 +140,6 @@ object Bench {
         (() => { graft.queries.Relational.q31PartitionPrune(spark, sfDir); () }),
       Set("q32_bucketed_join") ->
         (() => { graft.queries.Relational.q32BucketedJoin(spark, sfDir); () }),
-      Set("q33_incremental_agg", "q33_incremental_agg_sql") ->
-        (() => { graft.queries.Relational.q33IncrementalAgg(spark, sfDir); () }),
       Set("s10_stream_restart", "s11_restart_keyed_state") ->
         (() => graft.queries.StreamingOps.stageRestartFixtures(spark, sfDir)),
       Set("v17_ann_index_load") ->
@@ -184,51 +182,17 @@ object Bench {
         (() => { // build/append/compact are eager side effects; the
                  // returned (lazy) serve plan is discarded
                  graft.queries.DedupOps.indexCompactServe(spark, sfDir); () }),
-      Set("q34_incremental_distinct") ->
-        (() => { graft.queries.Relational.q34MergedEstimates(spark, sfDir); () }),
-      Set("q35_agg_append") ->
-        (() => { graft.queries.Relational.q35Append(spark, sfDir); () }),
-      Set("q36_sketch_append") ->
-        (() => { graft.queries.Relational.q36Append(spark, sfDir); () }),
       Set("m8_media_index_probe") ->
         (() => { graft.queries.MultimodalOps.buildMediaIndex(spark, sfDir); () }),
       Set("m9_media_index_append") ->
         (() => { graft.queries.MultimodalOps.buildRwMediaIndex(spark, sfDir)
                  graft.queries.MultimodalOps.appendMediaIndex(spark, sfDir); () }),
-      // the compaction/retraction families' build/append/compact (or
-      // build/append/retract) are maintenance-time — BASELINE.md's
-      // fleet-scale t35-t37 rows time that kind of work; the timed
-      // reps measure the steady-state serve of the compacted/retracted
-      // artifact
-      Set("q37_partials_compact", "q37_partials_compact_sql") ->
-        (() => { graft.queries.Relational.q37Append(spark, sfDir)
-                 graft.queries.Relational.q37Compact(spark, sfDir); () }),
-      Set("q38_sketch_compact") ->
-        (() => { graft.queries.Relational.q38CompactedEstimates(spark, sfDir); () }),
-      Set("q39_agg_retract") ->
-        (() => { graft.queries.Relational.q39Retract(spark, sfDir); () }),
       // the r17 policy/deletion families: builds, takedowns, age-offs,
       // auto-folds and re-sketches are maintenance-time (BASELINE.md's
       // fleet-scale `t38`/`t40` rows); the timed reps measure the
       // steady-state serves
       Set("t40_auto_compact") ->
         (() => { graft.queries.DedupOps.autoCompactServe(spark, sfDir); () }),
-      Set("q40_sketch_retract") ->
-        (() => { graft.queries.Relational.q40Retract(spark, sfDir); () }),
-      Set("q41_agg_ageoff") ->
-        (() => { graft.queries.Relational.q41AggAgeOff(spark, sfDir); () }),
-      Set("q42_resketch_append") ->
-        (() => { graft.queries.Relational.q42Retract(spark, sfDir)
-                 graft.queries.Relational
-                   .appendPartialsResketchAware(spark, sfDir, "q42hll")
-                 () }),
-      Set("q43_resketch_compact") ->
-        (() => { graft.queries.Relational.q42Retract(spark, sfDir, "q43hll")
-                 graft.queries.Relational
-                   .appendPartialsResketchAware(spark, sfDir, "q43hll")
-                 graft.queries.Relational.compactResketchArtifact(spark,
-                   graft.queries.Relational.q43RwPath(spark, sfDir))
-                 () }),
       Set("m10_media_index_compact") ->
         (() => { graft.queries.MultimodalOps.mediaIndexCompactServe(spark, sfDir); () }),
       // t47's four maintenance legs (build + fingerprint-keyed
@@ -241,7 +205,14 @@ object Bench {
       // (t37-t41, m11-m14, v21-v24) are maintenance-time; the timed
       // reps measure the tombstone-aware serve (anti-join + fold)
       graft.queries.MemberShelf.entries.map(e => Set(e.query) ->
-        (() => { graft.queries.MemberShelf.stage(spark, sfDir, e); () }))
+        (() => { graft.queries.MemberShelf.stage(spark, sfDir, e); () })) ++
+      // the partials entries' builds, appends, compactions, retractions
+      // and re-sketches (q33-q44) are maintenance-time too; the timed
+      // reps measure the steady-state serve. t47's sum leg has no query
+      // of its own: t47's stager runs it.
+      graft.queries.PartialsShelf.entries.filter(_.queries.nonEmpty)
+        .map(e => e.queries.toSet ->
+          (() => { graft.queries.PartialsShelf.stage(spark, sfDir, e); () }))
     // Note: some stagers intentionally warm session memos shared with
     // in-query operators (buildNearDupIndex populates t9/v15's
     // centroid memo, buildCcIndex populates t13's label memo) — that

@@ -868,11 +868,8 @@ object DedupOps {
     if (!ready) withArtifactLease(out) {
       // another process may have finished the build while we waited
       if (!ready) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
         Option(out.toFile.listFiles()).foreach(
-          _.filter(_.getName != "_LEASE").foreach(rm))
+          _.filter(_.getName != "_LEASE").foreach(deleteRecursively))
         // a REBUILD at this path may change a relation's schema (the
         // membersCarryTs flip is the live example) — drop any schema
         // memos under this directory so the next readStable re-infers
@@ -2265,10 +2262,9 @@ object DedupOps {
       val files = Option(dst.toFile.listFiles()).toSeq.flatten
       require(!files.exists(_.getName.startsWith("resketch-")),
         s"$out/$rel holds resketch-* generations: a flat fold would " +
-          "re-add the rows they replace — serve through the family's " +
-          "replacement-preferring merge-on-read " +
-          "(Relational.q40MergedEstimates); resketch artifacts have no " +
-          "flat compaction")
+          "re-add the rows they replace — read the replacement-" +
+          "preferring relation (PartialsShelf.partials) and fold it " +
+          "with PartialsShelf.compact instead")
       val hasAppends = files.exists(f => f.getName.startsWith("append-") ||
         f.getName.startsWith("retract") || f.getName.startsWith("ageoff"))
       if (!hasAppends) false

@@ -650,7 +650,8 @@ object Relational {
   /** One staged layout per input fingerprint: the hex rides in the
     * dir/table name, so a regenerated source table re-stages instead
     * of serving a stale layout (the s10/ann-index idiom). */
-  private def layoutHex(s: SparkSession, dir: String, table: String): String = {
+  private[queries] def layoutHex(s: SparkSession, dir: String,
+      table: String): String = {
     val fp = DedupOps.pathFingerprint(s, s"$dir/$table.parquet")
     java.security.MessageDigest.getInstance("MD5")
       .digest(s"$dir/$table@$fp".getBytes("UTF-8"))
@@ -729,139 +730,38 @@ object Relational {
       .orderBy(col("c_mktsegment"))
   }
 
+  // ----------- q33-q44: the partials maintenance shelf. Each gate is a
+  // PartialsShelf entry on its own artifact copy; every gate's result
+  // must equal what its oracle computes over the raw events in one
+  // pass, so maintenance is invisible in the result.
+
   /** q33: INCREMENTAL AGGREGATE MAINTENANCE — the don't-rescan-history
-    * batch pattern every 100 TB nightly pipeline runs: yesterday's
-    * per-key aggregate is MATERIALIZED (staged to parquet, like a
-    * production metrics table), and today's query scans ONLY the
-    * delta (ts past the cut — the predicate pushes to the scan) and
-    * merges the two partial-aggregate relations. The merge is exact
-    * because every partial is an integer: counts, and value summed in
-    * CENTS (`round(value·100)` as BIGINT) — a double sum's result
-    * depends on addition order, so history-sum + delta-sum could
-    * differ from the oracle's single-pass sum in the last ulp; cent
-    * integers make partial-merge associativity exact, which is the
-    * property incremental maintenance NEEDS (the t28/v7 micro-unit
-    * idiom applied to maintenance state). The oracle computes the
-    * same statistics over the full table in one pass — maintenance
-    * must be invisible in the result. */
-  // the cut predicate compares in the parquet column's NATIVE type
-  // (BIGINT nanos or TIMESTAMP) — a predicate over the normalized
-  // (converted) ts is an expression over the column and can never
-  // reach PushedFilters; the native-typed literal folds and pushes.
-  // cut is stored in nanos; micros files compare at cut DIV 1000,
-  // exact because every micros value m satisfies m*1000 > cut ⟺
-  // m > cut DIV 1000 (and the ≤ complement likewise). Shared by the
-  // q33/q34 maintenance pair.
-  private def tsCutLit(raw: DataFrame, cutNanos: Long): Column =
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => lit(cutNanos)
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        expr(s"timestampadd(MICROSECOND, ${cutNanos / 1000}, " +
-          "CAST('1970-01-01 00:00:00' AS TIMESTAMP_NTZ))")
-      case _ => expr(s"timestamp_micros(${cutNanos / 1000})")
-    }
+    * batch pattern every nightly pipeline runs: yesterday's per-key
+    * aggregate is MATERIALIZED as integer-cent partials with its `_CUT`
+    * watermark (read back like a production metrics table), and today's
+    * query scans ONLY the delta (`ts > _CUT`, pushed to the scan —
+    * plan-pinned in PlanSpec) and merges the two partial relations.
+    * The oracle computes the same statistics over the full table. */
+  def q33IncrementalAgg(s: SparkSession, dir: String): DataFrame =
+    PartialsShelf.serve(s, dir, PartialsShelf.q33)
 
-  /** q33's per-key exact partial (counts + value in integer CENTS —
-    * the partial-merge-associativity trick its Scaladoc explains);
-    * shared with the q35 write-back. */
-  private def q33Partial(df: DataFrame): DataFrame =
-    df.select(col("event_type"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("pn"), sum(col("cents")).as("pc"))
-
-  /** q33's partial-merge tail: partials → the published aggregate. */
-  private def q33Merge(partials: DataFrame): DataFrame =
-    partials.groupBy(col("event_type"))
-      .agg(sum(col("pn")).as("n_events"),
-        round(sum(col("pc")).cast("double") / 100d, 2).as("sum_value"))
-      .orderBy(col("event_type"))
-
-  def q33IncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    // "yesterday's" materialized aggregate — written once per input
-    // fingerprint, read back from parquet like the real metrics table.
-    // The CUT POINT (the high-watermark ts the history covers) is
-    // persisted WITH the partials: the incremental query's only
-    // corpus-side work must be the pushed-down delta scan — reading
-    // the cut by re-aggregating min/max over the full table (the old
-    // formulation) is itself a full-column scan at 100 TB. In
-    // production the cut is known maintenance state; here the
-    // artifact IS that state.
-    val (partsDir, cut) = q33HistArtifact(s, dir, raw)
-    // today: scan the delta only (ts > cut pushes to the parquet scan —
-    // plan-pinned in PlanSpec) + merge with the stored partials
-    q33Merge(s.read.parquet(partsDir.toString)
-      .unionAll(q33Partial(raw.filter(col("ts") > tsCutLit(raw, cut)))))
-  }
-
-  /** q33's "yesterday" state — the partials parquet + the persisted
-    * `_CUT` watermark — staged once per input fingerprint; shared by
-    * the DataFrame serve and the SQL-text twin so both read the SAME
-    * maintenance artifact. */
-  private def q33HistArtifact(s: SparkSession, dir: String,
-      raw: DataFrame): (java.nio.file.Path, Long) = {
-    val hist = java.nio.file.Paths.get("target",
-      s"q33_hist_${layoutHex(s, dir, "events")}").toAbsolutePath
-    val cutFile = hist.resolve("_CUT")
-    val partsDir = hist.resolve("partials")
-    synchronized {
-      if (!java.nio.file.Files.exists(cutFile) ||
-          !java.nio.file.Files.exists(partsDir.resolve("_SUCCESS"))) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(hist.toFile)
-        // the one-time BUILD pays the bounds scan (offline, like the
-        // index builds); every later invocation reads the cut back
-        val Array(lo, hi) = t(s, dir, "events")
-          .agg(min(col("ts")), max(col("ts")))
-          .head().toSeq.map(_.asInstanceOf[Long]).toArray
-        val cut = (lo + hi) / 2
-        q33Partial(raw.filter(col("ts") <= tsCutLit(raw, cut)))
-          .write.mode("overwrite").parquet(partsDir.toString)
-        java.nio.file.Files.write(cutFile, cut.toString.getBytes("UTF-8"))
-      }
-    }
-    (partsDir, new String(java.nio.file.Files.readAllBytes(cutFile),
-      "UTF-8").trim.toLong)
-  }
-
-  /** The `ts > cut` literal as SQL TEXT — [[tsCutLit]]'s rule for the
-    * text surface, matched to the parquet encoding the events table
-    * shipped with (epoch-nanos BIGINT vs TIMESTAMP micros). */
-  private def tsCutSql(raw: DataFrame, cutNanos: Long): String =
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => cutNanos.toString
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        s"timestampadd(MICROSECOND, ${cutNanos / 1000}, " +
-          "CAST('1970-01-01 00:00:00' AS TIMESTAMP_NTZ))"
-      case _ => s"timestamp_micros(${cutNanos / 1000})"
-    }
-
-  /** q33 through the SQL-TEXT surface — the incremental refresh (the
-    * relational maintenance family's highest-traffic read: merge the
-    * persisted per-key partials with the delta's, scanning only
-    * `ts > _CUT`) as ONE `spark.sql(...)` statement over
-    * serial-suffixed temp views of the raw events and the partials
-    * artifact, gated by the IDENTICAL oracle as the programmatic
-    * q33 (§2.12's rule on this family, t34_sql's pattern): a SQL-first
-    * user's nightly dashboard refresh is exactly this statement. The
-    * delta predicate embeds via [[tsCutSql]] so the pushed scan
-    * matches the DataFrame path's encoding handling; view hygiene
-    * (no clobbered user views, no leaked catalog entries) pinned in
-    * RelationalSpec. */
+  /** q33 through the SQL-TEXT surface: the same refresh as ONE
+    * `spark.sql(...)` statement over serial-suffixed temp views of the
+    * raw events and the partials artifact, gated by q33's oracle. The
+    * delta predicate embeds via [[PartialsShelf.tsCutSql]], so the
+    * pushed scan matches the DataFrame path's encoding handling; view
+    * hygiene is pinned in RelationalSpec. */
   def q33IncrementalAggSql(s: SparkSession, dir: String): DataFrame = {
     val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val (partsDir, cut) = q33HistArtifact(s, dir, raw)
+    val out = PartialsShelf.build(s, dir, PartialsShelf.q33)
     JobHistoryOps.withSqlViews(s, Seq(
       "q33_events" -> raw,
-      "q33_partials" -> s.read.parquet(partsDir.toString)))(nm =>
+      "q33_partials" -> PartialsShelf.partials(s, out)))(nm =>
       s"""WITH dp AS (
          | SELECT event_type, count(*) AS pn,
          |  sum(CAST(round(value * 100) AS BIGINT)) AS pc
          | FROM ${nm("q33_events")}
-         | WHERE ts > ${tsCutSql(raw, cut)}
+         | WHERE ts > ${PartialsShelf.tsCutSql(raw, DedupOps.cutOf(out))}
          | GROUP BY event_type),
          |allp AS (
          | SELECT event_type, pn, pc FROM ${nm("q33_partials")}
@@ -874,1044 +774,106 @@ object Relational {
 
   /** q34: INCREMENTAL DISTINCT-COUNT maintenance — q33's
     * high-cardinality dual. COUNT(DISTINCT) has no exact fixed-size
-    * per-key partial (the exact maintenance state IS the per-key
-    * distinct set — re-materializing user-id sets nightly is the cost
-    * a 100 TB pipeline cannot pay), so the production shape is a
-    * persisted MERGEABLE SKETCH: one HyperLogLog sketch per key over
-    * the history tranche (`hll_sketch_agg` — Apache DataSketches
-    * HLL_4 at the default lgConfigK = 12, a ≤ ~2.5 KB summary per key
-    * regardless of cardinality), and the refresh scans ONLY the delta
-    * (`ts > _CUT`, the q33 native-typed pushed predicate —
-    * plan-pinned in PlanSpec), sketches it, and merges with
-    * `hll_union_agg`. Sketch union distributes exactly over set
-    * union, so maintenance adds NO error beyond the sketch's own —
-    * the merged estimate is bit-identical to single-pass sketching of
-    * the full table.
-    *
-    * Gated t32-style: the oracle hashes the EXACT per-key distinct
-    * counts (DuckDB cannot reproduce the DataSketches register
-    * layout), and the merged sketch is audited engine-side —
-    * `within_err` asserts |estimate − exact| ≤ 3·RSE·exact with
-    * RSE = 1.04/√2¹² ≈ 1.63 % (the documented HLL standard error at
-    * lgConfigK = 12); a sketch outside its bound flips the column and
-    * fails the hash gate loudly. The exact counts are the audit
-    * comparator (t32's pattern), not the maintenance path — a
-    * deployment serves the estimate.
-    *
-    * (This doc covers the q34 pair below: [[q34MergedEstimates]] is
-    * the maintenance path — exposed for SketchGateSpec's bit-identity
-    * pin — and [[q34IncrementalDistinct]] is the gated audit.) */
+    * per-key partial, so the state is one HLL sketch per key over the
+    * history tranche, and the refresh sketches only the delta and
+    * merges through `hll_union_agg` — bit-identical to single-pass
+    * sketching (pinned in SketchGateSpec). Gated t32-style by
+    * [[PartialsShelf.audit]]: the oracle hashes the exact per-key
+    * distinct counts and the always-true in-bound flag. */
   def q34IncrementalDistinct(s: SparkSession, dir: String): DataFrame =
-    q34Audit(s, dir, q34MergedEstimates(s, dir))
+    PartialsShelf.audit(s, dir,
+      PartialsShelf.serve(s, dir, PartialsShelf.q34), lit(false))
 
-  /** The q34/q36 sketch configuration, ONE constant the whole family
-    * derives from: `hll_sketch_agg`'s register-count exponent. The
-    * audit bound below derives from it (RSE = 1.04/√2^lgK), so
-    * retuning the sketch retunes the gate with it — a hard-wired
-    * bound beside a retuned sketch would silently audit against the
-    * wrong error model. */
-  private[graft] val q34LgConfigK = 12
+  /** q35: q33's partials as a LIVING artifact — the delta's partials
+    * APPEND into the artifact and `_CUT` advances, so each batch folds
+    * in once. Gated by q33's oracle unchanged. */
+  def q35AggAppend(s: SparkSession, dir: String): DataFrame =
+    PartialsShelf.serve(s, dir, PartialsShelf.q35)
 
-  /** q34's documented audit bound: 3 × the HLL standard error at
-    * [[q34LgConfigK]] (at lgK = 12, RSE = 1.04/√2¹² ≈ 1.63 %).
-    *
-    * A 3·RSE bound is ~99.7 % per key. The sketch is deterministic
-    * per dataset, so the gate NEVER flakes across runs of one
-    * fixture — but a REGENERATED fixture (new fingerprint) re-rolls
-    * the per-key error draw: with 5 event_type keys there is roughly
-    * a 1 % chance per regeneration that one key lands outside 3σ and
-    * the hash gate hard-fails with nothing wrong. That is the
-    * accepted trade for a bound tight enough to catch a real merge
-    * bug; the merge EXACTNESS itself is pinned bit-identically in
-    * SketchGateSpec, so a regeneration-roll failure is
-    * distinguishable (estimate near the bound, bit-identity still
-    * green) from a maintenance defect. */
-  private[graft] val q34RelErr = 3d * 1.04 / math.sqrt(1L << q34LgConfigK)
-
-  /** q34's per-key HLL partial; shared with the q36 write-back. */
-  private[graft] def q34Sketch(df: DataFrame): DataFrame =
-    df.groupBy(col("event_type"))
-      .agg(hll_sketch_agg(col("user_id"), q34LgConfigK).as("sk"))
-
-  /** q34's sketch-merge tail: partials → per-key merged estimate. */
-  private def q34Estimate(partials: DataFrame): DataFrame =
-    partials.groupBy(col("event_type"))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
-
-  /** q34's audit join: the exact pass (the oracle-hashed comparator)
-    * beside the engine-side bound check on the merged estimate. */
-  private def q34Audit(s: SparkSession, dir: String, merged: DataFrame)
-      : DataFrame = {
-    val exact = DedupOps.readStable(s, s"$dir/events.parquet")
-      .groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n_exact"))
-    exact.join(merged, Seq("event_type"))
-      .select(col("event_type"), col("n_exact"),
-        (abs(col("est") - col("n_exact")).cast("double") <=
-          lit(q34RelErr) * col("n_exact").cast("double")).as("within_err"))
-      .orderBy(col("event_type"))
-  }
-
-  /** q34's MAINTENANCE path: the merged per-key estimates —
-    * history-partial sketches read back from the artifact, the delta
-    * sketched off its pushed scan, both unioned through
-    * `hll_union_agg`. */
-  private[graft] def q34MergedEstimates(s: SparkSession, dir: String)
-      : DataFrame = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val hist = java.nio.file.Paths.get("target",
-      s"q34_hll_${layoutHex(s, dir, "events")}").toAbsolutePath
-    val cutFile = hist.resolve("_CUT")
-    val partsDir = hist.resolve("partials")
-    synchronized {
-      if (!java.nio.file.Files.exists(cutFile) ||
-          !java.nio.file.Files.exists(partsDir.resolve("_SUCCESS"))) {
-        DedupOps.deleteRecursively(hist.toFile)
-        // the one-time BUILD pays the bounds scan (offline, like the
-        // q33 build and the index builds)
-        val Array(lo, hi) = t(s, dir, "events")
-          .agg(min(col("ts")), max(col("ts")))
-          .head().toSeq.map(_.asInstanceOf[Long]).toArray
-        val cut = (lo + hi) / 2
-        q34Sketch(raw.filter(col("ts") <= tsCutLit(raw, cut)))
-          .write.mode("overwrite").parquet(partsDir.toString)
-        java.nio.file.Files.write(cutFile, cut.toString.getBytes("UTF-8"))
-      }
-    }
-    val cut = new String(java.nio.file.Files.readAllBytes(cutFile),
-      "UTF-8").trim.toLong
-    // refresh: delta-only scan (pushed) + sketch-union with the stored
-    // per-key partials — never a history re-scan
-    q34Estimate(s.read.parquet(partsDir.toString)
-      .unionAll(q34Sketch(raw.filter(col("ts") > tsCutLit(raw, cut)))))
-  }
-
-  // ----------- q35/q36: history-partials WRITE-BACK (t35's idiom on
-  // the maintenance shelf)
-
-  /** Families whose erasure generations are tagged by
-    * [[DedupOps.erasureFingerprint]] AND are retract-style (a
-    * re-applied list double-subtracts — NOT idempotent like the
-    * membership shelves' anti-join): a fingerprint-RULE change
-    * re-tags the same list, so the marker no longer matches and the
-    * retraction would re-apply. These artifacts fold the rule
-    * version into their key and are abandoned/rebuilt on a rule
-    * change (the same migration contract as the cluster shelf). */
-  private val erasureFpTaggedFams = Set("q44agg", "t47agg")
-
-  /** Where a family's READ-WRITE partials artifact lives. q33/q34's
-    * artifacts stay read-only for the same reason t34's does beside
-    * t35: their gates exercise a real delta merge every run, so the
-    * delta must stay un-absorbed there; the write-back families
-    * maintain their own copies. */
-  private def rwPartialsPath(s: SparkSession, dir: String, fam: String)
-      : java.nio.file.Path = {
-    val v = if (erasureFpTaggedFams(fam)) s"${DedupOps.erasureFpRule}:"
-      else ""
-    DedupOps.artifactDir(s"${fam}_rw",
-      s"${fam}rw:$v$dir@${layoutHex(s, dir, "events")}")
-  }
-
-  /** Build a family's rw partials artifact: the history tranche
-    * (ts ≤ the midpoint cut) folded through `partialOf`, plus `_CUT`
-    * — q33's build at the v17 nonce-marker contract. */
-  private def buildRwPartials(s: SparkSession, dir: String, fam: String)(
-      partialOf: DataFrame => DataFrame): String = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val out = rwPartialsPath(s, dir, fam)
-    DedupOps.ensureArtifact(out) {
-      val Array(lo, hi) = t(s, dir, "events")
-        .agg(min(col("ts")), max(col("ts")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val cut = (lo + hi) / 2
-      partialOf(raw.filter(col("ts") <= tsCutLit(raw, cut)))
-        .write.mode("overwrite").parquet(out.resolve("partials").toString)
-      java.nio.file.Files.write(out.resolve("_CUT"),
-        cut.toString.getBytes("UTF-8"))
-    }
-  }
-
-  /** APPEND the tranche `(_CUT, upToNanos]` into a family's rw
-    * partials artifact and advance `_CUT` — the write-back that makes
-    * the maintenance state itself a living artifact: without it the
-    * un-folded delta grows and every refresh re-aggregates more of
-    * it; with it, each batch folds in ONCE and later refreshes start
-    * at the new watermark. The delta's per-key partials land as NEW
-    * part files next to the history's (O(batch · keys) — the history
-    * partials are never rewritten) through the shared marker-last
-    * commit mechanics; merge-on-read is the families' EXISTING read
-    * path (exact-sum for q35, `hll_union_agg` for q36), so append ≡
-    * a from-scratch rebuild exactly — q33 chose integer-cent partials
-    * and q34 chose HLL sketches precisely because both merge
-    * associatively. The batch high-watermark is one maintenance-time
-    * bounds read (known state in production, like the build's).
-    * Idempotent: an absorbed tranche no-ops, nonce untouched. */
-  private[graft] def appendPartials(s: SparkSession, dir: String, fam: String,
-      upToNanos: Long = Long.MaxValue)(
-      partialOf: DataFrame => DataFrame): Long = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val out = rwPartialsPath(s, dir, fam)
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val cut = DedupOps.cutOf(out)
-      // the batch high-watermark comes from the PUSHED delta scan
-      // only, never a history re-scan (appendBandIndexAt's rule; on
-      // the converged artifact this is an empty pruned scan). The
-      // upper bound skips the tsCutLit conversion at Long.MaxValue —
-      // a sentinel that large is not representable as a timestamp
-      val lower = col("ts") > tsCutLit(raw, cut)
-      val delta =
-        if (upToNanos == Long.MaxValue) raw.filter(lower)
-        else raw.filter(lower && col("ts") <= tsCutLit(raw, upToNanos))
-      val hiRow = Tables.normalizeTs(delta.select(col("ts")))
-        .agg(max(col("ts"))).head()
-      if (hiRow.isNullAt(0)) cut
-      else {
-        val newCut = hiRow.getLong(0)
-        // THE STALENESS RULE, EXECUTABLE (not prose): once a
-        // key-replacement (resketch) generation exists, a PLAIN append
-        // is unsafe — the replacement-preferring read anti-joins every
-        // non-resketch generation against `resketch_keys`, so an
-        // affected key's new delta rows would be silently dropped (an
-        // undercount with no error). Refuse until the caller either
-        // uses the resketch-aware append (q42's shape — affected keys'
-        // partials fold INTO the replacement generation) or lands a
-        // fresh re-sketch. Converged artifacts never reach here (the
-        // empty-delta no-op returns above).
-        require(!java.nio.file.Files.exists(out.resolve("resketch_keys")),
-          s"$out carries a resketch generation: a plain append of an " +
-            "affected key's delta would be silently anti-joined away " +
-            "by the replacement-preferring read — use the " +
-            "resketch-aware append (appendPartialsResketchAware) or " +
-            "land a fresh re-sketch first")
-        val tmp = out.resolve("partials_append")
-        partialOf(delta)
-          .write.mode("overwrite").parquet(tmp.toString)
-        DedupOps.commitArtifactAppend(out, tmp, newCut, rel = "partials",
-          expectedCut = cut)
-        newCut
-      }
-    } }
-  }
-
-  private[graft] def q35RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q35agg")
-
-  private[graft] def q35Append(s: SparkSession, dir: String,
-      upToNanos: Long = Long.MaxValue): Long = {
-    buildRwPartials(s, dir, "q35agg")(q33Partial)
-    appendPartials(s, dir, "q35agg", upToNanos)(q33Partial)
-  }
-
-  /** q35: q33's history partials as a LIVING artifact — build the
-    * base-tranche cent partials, APPEND the delta's partials into the
-    * artifact (`_CUT` advances; the t35 idiom on the maintenance
-    * shelf), and publish the aggregate by the family's merge-on-read.
-    * Gated by q33's full-table oracle UNCHANGED: the write-back must
-    * be invisible in the result, which holds exactly because the
-    * integer-cent partials merge associatively. */
-  def q35AggAppend(s: SparkSession, dir: String): DataFrame = {
-    q35Append(s, dir)
-    q33Merge(s.read.parquet(DedupOps.requireReady(q35RwPath(s, dir))
-      .resolve("partials").toString))
-  }
-
-  private[graft] def q36RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q36hll")
-
-  private[graft] def q36Append(s: SparkSession, dir: String,
-      upToNanos: Long = Long.MaxValue): Long = {
-    buildRwPartials(s, dir, "q36hll")(q34Sketch)
-    appendPartials(s, dir, "q36hll", upToNanos)(q34Sketch)
-  }
-
-  /** q36's maintenance path alone (exposed for the bit-identity pin,
-    * like [[q34MergedEstimates]]): merged estimates off the APPENDED
-    * artifact — read partials, `hll_union_agg`, estimate. */
-  private[graft] def q36MergedEstimates(s: SparkSession, dir: String)
-      : DataFrame = {
-    q36Append(s, dir)
-    q34Estimate(s.read.parquet(DedupOps.requireReady(q36RwPath(s, dir))
-      .resolve("partials").toString))
-  }
-
-  /** q36: q34's HLL partials as a LIVING artifact — the delta's
-    * per-key sketches append into the history (sketch union is exact
-    * over set union, so the folded artifact estimates exactly what
-    * single-pass sketching would), `_CUT` advances, and the same
-    * t32-style audit gates the result against q34's oracle
-    * unchanged. */
+  /** q36: q34's sketches as a living artifact, audited against q34's
+    * oracle unchanged. */
   def q36SketchAppend(s: SparkSession, dir: String): DataFrame =
-    q34Audit(s, dir, q36MergedEstimates(s, dir))
+    PartialsShelf.audit(s, dir,
+      PartialsShelf.serve(s, dir, PartialsShelf.q36), lit(false))
 
-  // ----------- q37/q38: partials COMPACTION (t36's fold on the
-  // maintenance shelf) + q39: RETRACTION (the sum family's deletion)
+  /** q37: COMPACT the sum artifact — t36's LSM major compaction on the
+    * maintenance shelf: the generations fold to one row per key in one
+    * relation-sized job, gated by q33's oracle unchanged (serve-before
+    * ≡ serve-after pinned in PartialsCompactSpec). */
+  def q37PartialsCompact(s: SparkSession, dir: String): DataFrame =
+    PartialsShelf.serve(s, dir, PartialsShelf.q37)
 
-  /** The per-key re-fold that compacts a family's partials relation:
-    * partial-merge associativity — the property q33/q34 chose their
-    * partials FOR — is exactly what makes the fold semantics-free, so
-    * one (event_type) group of the generation pile replaces N
-    * generations of per-key rows with one. */
-  private def q35Fold(partials: DataFrame): DataFrame =
-    partials.groupBy(col("event_type"))
-      .agg(sum(col("pn")).as("pn"), sum(col("pc")).as("pc"))
-
-  private def q36Fold(partials: DataFrame): DataFrame =
-    partials.groupBy(col("event_type"))
-      .agg(hll_union_agg(col("sk")).as("sk"))
-
-  /** Build + append a family's OWN artifact copy (two generations on
-    * disk — the q35 state), then COMPACT it: the merge-folded
-    * partials rewrite as one fresh generation and the `append-*`
-    * files drop, under [[DedupOps.compactArtifact]]'s marker-last +
-    * per-path-lock contract. `_CUT` untouched — appends resume on the
-    * compacted base where they left off. */
-  private def buildAppendCompact(s: SparkSession, dir: String,
-      fam: String)(partialOf: DataFrame => DataFrame)(
-      fold: DataFrame => DataFrame): java.nio.file.Path = {
-    buildRwPartials(s, dir, fam)(partialOf)
-    appendPartials(s, dir, fam)(partialOf)
-    val out = rwPartialsPath(s, dir, fam)
-    DedupOps.compactArtifact(s, out, rel = "partials")(fold)
-    out
-  }
-
-  private[graft] def q37RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q37agg")
-
-  private[graft] def q37Append(s: SparkSession, dir: String,
-      upToNanos: Long = Long.MaxValue): Long = {
-    buildRwPartials(s, dir, "q37agg")(q33Partial)
-    appendPartials(s, dir, "q37agg", upToNanos)(q33Partial)
-  }
-
-  private[graft] def q37Compact(s: SparkSession, dir: String): Boolean =
-    DedupOps.compactArtifact(s, q37RwPath(s, dir), rel = "partials")(q35Fold)
-
-  /** q37: COMPACT the sum-partials artifact — t36's LSM major
-    * compaction on the maintenance shelf. q35 keeps the living
-    * aggregate O(batch) per refresh, but its generations accumulate:
-    * after N nightly batches every merge re-reads N per-key partial
-    * rows per key and the relation holds N part-file generations. The
-    * compaction folds them to one row per key in one tiny
-    * relation-sized job (the partials relation is O(keys), NOT
-    * O(corpus) — this is the cheapest compaction in the engine), and
-    * is semantics-free because integer-cent sums are associative:
-    * gated by q33's full-table oracle UNCHANGED, serve-before ≡
-    * serve-after pinned in PartialsCompactSpec. Idempotent: a
-    * compacted artifact no-ops (no append generation). */
-  def q37PartialsCompact(s: SparkSession, dir: String): DataFrame = {
-    val out = buildAppendCompact(s, dir, "q37agg")(q33Partial)(q35Fold)
-    q33Merge(s.read.parquet(DedupOps.requireReady(out)
-      .resolve("partials").toString))
-  }
-
-  /** q37 through the SQL-TEXT surface — the compacted-artifact serve
-    * (the steady-state read a SQL-first dashboard runs all day once
-    * the nightly compaction folded the generations) as ONE
-    * `spark.sql(...)` statement over a serial-suffixed temp view of
-    * the partials relation, gated by q33's oracle verbatim like its
-    * DataFrame twin. With q33_sql (the refresh) this covers the
-    * maintenance family's BOTH hot shapes as text; hygiene pinned in
-    * RelationalSpec. */
+  /** q37 through the SQL-TEXT surface — the compacted-artifact serve as
+    * ONE `spark.sql(...)` statement, gated by q33's oracle verbatim;
+    * hygiene pinned in RelationalSpec. */
   def q37PartialsCompactSql(s: SparkSession, dir: String): DataFrame = {
-    val out = buildAppendCompact(s, dir, "q37agg")(q33Partial)(q35Fold)
+    val out = PartialsShelf.stage(s, dir, PartialsShelf.q37)
     JobHistoryOps.withSqlViews(s, Seq(
-      "q37_partials" -> s.read.parquet(DedupOps.requireReady(out)
-        .resolve("partials").toString)))(nm =>
+      "q37_partials" -> PartialsShelf.partials(s, out)))(nm =>
       s"""SELECT event_type, sum(pn) AS n_events,
          | round(CAST(sum(pc) AS DOUBLE) / 100, 2) AS sum_value
          |FROM ${nm("q37_partials")}
          |GROUP BY event_type ORDER BY event_type""".stripMargin)
   }
 
-  private[graft] def q38RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q38hll")
-
-  /** The q38 maintenance path alone (exposed for SketchGateSpec's
-    * estimate-identity pin against [[q36MergedEstimates]]). */
-  private[graft] def q38CompactedEstimates(s: SparkSession, dir: String)
-      : DataFrame = {
-    val out = buildAppendCompact(s, dir, "q38hll")(q34Sketch)(q36Fold)
-    q34Estimate(s.read.parquet(DedupOps.requireReady(out)
-      .resolve("partials").toString))
-  }
-
-  /** q38: COMPACT the HLL-partials artifact — q37's dual on the
-    * sketch shelf. The fold is one `hll_union_agg` per key:
-    * DataSketches HLL union is a per-register max, associative and
-    * idempotent, so folding N generations' sketches into one changes
-    * NO estimate — union-of-unions ≡ one union ≡ single-pass
-    * sketching (the q34/q36 exactness chain, extended one fold
-    * deeper; estimate identity pinned in SketchGateSpec). Gated by
-    * q34's oracle + in-bound audit unchanged. */
+  /** q38: COMPACT the sketch artifact — one `hll_union_agg` per key;
+    * union-of-unions ≡ one union, so no estimate changes. */
   def q38SketchCompact(s: SparkSession, dir: String): DataFrame =
-    q34Audit(s, dir, q38CompactedEstimates(s, dir))
+    PartialsShelf.audit(s, dir,
+      PartialsShelf.serve(s, dir, PartialsShelf.q38), lit(false))
 
-  private[graft] def q39RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q39agg")
+  /** q39: RETRACTION from the living aggregate — a bad ingest window is
+    * corrected by appending its NEGATED partials. Oracle: q33's
+    * statistics over the corpus MINUS the window; a key whose every
+    * event fell inside drops (ghost-key pin in PartialsCompactSpec). */
+  def q39AggRetract(s: SparkSession, dir: String): DataFrame =
+    PartialsShelf.serve(s, dir, PartialsShelf.q39)
 
-  /** q37's fold applied to q39's artifact: compaction nets the
-    * retract-* generation's negative mass into the base — a
-    * fully-retracted key survives as an explicit (pn = 0, pc = 0)
-    * row, which is why the serve's `n_events > 0` filter is part of
-    * the family's read contract, not a pre-compaction nicety
-    * (pinned in PartialsCompactSpec). */
-  private[graft] def q39Compact(s: SparkSession, dir: String): Boolean =
-    DedupOps.compactArtifact(s, q39RwPath(s, dir), rel = "partials")(q35Fold)
-
-  /** q39's deterministic retraction window over the event-time span:
-    * `(lo + 2/5·span, lo + 3/5·span]` in epoch NANOS, pure Long
-    * arithmetic — the oracle computes the identical bounds with
-    * DuckDB's `epoch_ns` + integer `//`, so both sides classify every
-    * event identically at full nanosecond precision regardless of the
-    * parquet encoding (micros values compare exactly through
-    * [[tsCutLit]]'s DIV-1000 argument). In production the window is
-    * an INPUT (the known-bad ingest span being corrected); the
-    * min/max derivation here exists only to make the fixture's window
-    * reproducible inside static oracle SQL. */
-  private def q39Window(s: SparkSession, dir: String): (Long, Long) = {
-    val Array(lo, hi) = t(s, dir, "events")
-      .agg(min(col("ts")), max(col("ts")))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    (lo + (hi - lo) * 2 / 5, lo + (hi - lo) * 3 / 5)
-  }
-
-  /** Apply the retraction ONCE per artifact: scan ONLY the bad window
-    * (both bounds pushed to the parquet scan), fold it through the
-    * SAME per-key partial, NEGATE, and commit as a `retract-*`
-    * generation at the unchanged watermark. The serve path needs no
-    * new code — sum-merge nets the negative mass out, which is the
-    * point: unlike min (t37's re-election machinery) or HLL union
-    * (strictly monotone — a sketch cannot forget; retraction there
-    * means re-sketching the surviving tranche, q34's documented
-    * trade), SUM IS INVERTIBLE, so the relational family's deletion
-    * is an O(retracted-window) append rather than an O(corpus)
-    * rebuild or an O(members) membership index. Marker-file
-    * idempotent under the artifact lock, with `_RETRACTED` written
-    * INSIDE the commit's mutation window (the `beforeReady` hook —
-    * after the generation lands, before the nonce re-stamps): there
-    * is no reachable state where the retraction is committed-and-
-    * ready but unmarked, so the interleave where a compaction folded
-    * the unmarked generation (or an append advanced `_CUT`) and the
-    * retry's own-generation clear matched nothing — silently
-    * double-subtracting the window — cannot occur. A crash inside
-    * the window leaves a marker-less artifact that degrades to
-    * rebuild ([[DedupOps.ensureArtifact]] wipes and re-derives). */
-  private[graft] def q39Retract(s: SparkSession, dir: String): Unit = {
-    buildRwPartials(s, dir, "q39agg")(q33Partial)
-    appendPartials(s, dir, "q39agg")(q33Partial)
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val out = q39RwPath(s, dir)
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val marker = out.resolve("_RETRACTED")
-      if (!java.nio.file.Files.exists(marker)) {
-        val (a, b) = q39Window(s, dir)
-        val window = raw.filter(col("ts") > tsCutLit(raw, a) &&
-          col("ts") <= tsCutLit(raw, b))
-        val tmp = out.resolve("partials_retract")
-        q33Partial(window)
-          .select(col("event_type"), (-col("pn")).as("pn"),
-            (-col("pc")).as("pc"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        // newCut = expectedCut: the retraction commits at the
-        // UNCHANGED watermark, and conditionally — a concurrent
-        // append advancing _CUT between this read and the commit
-        // would otherwise be REGRESSED by the unconditional rewrite
-        // (its tranche silently re-absorbed later)
-        val cut = DedupOps.cutOf(out)
-        DedupOps.commitArtifactAppend(out, tmp, cut,
-          rel = "partials", kind = "retract",
-          beforeReady = () => {
-            java.nio.file.Files.write(marker, "1".getBytes("UTF-8")); ()
-          }, expectedCut = cut)
-      }
-    } }
-  }
-
-  /** q39: RETRACTION from the living aggregate — a bad ingest window
-    * is corrected by appending its NEGATED partials, and the ordinary
-    * merge-on-read serves the aggregate as if the window never
-    * happened. Gated against the oracle computing q33's statistics
-    * over the corpus MINUS the window. A key whose every event fell
-    * inside the window nets to a zero count and drops from the
-    * result (SQL semantics: a group with no surviving rows does not
-    * exist) — the `n_events > 0` filter, pinned on a crafted corpus
-    * in PartialsCompactSpec. Compaction (q37's fold) later nets the
-    * negative generation into the base for free. */
-  def q39AggRetract(s: SparkSession, dir: String): DataFrame = {
-    q39Retract(s, dir)
-    q33Merge(s.read.parquet(DedupOps.requireReady(q39RwPath(s, dir))
-      .resolve("partials").toString))
-      .filter(col("n_events") > 0)
-  }
-
-  // ----------- q40: HLL deletion by RE-SKETCH (the sketch shelf's
-  // documented trade, executable) + q41: TTL age-off on the sum shelf
-
-  private[graft] def q40RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q40hll")
-
-  /** q40's staged state — base + appended HLL partials, the q36 shape
-    * on q40's own artifact copy (exposed for SketchGateSpec's
-    * untouched-keys byte-identity pin, which snapshots the base
-    * generations BEFORE the retraction lands). */
-  private[graft] def q40Stage(s: SparkSession, dir: String): Unit = {
-    buildRwPartials(s, dir, "q40hll")(q34Sketch)
-    appendPartials(s, dir, "q40hll")(q34Sketch)
-    ()
-  }
-
-  /** Retract q39's window from the HLL family — the one shelf where
-    * deletion CANNOT invert or tombstone: DataSketches HLL union is a
-    * per-register max, strictly monotone, so a sketch cannot forget a
-    * value; the documented trade is RE-SKETCHING the surviving
-    * history — but only of the AFFECTED keys. One bounds-pushed
-    * window scan finds the keys with retracted events; one
-    * complement-scan (both window bounds pushed as `ts <= a OR
-    * ts > b`), semi-joined to that key set, re-sketches their
-    * survivors; the result commits as a `resketch-*` generation the
-    * merge-on-read PREFERS (base rows of affected keys are dropped
-    * via the `resketch_keys` relation, written INSIDE the same
-    * mutation window — so a fully-retracted key's stale base sketch
-    * can never ghost back). Untouched keys' sketches are never
-    * rewritten — the no-silent-global-re-sketch property the spec
-    * pins byte-identically. Cost is O(affected keys' history), the
-    * honest price of a monotone summary: cheaper than the O(corpus)
-    * rebuild whenever the retraction touches few keys, never hidden
-    * behind an "invertible" pretense. `_RESKETCHED`-idempotent via
-    * the beforeReady hook (q39's contract). */
-  private[graft] def q40Retract(s: SparkSession, dir: String): Unit = {
-    q40Stage(s, dir)
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val out = q40RwPath(s, dir)
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val marker = out.resolve("_RESKETCHED")
-      if (!java.nio.file.Files.exists(marker)) {
-        val (a, b) = q39Window(s, dir)
-        val inWindow = col("ts") > tsCutLit(raw, a) &&
-          col("ts") <= tsCutLit(raw, b)
-        val affected = raw.filter(inWindow)
-          .select(col("event_type")).distinct()
-        val surviving = raw.filter(!inWindow)
-          .join(affected, Seq("event_type"), "left_semi")
-        val tmp = out.resolve("partials_resketch")
-        q34Sketch(surviving).write.mode("overwrite").parquet(tmp.toString)
-        val cut = DedupOps.cutOf(out)
-        DedupOps.commitArtifactAppend(out, tmp, cut,
-          rel = "partials", kind = "resketch",
-          beforeReady = () => {
-            affected.coalesce(1).write.mode("overwrite")
-              .parquet(out.resolve("resketch_keys").toString)
-            java.nio.file.Files.write(marker, "1".getBytes("UTF-8")); ()
-          }, expectedCut = cut)
-      }
-    } }
-  }
-
-  /** q40's merge-on-read: base generations MINUS the resketched keys,
-    * plus the resketch generation — the replacement-preferring read
-    * [[DedupOps.compactArtifact]] refuses to flat-fold (a fold would
-    * re-add the replaced rows; the refusal is spec-pinned). The
-    * anti-join's build side is the tiny persisted key list, never the
-    * corpus. */
-  private[graft] def q40MergedEstimates(s: SparkSession, dir: String)
-      : DataFrame = {
-    q40Retract(s, dir)
-    resketchPreferringEstimates(s, DedupOps.requireReady(q40RwPath(s, dir)))
-  }
-
-  /** The replacement-preferring merge shared by q40 and q42: base
-    * (build/append) generations MINUS the resketched keys, plus EVERY
-    * `resketch-*` generation — more than one may exist, because the
-    * resketch-aware append (q42) folds an affected key's later
-    * partials in as additional replacement generations and
-    * `hll_union_agg` merges them exactly (sketch union over disjoint
-    * tranches ≡ one sketch of their union). The anti-join's build side
-    * is the tiny persisted key list, never the corpus. */
-  private def resketchPreferringEstimates(s: SparkSession,
-      out: java.nio.file.Path): DataFrame = {
-    val files = out.resolve("partials").toFile.listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    val (re, base) = files.partition(_.getName.startsWith("resketch-"))
-    val baseDf = s.read.parquet(base.map(_.toString).toIndexedSeq: _*)
-    // after the replacement-aware compaction ([[compactResketchArtifact]])
-    // the key list is gone — the replacement is baked into the single
-    // compacted generation and the read degenerates to the plain merge
-    val keysDir = out.resolve("resketch_keys")
-    val kept =
-      if (!java.nio.file.Files.exists(keysDir)) baseDf
-      else baseDf.join(s.read.parquet(keysDir.toString),
-        Seq("event_type"), "left_anti")
-    val merged =
-      if (re.isEmpty) kept
-      else kept.unionByName(
-        s.read.parquet(re.map(_.toString).toIndexedSeq: _*))
-    q34Estimate(merged)
-  }
-
-  /** q40's audit: q34's exact-beside-estimate gate over the corpus
-    * MINUS the window. A fully-retracted key appears on neither side
-    * (its base sketch is key-dropped, its exact group has no rows) —
-    * the ghost-key drop, SQL group semantics again. */
-  private def q40Audit(s: SparkSession, dir: String, merged: DataFrame)
-      : DataFrame = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val (a, b) = q39Window(s, dir)
-    val exact = raw.filter(!(col("ts") > tsCutLit(raw, a) &&
-        col("ts") <= tsCutLit(raw, b)))
-      .groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n_exact"))
-    exact.join(merged, Seq("event_type"))
-      .select(col("event_type"), col("n_exact"),
-        (abs(col("est") - col("n_exact")).cast("double") <=
-          lit(q34RelErr) * col("n_exact").cast("double")).as("within_err"))
-      .orderBy(col("event_type"))
-  }
-
-  /** q40: DELETION from the sketch shelf, gated — retract the window
-    * by re-sketching only the affected keys' survivors, serve the
-    * replacement-preferring merge, audit against the exact distinct
-    * counts over corpus-minus-window (q34's oracle shape). */
+  /** q40: DELETION from the sketch shelf, gated — re-sketch only the
+    * window's affected keys, serve the replacement-preferring merge,
+    * audit over corpus-minus-window. */
   def q40SketchRetract(s: SparkSession, dir: String): DataFrame =
-    q40Audit(s, dir, q40MergedEstimates(s, dir))
+    PartialsShelf.audit(s, dir,
+      PartialsShelf.serve(s, dir, PartialsShelf.q40),
+      PartialsShelf.window(s, dir))
 
-  private[graft] def q41RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q41agg")
+  /** q41: retention/TTL age-off on the sum shelf — the horizon advances
+    * twice (a quarter, then half of the event-time span). Oracle: q33's
+    * statistics over events above the second horizon. */
+  def q41AggAgeOff(s: SparkSession, dir: String): DataFrame =
+    PartialsShelf.serve(s, dir, PartialsShelf.q41)
 
-  /** AGE OFF the events at or below `horizon` from the living sum
-    * aggregate — retention on the INVERTIBLE shelf: q39's negated-
-    * partials retraction driven by a policy predicate instead of a
-    * bad-window input, and advanced INCREMENTALLY — each call
-    * retracts only the `(prevHorizon, horizon]` increment (both
-    * bounds pushed to the scan), appends it as an
-    * `ageoff<horizon>-*` generation, and records the reached horizon
-    * in `_AGEOFF` inside the commit window (the beforeReady hook —
-    * same atomicity argument as q39's `_RETRACTED`). Monotone and
-    * idempotent per horizon: a re-submitted or lagging horizon at or
-    * below the recorded one no-ops; compaction folds any number of
-    * age-off generations ([[q41Compact]] — `ageoff*` files net out
-    * under the same q35 sum fold). At 100 TB this is the nightly
-    * retention job: O(increment) per advance, never a history
-    * rewrite. */
-  private[graft] def q41AgeOff(s: SparkSession, dir: String,
-      horizon: Long): Unit = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val out = q41RwPath(s, dir)
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val mk = out.resolve("_AGEOFF")
-      val prev: Option[Long] =
-        if (java.nio.file.Files.exists(mk))
-          Some(new String(java.nio.file.Files.readAllBytes(mk), "UTF-8")
-            .trim.toLong)
-        else None
-      if (prev.forall(_ < horizon)) {
-        val window = prev match {
-          case Some(p) => raw.filter(col("ts") > tsCutLit(raw, p) &&
-            col("ts") <= tsCutLit(raw, horizon))
-          case None => raw.filter(col("ts") <= tsCutLit(raw, horizon))
-        }
-        val tmp = out.resolve("partials_ageoff")
-        q33Partial(window)
-          .select(col("event_type"), (-col("pn")).as("pn"),
-            (-col("pc")).as("pc"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        val cut = DedupOps.cutOf(out)
-        DedupOps.commitArtifactAppend(out, tmp, cut,
-          rel = "partials", kind = s"ageoff$horizon",
-          beforeReady = () => {
-            java.nio.file.Files.write(mk,
-              horizon.toString.getBytes("UTF-8")); ()
-          }, expectedCut = cut)
-      }
-    } }
-  }
-
-  private[graft] def q41Compact(s: SparkSession, dir: String): Boolean =
-    DedupOps.compactArtifact(s, q41RwPath(s, dir), rel = "partials")(q35Fold)
-
-  /** q41: retention/TTL age-off on the sum family, served — build +
-    * append q41's own partials artifact, advance the horizon TWICE
-    * (quarter then half of the event-time span — persisted in
-    * `_HORIZONS` at first derivation so the steady-state serve never
-    * re-scans the corpus for bounds), serve the netted merge. Oracle:
-    * q33's statistics over events ABOVE the second horizon. The
-    * ghost-key filter is q39's read contract (a key whose history is
-    * entirely expired drops). Incremental-advance + compaction-folds-
-    * generations pinned in PartialsCompactSpec. */
-  def q41AggAgeOff(s: SparkSession, dir: String): DataFrame = {
-    buildRwPartials(s, dir, "q41agg")(q33Partial)
-    appendPartials(s, dir, "q41agg")(q33Partial)
-    val out = q41RwPath(s, dir)
-    val hf = out.resolve("_HORIZONS")
-    if (!java.nio.file.Files.exists(hf)) {
-      // maintenance-time staging of the fixture's policy horizons (in
-      // production these arrive FROM the retention policy)
-      val Array(lo, hi) = t(s, dir, "events")
-        .agg(min(col("ts")), max(col("ts")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      java.nio.file.Files.write(hf,
-        s"${lo + (hi - lo) / 4} ${lo + (hi - lo) / 2}".getBytes("UTF-8"))
-    }
-    val Array(h1, h2) = new String(java.nio.file.Files.readAllBytes(hf),
-      "UTF-8").trim.split("\\s+").map(_.toLong)
-    q41AgeOff(s, dir, h1)
-    q41AgeOff(s, dir, h2)
-    q33Merge(s.read.parquet(DedupOps.requireReady(out)
-      .resolve("partials").toString))
-      .filter(col("n_events") > 0)
-  }
-
-  // ----------- q42: append AFTER re-sketch — the sketch-shelf
-  // staleness rule made executable (r17's one latent footgun)
-
-  private[graft] def q42RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q42hll")
-
-  private[graft] def q43RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q43hll")
-
-  /** q42's deterministic affected-key predicate: the hash-even half of
-    * the key space ("the bad ingest came from source X" — q40's
-    * all-keys-affected window would leave the untouched-append path
-    * unexercised; both sides reproduce the split with the t16 md5
-    * idiom). */
-  private def q42KeyPred =
-    expr("CAST(conv(substr(md5(event_type), 1, 8), 16, 10) AS BIGINT) " +
-      "% 2 = 0")
-
-  /** q42's staged tranche boundary (`lo + 7·span/10` in epoch nanos —
-    * ABOVE the retraction window's end, below the corpus max), persisted
-    * at first derivation so steady serves never re-scan for bounds. In
-    * production this is simply "where ingest stood when the erasure
-    * landed". */
-  private def q42TrancheCut(s: SparkSession, dir: String,
-      fam: String = "q42hll"): Long = {
-    val out = rwPartialsPath(s, dir, fam)
-    val hf = out.resolve("_TRANCHE")
-    if (!java.nio.file.Files.exists(hf)) {
-      val Array(lo, hi) = t(s, dir, "events")
-        .agg(min(col("ts")), max(col("ts")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      java.nio.file.Files.write(hf,
-        (lo + (hi - lo) * 7 / 10).toString.getBytes("UTF-8"))
-    }
-    new String(java.nio.file.Files.readAllBytes(hf), "UTF-8").trim.toLong
-  }
-
-  /** Stage q42's mid-ingest retraction: base + history appended only
-    * UP TO the tranche cut, then re-sketch the affected keys'
-    * survivors within that history — unlike q40 (whose fixture
-    * retracts after the corpus is fully absorbed), q42 re-sketches at
-    * a moment when a later tranche hasn't arrived, which is exactly
-    * what makes the post-resketch append a real composition. Affected
-    * = hash-even keys with events in q39's window; survivors = their
-    * non-window history ≤ the cut. `_RESKETCHED`-idempotent,
-    * `resketch_keys` written inside the commit window (q40's
-    * contract). */
-  private[graft] def q42Retract(s: SparkSession, dir: String,
-      fam: String = "q42hll"): Unit = {
-    buildRwPartials(s, dir, fam)(q34Sketch)
-    val c2 = q42TrancheCut(s, dir, fam)
-    appendPartials(s, dir, fam, c2)(q34Sketch)
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val out = rwPartialsPath(s, dir, fam)
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val marker = out.resolve("_RESKETCHED")
-      if (!java.nio.file.Files.exists(marker)) {
-        val (a, b) = q39Window(s, dir)
-        val inWindow = col("ts") > tsCutLit(raw, a) &&
-          col("ts") <= tsCutLit(raw, b)
-        val affected = raw.filter(inWindow && q42KeyPred)
-          .select(col("event_type")).distinct()
-        val surviving = raw.filter(col("ts") <= tsCutLit(raw, c2) &&
-            !inWindow)
-          .join(affected, Seq("event_type"), "left_semi")
-        val tmp = out.resolve("partials_resketch")
-        q34Sketch(surviving).write.mode("overwrite").parquet(tmp.toString)
-        val cut = DedupOps.cutOf(out)
-        DedupOps.commitArtifactAppend(out, tmp, cut,
-          rel = "partials", kind = "resketch",
-          beforeReady = () => {
-            affected.coalesce(1).write.mode("overwrite")
-              .parquet(out.resolve("resketch_keys").toString)
-            java.nio.file.Files.write(marker, "1".getBytes("UTF-8")); ()
-          }, expectedCut = cut)
-      }
-    } }
-  }
-
-  /** The RESKETCH-AWARE append — the executable fix for the staleness
-    * footgun the plain [[appendPartials]] now refuses: the delta's
-    * per-key partials split on the persisted `resketch_keys` —
-    * untouched keys commit as an ordinary `append-*` generation
-    * (merging normally, byte-for-byte the q36 path), while affected
-    * keys' partials fold INTO the replacement side as an additional
-    * `resketch-*` generation, moved in INSIDE the same commit window
-    * (`beforeReady`) so no reachable state holds the untouched half
-    * committed-and-ready with the affected half missing — that state
-    * would serve the exact silent undercount this operator exists to
-    * prevent. HLL union makes the fold exact: resketch(survivors ≤
-    * cut) ∪ sketch((cut, hi]) ≡ sketch(every surviving event of the
-    * key). O(batch) — two pushed delta scans, no history rewrite. */
-  private[graft] def appendPartialsResketchAware(s: SparkSession,
-      dir: String, fam: String): Long = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val out = rwPartialsPath(s, dir, fam)
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val cut = DedupOps.cutOf(out)
-      val delta = raw.filter(col("ts") > tsCutLit(raw, cut))
-      val hiRow = Tables.normalizeTs(delta.select(col("ts")))
-        .agg(max(col("ts"))).head()
-      if (hiRow.isNullAt(0)) cut
-      else if (!java.nio.file.Files.exists(out.resolve("resketch_keys"))) {
-        // the replacement was compacted away (or never existed): the
-        // plain append is legal again — delegate to it
-        appendPartials(s, dir, fam)(q34Sketch)
-      } else {
-        val newCut = hiRow.getLong(0)
-        val keys = s.read.parquet(out.resolve("resketch_keys").toString)
-        val part = q34Sketch(delta)
-        val tmpU = out.resolve("partials_append")
-        val tmpA = out.resolve("partials_resketch_append")
-        part.join(keys, Seq("event_type"), "left_anti")
-          .write.mode("overwrite").parquet(tmpU.toString)
-        part.join(keys, Seq("event_type"), "left_semi")
-          .write.mode("overwrite").parquet(tmpA.toString)
-        DedupOps.commitArtifactAppend(out, tmpU, newCut, rel = "partials",
-          // the install clears a crashed retry's own half-moved
-          // generation first (commitArtifactAppend's delete-then-move
-          // rule, applied to the replacement side)
-          beforeReady = () => Generations.install(tmpA,
-            out.resolve("partials"), Generations.prefix("resketch", newCut)),
-          expectedCut = cut)
-        newCut
-      }
-    } }
-  }
-
-  private[graft] def q42MergedEstimates(s: SparkSession, dir: String)
-      : DataFrame = {
-    q42Retract(s, dir)
-    appendPartialsResketchAware(s, dir, "q42hll")
-    resketchPreferringEstimates(s,
-      DedupOps.requireReady(q42RwPath(s, dir)))
-  }
-
-  /** q42's audit: q34's exact-beside-estimate gate over the corpus
-    * minus (window ∧ affected keys) — including the POST-RESKETCH
-    * tranche on both key classes, the composition q40's read silently
-    * dropped for affected keys. */
-  private def q42Audit(s: SparkSession, dir: String, merged: DataFrame)
-      : DataFrame = {
-    val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-    val (a, b) = q39Window(s, dir)
-    val exact = raw.filter(!(col("ts") > tsCutLit(raw, a) &&
-        col("ts") <= tsCutLit(raw, b) && q42KeyPred))
-      .groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n_exact"))
-    exact.join(merged, Seq("event_type"))
-      .select(col("event_type"), col("n_exact"),
-        (abs(col("est") - col("n_exact")).cast("double") <=
-          lit(q34RelErr) * col("n_exact").cast("double")).as("within_err"))
-      .orderBy(col("event_type"))
-  }
-
-  /** q42: append AFTER deletion on the sketch shelf, gated — stage a
-    * mid-ingest re-sketch, absorb a LATER tranche carrying new events
-    * of both affected and untouched keys through the resketch-aware
-    * append, serve the replacement-preferring merge, audit against
-    * exact distinct counts over corpus-minus-retraction. */
+  /** q42: append AFTER deletion on the sketch shelf — re-sketch the
+    * hash-even keys' window mid-ingest, absorb a later tranche of both
+    * key classes through the resketch-aware append, audit over the
+    * corpus minus (window ∧ hash-even keys). */
   def q42ResketchAppend(s: SparkSession, dir: String): DataFrame =
-    q42Audit(s, dir, q42MergedEstimates(s, dir))
+    PartialsShelf.audit(s, dir,
+      PartialsShelf.serve(s, dir, PartialsShelf.q42),
+      PartialsShelf.window(s, dir) && PartialsShelf.evenKey)
 
-  /** The REPLACEMENT-AWARE compaction the shared flat fold refuses to
-    * be: materialize the replacement-preferring merge itself — base
-    * generations minus the resketched keys, plus every `resketch-*`
-    * generation, folded per key — as ONE fresh `compact-*` generation,
-    * then retire the `resketch_keys` relation INSIDE the same mutation
-    * window: after the fold the replacement is baked into the base, so
-    * the artifact degenerates to an ordinary single-generation sketch
-    * artifact — the read's anti-join disappears ([[
-    * resketchPreferringEstimates]]'s absent-keys path) and PLAIN
-    * appends become legal again (the staleness refusal keys on the
-    * relation's existence). `_RESKETCHED` deliberately SURVIVES:
-    * it records that the window's retraction has been applied —
-    * which after the fold it has, permanently — so the marker-guarded
-    * retract never re-runs against the compacted base. This closes
-    * the sketch shelf's lifecycle matrix: build, append, DELETE
-    * (re-sketch), append-after-delete (the aware fold), and now
-    * compact-after-delete, each semantics-free under the family's
-    * associative merge. Crash-safe under the marker-last contract
-    * (materialize first, nonce off, swap, keys retired, nonce last —
-    * a crash degrades to rebuild); no-op (false) when no replacement
-    * generation exists. */
-  private[graft] def compactResketchArtifact(s: SparkSession,
-      out: java.nio.file.Path): Boolean =
-    DedupOps.artifactLock(out).synchronized {
-      DedupOps.withArtifactLease(out) {
-        DedupOps.requireReady(out)
-        val dst = out.resolve("partials")
-        val files = Option(dst.toFile.listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet"))
-        val (re, base) = files.partition(_.getName.startsWith("resketch-"))
-        if (re.isEmpty) false
-        else {
-          val keysDir = out.resolve("resketch_keys")
-          val kept = s.read.parquet(base.map(_.toString).toIndexedSeq: _*)
-            .join(s.read.parquet(keysDir.toString),
-              Seq("event_type"), "left_anti")
-          val merged = kept.unionByName(
-            s.read.parquet(re.map(_.toString).toIndexedSeq: _*))
-          val cut = DedupOps.cutOf(out)
-          val tmp = out.resolve("partials_compact")
-          merged.groupBy(col("event_type"))
-            .agg(hll_union_agg(col("sk")).as("sk"))
-            .write.mode("overwrite").parquet(tmp.toString)
-          val marker = out.resolve("_INDEX_READY")
-          java.nio.file.Files.deleteIfExists(marker)
-          DedupOps.deleteRecursively(dst.toFile)
-          Generations.install(tmp, dst, Generations.prefix("compact", cut))
-          DedupOps.deleteRecursively(keysDir.toFile)
-          java.nio.file.Files.write(marker,
-            System.nanoTime().toString.getBytes("UTF-8"))
-          true
-        }
-      }
-    }
+  /** q43: COMPACTION AFTER DELETION — q42's composition, then the
+    * replacement-aware fold, which must be invisible: q42's oracle
+    * verbatim (layout and re-enabled appends pinned in SketchGateSpec). */
+  def q43ResketchCompact(s: SparkSession, dir: String): DataFrame =
+    PartialsShelf.audit(s, dir,
+      PartialsShelf.serve(s, dir, PartialsShelf.q43),
+      PartialsShelf.window(s, dir) && PartialsShelf.evenKey)
 
-  /** q43: COMPACTION AFTER DELETION on the sketch shelf, gated — the
-    * full q42 composition (mid-ingest re-sketch + resketch-aware
-    * append) staged on q43's OWN artifact copy, then the replacement-
-    * aware fold, then the serve — which must be INVISIBLE in the
-    * result (q37/q38's rule: a compaction that changed any estimate
-    * would be a bug, not a tuning choice), so the oracle is q42's
-    * verbatim. What changes is the read: one generation, no anti-join,
-    * plain appends legal again — layout + re-enabled-append pinned in
-    * SketchGateSpec. */
-  def q43ResketchCompact(s: SparkSession, dir: String): DataFrame = {
-    q42Retract(s, dir, "q43hll")
-    appendPartialsResketchAware(s, dir, "q43hll")
-    compactResketchArtifact(s, q43RwPath(s, dir))
-    q42Audit(s, dir, resketchPreferringEstimates(s,
-      DedupOps.requireReady(q43RwPath(s, dir))))
-  }
+  /** q44: EXTERNAL TAKEDOWN on the sum shelf — erase the staged list's
+    * users. Oracle: q33's statistics over the events whose user
+    * survives the list (`user_id % 7 <> 0`). List-keyed idempotence,
+    * a second list and compaction pinned in PartialsCompactSpec. */
+  def q44AggTakedown(s: SparkSession, dir: String): DataFrame =
+    PartialsShelf.serve(s, dir, PartialsShelf.q44)
 
-  // ----------- q44: EXTERNAL erasure list on the sum shelf — t39's
-  // input-relation shape composed with q39's invertibility
-
-  private[graft] def q44RwPath(s: SparkSession, dir: String) =
-    rwPartialsPath(s, dir, "q44agg")
-
-  /** Erase the LISTED USERS' events from the living sum aggregate —
-    * the external-takedown verb (t39's input-relation shape) on the
-    * INVERTIBLE shelf: the erasure ids arrive as a relation, the
-    * retraction scans the corpus ONCE for exactly their rows (a
-    * broadcast semi join — the list is request-sized, so the events
-    * side never shuffles and no erased row leaves its executor),
-    * folds them through the SAME per-key partial NEGATED, and
-    * commits a `retractx<tag>-*` generation at the unchanged
-    * watermark (conditional commit, q39's contract — the `retract`
-    * file prefix keeps q37's fold netting it for free). The honest
-    * trade vs the membership shelves: t39's anti-join is index-local
-    * because those families paid for an unfolded members relation up
-    * front; the sum shelf persists only per-key partials (no per-row
-    * state), so an id-level erasure costs one corpus scan per
-    * erasure BATCH — invertibility buys no-rebuild, not no-scan; at
-    * 100 TB the scan amortizes across the nightly list (one
-    * generation per batch of requests, never per request). The
-    * marker is KEYED BY THE STAGED LIST's fingerprint (s16Takedown's
-    * rule): a second, different list lands beside the first instead
-    * of short-circuiting on a shared marker — for an erasure verb
-    * that silent no-op would be a compliance failure; re-submitting
-    * the same list stays a marker no-op. `_ERASED_<tag>` is written
-    * INSIDE the commit window (the beforeReady hook — q39's
-    * atomicity argument: no reachable committed-but-unmarked
-    * state). */
-  /** One erasure LIST application — exposed separately so a second,
-    * later list (the nightly shape: a new batch of requests against
-    * the same living aggregate) lands as its own generation under its
-    * own tag, and so the spec can pin that composition. */
-  private[graft] def q44Erase(s: SparkSession, dir: String,
-      erasures: DataFrame, tag: String,
-      fam: String = "q44agg"): Unit = {
-    val out = rwPartialsPath(s, dir, fam)
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val marker = out.resolve(s"_ERASED_$tag")
-      if (!java.nio.file.Files.exists(marker)) {
-        val raw = DedupOps.readStable(s, s"$dir/events.parquet")
-        val erased = raw.join(broadcast(erasures.select(col("user_id"))),
-          Seq("user_id"), "left_semi")
-        val tmp = out.resolve("partials_erase")
-        q33Partial(erased)
-          .select(col("event_type"), (-col("pn")).as("pn"),
-            (-col("pc")).as("pc"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        val cut = DedupOps.cutOf(out)
-        DedupOps.commitArtifactAppend(out, tmp, cut,
-          rel = "partials", kind = s"retractx$tag",
-          beforeReady = () => {
-            java.nio.file.Files.write(marker, "1".getBytes("UTF-8")); ()
-          }, expectedCut = cut)
-      }
-    } }
-  }
-
-  /** The sum-shelf leg of the t47 cross-shelf fan-out: the SAME doc
-    * list every membership shelf erases, applied as erased PRINCIPALS
-    * (user ids) to t47's OWN partials family — the q44 gate's
-    * artifact stays untouched so its single-list fixture holds. The
-    * verb is [[q44Erase]] unchanged (fingerprint-keyed marker, one
-    * broadcast-semi corpus scan per list, `retractx*` generation);
-    * the serve is the netted merge with q39's ghost-key filter. */
+  /** The sum-shelf leg of the t47 fan-out: the SAME doc list every
+    * member shelf erases, applied as erased principals (user ids) to
+    * t47's own partials copy (q44's artifact stays untouched). */
   private[queries] def fanoutSumTakedown(s: SparkSession, dir: String,
-      ids: DataFrame, tag: String = null): DataFrame = {
-    buildRwPartials(s, dir, "t47agg")(q33Partial)
-    appendPartials(s, dir, "t47agg")(q33Partial)
-    val erasures = ids.select(col("doc_id").as("user_id"))
-    q44Erase(s, dir, erasures,
-      if (tag != null) tag
-      else DedupOps.erasureFingerprint(erasures, idCol = "user_id"),
-      fam = "t47agg")
-    q33Merge(s.read.parquet(
-      DedupOps.requireReady(rwPartialsPath(s, dir, "t47agg"))
-        .resolve("partials").toString))
-      .filter(col("n_events") > 0)
-  }
-
-  private[graft] def q44Takedown(s: SparkSession, dir: String): Unit = {
-    buildRwPartials(s, dir, "q44agg")(q33Partial)
-    appendPartials(s, dir, "q44agg")(q33Partial)
-    val erasures = DedupOps.readStable(s,
-      DedupOps.stageErasures(s, dir, "events", "user_id")
-        .resolve("erasures").toString)
-    // the tag keys on the list's CONTENT (its distinct id set), not a
-    // file fingerprint: a re-staged byte-identical list (new mtime)
-    // must stay the SAME takedown — a fingerprint-keyed marker would
-    // re-apply it and silently double-subtract
-    q44Erase(s, dir, erasures,
-      DedupOps.erasureFingerprint(erasures, idCol = "user_id"))
-  }
-
-  /** q37's fold on q44's artifact: the `retractx*` generations carry
-    * the `retract` file prefix precisely so the shared sum fold nets
-    * them into the base for free. */
-  private[graft] def q44Compact(s: SparkSession, dir: String): Boolean =
-    DedupOps.compactArtifact(s, q44RwPath(s, dir), rel = "partials")(q35Fold)
-
-  /** q44: EXTERNAL TAKEDOWN on the sum family, served — build + append
-    * q44's own partials artifact, apply the staged erasure list, serve
-    * the netted merge. Oracle: q33's statistics over the events whose
-    * user survives the list (`user_id % 7 <> 0` — the absent and
-    * repeated ids in the staged list are no-ops on both sides). The
-    * ghost-key filter is q39's read contract. List-keyed idempotence,
-    * the second-distinct-list composition, and q37's fold netting the
-    * erasure pinned in PartialsCompactSpec. */
-  def q44AggTakedown(s: SparkSession, dir: String): DataFrame = {
-    q44Takedown(s, dir)
-    q33Merge(s.read.parquet(DedupOps.requireReady(q44RwPath(s, dir))
-      .resolve("partials").toString))
-      .filter(col("n_events") > 0)
-  }
+      ids: DataFrame, tag: String = null): DataFrame =
+    PartialsShelf.serve(s, dir, PartialsShelf.t47,
+      ids.select(col("doc_id").as("user_id")), tag)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q42_resketch_append" -> (q42ResketchAppend _),

@@ -141,10 +141,7 @@ object StreamingOps {
                 f.getName.matches("s10_events_[0-9a-f]{12}")) &&
               f.toPath.toAbsolutePath != out)
             .foreach(DedupOps.deleteRecursively))
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(out.toFile)
+        DedupOps.deleteRecursively(out.toFile)
         Files.createDirectories(out)
         val ev = Tables(s, dir, "events")
         val Array(lo, hi) = ev.agg(min(col("ts")), max(col("ts")))
@@ -215,10 +212,7 @@ object StreamingOps {
         .localCheckpoint(true)
       (out, (q1.id, q1.runId), (q2.id, q2.runId))
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(cp.toFile)
+      DedupOps.deleteRecursively(cp.toFile)
     }
   }
 
@@ -242,10 +236,7 @@ object StreamingOps {
       .head().toSeq.map(_.asInstanceOf[Long]).toArray
     val cut = (lo + hi) / 2
     if (!Files.exists(out.resolve("_STAGED"))) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(out.toFile)
+      DedupOps.deleteRecursively(out.toFile)
       Files.createDirectories(out)
       // partitioned write + rename, as in stageRestartFixture
       Seq("a" -> d.filter(col("doc_id") <= cut),
@@ -328,10 +319,7 @@ object StreamingOps {
         .localCheckpoint(true)
       (out, (q1.id, q1.runId), (q2.id, q2.runId))
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(cp.toFile); rm(sink.toFile)
+      Seq(cp, sink).foreach(p => DedupOps.deleteRecursively(p.toFile))
     }
   }
 
@@ -428,10 +416,7 @@ object StreamingOps {
         case Some(p) => s.conf.set(key, p)
         case None => s.conf.unset(key)
       }
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(cp.toFile)
+      DedupOps.deleteRecursively(cp.toFile)
     }
   }
 

@@ -159,17 +159,17 @@ class IndexAppendSpec extends SparkSpec {
     // q36's folded sketches must estimate EXACTLY what q34's
     // merge-at-read path estimates (union is register-wise max —
     // folding it into the artifact is invisible)
-    val q36est = Relational.q36MergedEstimates(spark, dir)
+    val q36est = PartialsShelf.serve(spark, dir, PartialsShelf.q36)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val q34est = Relational.q34MergedEstimates(spark, dir)
+    val q34est = PartialsShelf.serve(spark, dir, PartialsShelf.q34)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(q36est === q34est)
     assert(Relational.q36SketchAppend(spark, dir).collect()
       .forall(_.getAs[Boolean]("within_err")))
     // both artifacts carry the advanced watermark and the appended
     // generation as their own files; nonce idempotency on re-serve
-    Seq(Relational.q35RwPath(spark, dir),
-        Relational.q36RwPath(spark, dir)).foreach { idx =>
+    Seq(PartialsShelf.path(spark, dir, PartialsShelf.q35),
+        PartialsShelf.path(spark, dir, PartialsShelf.q36)).foreach { idx =>
       val hi = Tables(spark, dir, "events")
         .agg(max(col("ts"))).head().getLong(0)
       assert(new String(Files.readAllBytes(idx.resolve("_CUT")), "UTF-8")
@@ -180,7 +180,8 @@ class IndexAppendSpec extends SparkSpec {
       assert(names.exists(_.startsWith("part-")),
         s"$idx: base generation missing")
     }
-    val marker = Relational.q35RwPath(spark, dir).resolve("_INDEX_READY")
+    val marker = PartialsShelf.path(spark, dir, PartialsShelf.q35)
+      .resolve("_INDEX_READY")
     val nonce0 = new String(Files.readAllBytes(marker), "UTF-8")
     Relational.q35AggAppend(spark, dir).collect()
     assert(new String(Files.readAllBytes(marker), "UTF-8") === nonce0,

@@ -45,7 +45,7 @@ class PartialsCompactSpec extends SparkSpec {
       .orderBy(col("event_type"))
       .collect().map(_.toSeq.toVector).toSeq
     assert(served === expected)
-    val out = Relational.q37RwPath(spark, dir)
+    val out = PartialsShelf.path(spark, dir, PartialsShelf.q37)
     // the append-* generation is gone; ONLY the compacted one remains
     assert(generationKinds(out.resolve("partials")) === Set("compact"))
     // _CUT is a watermark, not a layout property: compaction leaves it
@@ -55,23 +55,23 @@ class PartialsCompactSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(out.resolve("_CUT")), "UTF-8")
       .trim.toLong === hi)
     // a converged (already-compacted) artifact must not be rewritten
-    assert(!Relational.q37Compact(spark, dir),
+    assert(!PartialsShelf.compact(spark, dir, PartialsShelf.q37),
       "compaction of a single-generation artifact must no-op")
   }
 
   test("q38 compaction changes no estimate: compacted equals appended-merged bit-identically") {
-    val compacted = Relational.q38CompactedEstimates(spark, dir)
+    val compacted = PartialsShelf.serve(spark, dir, PartialsShelf.q38)
       .orderBy(col("event_type"))
       .collect().map(_.toSeq.toVector).toSeq
     // the q36 family keeps its own (uncompacted, two-generation)
     // artifact: union-of-unions ≡ one union per key, so the folded
     // sketches estimate EXACTLY what the generation pile does
-    val appended = Relational.q36MergedEstimates(spark, dir)
+    val appended = PartialsShelf.serve(spark, dir, PartialsShelf.q36)
       .orderBy(col("event_type"))
       .collect().map(_.toSeq.toVector).toSeq
     assert(compacted === appended)
     assert(generationKinds(
-      Relational.q38RwPath(spark, dir).resolve("partials")) ===
+      PartialsShelf.path(spark, dir, PartialsShelf.q38).resolve("partials")) ===
       Set("compact"))
   }
 
@@ -92,7 +92,7 @@ class PartialsCompactSpec extends SparkSpec {
       .orderBy(col("event_type"))
       .collect().map(_.toSeq.toVector).toSeq
     assert(served === expected)
-    val out = Relational.q39RwPath(spark, dir)
+    val out = PartialsShelf.path(spark, dir, PartialsShelf.q39)
     val kinds = generationKinds(out.resolve("partials"))
     assert(kinds.contains("retract"), s"retract generation missing: $kinds")
     assert(Files.exists(out.resolve("_RETRACTED")))
@@ -130,8 +130,8 @@ class PartialsCompactSpec extends SparkSpec {
       Vector("mixed", 2L, 10.00)),
       s"ghost must drop entirely, mixed must keep only its out-of-window events: $served")
     // compaction nets the retract-* generation into the base …
-    assert(Relational.q39Compact(spark, tmp))
-    val out = Relational.q39RwPath(spark, tmp)
+    assert(PartialsShelf.compact(spark, tmp, PartialsShelf.q39))
+    val out = PartialsShelf.path(spark, tmp, PartialsShelf.q39)
     assert(generationKinds(out.resolve("partials")) === Set("compact"))
     // … leaving the fully-retracted key as an explicit zero row in the
     // folded partials — the serve's n_events > 0 filter is what hides
@@ -171,7 +171,7 @@ class PartialsCompactSpec extends SparkSpec {
       Vector("mixed", 1L, 3.00),
       Vector("new", 2L, 11.00)),
       s"expired history must vanish, survivors must keep exact sums: $served")
-    val out = Relational.q41RwPath(spark, tmp)
+    val out = PartialsShelf.path(spark, tmp, PartialsShelf.q41)
     val h1 = at(1.0) + (at(10.0) - at(1.0)) / 4
     val h2 = at(1.0) + (at(10.0) - at(1.0)) / 2
     val names = out.resolve("partials").toFile.listFiles()
@@ -190,14 +190,14 @@ class PartialsCompactSpec extends SparkSpec {
     assert(incr.toSeq === Seq(("old", -1L, -200L)), incr.toSeq)
     // a LAGGING scheduler re-submitting an older horizon must no-op
     val filesBefore = names.sorted.toSeq
-    Relational.q41AgeOff(spark, tmp, h1)
+    PartialsShelf.ageOff(spark, tmp, PartialsShelf.q41, h1)
     assert(out.resolve("partials").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
       filesBefore, "a horizon at or below _AGEOFF must not re-retract")
     // compaction folds base + appends + BOTH age-off generations; the
     // fully-expired key survives as an explicit zero row the serve's
     // n_events > 0 filter hides
-    assert(Relational.q41Compact(spark, tmp))
+    assert(PartialsShelf.compact(spark, tmp, PartialsShelf.q41))
     assert(generationKinds(out.resolve("partials")) === Set("compact"))
     val oldRow = spark.read.parquet(out.resolve("partials").toString)
       .filter(col("event_type") === "old").collect()
@@ -207,7 +207,7 @@ class PartialsCompactSpec extends SparkSpec {
       "compaction must be invisible through the age-off serve")
     // and the retention loop continues: a LATER horizon lands as a
     // fresh generation against the compacted base
-    Relational.q41AgeOff(spark, tmp, at(8.5))
+    PartialsShelf.ageOff(spark, tmp, PartialsShelf.q41, at(8.5))
     val aged = Relational.q41AggAgeOff(spark, tmp)
       .collect().map(_.toSeq.toVector).toSeq
     assert(aged === Seq(Vector("new", 1L, 6.00)), aged.toSeq)
@@ -235,7 +235,7 @@ class PartialsCompactSpec extends SparkSpec {
       Vector("keep", 2L, 3.00),
       Vector("mixedu", 1L, 4.00)),
       s"erased users' events must net out exactly: $served")
-    val out = Relational.q44RwPath(spark, tmp)
+    val out = PartialsShelf.path(spark, tmp, PartialsShelf.q44)
     // the erasure marker carries the staged list's set fingerprint
     val list = spark.read.parquet(DedupOps.stageErasures(spark, tmp,
       "events", "user_id").resolve("erasures").toString)
@@ -254,7 +254,8 @@ class PartialsCompactSpec extends SparkSpec {
       names0, "the same list must not re-erase")
     // a SECOND, different list (tomorrow's requests) lands as its own
     // generation under its own tag — no shared-marker short-circuit
-    Relational.q44Erase(spark, tmp, Seq(3L).toDF("user_id"), "spec2")
+    PartialsShelf.erase(spark, tmp, PartialsShelf.q44,
+      Seq(3L).toDF("user_id"), "spec2")
     assert(Files.exists(out.resolve("_ERASED_spec2")))
     val served2 = Relational.q44AggTakedown(spark, tmp)
       .collect().map(_.toSeq.toVector).toSeq
@@ -262,7 +263,7 @@ class PartialsCompactSpec extends SparkSpec {
       s"user 3's erasure must drop mixedu entirely and halve keep: $served2")
     // compaction nets base + both erasure generations; the fully-
     // erased keys survive as explicit zero rows the serve filter hides
-    assert(Relational.q44Compact(spark, tmp))
+    assert(PartialsShelf.compact(spark, tmp, PartialsShelf.q44))
     assert(generationKinds(out.resolve("partials")) === Set("compact"))
     val zeroed = spark.read.parquet(out.resolve("partials").toString)
       .filter(col("pn") === 0L).collect().map(_.getString(0)).sorted

@@ -396,7 +396,7 @@ class PlanSpec extends SparkSpec {
     // q38's GATE joins the exact full-table audit comparator (the t32
     // pattern), so the corpus-free pin applies to its maintenance
     // subplan alone
-    val m = Relational.q38CompactedEstimates(spark, dir)
+    val m = PartialsShelf.serve(spark, dir, PartialsShelf.q38)
       .queryExecution.executedPlan.toString
     assert(m.contains("q38hll_rw") && !m.contains("events.parquet"),
       s"q38's maintenance path must be artifact-only:\n$m")
@@ -428,14 +428,14 @@ class PlanSpec extends SparkSpec {
     // the corpus-free pin applies to the replacement-preferring
     // maintenance read alone — which must prefer via the persisted
     // key list, never by re-deriving the window from the corpus
-    val m = Relational.q40MergedEstimates(spark, dir)
+    val m = PartialsShelf.serve(spark, dir, PartialsShelf.q40)
       .queryExecution.executedPlan.toString
     assert(m.contains("q40hll_rw") && m.contains("resketch_keys") &&
       !m.contains("events.parquet"),
       s"q40's maintenance path must be artifact-only:\n$m")
     // q42's maintenance read (post-resketch append composed in) obeys
     // the same rule on its own artifact copy
-    val m2 = Relational.q42MergedEstimates(spark, dir)
+    val m2 = PartialsShelf.serve(spark, dir, PartialsShelf.q42)
       .queryExecution.executedPlan.toString
     assert(m2.contains("q42hll_rw") && m2.contains("resketch_keys") &&
       !m2.contains("events.parquet"),
@@ -481,7 +481,7 @@ class PlanSpec extends SparkSpec {
       s"the delta cut must push to the events scan:\n$p")
     assert(!p.contains("min(ts)") && !p.contains("max(ts)"),
       s"the cut must come from the artifact, not a bounds re-scan:\n$p")
-    val m = Relational.q34MergedEstimates(spark, dir)
+    val m = PartialsShelf.serve(spark, dir, PartialsShelf.q34)
       .queryExecution.executedPlan.toString
     assert(m.contains("q34_hll_"),
       "the history side must be the persisted partials")

@@ -90,9 +90,9 @@ class SketchGateSpec extends SparkSpec {
     val singlePass = spark.read.parquet(s"$dir/events.parquet")
       .groupBy(col("event_type"))
       .agg(hll_sketch_estimate(
-        hll_sketch_agg(col("user_id"), Relational.q34LgConfigK)).as("est"))
+        hll_sketch_agg(col("user_id"), PartialsShelf.LgConfigK)).as("est"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val merged = Relational.q34MergedEstimates(spark, dir)
+    val merged = PartialsShelf.serve(spark, dir, PartialsShelf.q34)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(merged.keySet === singlePass.keySet)
     merged.foreach { case (key, est) =>
@@ -114,6 +114,26 @@ class SketchGateSpec extends SparkSpec {
         new java.io.File(h, "partials/_SUCCESS").exists()))
   }
 
+  test("q34: a history build torn inside its _CUT write is rebuilt, not served") {
+    val tmp = java.nio.file.Files.createTempDirectory("q34_torn_").toString
+    import spark.implicits._
+    val base = 1_000_000_000_000_000L
+    Seq((0L, "A", 1L), (3L, "A", 2L), (6L, "B", 3L), (9L, "B", 1L))
+      .map { case (sec, k, u) => (base + sec * 1000000000L, k, u) }
+      .toDF("ts", "event_type", "user_id")
+      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    def served() = PartialsShelf.serve(spark, tmp, PartialsShelf.q34)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    val est = served()
+    // a crash after the partials landed but inside the _CUT write: the
+    // file is empty and no readiness marker was stamped
+    val out = PartialsShelf.path(spark, tmp, PartialsShelf.q34)
+    java.nio.file.Files.write(out.resolve("_CUT"), Array.emptyByteArray)
+    java.nio.file.Files.deleteIfExists(out.resolve("_INDEX_READY"))
+    assert(served() === est)
+    assert(est === Map("A" -> 2L, "B" -> 2L))
+  }
+
   test("q40 re-sketch retraction touches ONLY the affected keys; untouched sketches are byte-identical; flat fold refused") {
     // crafted corpus, BIGINT-nanos ts, span 10 s → build cut at 5 s,
     // retraction window (4 s, 6 s]. "A": events at 1/5/9 s — affected,
@@ -130,8 +150,8 @@ class SketchGateSpec extends SparkSpec {
       .toDF("ts", "event_type", "user_id")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/events.parquet")
     // stage base + append, snapshot the base generations' BYTES
-    Relational.q40Stage(spark, tmp)
-    val out = Relational.q40RwPath(spark, tmp)
+    PartialsShelf.append(spark, tmp, PartialsShelf.q40)
+    val out = PartialsShelf.path(spark, tmp, PartialsShelf.q40)
     def md5(p: java.nio.file.Path): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(java.nio.file.Files.readAllBytes(p))
@@ -196,28 +216,28 @@ class SketchGateSpec extends SparkSpec {
       (at(10.0), "purchase", 1L))
       .toDF("ts", "event_type", "user_id")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    Relational.q42Retract(spark, tmp)
+    PartialsShelf.resketchMidIngest(spark, tmp, PartialsShelf.q42)
     // THE STALENESS RULE, EXECUTABLE: once the replacement generation
     // exists, a plain append of a non-empty delta must refuse loudly —
     // its affected-key rows would be silently anti-joined away
     val e = intercept[IllegalArgumentException] {
-      Relational.appendPartials(spark, tmp, "q42hll")(
-        Relational.q34Sketch)
+      PartialsShelf.append(spark, tmp, PartialsShelf.q42)
     }
     assert(e.getMessage.contains("resketch"))
     // the resketch-aware append is the sanctioned path
-    Relational.appendPartialsResketchAware(spark, tmp, "q42hll")
+    PartialsShelf.append(spark, tmp, PartialsShelf.q42, aware = true)
     // exact at these cardinalities: click = {u1, u6, u3} (u2 retracted,
     // u3/u1 from the POST-resketch tranche, u6 from the replaced
     // history-append generation), purchase = {u1, u4, u7, u5}
-    val est = Relational.q42MergedEstimates(spark, tmp)
+    val est = PartialsShelf.serve(spark, tmp, PartialsShelf.q42)
       .orderBy(col("event_type"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(est === Seq(("click", 3L), ("purchase", 4L)),
       s"the post-resketch tranche must count on BOTH key classes: $est")
     // layout: untouched keys' tranche merged NORMALLY (append-*) while
     // affected keys' landed as a SECOND resketch-* generation
-    val names = Relational.q42RwPath(spark, tmp).resolve("partials")
+    val names = PartialsShelf.path(spark, tmp, PartialsShelf.q42)
+      .resolve("partials")
       .toFile.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
     assert(names.count(_.startsWith("resketch-")) === 2, names.toSeq)
     assert(names.count(_.startsWith("append-")) === 2, names.toSeq)
@@ -229,7 +249,8 @@ class SketchGateSpec extends SparkSpec {
     // and the flat fold still refuses on the composed artifact
     intercept[IllegalArgumentException] {
       DedupOps.compactArtifact(spark,
-        Relational.q42RwPath(spark, tmp), rel = "partials")(df => df)
+        PartialsShelf.path(spark, tmp, PartialsShelf.q42),
+        rel = "partials")(df => df)
     }
     // ---- q43: the REPLACEMENT-AWARE compaction bakes the
     // replacement in. Staged on q43's own family over the same
@@ -237,10 +258,10 @@ class SketchGateSpec extends SparkSpec {
     // generation, the key list retires (plain appends legal again),
     // _RESKETCHED survives (the retract never re-runs), and a second
     // compaction no-ops.
-    Relational.q42Retract(spark, tmp, "q43hll")
-    Relational.appendPartialsResketchAware(spark, tmp, "q43hll")
-    val out43 = Relational.q43RwPath(spark, tmp)
-    assert(Relational.compactResketchArtifact(spark, out43))
+    PartialsShelf.resketchMidIngest(spark, tmp, PartialsShelf.q43)
+    PartialsShelf.append(spark, tmp, PartialsShelf.q43, aware = true)
+    val out43 = PartialsShelf.path(spark, tmp, PartialsShelf.q43)
+    assert(PartialsShelf.compact(spark, tmp, PartialsShelf.q43))
     val gate43 = Relational.q43ResketchCompact(spark, tmp)
       .collect().map(_.toSeq.toVector).toSeq
     assert(gate43 === gate, "compaction must be invisible in the serve")
@@ -252,7 +273,7 @@ class SketchGateSpec extends SparkSpec {
       "the baked-in replacement must retire the key list")
     assert(java.nio.file.Files.exists(out43.resolve("_RESKETCHED")),
       "the applied-retraction record must survive the fold")
-    assert(!Relational.compactResketchArtifact(spark, out43),
+    assert(!PartialsShelf.compact(spark, tmp, PartialsShelf.q43),
       "a compacted artifact must no-op")
     // the shared flat fold no longer refuses (no replacement left) and
     // correctly reports nothing to fold
