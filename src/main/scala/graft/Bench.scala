@@ -148,8 +148,6 @@ object Bench {
         (() => { graft.queries.DedupOps.buildNearDupIndex(spark, sfDir); () }),
       Set("t33_cc_index_load") ->
         (() => { graft.queries.DedupOps.buildCcIndex(spark, sfDir); () }),
-      Set("t34_incremental_dedup", "s14_stream_index_dedup") ->
-        (() => { graft.queries.DedupOps.buildBandIndex(spark, sfDir); () }),
       // v20's learned state is the base-tranche Lloyd centroid memo —
       // without this stager it was the ONLY learned-state family whose
       // learn landed inside rep 1 (the r14 [8.8, 5.3, 3.5] staircase);
@@ -157,44 +155,11 @@ object Bench {
       // (lazy) assignment is discarded
       Set("v20_knn_delta_append") ->
         (() => { graft.queries.DedupOps.nearDupSplitAssign(spark, sfDir); () }),
-      // t35's build AND first append are maintenance-time work (their
-      // walls are BASELINE.md's fleet-scale `t35` row); the timed reps
-      // measure the converged serve
-      Set("t35_index_append") ->
-        (() => { graft.queries.DedupOps.buildRwBandIndex(spark, sfDir)
-                 graft.queries.DedupOps.appendBandIndex(spark, sfDir); () }),
-      // s15's staging = base build + the quartile-batch append on its
-      // own artifact copy (the ONE recipe the query itself runs); the
-      // timed reps measure the stream probe
-      Set("s15_stream_living_index") ->
-        (() => { graft.queries.StreamingOps.stageLivingIndex(spark, sfDir); () }),
-      // s16's staging = the tail tranche files + the pristine base
-      // index; the timed reps pay the working copy + the per-batch
-      // probe/absorb stream — the machinery being gated
-      Set("s16_stream_writeback") ->
-        (() => { graft.queries.StreamingOps.stageS16Tail(spark, sfDir)
-                 graft.queries.StreamingOps.s16BuildBase(spark, sfDir)
-                 () }),
-      // t36's build/append/compact are maintenance-time (BASELINE.md's
-      // fleet-scale `t36` row); the timed reps measure the compacted
-      // single-generation serve
-      Set("t36_index_compact") ->
-        (() => { // build/append/compact are eager side effects; the
-                 // returned (lazy) serve plan is discarded
-                 graft.queries.DedupOps.indexCompactServe(spark, sfDir); () }),
-      Set("m8_media_index_probe") ->
-        (() => { graft.queries.MultimodalOps.buildMediaIndex(spark, sfDir); () }),
-      Set("m9_media_index_append") ->
-        (() => { graft.queries.MultimodalOps.buildRwMediaIndex(spark, sfDir)
-                 graft.queries.MultimodalOps.appendMediaIndex(spark, sfDir); () }),
-      // the r17 policy/deletion families: builds, takedowns, age-offs,
-      // auto-folds and re-sketches are maintenance-time (BASELINE.md's
-      // fleet-scale `t38`/`t40` rows); the timed reps measure the
-      // steady-state serves
-      Set("t40_auto_compact") ->
-        (() => { graft.queries.DedupOps.autoCompactServe(spark, sfDir); () }),
-      Set("m10_media_index_compact") ->
-        (() => { graft.queries.MultimodalOps.mediaIndexCompactServe(spark, sfDir); () }),
+      // s16's tail tranche files; its pristine base index stages with
+      // the bucket entries below. The timed reps pay the working copy +
+      // the per-batch probe/absorb stream — the machinery being gated
+      Set("s16_stream_writeback", "s17_stream_retention") ->
+        (() => { graft.queries.StreamingOps.stageS16Tail(spark, sfDir); () }),
       // t47's four maintenance legs (build + fingerprint-keyed
       // takedown per shelf) run eagerly inside the call; the returned
       // summary plan stays lazy, so this stages without serving —
@@ -212,7 +177,13 @@ object Bench {
       // of its own: t47's stager runs it.
       graft.queries.PartialsShelf.entries.filter(_.queries.nonEmpty)
         .map(e => e.queries.toSet ->
-          (() => { graft.queries.PartialsShelf.stage(spark, sfDir, e); () }))
+          (() => { graft.queries.PartialsShelf.stage(spark, sfDir, e); () })) ++
+      // the folded bucket entries' builds, appends and compactions
+      // (t34-t36, t40, m8-m10, s14-s17's bases) are maintenance-time
+      // (BASELINE.md's fleet-scale `t35`/`t36`/`t40` rows); the timed
+      // reps measure the probe or the merged serve
+      graft.queries.BucketShelf.entries.map(e => e.queries.toSet ->
+        (() => { graft.queries.BucketShelf.stage(spark, sfDir, e); () }))
     // Note: some stagers intentionally warm session memos shared with
     // in-query operators (buildNearDupIndex populates t9/v15's
     // centroid memo, buildCcIndex populates t13's label memo) — that

@@ -1715,72 +1715,17 @@ object DedupOps {
 
   // ---------------------------------- t34: incremental (delta) dedup
 
-  /** Where the persisted LSH BAND index for `dir`'s BASE tranche
-    * lives. The base/delta split is the s11/q33 idiom: docs with
-    * `doc_id <= ⌊(min+max)/2⌋` are the already-ingested corpus, the
-    * high-id half is the new batch — on synthetic fixtures that
-    * models yesterday's corpus vs today's crawl. */
-  private[graft] def bandIndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_index",
-      s"bandindex:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** BUILD the band-index artifact: the BASE tranche's LSH buckets
-    * pre-aggregated to one `(band, sig, canon)` row per bucket (canon
-    * = the bucket's min doc id — the s3 ingest rule's state, here as
-    * a servable relation) plus the `_CUT` watermark (the q33 idiom:
-    * maintenance state rides in the artifact so serving never
-    * re-scans the base corpus for bounds). Bucket-cardinality output
-    * — at 100 TB this is the nightly-dedup index a pipeline persists
-    * once and probes with every new batch. Idempotent under the
-    * nonce-marker contract. */
-  private[graft] def buildBandIndex(s: SparkSession, dir: String): String =
-    buildBandIndexAt(s, dir, bandIndexPath(s, dir))
-
-  private[graft] def buildBandIndexAt(s: SparkSession, dir: String,
-      out: java.nio.file.Path): String = {
-    ensureArtifact(out) {
-      val d = docs(s, dir)
-      // one-time 2-long bounds read, confined to the build (q33)
-      val Array(lo, hi) = d.agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val cut = (lo + hi) / 2
-      bandedSignaturesOf(d.filter(col("doc_id") <= cut))
-        .groupBy(col("band"), col("sig"))
-        .agg(min(col("doc_id")).as("canon"))
-        .write.mode("overwrite").parquet(out.resolve("buckets").toString)
-      java.nio.file.Files.write(out.resolve("_CUT"),
-        cut.toString.getBytes("UTF-8"))
-    }
-  }
-
   /** t34: INCREMENTAL dedup — flag a NEW batch of documents against
-    * the persisted corpus index without touching the corpus: the
-    * daily-operations shape at 100 TB (re-running t7/t13 over the
-    * full corpus per batch is the thing this avoids). The delta (ids
-    * above the artifact's `_CUT`, read with the filter pushed to the
-    * scan) bands map-only, then probes the pre-aggregated
-    * `(band, sig, canon)` bucket relation with ONE keyed equi-join —
-    * no pair generation anywhere, so no bucket cap is involved: each
-    * delta band row meets at most one bucket row, cost is linear in
-    * the batch regardless of corpus bucket sizes. A doc is flagged
-    * iff some band bucket already exists in the base (witness = min
-    * band, dup_of = min base canonical — s3's rule against persisted
-    * state instead of stream state). Within-batch duplicates are
-    * s3/t7's job, deliberately not re-flagged here. */
-  def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val idx = buildBandIndex(s, dir)
-    val cut = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_CUT")), "UTF-8").trim.toLong
-    val delta = docs(s, dir).filter(col("doc_id") > cut)
-    val buckets = readStable(s, s"$idx/buckets")
-    bandedSignaturesOf(delta)
-      .select(col("doc_id"), col("band"), col("sig"))
-      .join(buckets, Seq("band", "sig"))
-      .groupBy(col("doc_id"))
-      .agg(min(col("band")).as("band"), min(col("canon")).as("dup_of"))
-      .orderBy(col("doc_id"))
-  }
+    * the persisted base-tranche band index ([[BucketShelf.t34]])
+    * without touching the corpus: the daily-operations shape
+    * (re-running t7/t13 over the full corpus per batch is the thing
+    * this avoids). The delta (ids above the artifact's `_CUT`, the
+    * filter pushed to the scan) bands map-only, then probes the
+    * `(band, sig, canon)` bucket relation with ONE keyed equi-join.
+    * Within-batch duplicates are s3/t7's job, deliberately not
+    * re-flagged here. */
+  def incrementalDedup(s: SparkSession, dir: String): DataFrame =
+    BucketShelf.serve(s, dir, BucketShelf.t34)
 
   /** t34 through the SQL-TEXT surface — the same incremental probe
     * computed by ONE `spark.sql(...)` statement over registered temp
@@ -1799,9 +1744,7 @@ object DedupOps {
     * leaked catalog entries; hygiene pinned in IndexAppendSpec). */
   def incrementalDedupSql(s: SparkSession, dir: String): DataFrame = {
     graft.functions.TextHashes.register(s)
-    val idx = buildBandIndex(s, dir)
-    val cut = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_CUT")), "UTF-8").trim.toLong
+    val cut = cutOf(BucketShelf.stage(s, dir, BucketShelf.t34))
     val bandSel = (0 until NumBands).map { b =>
       val key = (0 until BandSize).map(r => s"sig_arr[${b * BandSize + r}]")
         .mkString("concat_ws(':', ", ", ", ")")
@@ -1809,7 +1752,7 @@ object DedupOps {
     }.mkString("\n UNION ALL ")
     JobHistoryOps.withSqlViews(s, Seq(
       "t34_documents" -> docs(s, dir),
-      "t34_buckets" -> readStable(s, s"$idx/buckets")))(nm =>
+      "t34_buckets" -> BucketShelf.buckets(s, dir, BucketShelf.t34)))(nm =>
       s"""WITH delta AS (
          | SELECT doc_id, split(text, ' ') AS words
          | FROM ${nm("t34_documents")} WHERE doc_id > $cut),
@@ -1823,32 +1766,6 @@ object DedupOps {
          | ON b.band = k.band AND b.sig = k.sig
          |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin)
   }
-
-  // ------------------------ t35: index WRITE-BACK (append + advance)
-
-  /** Where the READ-WRITE band index lives. t34/s14 deliberately probe
-    * a read-only artifact — their gates re-probe the base-tranche
-    * buckets every run, so the delta must stay un-absorbed there —
-    * and the write-back family maintains its OWN copy of the same
-    * index, so an append never invalidates the read-only gates. */
-  private[graft] def rwBandIndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_index_rw",
-      s"bandindexrw:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  private[graft] def buildRwBandIndex(s: SparkSession, dir: String): String =
-    buildBandIndexAt(s, dir, rwBandIndexPath(s, dir))
-
-  /** s15's OWN copy of the band index (a third, beside t34's
-    * read-only and t35's rw): its gate freezes the index at a
-    * mid-append state — base built, ONE intermediate batch absorbed —
-    * and t35's gate appends its copy's full tail, so sharing either
-    * artifact would make one gate's result depend on whether the
-    * other ran first. Gates must be order-independent. */
-  private[graft] def s15BandIndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_index_s15",
-      s"bandindexs15:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
 
   /** Output partition count for BATCH-sized artifact writes — the
     * per-micro-batch generations, flags, tombstone lists, and fold
@@ -2084,128 +2001,18 @@ object DedupOps {
     ()
   }
 
-  /** APPEND the tranche `(_CUT, upTo]` into the rw band index and
-    * advance `_CUT` — the write-back that turns the build-once index
-    * into a LIVING one. Without it every batch joins an ever-growing
-    * unindexed tail and the "probe is linear in the batch" claim
-    * quietly degrades; with it, day N's batch probes an index that
-    * already absorbed days 1..N−1. The delta's buckets land as NEW
-    * part files NEXT TO the existing ones (an O(batch) write — the
-    * base relation is never rewritten; the LSM idiom), and the
-    * serve/probe paths min-merge on read: canon = min doc id is
-    * merge-associative, so append-then-merge ≡ a from-scratch rebuild
-    * over base+delta EXACTLY (pinned in IndexAppendSpec, gated by the
-    * full-corpus oracle).
-    *
-    * Crash-safe under the marker-last contract, serialized by the
-    * per-path artifact lock: the delta buckets write to a temp dir
-    * first (a failure there leaves the served index untouched), then
-    * the `_INDEX_READY` nonce is REMOVED — from here until the final
-    * re-stamp the artifact is "not ready", so a crash leaves a
-    * marker-less (rebuildable) directory, never a half-appended
-    * "ready" one — the part files move in, `_CUT` advances, and a
-    * FRESH nonce stamps LAST. Idempotent: an already-absorbed tranche
-    * yields an empty delta and the append is a no-op (nonce
-    * untouched). Returns the index's cut after the call. */
-  private[graft] def appendBandIndex(s: SparkSession, dir: String,
-      upTo: Long = Long.MaxValue): Long =
-    appendBandIndexAt(s, dir, rwBandIndexPath(s, dir), upTo)
-
-  /** `autoCompactMax` > 0 arms the t40 policy: after the commit —
-    * still under the artifact lock, so no reader or mutator can land
-    * between the append and its triggered fold — a generation count
-    * exceeding the threshold fires [[compactBandIndex]]. Off (0) by
-    * default: t35/t36's gates pin the manual lifecycle. */
-  private[graft] def appendBandIndexAt(s: SparkSession, dir: String,
-      out: java.nio.file.Path, upTo: Long,
-      autoCompactMax: Int = 0): Long = {
-    artifactLock(out).synchronized { retryOnConflict() {
-      val cut = cutOf(out)
-      val delta = docs(s, dir)
-        .filter(col("doc_id") > cut && col("doc_id") <= upTo)
-      // bounds over the pushed delta scan only — never the corpus
-      val hiRow = delta.agg(max(col("doc_id"))).head()
-      if (hiRow.isNullAt(0)) cut
-      else {
-        val newCut = hiRow.getLong(0)
-        val tmp = out.resolve("buckets_append")
-        bandedSignaturesOf(delta)
-          .groupBy(col("band"), col("sig"))
-          .agg(min(col("doc_id")).as("canon"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        // conditional on the cut this delta was computed against: a
-        // concurrent driver's append conflicts and we recompute
-        commitArtifactAppend(out, tmp, newCut, expectedCut = cut)
-        if (autoCompactMax > 0 &&
-            Generations.count(out.resolve("buckets")) > autoCompactMax) {
-          compactBandIndex(s, out); ()
-        }
-        newCut
-      }
-    } }
-  }
-
-  /** The rw index's SERVED bucket relation: min-merge-on-read over the
-    * base build's rows plus every appended tranche's — one map-side-
-    * combinable groupBy on a bucket-cardinality relation. The 100 TB
-    * operational complement is periodic compaction (rewrite the merged
-    * relation, drop the delta files); it is semantics-free because min
-    * is idempotent and associative, so the gate pins the un-compacted
-    * read path. */
-  private[graft] def servedBandBuckets(s: SparkSession, dir: String)
-      : DataFrame =
-    readStable(s, requireReady(rwBandIndexPath(s, dir))
-        .resolve("buckets").toString)
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("canon")).as("canon"))
-
-  /** Probe a delta tranche `(_CUT, upTo]` against the rw index — the
-    * t34 probe against the LIVING index: after an append, a later
-    * batch's duplicates of an EARLIER batch's docs flag too (the
-    * cross-batch pin in IndexAppendSpec). The join reads the bucket
-    * files RAW — a (band, sig) key appended more than once matches
-    * its probe row more than once, and the existing per-doc
-    * min-aggregate is exactly the merge that makes that harmless. */
-  private[graft] def rwIndexProbe(s: SparkSession, dir: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val idx = requireReady(java.nio.file.Paths.get(buildRwBandIndex(s, dir)))
-    val delta = docs(s, dir)
-      .filter(col("doc_id") > cutOf(idx) && col("doc_id") <= upTo)
-    bandedSignaturesOf(delta)
-      .select(col("doc_id"), col("band"), col("sig"))
-      .join(readStable(s, idx.resolve("buckets").toString),
-        Seq("band", "sig"))
-      .groupBy(col("doc_id"))
-      .agg(min(col("band")).as("band"), min(col("canon")).as("dup_of"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** t35: index write-back, served — build the base index (ids ≤ mid,
-    * t34's artifact layout), APPEND the delta tranche into it
-    * ([[appendBandIndex]]: new bucket files + `_CUT` advance, atomic
-    * under the marker-last contract), then serve the merged bucket
-    * relation. The oracle is the from-scratch rebuild over the FULL
-    * corpus — append must be INVISIBLE in the result (canon = min is
-    * merge-associative), which is the property that lets a 100 TB
-    * deployment absorb each day's batch in O(batch) instead of
-    * re-banding the corpus. Idempotent across runs: once `_CUT` is at
-    * the corpus max the append no-ops and the serve is a plain
-    * bucket-relation read. */
-  def indexAppendServe(s: SparkSession, dir: String): DataFrame = {
-    buildRwBandIndex(s, dir)
-    appendBandIndex(s, dir)
-    servedBandBuckets(s, dir).orderBy(col("band"), col("sig"))
-  }
+  /** t35: index write-back, served ([[BucketShelf.t35]]) — build the
+    * base index on the read-write copy (t34/s14 probe a read-only one:
+    * their delta must stay un-absorbed), APPEND the delta tranche into
+    * it, then serve the merged bucket relation. The oracle is the
+    * from-scratch rebuild over the FULL corpus: append must be
+    * INVISIBLE in the result, the property that lets a deployment
+    * absorb each day's batch in O(batch) instead of re-banding the
+    * corpus. Once `_CUT` is at the corpus max the append no-ops. */
+  def indexAppendServe(s: SparkSession, dir: String): DataFrame =
+    BucketShelf.serve(s, dir, BucketShelf.t35)
 
   // ------------------- t36: COMPACTION (fold the generations back in)
-
-  /** t36's OWN copy of the band index (t34 read-only / t35 rw / s15
-    * frozen-mid-append / t36 compacted — gates stay order-independent
-    * by never sharing a mutable artifact). */
-  private[graft] def t36BandIndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_index_t36",
-      s"bandindext36:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
 
   /** COMPACT an artifact relation: rewrite the merge-folded relation
     * as a FRESH base generation and drop every `append-*` file — the
@@ -2213,7 +2020,7 @@ object DedupOps {
     * opens the need for. Append is O(batch) precisely because it
     * never rewrites the base, so generations ACCUMULATE: a (band,
     * sig) key appended in k generations costs k raw-read matches per
-    * probe ([[rwIndexProbe]]'s contract), and after N nightly batches
+    * probe ([[BucketShelf.probe]]'s contract), and after N nightly batches
     * the read amplification is O(generations), not O(corpus growth).
     * Compaction closes that loop — one relation-sized fold (the LSM
     * major compaction, amortized across the N appends it folds)
@@ -2286,38 +2093,15 @@ object DedupOps {
       }
     } }
 
-  /** The band-bucket fold — the same min-merge the serve path applies
-    * on read, here materialized once by the compaction. */
-  private[graft] def compactBandIndex(s: SparkSession,
-      out: java.nio.file.Path): Boolean =
-    compactArtifact(s, out)(
-      _.groupBy(col("band"), col("sig"))
-        .agg(min(col("canon")).as("canon")))
-
-  /** t36: index COMPACTION, served — build the base index on t36's
-    * own copy, APPEND the delta tranche (two generations on disk, the
-    * t35 state), then COMPACT: the merged bucket relation rewrites as
-    * one fresh generation and the `append-*` files drop. The oracle
-    * is t35's UNCHANGED — the from-scratch full-corpus bucket
-    * relation — because compaction must be invisible in the result;
-    * what it changes is the READ side, which IndexAppendSpec pins
-    * (file-generation drop, byte-identical serve, crash degrading to
-    * rebuild, appends resuming after) and BASELINE.md's fleet-scale
-    * `t36` row records (N-generation read amplification before vs
-    * after, 500k docs).
-    * Idempotent: once compacted, the append no-ops (cut at corpus
-    * max) and the compaction no-ops (no append generation), so the
+  /** t36: index COMPACTION, served ([[BucketShelf.t36]]) — build,
+    * append the delta tranche (two generations, the t35 state), then
+    * fold them into one fresh generation. The oracle is t35's
+    * UNCHANGED, because compaction must be invisible in the result;
+    * what it changes is the READ side, which IndexAppendSpec pins and
+    * BASELINE.md's fleet-scale `t36` row records. Idempotent: the
     * steady-state serve is a plain single-generation read. */
-  def indexCompactServe(s: SparkSession, dir: String): DataFrame = {
-    val out = t36BandIndexPath(s, dir)
-    buildBandIndexAt(s, dir, out)
-    appendBandIndexAt(s, dir, out, Long.MaxValue)
-    compactBandIndex(s, out)
-    readStable(s, requireReady(out).resolve("buckets").toString)
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("canon")).as("canon"))
-      .orderBy(col("band"), col("sig"))
-  }
+  def indexCompactServe(s: SparkSession, dir: String): DataFrame =
+    BucketShelf.serve(s, dir, BucketShelf.t36)
 
   // ------------ DELETION from a living index (tombstones +
   // re-election): the shared verbs the member shelves (MemberShelf),
@@ -2641,59 +2425,17 @@ object DedupOps {
   def takedownExternal(s: SparkSession, dir: String): DataFrame =
     MemberShelf.serve(s, dir, MemberShelf.t39)
 
-  // ------------ t40: AUTO-COMPACTION policy (fold when generations
-  // exceed a threshold)
-
-  /** t40's OWN band-index copy (t35 rw / t36 manual-compact / t40
-    * policy-compact — order-independent gates). The `_TRANCHES` file
-    * stages the two deterministic tail cuts (thirds of the above-mid
-    * span) so the gate's three appends are reproducible without a
-    * per-serve bounds scan. */
-  private[graft] def t40IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    artifactDir("band_index_t40",
-      s"bandindext40:$dir@${pathFingerprint(s, s"$dir/documents.parquet")}")
-
   /** t40: the auto-compact POLICY — t36's fold wired to a threshold
-    * instead of an operator invocation: when a committed append
-    * leaves MORE than `autoCompactMax` generations on disk, the
-    * append itself triggers the fold, still inside the artifact lock
-    * ([[appendBandIndexAt]]). This is the missing operational loop:
-    * without it a nightly append accumulates generations until
-    * someone remembers to compact — read amplification grows
-    * O(nights) unbounded; with it the generation count is bounded by
-    * the policy (≤ threshold + 1 transiently, ≤ threshold served)
-    * FOREVER, amortizing one relation-sized fold across every
-    * `threshold` appends. The gate runs three appends at threshold 2:
-    * append 1 leaves two generations (no fold — the policy must not
-    * fire AT the threshold), append 2 leaves three and auto-folds to
-    * one, append 3 lands beside the compacted base — and the serve is
-    * byte-identical to t35's full-corpus oracle throughout, because
-    * the fold is the same semantics-free min merge. Trigger exactness,
-    * `_CUT` untouched by the fold, and append-resumes pinned in
-    * IndexAppendSpec. */
-  def autoCompactServe(s: SparkSession, dir: String): DataFrame = {
-    val out = t40IndexPath(s, dir)
-    buildBandIndexAt(s, dir, out)
-    val cutsFile = out.resolve("_TRANCHES")
-    if (!java.nio.file.Files.exists(cutsFile)) {
-      // maintenance-time staging of the fixture's batch boundaries
-      val hi = docs(s, dir).agg(max(col("doc_id"))).head().getLong(0)
-      val mid = cutOf(out)
-      java.nio.file.Files.write(cutsFile,
-        s"${mid + (hi - mid) / 3} ${mid + (hi - mid) * 2 / 3}"
-          .getBytes("UTF-8"))
-    }
-    val Array(c1, c2) = new String(java.nio.file.Files.readAllBytes(
-      cutsFile), "UTF-8").trim.split("\\s+").map(_.toLong)
-    appendBandIndexAt(s, dir, out, c1, autoCompactMax = 2)
-    appendBandIndexAt(s, dir, out, c2, autoCompactMax = 2)
-    appendBandIndexAt(s, dir, out, Long.MaxValue, autoCompactMax = 2)
-    readStable(s, requireReady(out).resolve("buckets").toString)
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("canon")).as("canon"))
-      .orderBy(col("band"), col("sig"))
-  }
+    * instead of an operator invocation ([[BucketShelf.t40]]): a
+    * committed append leaving MORE than two generations folds them
+    * inside the artifact lock, so read amplification stays bounded
+    * without anyone remembering to compact. Three appends at the
+    * build's persisted tranche cuts; the serve equals t35's
+    * full-corpus oracle throughout, because the fold is the same
+    * semantics-free min merge. Trigger exactness, `_CUT` untouched by
+    * the fold, and append-resumes pinned in IndexAppendSpec. */
+  def autoCompactServe(s: SparkSession, dir: String): DataFrame =
+    BucketShelf.serve(s, dir, BucketShelf.t40)
 
   /** t29: leakage-safe train/eval split — the assignment rule a
     * decontaminated pipeline needs: near-duplicate docs must NEVER

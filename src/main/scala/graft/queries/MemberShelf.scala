@@ -98,18 +98,16 @@ private[graft] object MemberShelf {
       .filter(col("n") >= 2)
       .select(col("doc_id")).distinct()
 
-  // re-election IS the min fold over the survivors: a group whose canon
-  // died yields its next-min member, one with no survivors vanishes
-  private def minFold(keys: String*)(alive: DataFrame): DataFrame =
-    alive.groupBy(keys.map(col): _*)
-      .agg(min(col("doc_id")).as("canon"))
-      .orderBy(keys.map(col): _*)
+  // re-election IS the bucket rule over the survivors: a group whose
+  // canon died yields its next-min member, one with no survivors vanishes
+  private def minFold(b: BucketShelf)(alive: DataFrame): DataFrame =
+    b.rule(alive).orderBy(b.keys.map(col): _*)
 
   /** `(band, sig, doc_id)`: every doc's LSH bands. */
   val band: MemberShelf = MemberShelf("band_members", "documents", "doc_id",
     (s, dir) => DedupOps.bandedSignaturesOf(Tables(s, dir, "documents"))
       .select(col("band"), col("sig"), col("doc_id")),
-    groupCanons("band", "sig"), minFold("band", "sig"))
+    groupCanons("band", "sig"), minFold(BucketShelf.band))
 
   /** `(ahash, doc_id)`: every doc's perceptual hash; a takedown needs
     * no decode of the payload bytes. */
@@ -117,7 +115,7 @@ private[graft] object MemberShelf {
     (s, dir) => MultimodalOps.mediaAhashOf(MultimodalOps.mediaTable(s, dir)
         .select(col("doc_id"), col("payload")))
       .select(col("ahash"), col("doc_id")),
-    groupCanons("ahash"), minFold("ahash"))
+    groupCanons("ahash"), minFold(BucketShelf.media))
 
   /** `(cluster, vec_id, embedding)`: a copy of the near-dup index's
     * `assign` relation. The learned cells stay FROZEN — a deletion must

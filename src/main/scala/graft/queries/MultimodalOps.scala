@@ -192,154 +192,32 @@ object MultimodalOps {
       .toDF("doc_id", "ahash")
   }
 
-  /** Where the persisted MEDIA-HASH index for `dir`'s base tranche
-    * lives (the t34 idiom on the multimodal family). */
-  private[graft] def mediaIndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("media_index",
-      s"mediaindex:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** BUILD the media-hash index: the BASE tranche's perceptual hashes
-    * pre-aggregated to one `(ahash, canon)` row per distinct hash
-    * (canon = min doc id — m5's keeper rule as servable state) plus
-    * the `_CUT` watermark. Nonce-marker idempotent (the v17
-    * contract). */
-  private[graft] def buildMediaIndex(s: SparkSession, dir: String): String =
-    buildMediaIndexAt(s, dir, mediaIndexPath(s, dir))
-
-  private def buildMediaIndexAt(s: SparkSession, dir: String,
-      out: java.nio.file.Path): String = {
-    DedupOps.ensureArtifact(out) {
-      val media = mediaTable(s, dir)
-      val Array(lo, hi) = media.agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val cut = (lo + hi) / 2
-      mediaAhashOf(media.filter(col("doc_id") <= cut)
-          .select(col("doc_id"), col("payload")))
-        .groupBy(col("ahash"))
-        .agg(min(col("doc_id")).as("canon"))
-        .write.mode("overwrite").parquet(out.resolve("buckets").toString)
-      java.nio.file.Files.write(out.resolve("_CUT"),
-        cut.toString.getBytes("UTF-8"))
-    }
-  }
-
   /** m8: INCREMENTAL media dedup — a NEW batch of media probed against
-    * the persisted corpus hash index (t34's daily-operations shape on
-    * the multimodal family, completing the absorb-the-delta story
-    * across all four: q33 relational, t34/s14 text, v20 vectors, m8
-    * media). The delta (ids above `_CUT`, filter pushed to the scan)
-    * hashes map-only through the batched decode stage, then probes the
-    * bucket-cardinality `(ahash, canon)` relation with ONE keyed
-    * equi-join — exact perceptual-hash equality, the m5 rule against
-    * persisted state; cost is linear in the batch regardless of corpus
-    * size. Near-miss (hamming ≤ 3) probing is m6's pigeonhole over the
-    * same artifact — deliberately out of this gate. */
-  def mediaIndexProbe(s: SparkSession, dir: String): DataFrame = {
-    val idx = buildMediaIndex(s, dir)
-    val cut = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_CUT")), "UTF-8").trim.toLong
-    val delta = mediaTable(s, dir).filter(col("doc_id") > cut)
-      .select(col("doc_id"), col("payload"))
-    mediaAhashOf(delta)
-      .join(DedupOps.readStable(s, s"$idx/buckets"), Seq("ahash"))
-      .select(col("doc_id"), col("ahash"), col("canon").as("dup_of"))
-      .orderBy(col("doc_id"))
-  }
+    * the persisted base-tranche hash index ([[BucketShelf.m8]]): t34's
+    * daily-operations shape on the multimodal family. The delta (ids
+    * above `_CUT`, filter pushed to the scan) hashes map-only through
+    * the batched decode stage, then probes the `(ahash, canon)`
+    * relation with ONE keyed equi-join — exact perceptual-hash
+    * equality, m5's rule against persisted state; cost is linear in the
+    * batch regardless of corpus size. Near-miss (hamming ≤ 3) probing
+    * is m6's pigeonhole over the same artifact. */
+  def mediaIndexProbe(s: SparkSession, dir: String): DataFrame =
+    BucketShelf.serve(s, dir, BucketShelf.m8)
 
-  // ------------------------- m9: media-index WRITE-BACK (t35's idiom)
-
-  /** The READ-WRITE media index — m8/its gate probe a read-only
-    * artifact (the delta must stay un-absorbed there); the write-back
-    * family maintains its own copy, exactly as t35 does beside t34. */
-  private[graft] def rwMediaIndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("media_index_rw",
-      s"mediaindexrw:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  private[graft] def buildRwMediaIndex(s: SparkSession, dir: String): String =
-    buildMediaIndexAt(s, dir, rwMediaIndexPath(s, dir))
-
-  /** APPEND the media tranche `(_CUT, upTo]` into the rw media index
-    * and advance `_CUT` — t35's write-back on the multimodal family:
-    * the delta's `(ahash, canon)` buckets land as new part files
-    * (O(batch); the base relation is never rewritten) through the
-    * shared [[DedupOps.commitArtifactAppend]] mechanics (marker
-    * removed across the mutation window — crash ⇒ rebuild), and the
-    * serve path min-merges on read: canon = min doc id is
-    * merge-associative, so append ≡ rebuild exactly. Idempotent: an
-    * absorbed tranche yields an empty delta and no-ops. */
-  private[graft] def appendMediaIndex(s: SparkSession, dir: String,
-      upTo: Long = Long.MaxValue): Long =
-    appendMediaIndexAt(s, dir, rwMediaIndexPath(s, dir), upTo)
-
-  private[graft] def appendMediaIndexAt(s: SparkSession, dir: String,
-      out: java.nio.file.Path, upTo: Long): Long = {
-    DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val cut = DedupOps.cutOf(out)
-      val delta = mediaTable(s, dir)
-        .filter(col("doc_id") > cut && col("doc_id") <= upTo)
-        .select(col("doc_id"), col("payload"))
-      val hiRow = delta.agg(max(col("doc_id"))).head()
-      if (hiRow.isNullAt(0)) cut
-      else {
-        val newCut = hiRow.getLong(0)
-        val tmp = out.resolve("buckets_append")
-        mediaAhashOf(delta)
-          .groupBy(col("ahash"))
-          .agg(min(col("doc_id")).as("canon"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        DedupOps.commitArtifactAppend(out, tmp, newCut, expectedCut = cut)
-        newCut
-      }
-    } }
-  }
-
-  /** m9: media-index write-back, served — build the base hash index,
+  /** m9: media-index WRITE-BACK, served ([[BucketShelf.m9]]) — t35's
+    * idiom on its own read-write copy: build the base hash index,
     * absorb the delta INTO it, serve the merged `(ahash, canon)`
     * relation. Oracle = the from-scratch rebuild over the full corpus
-    * (append must be invisible in the result). With t35 (band index)
-    * this makes BOTH persisted-probe families living indexes: day N's
-    * batch probes an artifact that already absorbed days 1..N−1. */
-  def mediaIndexAppendServe(s: SparkSession, dir: String): DataFrame = {
-    buildRwMediaIndex(s, dir)
-    appendMediaIndex(s, dir)
-    DedupOps.readStable(s, rwMediaIndexPath(s, dir).resolve("buckets").toString)
-      .groupBy(col("ahash"))
-      .agg(min(col("canon")).as("canon"))
-      .orderBy(col("ahash"))
-  }
+    * (append must be invisible in the result). */
+  def mediaIndexAppendServe(s: SparkSession, dir: String): DataFrame =
+    BucketShelf.serve(s, dir, BucketShelf.m9)
 
-  // ---------------- m10: media-index COMPACTION (t36's fold here)
-
-  /** m10's OWN artifact copy (m8 read-only / m9 rw / m10 compacted —
-    * the gates stay order-independent by never sharing a mutable
-    * artifact, t36's rule). */
-  private[graft] def m10IndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("media_index_m10",
-      s"mediaindexm10:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  /** m10: COMPACT the living media index — build the base, absorb the
-    * delta (two `(ahash, canon)` generations on disk, the m9 state),
-    * then fold them into one fresh generation and drop the `append-*`
-    * files via [[DedupOps.compactArtifact]] (min per hash — the same
-    * merge the serve path applies on read, materialized once). With
-    * t36 (band index) and q37/q38 (partials), every append family now
-    * has its compaction path. Gated by m9's oracle UNCHANGED;
-    * serve-before ≡ serve-after and the generation drop pinned in
-    * PartialsCompactSpec. */
-  def mediaIndexCompactServe(s: SparkSession, dir: String): DataFrame = {
-    val out = m10IndexPath(s, dir)
-    buildMediaIndexAt(s, dir, out)
-    appendMediaIndexAt(s, dir, out, Long.MaxValue)
-    DedupOps.compactArtifact(s, out)(
-      _.groupBy(col("ahash")).agg(min(col("canon")).as("canon")))
-    DedupOps.readStable(s, DedupOps.requireReady(out).resolve("buckets").toString)
-      .groupBy(col("ahash"))
-      .agg(min(col("canon")).as("canon"))
-      .orderBy(col("ahash"))
-  }
+  /** m10: COMPACT the living media index ([[BucketShelf.m10]]) — t36's
+    * fold on the multimodal family: build, absorb the delta, then fold
+    * the two generations into one. Gated by m9's oracle UNCHANGED; the
+    * generation drop is pinned in PartialsCompactSpec. */
+  def mediaIndexCompactServe(s: SparkSession, dir: String): DataFrame =
+    BucketShelf.serve(s, dir, BucketShelf.m10)
 
   // ---------------- m11-m14: the media MEMBER shelf (MemberShelf.media
   // — the band shelf's four deletion verbs on `(ahash, doc_id)`)

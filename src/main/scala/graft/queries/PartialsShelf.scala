@@ -186,13 +186,15 @@ private[graft] object PartialsShelf {
 
   /** The deterministic bad-ingest window `(lo + 2/5·span, lo + 3/5·span]`
     * in epoch nanos, pure Long arithmetic: the oracles compute the
-    * same bounds with DuckDB's `epoch_ns` and integer `//`. In
-    * production the window is an input (the known-bad span). */
-  def window(s: SparkSession, dir: String): Column = {
+    * same bounds with DuckDB's `epoch_ns` and integer `//`. Persisted
+    * on entry `e`'s built artifact as `_WINDOW`, so a warm serve never
+    * re-scans the events for bounds. In production the window is an
+    * input (the known-bad span). */
+  def window(s: SparkSession, dir: String, e: Entry): Column = {
     val raw = events(s, dir)
-    val (lo, hi) = span(s, dir)
-    col("ts") > tsCutLit(raw, lo + (hi - lo) * 2 / 5) &&
-      col("ts") <= tsCutLit(raw, lo + (hi - lo) * 3 / 5)
+    val Seq(a, b) = spanMark(s, dir, path(s, dir, e), "_WINDOW")(
+      (lo, hi) => Seq(lo + (hi - lo) * 2 / 5, lo + (hi - lo) * 3 / 5))
+    col("ts") > tsCutLit(raw, a) && col("ts") <= tsCutLit(raw, b)
   }
 
   /** The hash-even half of the key space ("the bad ingest came from
@@ -383,7 +385,7 @@ private[graft] object PartialsShelf {
   def resketchMidIngest(s: SparkSession, dir: String, e: Entry): Unit = {
     append(s, dir, e, spanMark(s, dir, build(s, dir, e), "_TRANCHE")(
       (lo, hi) => Seq(lo + (hi - lo) * 7 / 10)).head)
-    resketch(s, dir, e, window(s, dir) && evenKey)
+    resketch(s, dir, e, window(s, dir, e) && evenKey)
   }
 
   /** The partials relation entry `e` serves from its ready artifact:
@@ -455,8 +457,9 @@ private[graft] object PartialsShelf {
       case Retract =>
         append(s, dir, e)
         retract(s, dir, e, "retract", "_RETRACTED")(_ =>
-          events(s, dir).filter(window(s, dir)))
-      case Resketch => append(s, dir, e); resketch(s, dir, e, window(s, dir))
+          events(s, dir).filter(window(s, dir, e)))
+      case Resketch =>
+        append(s, dir, e); resketch(s, dir, e, window(s, dir, e))
       case AgeOff =>
         append(s, dir, e)
         spanMark(s, dir, out, "_HORIZONS")((lo, hi) =>

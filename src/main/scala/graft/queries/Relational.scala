@@ -835,7 +835,7 @@ object Relational {
   def q40SketchRetract(s: SparkSession, dir: String): DataFrame =
     PartialsShelf.audit(s, dir,
       PartialsShelf.serve(s, dir, PartialsShelf.q40),
-      PartialsShelf.window(s, dir))
+      PartialsShelf.window(s, dir, PartialsShelf.q40))
 
   /** q41: retention/TTL age-off on the sum shelf — the horizon advances
     * twice (a quarter, then half of the event-time span). Oracle: q33's
@@ -850,7 +850,7 @@ object Relational {
   def q42ResketchAppend(s: SparkSession, dir: String): DataFrame =
     PartialsShelf.audit(s, dir,
       PartialsShelf.serve(s, dir, PartialsShelf.q42),
-      PartialsShelf.window(s, dir) && PartialsShelf.evenKey)
+      PartialsShelf.window(s, dir, PartialsShelf.q42) && PartialsShelf.evenKey)
 
   /** q43: COMPACTION AFTER DELETION — q42's composition, then the
     * replacement-aware fold, which must be invisible: q42's oracle
@@ -858,7 +858,7 @@ object Relational {
   def q43ResketchCompact(s: SparkSession, dir: String): DataFrame =
     PartialsShelf.audit(s, dir,
       PartialsShelf.serve(s, dir, PartialsShelf.q43),
-      PartialsShelf.window(s, dir) && PartialsShelf.evenKey)
+      PartialsShelf.window(s, dir, PartialsShelf.q43) && PartialsShelf.evenKey)
 
   /** q44: EXTERNAL TAKEDOWN on the sum shelf — erase the staged list's
     * users. Oracle: q33's statistics over the events whose user

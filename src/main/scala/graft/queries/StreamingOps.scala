@@ -522,22 +522,20 @@ object StreamingOps {
     * by t34's ORACLE UNCHANGED: index-backed dedup must agree between
     * the batch and stream paths — the artifact is the only shared
     * state. */
-  def streamedIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val idx = DedupOps.buildBandIndex(s, dir)
-    val cut = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_CUT")), "UTF-8").trim.toLong
+  def streamedIncrementalDedup(s: SparkSession, dir: String): DataFrame =
+    streamedProbe(s, dir, BucketShelf.t34, "s14_stream_")
+
+  /** Stage entry `e`, then stream the documents above its `_CUT`
+    * through its probe (s14/s15). */
+  private def streamedProbe(s: SparkSession, dir: String,
+      e: BucketShelf.Entry, name: String): DataFrame = {
+    val cut = DedupOps.cutOf(BucketShelf.stage(s, dir, e))
     val schema = DedupOps.readStable(s, s"$dir/documents.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .filter(col("doc_id") > cut)
       .select(col("doc_id"), col("text"))
-    val buckets = s.read.parquet(s"$idx/buckets")
-    val flagged = DedupOps.bandedSignaturesOf(stream)
-      .select(col("doc_id"), col("band"), col("sig"))
-      .join(buckets, Seq("band", "sig"))
-      .groupBy(col("doc_id"))
-      .agg(min(col("band")).as("band"), min(col("canon")).as("dup_of"))
-    runStream(s, "s14_stream_", flagged, "complete")
+    runStream(s, name, BucketShelf.probe(s, dir, e, stream), "complete")
       .orderBy(col("doc_id"))
   }
 
@@ -555,53 +553,11 @@ object StreamingOps {
     * oracle reproduces the same integer cuts over the full corpus:
     * a tail doc whose only twin sits in the absorbed third quartile
     * flags ONLY if the append really served — the write-back is what
-    * the gate gates. Own artifact copy: t35's gate appends ITS copy's
+    * the gate gates. Own artifact copy ([[BucketShelf.s15]], whose
+    * build persists the quartile cut): t35's gate appends ITS copy's
     * full tail, so sharing would order-couple the gates. */
-  /** s15's ONE staging recipe — build the base artifact, absorb the
-    * quartile batch — shared by the query and its bench pre-stager so
-    * the two can never drift apart (a stager appending PAST the
-    * gate's cut would shrink the streamed tail only on pre-staged
-    * boxes). The quartile point derives from the CORPUS bounds —
-    * never from `_CUT`, which advances after the first append — and
-    * that one maintenance-time bounds read happens only while the
-    * append is still owed: an `append-` generation already in the
-    * buckets dir means staging is complete, so a staged serve touches
-    * ONLY the artifact (the q33 maintenance-state-rides-in-the-
-    * artifact rule). */
-  private[graft] def stageLivingIndex(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = DedupOps.s15BandIndexPath(s, dir)
-    DedupOps.buildBandIndexAt(s, dir, out)
-    val appended = Option(out.resolve("buckets").toFile.listFiles())
-      .exists(_.exists(_.getName.startsWith("append-")))
-    if (!appended) {
-      val Array(lo, hi) = DedupOps.readStable(s, s"$dir/documents.parquet")
-        .agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val mid = (lo + hi) / 2
-      DedupOps.appendBandIndexAt(s, dir, out, upTo = mid + (hi - mid) / 2)
-    }
-    out
-  }
-
-  def streamedLivingIndexDedup(s: SparkSession, dir: String): DataFrame = {
-    val out = DedupOps.requireReady(stageLivingIndex(s, dir))
-    val cut2 = new String(java.nio.file.Files.readAllBytes(
-      out.resolve("_CUT")), "UTF-8").trim.toLong
-    val schema = DedupOps.readStable(s, s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .filter(col("doc_id") > cut2)
-      .select(col("doc_id"), col("text"))
-    val buckets = DedupOps.readStable(s, out.resolve("buckets").toString)
-    val flagged = DedupOps.bandedSignaturesOf(stream)
-      .select(col("doc_id"), col("band"), col("sig"))
-      .join(buckets, Seq("band", "sig"))
-      .groupBy(col("doc_id"))
-      .agg(min(col("band")).as("band"), min(col("canon")).as("dup_of"))
-    runStream(s, "s15_stream_", flagged, "complete")
-      .orderBy(col("doc_id"))
-  }
+  def streamedLivingIndexDedup(s: SparkSession, dir: String): DataFrame =
+    streamedProbe(s, dir, BucketShelf.s15, "s15_stream_")
 
   // ------------- s16: the stream FEEDS the living index (write-back)
 
@@ -663,41 +619,6 @@ object StreamingOps {
         DedupOps.deleteRecursively(tmp.toFile)
       }
       Files.write(out.resolve("_STAGED"), Array.emptyByteArray)
-    }
-    out
-  }
-
-  /** s16's PRISTINE base index (ids ≤ mid), built once per
-    * fingerprint — every invocation copies it to a fresh working
-    * directory instead of rebuilding, so the per-run cost is the
-    * streaming machinery being gated, not the base band pass. Since
-    * r18 the base carries BOTH relations: the folded `buckets` (the
-    * probe's fast path) and the t37-shaped `(band, sig, doc_id)`
-    * `members` (deletion's full-fidelity path — see
-    * [[s16AliveBuckets]]); the key is bumped so pre-members artifacts
-    * rebuild rather than serve half a layout. */
-  private[graft] def s16BaseIndexPath(s: SparkSession, dir: String)
-      : java.nio.file.Path =
-    DedupOps.artifactDir("band_index_s16",
-      s"bandindexs16m:$dir@${DedupOps.pathFingerprint(s, s"$dir/documents.parquet")}")
-
-  private[graft] def s16BuildBase(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = s16BaseIndexPath(s, dir)
-    DedupOps.ensureArtifact(out) {
-      val d = graft.Tables(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      // one-time bounds read, confined to the build (t34's rule)
-      val Array(lo, hi) = d.agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val cut = (lo + hi) / 2
-      val bands = DedupOps.bandedSignaturesOf(d.filter(col("doc_id") <= cut))
-      bands.groupBy(col("band"), col("sig"))
-        .agg(min(col("doc_id")).as("canon"))
-        .write.mode("overwrite").parquet(out.resolve("buckets").toString)
-      bands.select(col("band"), col("sig"), col("doc_id"))
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-      Files.write(out.resolve("_CUT"), cut.toString.getBytes("UTF-8"))
     }
     out
   }
@@ -1017,9 +938,8 @@ object StreamingOps {
       // compute at the stream's partition count.
       val probeWrite: () => Unit = () =>
         bands.select(col("doc_id"), col("band"), col("sig"))
-          .join(s16AliveBuckets(s, work), Seq("band", "sig"))
-          .groupBy(col("doc_id"))
-          .agg(min(col("band")).as("band"), min(col("canon")).as("dup_of"))
+          .join(s16AliveBuckets(s, work), BucketShelf.band.keys)
+          .transform(BucketShelf.band.flag)
           .repartition(DedupOps.genParts(s))
           .write.mode("overwrite").parquet(flags.toString)
       if (hi == Long.MinValue) probeWrite()
@@ -1028,8 +948,7 @@ object StreamingOps {
         val tmpM = work.resolve("members_append")
         DedupOps.parallelWrites(Seq(
           probeWrite,
-          () => bands.groupBy(col("band"), col("sig"))
-            .agg(min(col("doc_id")).as("canon"))
+          () => BucketShelf.band.rule(bands)
             .repartition(DedupOps.genParts(s))
             .write.mode("overwrite").parquet(tmp.toString),
           () => bands.select(col("band"), col("sig"), col("doc_id"))
@@ -1052,8 +971,7 @@ object StreamingOps {
     * read; tombstones untouched). */
   private[graft] val band = new StreamShelf("s16", Seq("buckets", "members"),
     Seq(
-      FoldFamily("buckets", Generations.Plain,
-        _.groupBy(col("band"), col("sig")).agg(min(col("canon")).as("canon"))),
+      FoldFamily("buckets", Generations.Plain, BucketShelf.band.merge),
       FoldFamily("members", Generations.Plain, identity)),
     StructType(Seq(StructField("doc_id", LongType, nullable = false),
       StructField("band", IntegerType, nullable = true),
@@ -1086,9 +1004,16 @@ object StreamingOps {
       ()
     })
 
+  /** s16/s17's PRISTINE base ([[BucketShelf.s16]]): the folded
+    * `buckets` (the probe's fast path) and the `(band, sig, doc_id)`
+    * `members` (deletion's full-fidelity path, [[s16AliveBuckets]]),
+    * built once per fingerprint; every invocation copies it. */
+  private def s16Base(s: SparkSession, dir: String): java.nio.file.Path =
+    BucketShelf.build(s, dir, BucketShelf.s16)
+
   private[graft] def s16WorkingCopy(s: SparkSession, dir: String)
       : java.nio.file.Path =
-    band.workingCopy(s, s16BuildBase(s, dir))
+    band.workingCopy(s, s16Base(s, dir))
 
   /** The cluster shelf's working copy of t42's build at the s16
     * midpoint split; `fam` keys the pristine base per GATE, so no two
@@ -1209,8 +1134,11 @@ object StreamingOps {
       }
       val old = g.lastWork.getAndSet(work)
       if (old != null && old != work) DedupOps.deleteRecursively(old.toFile)
-      s.read.schema(g.shelf.flagsSchema)
-        .parquet(work.resolve("flags").toString + "/b*")
+      // the listed batch dirs, not a `b*` glob: a glob path makes the
+      // reader probe `flags/b*/_spark_metadata` and log a warning
+      val batches = Option(work.resolve("flags").toFile.listFiles()).toSeq
+        .flatten.filter(_.getName.startsWith("b")).map(_.toString).sorted
+      s.read.schema(g.shelf.flagsSchema).parquet(batches: _*)
         .orderBy(col("doc_id"))
     }
 
@@ -1244,7 +1172,7 @@ object StreamingOps {
     * below tranche j−1's cut — a flag row for a tranche-3 doc whose
     * only twin sits in tranche 2 exists ONLY if batch 2's write-back
     * served batch 3's probe. */
-  private val s16Gate = new Gate(band, s16BuildBase)
+  private val s16Gate = new Gate(band, s16Base)
 
   private[graft] def lastS16Work = s16Gate.lastWork
 
@@ -1274,7 +1202,7 @@ object StreamingOps {
     * artifact lease, O(expired) per advance. Oracle: s16's
     * tranche-cut rule with post-age-off probes restricted to
     * surviving canons. */
-  private[graft] val s17Gate = new Gate(band, s16BuildBase,
+  private[graft] val s17Gate = new Gate(band, s16Base,
     Some(idSpanAdvance((s, work, h) => DedupOps.ageOffMembers(s, work, h))))
 
   def streamedRetention(s: SparkSession, dir: String): DataFrame =

@@ -102,7 +102,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(out.head.getAs[Long]("dup_of") === 1L,
       "dup_of must be the BASE canonical from the persisted bucket")
     // artifact completeness + nonce idempotency (the v17 contract)
-    val idx = DedupOps.bandIndexPath(spark, tmp)
+    val idx = BucketShelf.path(spark, tmp, BucketShelf.t34)
     Seq("buckets", "_CUT", "_INDEX_READY").foreach(pc =>
       assert(Files.exists(idx.resolve(pc)), s"missing artifact piece $pc"))
     assert(new String(Files.readAllBytes(idx.resolve("_CUT")), "UTF-8")
@@ -155,7 +155,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(100L),
       s"exactly the cross-tranche duplicate must flag: ${out.toSeq}")
     assert(out.head.getAs[Long]("dup_of") === 1L)
-    val idx = MultimodalOps.mediaIndexPath(spark, tmp)
+    val idx = BucketShelf.path(spark, tmp, BucketShelf.m8)
     Seq("buckets", "_CUT", "_INDEX_READY").foreach(pc =>
       assert(Files.exists(idx.resolve(pc)), s"missing artifact piece $pc"))
     val nonce0 =

@@ -27,13 +27,19 @@ class IndexAppendSpec extends SparkSpec {
       .orderBy(col("band"), col("sig"))
       .collect().map(_.toSeq.toVector).toSeq
 
+  // the rw index's probe of its delta tranche `(_CUT, upTo]`
+  private def rwIndexProbe(d: String, upTo: Long = Long.MaxValue) =
+    BucketShelf.probe(spark, d, BucketShelf.t35,
+      BucketShelf.delta(spark, d, BucketShelf.t35, upTo))
+      .orderBy(col("doc_id"))
+
   test("t35 serve-after-append equals the from-scratch rebuild exactly") {
     val served = DedupOps.indexAppendServe(spark, dir)
       .collect().map(_.toSeq.toVector).toSeq
     assert(served === rebuildOverFullCorpus(dir))
     // after the append, _CUT sits at the corpus max: the whole tail is
     // absorbed, nothing remains unindexed
-    val idx = DedupOps.rwBandIndexPath(spark, dir)
+    val idx = BucketShelf.path(spark, dir, BucketShelf.t35)
     val hi = Tables(spark, dir, "documents")
       .agg(max(col("doc_id"))).head().getLong(0)
     assert(new String(Files.readAllBytes(idx.resolve("_CUT")), "UTF-8")
@@ -49,7 +55,7 @@ class IndexAppendSpec extends SparkSpec {
   test("t35 is idempotent: a second serve re-appends nothing (nonce untouched)") {
     DedupOps.indexAppendServe(spark, dir).collect()
     val marker =
-      DedupOps.rwBandIndexPath(spark, dir).resolve("_INDEX_READY")
+      BucketShelf.path(spark, dir, BucketShelf.t35).resolve("_INDEX_READY")
     val nonce0 = new String(Files.readAllBytes(marker), "UTF-8")
     assert(nonce0.nonEmpty, "the marker must carry a nonce")
     val again = DedupOps.indexAppendServe(spark, dir).collect()
@@ -60,7 +66,7 @@ class IndexAppendSpec extends SparkSpec {
 
   test("t35 crash-safety: a marker-less (mid-append-crash) artifact rebuilds, never serves") {
     DedupOps.indexAppendServe(spark, dir).collect()
-    val idx = DedupOps.rwBandIndexPath(spark, dir)
+    val idx = BucketShelf.path(spark, dir, BucketShelf.t35)
     val marker = idx.resolve("_INDEX_READY")
     // simulate the crash window: the append removed the nonce and died
     // before re-stamping — the artifact is on disk but NOT ready
@@ -89,16 +95,17 @@ class IndexAppendSpec extends SparkSpec {
       (152L, "planets orbit the bright distant star"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    DedupOps.buildRwBandIndex(spark, tmp)
+    BucketShelf.build(spark, tmp, BucketShelf.t35)
     // probe batch 1 against the base index: 100 flags against base 1
-    val p1 = DedupOps.rwIndexProbe(spark, tmp, upTo = 150L).collect()
+    val p1 = rwIndexProbe(tmp, upTo = 150L).collect()
     assert(p1.map(_.getAs[Long]("doc_id")).toSeq === Seq(100L), p1.toSeq)
     assert(p1.head.getAs[Long]("dup_of") === 1L)
     // absorb batch 1; _CUT advances to its max id
-    assert(DedupOps.appendBandIndex(spark, tmp, upTo = 150L) === 101L)
+    assert(BucketShelf.append(spark, tmp, BucketShelf.t35, upTo = 150L) ===
+      101L)
     // probe batch 2: 151's only twin is batch-1's 101 — flagging it is
     // possible ONLY because the append wrote 101's buckets back
-    val p2 = DedupOps.rwIndexProbe(spark, tmp).collect()
+    val p2 = rwIndexProbe(tmp).collect()
     assert(p2.map(_.getAs[Long]("doc_id")).toSeq === Seq(151L), p2.toSeq)
     assert(p2.head.getAs[Long]("dup_of") === 101L,
       "the batch-2 duplicate must resolve to the APPENDED batch-1 canon")
@@ -108,8 +115,8 @@ class IndexAppendSpec extends SparkSpec {
     assert(t34.map(_.getAs[Long]("doc_id")).toSeq === Seq(100L),
       "t34's read-only gate must be unaffected by t35 appends")
     // absorbing batch 2 converges the living index on the full corpus
-    DedupOps.appendBandIndex(spark, tmp)
-    val served = DedupOps.servedBandBuckets(spark, tmp)
+    BucketShelf.append(spark, tmp, BucketShelf.t35)
+    val served = BucketShelf.served(spark, tmp, BucketShelf.t35)
       .orderBy(col("band"), col("sig"))
       .collect().map(_.toSeq.toVector).toSeq
     assert(served === rebuildOverFullCorpus(tmp))
@@ -126,7 +133,7 @@ class IndexAppendSpec extends SparkSpec {
       .orderBy(col("ahash"))
       .collect().map(_.toSeq.toVector).toSeq
     assert(served === rebuild)
-    val idx = MultimodalOps.rwMediaIndexPath(spark, dir)
+    val idx = BucketShelf.path(spark, dir, BucketShelf.m9)
     val names = idx.resolve("buckets").toFile.listFiles().map(_.getName)
     assert(names.exists(_.startsWith("append-")),
       "the delta generation must be on disk as appended files")
@@ -141,9 +148,9 @@ class IndexAppendSpec extends SparkSpec {
       .agg(max(col("doc_id"))).head().getLong(0)
     assert(new String(Files.readAllBytes(idx.resolve("_CUT")), "UTF-8")
       .trim.toLong === hi)
-    MultimodalOps.buildMediaIndex(spark, dir)
+    BucketShelf.build(spark, dir, BucketShelf.m8)
     val roCut = new String(Files.readAllBytes(
-      MultimodalOps.mediaIndexPath(spark, dir).resolve("_CUT")),
+      BucketShelf.path(spark, dir, BucketShelf.m8).resolve("_CUT")),
       "UTF-8").trim.toLong
     assert(roCut < hi, "m8's read-only index must keep the base cut")
   }
@@ -193,10 +200,10 @@ class IndexAppendSpec extends SparkSpec {
     // build + append on t36's own artifact, captured pre-compaction.
     // The artifact persists across sbt runs — start from scratch so
     // the pre-compaction two-generation state really exists
-    val out = DedupOps.t36BandIndexPath(spark, dir)
+    val out = BucketShelf.path(spark, dir, BucketShelf.t36)
     DedupOps.deleteRecursively(out.toFile)
-    DedupOps.buildBandIndexAt(spark, dir, out)
-    DedupOps.appendBandIndexAt(spark, dir, out, Long.MaxValue)
+    BucketShelf.build(spark, dir, BucketShelf.t36)
+    BucketShelf.append(spark, dir, BucketShelf.t36)
     def serve() = spark.read.parquet(out.resolve("buckets").toString)
       .groupBy(col("band"), col("sig"))
       .agg(min(col("canon")).as("canon"))
@@ -208,7 +215,7 @@ class IndexAppendSpec extends SparkSpec {
       "pre-compaction state must hold an appended generation")
     val cut0 = DedupOps.cutOf(out)
     // compact: one fresh generation, byte-identical serve, _CUT intact
-    assert(DedupOps.compactBandIndex(spark, out),
+    assert(BucketShelf.compact(spark, dir, BucketShelf.t36),
       "an artifact holding appends must compact")
     assert(serve() === before,
       "compaction must be invisible in the served relation")
@@ -224,7 +231,7 @@ class IndexAppendSpec extends SparkSpec {
     // converged artifact: a second compaction is a structural no-op
     val marker = out.resolve("_INDEX_READY")
     val nonce0 = new String(Files.readAllBytes(marker), "UTF-8")
-    assert(!DedupOps.compactBandIndex(spark, out),
+    assert(!BucketShelf.compact(spark, dir, BucketShelf.t36),
       "no appended generation -> compaction must no-op")
     assert(new String(Files.readAllBytes(marker), "UTF-8") === nonce0)
     // and the registered gate serves the full-corpus relation (t35's
@@ -253,13 +260,13 @@ class IndexAppendSpec extends SparkSpec {
       (152L, "planets orbit the bright distant star"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = DedupOps.t36BandIndexPath(spark, tmp)
-    DedupOps.buildBandIndexAt(spark, tmp, out)
-    DedupOps.appendBandIndexAt(spark, tmp, out, upTo = 150L)
-    assert(DedupOps.compactBandIndex(spark, out))
+    val out = BucketShelf.path(spark, tmp, BucketShelf.t36)
+    BucketShelf.build(spark, tmp, BucketShelf.t36)
+    BucketShelf.append(spark, tmp, BucketShelf.t36, upTo = 150L)
+    assert(BucketShelf.compact(spark, tmp, BucketShelf.t36))
     // an append RESUMES against the compacted base from the same _CUT
     assert(DedupOps.cutOf(out) === 101L)
-    DedupOps.appendBandIndexAt(spark, tmp, out, upTo = Long.MaxValue)
+    BucketShelf.append(spark, tmp, BucketShelf.t36, upTo = Long.MaxValue)
     val names = out.resolve("buckets").toFile.listFiles().map(_.getName)
     assert(names.exists(_.startsWith("compact-101")) &&
       names.exists(_.startsWith("append-152")) &&
@@ -290,12 +297,12 @@ class IndexAppendSpec extends SparkSpec {
       (152L, "planets orbit the bright distant star"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = DedupOps.t40IndexPath(spark, tmp)
-    DedupOps.buildBandIndexAt(spark, tmp, out)
+    val out = BucketShelf.path(spark, tmp, BucketShelf.t40)
+    BucketShelf.build(spark, tmp, BucketShelf.t40)
     assert(Generations.count(out.resolve("buckets")) === 1)
     // append 1 → two generations: AT the threshold, the policy must
     // NOT fire (fold only when count exceeds it)
-    DedupOps.appendBandIndexAt(spark, tmp, out, upTo = 110L,
+    BucketShelf.append(spark, tmp, BucketShelf.t40, upTo = 110L,
       autoCompactMax = 2)
     val names1 = out.resolve("buckets").toFile.listFiles().map(_.getName)
     assert(Generations.count(out.resolve("buckets")) === 2)
@@ -304,7 +311,7 @@ class IndexAppendSpec extends SparkSpec {
       names1.exists(_.startsWith("part-")), names1.toSeq.sorted)
     // append 2 → three generations > 2: the commit itself triggers the
     // fold — one fresh compacted base, _CUT still the append's own cut
-    DedupOps.appendBandIndexAt(spark, tmp, out, upTo = Long.MaxValue,
+    BucketShelf.append(spark, tmp, BucketShelf.t40, upTo = Long.MaxValue,
       autoCompactMax = 2)
     val names2 = out.resolve("buckets").toFile.listFiles().map(_.getName)
     assert(Generations.count(out.resolve("buckets")) === 1, names2.toSeq.sorted)
@@ -330,6 +337,35 @@ class IndexAppendSpec extends SparkSpec {
       .collect().map(_.toSeq.toVector).toSeq === rebuildOverFullCorpus(tmp))
     assert(Files.size(out.resolve("_INDEX_READY")) > 0,
       "recovery must re-stamp a fresh nonce")
+  }
+
+  test("t40: the tranche cuts ride in the marker-last build; a torn _TRANCHES is rebuilt, not served") {
+    // the t35 fixture corpus: lo = 1, hi = 152 → base cut 76, tranche
+    // cuts at the thirds of (76, 152]: 101 and 126
+    val tmp = Files.createTempDirectory("t40_torn_").toString
+    import spark.implicits._
+    Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six"),
+      (100L, "alpha beta gamma delta epsilon zeta"),
+      (101L, "quick brown foxes vault lazy hounds"),
+      (151L, "quick brown foxes vault lazy hounds"),
+      (152L, "planets orbit the bright distant star"))
+      .toDF("doc_id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    // the build alone persists the cuts, before its readiness marker
+    val out = BucketShelf.build(spark, tmp, BucketShelf.t40)
+    assert(new String(Files.readAllBytes(out.resolve("_TRANCHES")), "UTF-8")
+      .trim === "101 126")
+    DedupOps.autoCompactServe(spark, tmp).collect()
+    // a crash inside the _TRANCHES write: the file is empty and no
+    // readiness marker was stamped — the next call rebuilds
+    Files.write(out.resolve("_TRANCHES"), Array.emptyByteArray)
+    Files.delete(out.resolve("_INDEX_READY"))
+    assert(DedupOps.autoCompactServe(spark, tmp)
+      .collect().map(_.toSeq.toVector).toSeq === rebuildOverFullCorpus(tmp))
+    assert(new String(Files.readAllBytes(out.resolve("_TRANCHES")), "UTF-8")
+      .trim === "101 126")
   }
 
   test("commitArtifactAppend retry clears the crashed attempt's whole generation first") {
@@ -363,13 +399,13 @@ class IndexAppendSpec extends SparkSpec {
   // the same directory would race the rebuild's rm
   test("t35 plans: probe pushes the cut to the delta scan; serve reads only the artifact") {
     DedupOps.indexAppendServe(spark, dir).collect()
-    val serve = DedupOps.servedBandBuckets(spark, dir)
+    val serve = BucketShelf.served(spark, dir, BucketShelf.t35)
       .queryExecution.executedPlan.toString
     assert(serve.contains("band_index_rw_"),
       "serve must read the persisted artifact")
     assert(!serve.contains("documents.parquet"),
       s"serve must never re-scan the corpus:\n$serve")
-    val probe = DedupOps.rwIndexProbe(spark, dir)
+    val probe = rwIndexProbe(dir)
       .queryExecution.executedPlan.toString
     assert(probe.contains(
       "PushedFilters: [IsNotNull(doc_id), GreaterThan(doc_id,"),

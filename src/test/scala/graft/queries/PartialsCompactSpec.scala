@@ -280,7 +280,7 @@ class PartialsCompactSpec extends SparkSpec {
       .collect().map(_.toSeq.toVector).toSeq
     assert(compacted === appended)
     assert(generationKinds(
-      MultimodalOps.m10IndexPath(spark, dir).resolve("buckets")) ===
+      BucketShelf.path(spark, dir, BucketShelf.m10).resolve("buckets")) ===
       Set("compact"))
   }
 }

@@ -504,7 +504,7 @@ class PlanSpec extends SparkSpec {
     // the artifact's _CUT watermark must reach the documents scan as a
     // pushed doc_id filter (the base tranche is never re-read), and
     // the base side must come from the pre-aggregated bucket artifact
-    DedupOps.buildBandIndex(spark, dir)
+    BucketShelf.build(spark, dir, BucketShelf.t34)
     val p = plan("t34_incremental_dedup")
     assert(p.contains("PushedFilters: [IsNotNull(doc_id), GreaterThan(doc_id,"),
       s"the delta cut must push to the documents scan:\n$p")

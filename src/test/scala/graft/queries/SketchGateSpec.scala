@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -193,6 +197,31 @@ class SketchGateSpec extends SparkSpec {
     assert(again.map(_.toSeq.toVector).toSeq ===
       served.map(_.toSeq.toVector).toSeq)
     assert(baseFiles() === snapshot)
+  }
+
+  test("q40: a warm serve reads its persisted retraction window, no bounds scan") {
+    val est = Relational.q40SketchRetract(spark, dir)
+      .collect().map(_.toSeq.toVector).toSeq
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val warm = try {
+      val df = Relational.q40SketchRetract(spark, dir)
+      ListenerBusDrain(spark.sparkContext)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // five jobs before any action: the append's delta high-watermark
+    // agg (its shuffle stage and result, under adaptive execution; an
+    // absorbed tranche then no-ops) and the partials read's three
+    // footer inferences. The window's bounds come from the artifact's
+    // _WINDOW; an events min/max scan there made it seven
+    assert(jobs.get() === 5, s"${jobs.get()} jobs before any action")
+    assert(warm.collect().map(_.toSeq.toVector).toSeq === est)
   }
 
   test("q42: a post-resketch append folds affected keys INTO the replacement; plain append refuses") {

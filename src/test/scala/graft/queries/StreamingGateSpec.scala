@@ -294,7 +294,7 @@ class StreamingGateSpec extends SparkSpec {
       .toSeq === Seq((160L, 120L), (161L, 1L)), out.toSeq)
     // the artifact froze mid-append: _CUT on the absorbed batch's max
     val cut2 = new String(java.nio.file.Files.readAllBytes(
-      DedupOps.s15BandIndexPath(spark, tmp.toString).resolve("_CUT")),
+      BucketShelf.path(spark, tmp.toString, BucketShelf.s15).resolve("_CUT")),
       "UTF-8").trim.toLong
     assert(cut2 === 120L)
     // idempotent: a re-run appends nothing more and streams the same
