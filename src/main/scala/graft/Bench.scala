@@ -183,7 +183,12 @@ object Bench {
       // (BASELINE.md's fleet-scale `t35`/`t36`/`t40` rows); the timed
       // reps measure the probe or the merged serve
       graft.queries.BucketShelf.entries.map(e => e.queries.toSet ->
-        (() => { graft.queries.BucketShelf.stage(spark, sfDir, e); () }))
+        (() => { graft.queries.BucketShelf.stage(spark, sfDir, e); () })) ++
+      // the cluster entries' builds, appends, forgets, age-offs and
+      // compactions (t42-t46) and s18-s20's pristine bases; the timed
+      // reps measure the cluster assembly over the folded labels
+      graft.queries.ClusterShelf.entries.map(e => e.queries.toSet ->
+        (() => { graft.queries.ClusterShelf.stage(spark, sfDir, e); () }))
     // Note: some stagers intentionally warm session memos shared with
     // in-query operators (buildNearDupIndex populates t9/v15's
     // centroid memo, buildCcIndex populates t13's label memo) — that

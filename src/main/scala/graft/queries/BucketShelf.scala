@@ -89,7 +89,8 @@ private[graft] object BucketShelf {
   val AutoCompactMax = 2
 
   /** One artifact copy: the registry queries it serves, its directory
-    * prefix, the family name its path key starts with, its shelf and
+    * prefix, the family name its path key starts with (an appending
+    * entry's ends in `h`: its build persists `_HI`), its shelf and
     * verb. `tranches` are the `(k, n)` fractions of the span above the
     * base cut the build persists as `_TRANCHES`; `members` also writes
     * the unfolded `(keys…, doc_id)` rows deletion re-elects from. */
@@ -99,24 +100,24 @@ private[graft] object BucketShelf {
 
   val t34 = Entry(Seq("t34_incremental_dedup", "t34_incremental_dedup_sql",
     "s14_stream_index_dedup"), "band_index", "bandindex", band, Frozen)
-  val t35 = Entry(Seq("t35_index_append"), "band_index_rw", "bandindexrw",
+  val t35 = Entry(Seq("t35_index_append"), "band_index_rw", "bandindexrwh",
     band, Append)
   /** s15 freezes its copy after the quartile batch `(mid, mid + span/2]`. */
   val s15 = Entry(Seq("s15_stream_living_index"), "band_index_s15",
-    "bandindexs15t", band, Tranche, tranches = Seq(1 -> 2))
-  val t36 = Entry(Seq("t36_index_compact"), "band_index_t36", "bandindext36",
+    "bandindexs15th", band, Tranche, tranches = Seq(1 -> 2))
+  val t36 = Entry(Seq("t36_index_compact"), "band_index_t36", "bandindext36h",
     band, Compact)
   /** t40 appends at the thirds of the span above the base cut, then the
     * tail: append 1 leaves two generations (no fold AT the threshold),
     * append 2 three (folded to one), append 3 lands beside the fold. */
-  val t40 = Entry(Seq("t40_auto_compact"), "band_index_t40", "bandindext40t",
+  val t40 = Entry(Seq("t40_auto_compact"), "band_index_t40", "bandindext40th",
     band, AutoCompact, tranches = Seq(1 -> 3, 2 -> 3))
   val m8 = Entry(Seq("m8_media_index_probe"), "media_index", "mediaindex",
     media, Frozen)
   val m9 = Entry(Seq("m9_media_index_append"), "media_index_rw",
-    "mediaindexrw", media, Append)
+    "mediaindexrwh", media, Append)
   val m10 = Entry(Seq("m10_media_index_compact"), "media_index_m10",
-    "mediaindexm10", media, Compact)
+    "mediaindexm10h", media, Compact)
   /** s16/s17's pristine base: every invocation copies it to a fresh
     * working directory, so the per-run cost is the streaming machinery. */
   val s16 = Entry(Seq("s16_stream_writeback", "s17_stream_retention"),
@@ -131,7 +132,8 @@ private[graft] object BucketShelf {
       DedupOps.pathFingerprint(s, s"$dir/documents.parquet"))
 
   /** BUILD entry `e`'s artifact under the nonce-marker contract: the
-    * base tranche's buckets, `_CUT`, and the entry's tranche cuts, all
+    * base tranche's buckets, `_CUT`, the span's `_HI` (an append of an
+    * absorbed tranche then runs no job) and the entry's tranche cuts, all
     * from the ONE bounds read, confined to the build, so a steady serve
     * never re-scans the corpus for bounds and a torn `_TRANCHES` can
     * only sit in an unready (rebuilt) artifact. */
@@ -149,6 +151,7 @@ private[graft] object BucketShelf {
         keyed.select((e.shelf.keys :+ "doc_id").map(col): _*)
           .write.mode("overwrite").parquet(out.resolve("members").toString)
       Files.write(out.resolve("_CUT"), cut.toString.getBytes("UTF-8"))
+      Files.write(out.resolve("_HI"), hi.toString.getBytes("UTF-8"))
       if (e.tranches.nonEmpty)
         Files.write(out.resolve("_TRANCHES"), e.tranches
           .map { case (k, n) => cut + (hi - cut) * k / n }.mkString(" ")
@@ -182,7 +185,7 @@ private[graft] object BucketShelf {
     * `_CUT` ([[DedupOps.commitArtifactAppend]]: marker removed across
     * the mutation window, conditional on the cut the delta was computed
     * against). The new cut comes from the pushed delta scan only; an
-    * absorbed tranche is a no-op with the nonce untouched.
+    * absorbed tranche is a no-op with the nonce untouched and no job.
     * `autoCompactMax` > 0 arms the t40 policy: a commit leaving MORE
     * than that many generations folds them ([[compact]]) still inside
     * the artifact lock, so the generation count stays bounded without
@@ -191,20 +194,22 @@ private[graft] object BucketShelf {
       upTo: Long = Long.MaxValue, autoCompactMax: Int = 0): Long = {
     val out = build(s, dir, e)
     DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val cut = DedupOps.cutOf(out)
-      val delta = slice(s, dir, e, cut, upTo)
-      val hiRow = delta.agg(max(col("doc_id"))).head()
-      if (hiRow.isNullAt(0)) cut
-      else {
-        val newCut = hiRow.getLong(0)
-        val tmp = out.resolve("buckets_append")
-        e.shelf.rule(e.shelf.keyed(delta))
-          .write.mode("overwrite").parquet(tmp.toString)
-        DedupOps.commitArtifactAppend(out, tmp, newCut, expectedCut = cut)
-        if (autoCompactMax > 0 &&
-            Generations.count(out.resolve("buckets")) > autoCompactMax)
-          compact(s, dir, e)
-        newCut
+      DedupOps.absorbedCut(out, upTo).getOrElse {
+        val cut = DedupOps.cutOf(out)
+        val delta = slice(s, dir, e, cut, upTo)
+        val hiRow = delta.agg(max(col("doc_id"))).head()
+        if (hiRow.isNullAt(0)) cut
+        else {
+          val newCut = hiRow.getLong(0)
+          val tmp = out.resolve("buckets_append")
+          e.shelf.rule(e.shelf.keyed(delta))
+            .write.mode("overwrite").parquet(tmp.toString)
+          DedupOps.commitArtifactAppend(out, tmp, newCut, expectedCut = cut)
+          if (autoCompactMax > 0 &&
+              Generations.count(out.resolve("buckets")) > autoCompactMax)
+            compact(s, dir, e)
+          newCut
+        }
       }
     } }
   }

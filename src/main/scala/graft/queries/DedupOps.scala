@@ -366,7 +366,7 @@ object DedupOps {
     * relation — size join + canonical flag + presentation order. ONE
     * implementation serves the in-query path (t13) and the artifact
     * serve path (t33), so the two are bit-equal by construction. */
-  private def ccClustersOf(lab: DataFrame): DataFrame = {
+  private[graft] def ccClustersOf(lab: DataFrame): DataFrame = {
     val sizes = lab.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     lab.join(sizes, Seq("label"))
       .select(col("label").as("cluster_id"), col("node").as("doc_id"),
@@ -393,7 +393,7 @@ object DedupOps {
       // defaultParallelism — a base build writing it landed 32
       // near-empty part files per labels relation, and every later
       // generation listing/scan paid for them (r21 profiling: a
-      // 99-path parallel listing JOB per t42CurrentRows read). One
+      // 99-path parallel listing JOB per cluster labels read). One
       // partition costs nothing here (any downstream shuffle restores
       // parallelism) and keeps artifact file counts O(generations).
       case CcLocal(schema, rows) => s.createDataFrame(rows, schema).coalesce(1)
@@ -979,28 +979,9 @@ object DedupOps {
     ccClustersOf(readStable(s, s"$idx/labels"))
   }
 
-  // ------------ t42: INCREMENTAL connected components — the cluster
-  // shelf's append verb (t33 builds once and can only rebuild; at
-  // 100 TB the nightly crawl must MERGE into yesterday's clusters)
-
-  /** One artifact per GATE family (t42 append / t43 forget / t44
-    * compact) — gates stay order-independent by never sharing a
-    * mutable artifact (t37's rule).
-    *
-    * The key carries [[erasureFpRule]], the erasure-fingerprint RULE
-    * version: the cluster shelf is the one refusal-capable shelf (an
-    * active `relabel_nodes` replacement refuses further forgets), so
-    * an artifact whose `_FORGOTTEN_`/relabel state was stamped under a
-    * PRIOR fingerprint rule must be ABANDONED and rebuilt, never
-    * re-probed under the new rule — re-probing computes a new tag,
-    * finds no marker, and hits the "compact first" refusal on state
-    * the old rule legitimately left behind (the r21 t46/t47 drop).
-    * Tombstone shelves re-apply idempotently and need no version. */
-  private[graft] def t42IndexPath(s: SparkSession, dir: String,
-      fam: String = "t42"): java.nio.file.Path =
-    artifactDir(s"cc_index_$fam",
-      s"cc$fam:$erasureFpRule:$dir@" +
-        pathFingerprint(s, s"$dir/documents.parquet"))
+  // ------------ t42-t46: the cluster shelf ([[ClusterShelf]]) — t33
+  // builds once and can only rebuild; at 100 TB the nightly crawl must
+  // MERGE into yesterday's clusters, and deletions must split them
 
   /** The cluster shelf's graph for INCREMENTAL maintenance: bucket
     * CONNECTIVITY — two docs are adjacent iff they share a
@@ -1026,292 +1007,6 @@ object DedupOps {
       .distinct()
   }
 
-  /** BUILD t42's cluster artifact over the base tranche (ids ≤ mid,
-    * the t34/t35 split): the unfolded `(band, sig, doc_id)` members
-    * (the relation every later append probes for cross edges — the
-    * t37 lesson, paid up front) and the converged `(node, label)`
-    * relation over the base bucket graph. Only clustered nodes carry
-    * rows (singletons are the uninteresting common case, t13's rule);
-    * `_CUT` persists the watermark so no serve re-scans the corpus
-    * for bounds. Idempotent under the nonce-marker contract. */
-  private[graft] def buildT42Index(s: SparkSession, dir: String,
-      fam: String = "t42", withTs: Boolean = false): java.nio.file.Path = {
-    val out = t42IndexPath(s, dir, fam)
-    ensureArtifact(out) {
-      val d = docs(s, dir)
-      // one-time bounds read, confined to the build (q33's rule)
-      val Array(lo, hi) = d.agg(min(col("doc_id")), max(col("doc_id")))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val cut = (lo + hi) / 2
-      val m0 = bandedSignaturesOf(d.filter(col("doc_id") <= cut))
-        .select(col("band"), col("sig"), col("doc_id"))
-      // an event-time-governed index (s20's retention) carries the
-      // derived ingest time in its members from the start (t45's
-      // layout at t42's cut)
-      (if (withTs) m0.withColumn("ingest_ts", expr(t41IngestTs)) else m0)
-        .write.mode("overwrite").parquet(out.resolve("members").toString)
-      // a REBUILD at this path must refresh the carries-ts memo — a
-      // stale entry from a prior build with the other flag would
-      // mis-schema every later append
-      membersCarryTs.put(out, withTs)
-      ccConvergedLabelsDf(s, bucketStarEdges(
-          s.read.parquet(out.resolve("members").toString)), null)
-        .write.mode("overwrite").parquet(out.resolve("labels").toString)
-      java.nio.file.Files.write(out.resolve("_CUT"),
-        cut.toString.getBytes("UTF-8"))
-    }
-    out
-  }
-
-  /** APPEND the tranche above `_CUT` into the cluster index — the
-    * MERGE-GRAPH update, never a rebuild:
-    *
-    *  1. Band the delta (O(batch) map work) and probe the persisted
-    *     members for its base bucket-mates; each mate collapses to
-    *     its CURRENT label (the min-fold over the labels relation —
-    *     an unlabeled mate is its own singleton label). Cross edges
-    *     are therefore (delta doc ↔ current base label).
-    *  2. Delta-internal star edges from the batch's own buckets.
-    *  3. Converge the MERGE GRAPH — nodes are delta docs and touched
-    *     base labels, O(batch + touched), never the corpus — with the
-    *     same CC loop the build uses. Because every base label IS its
-    *     component's min doc id, the merge graph's converged label is
-    *     exactly the merged component's global min: the update is
-    *     EXACT, not an approximation.
-    *  4. Land ONE `append-<cut>-*` labels generation: the delta docs'
-    *     labels, the LOWERED old labels (two base clusters bridged by
-    *     a delta chain, or an absorbed base singleton), and a relabel
-    *     row for every member of a lowered base cluster (O(affected
-    *     members), bounded by the merge scope). Labels only ever
-    *     DECREASE under merges, so the read stays the family's plain
-    *     min fold per node — associative, compaction-ready, and
-    *     crash-safe under the shared commit (generation cleared
-    *     first, `_CUT` conditional, marker last). The delta's
-    *     membership rows move into `members/` INSIDE the same commit
-    *     window (s16's beforeReady idiom) so no reachable state holds
-    *     labels without the members that justify them. */
-  /** The labels relation's CURRENT rows, un-folded — replacement-aware
-    * (t43's forget lands a `relabel-*` REPLACEMENT generation plus the
-    * `relabel_nodes` key list, q40's idiom: a split can RAISE labels,
-    * which a min fold cannot express, so the read must PREFER the
-    * replacement for affected nodes and drop everything older). With
-    * no replacement present this is the plain multi-generation scan. */
-  /** The labels relation's fixed schema — declared on every read so
-    * the scan plans without a footer-inference job (the label
-    * relations are written by this file alone; one redundant
-    * schema-discovery job per generation read was pure fixed overhead
-    * in the per-micro-batch paths). */
-  private val labelsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("node",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("label",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-
-  private[graft] val relabelNodesSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-
-  private[graft] def t42CurrentRows(s: SparkSession,
-      out: java.nio.file.Path): DataFrame = {
-    val dst = out.resolve("labels")
-    val files = Option(dst.toFile.listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet"))
-    val (rel, plain) = files.partition(_.getName.startsWith("relabel-"))
-    // defensive: today's writer emits a schema-bearing part file even
-    // for an empty result (partition 0 always writes), so `plain` is
-    // non-empty through every in-tree path — but a zero-path parquet
-    // read throws, and this read must not depend on a writer detail
-    // that has changed across Spark versions
-    val plainDf =
-      if (plain.nonEmpty)
-        s.read.schema(labelsSchema).parquet(plain.map(_.toString): _*)
-      else s.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        labelsSchema)
-    if (rel.isEmpty) plainDf
-    else plainDf
-      .join(s.read.schema(relabelNodesSchema)
-          .parquet(out.resolve("relabel_nodes").toString),
-        Seq("node"), "left_anti")
-      .unionAll(s.read.schema(labelsSchema)
-        .parquet(rel.map(_.toString): _*))
-  }
-
-  private[graft] def t42FoldedLabels(s: SparkSession,
-      out: java.nio.file.Path): DataFrame =
-    t42CurrentRows(s, out)
-      .groupBy(col("node")).agg(min(col("label")).as("label"))
-
-  private[graft] def t42Append(s: SparkSession, dir: String,
-      fam: String = "t42", upTo: Long = Long.MaxValue): Unit = {
-    val out = t42IndexPath(s, dir, fam)
-    artifactLock(out).synchronized { retryOnConflict() {
-      requireReady(out)
-      val cut = cutOf(out)
-      t42AbsorbDelta(s, out,
-        docs(s, dir).filter(col("doc_id") > cut && col("doc_id") <= upTo))
-      ()
-    } }
-  }
-
-  /** The merge-graph ABSORB core, shared by the batch append (t42)
-    * and the streamed maintenance (s18): rows at or below the current
-    * `_CUT` are filtered out (what makes a re-delivered batch an
-    * exact no-op — the at-least-once fence needs no file bookkeeping
-    * beyond the watermark), the merge graph converges, and ONE
-    * generation commits. Returns the batch docs' cluster assignments
-    * AT ABSORB TIME (the conv's delta rows — s18's per-batch flags)
-    * or None when the delta is empty. Caller holds the artifact
-    * lock; readiness is the caller's contract (the stream proceeds on
-    * a marker-less working dir mid-replay, exactly like s16). */
-  private[graft] def t42AbsorbDelta(s: SparkSession,
-      out: java.nio.file.Path, deltaIn: DataFrame,
-      flags: java.nio.file.Path = null,
-      knownHi: Option[Long] = None): Option[Long] = {
-    val cut = cutOf(out)
-    val delta = deltaIn.filter(col("doc_id") > cut)
-    // the delta high-watermark: reuse the caller's already-computed
-    // max when provided (the stream driver pays one max agg for its
-    // monotone assert and was paying a second identical one here —
-    // the filter only removes rows ≤ cut, so deltaIn's max IS delta's
-    // max whenever it exceeds the cut, and a below-cut/empty delta is
-    // exactly knownHi ≤ cut); otherwise one agg here as before.
-    val hiOpt: Option[Long] = knownHi match {
-      case Some(h) => if (h > cut) Some(h) else None
-      case None =>
-        val r = delta.agg(max(col("doc_id"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    if (hiOpt.isEmpty) None
-    else {
-      val newCut = hiOpt.get
-      locally {
-        // the batch's banding feeds the merge edges, the membership
-        // write, and the generation write — persist once (unpersisted
-        // before return; the absorb leaves no blocks behind)
-        val dm = bandedSignaturesOf(delta)
-          .select(col("band"), col("sig"), col("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-        // tombstone-aware members (a forget's dead docs must not
-        // resurface as bucket-mates) and replacement-aware labels
-        val members = aliveMembers(s, out)
-        val current = t42CurrentRows(s, out)
-        val labels = current
-          .groupBy(col("node")).agg(min(col("label")).as("label"))
-        val cross = dm.as("a")
-          .join(members.as("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("bm"))
-          .join(labels.withColumnRenamed("node", "bm"), Seq("bm"), "left")
-          .select(col("doc_a"),
-            coalesce(col("label"), col("bm")).as("doc_b"))
-          .distinct()
-        val conv = ccConvergedLabelsDf(s,
-          cross.unionAll(bucketStarEdges(dm)), null)
-        val deltaRows = conv.filter(col("node") > cut)
-          .select(col("node"), col("label"))
-        // s18's per-batch probe product: the batch docs' assignments
-        // AT ABSORB TIME, written BEFORE the commit (s16's flag order
-        // — a retried half-committed batch rewrites them identically)
-        val flagsWrite: Option[() => Unit] =
-          if (flags == null) None
-          else Some(() =>
-            deltaRows.select(col("node").as("doc_id"),
-                col("label").as("cluster_id"))
-              .repartition(genParts(s))
-              .write.mode("overwrite").parquet(flags.toString))
-        // EVERY base-side merge-graph node lands a row: an absorbed
-        // base SINGLETON that is its new cluster's min has
-        // label == node — neither a delta doc nor a lowering, but its
-        // membership row must exist (it had none as a singleton).
-        // For an already-labeled canon the (L, L) row is a harmless
-        // duplicate under the min fold
-        val baseRows = conv.filter(col("node") <= cut)
-          .select(col("node"), col("label"))
-        val lowered = conv.filter(col("node") <= cut &&
-          col("label") < col("node"))
-        // every member of a lowered base cluster relabels; stale
-        // generations' rows cannot match — a superseded label is never
-        // anyone's CURRENT label (its own component merged downward),
-        // and `cross` collapsed mates through the fold
-        val relabeled = current
-          .join(lowered.select(col("node").as("old_label"),
-            col("label").as("new_label")),
-            col("label") === col("old_label"))
-          .select(col("node"), col("new_label").as("label"))
-        val gen = deltaRows
-          .unionAll(baseRows)
-          .unionAll(relabeled)
-        // q42's staleness rule on THIS shelf: rows for nodes under an
-        // active replacement must fold INTO the replacement side — the
-        // read anti-joins every plain generation against
-        // relabel_nodes, so an ordinary append row for such a node
-        // would be silently dropped. Appends only ever LOWER labels,
-        // so a relabel-* landing is min-fold-compatible with the
-        // replacement it extends
-        val keysPath = out.resolve("relabel_nodes")
-        val hasRel = java.nio.file.Files.exists(keysPath)
-        val (genPlain, genRel) =
-          if (!hasRel) (gen, null: DataFrame)
-          else {
-            val keys = s.read.schema(relabelNodesSchema)
-              .parquet(keysPath.toString)
-            (gen.join(keys, Seq("node"), "left_anti"),
-              gen.join(keys, Seq("node"), "left_semi"))
-          }
-        val tmp = out.resolve("labels_append")
-        val tmpR = out.resolve("labels_append_rel")
-        val tmpM = out.resolve("members_append")
-        // an event-time-governed artifact (t45/s20) carries ingest_ts
-        // in EVERY members generation: appended rows derive it by the
-        // same rule, keeping the relation schema-uniform so a later
-        // horizon advance evaluates batch-absorbed docs too (a
-        // ts-less append would hide its docs from the expiry
-        // predicate and poison mixed-schema reads). One footer read,
-        // memoized per artifact path — the property is fixed at build
-        // time, so a stream never re-lists the members dir for it
-        val dmOut =
-          if (membersCarryTs.computeIfAbsent(out, p =>
-              readStable(s, p.resolve("members").toString)
-                .schema.fieldNames.contains("ingest_ts")))
-            dm.withColumn("ingest_ts", expr(t41IngestTs))
-          else dm
-        // the four generation writes are mutually independent (all
-        // derive from the persisted dm / the driver-local conv / the
-        // already-read current rows) and each is a fixed-overhead job
-        // over batch-sized input — overlap them (guide §2.6); the
-        // file-move commit below waits for all
-        parallelWrites(
-          flagsWrite.toSeq ++ Seq(
-            () => genPlain.repartition(genParts(s))
-              .write.mode("overwrite").parquet(tmp.toString)) ++
-          (if (hasRel) Seq(() => genRel.repartition(genParts(s))
-              .write.mode("overwrite").parquet(tmpR.toString))
-           else Nil) ++ Seq(
-            () => dmOut.coalesce(genParts(s))
-              .write.mode("overwrite").parquet(tmpM.toString)))
-        commitArtifactAppend(out, tmp, newCut, rel = "labels",
-          beforeReady = () => {
-            if (hasRel)
-              Generations.install(tmpR, out.resolve("labels"),
-                Generations.prefix("relabel-a", newCut))
-            Generations.install(tmpM, out.resolve("members"),
-              Generations.prefix("append", newCut))
-          }, expectedCut = cut)
-        } finally dm.unpersist(blocking = true)
-      }
-      Some(newCut)
-    }
-  }
-
-  /** The artifact's cluster assembly: the replacement-aware current
-    * rows, min-folded per node, then the same tail as t13/t33. */
-  private[graft] def ccClustersOfFolded(s: SparkSession,
-      out: java.nio.file.Path): DataFrame =
-    ccClustersOf(t42FoldedLabels(s, out))
-
   /** The ground-truth comparator (spec-only at any scale): the same
     * bucket-connectivity CC rebuilt over the FULL corpus — what the
     * incremental path must equal exactly. */
@@ -1321,330 +1016,42 @@ object DedupOps {
       bandedSignaturesOf(docs(s, dir))
         .select(col("band"), col("sig"), col("doc_id"))))
 
-  /** t42: the cluster table served INCREMENTALLY — build the base
-    * half, MERGE the tail tranche through the merge-graph append,
-    * serve the min-folded labels through the same cluster-assembly
-    * tail as t13/t33. Oracle = the full-corpus bucket-connectivity
-    * CC (a recursive CTE over the uncapped star edges): append-then-
-    * serve must equal the rebuild exactly — merges, absorbed
-    * singletons, and delta-only clusters included. The two-base-
-    * cluster merge, relabel-generation shape, second-append
-    * composition, and idempotence are pinned on a crafted corpus in
-    * CcIncrementalSpec. */
-  def ccIncrementalServe(s: SparkSession, dir: String): DataFrame = {
-    buildT42Index(s, dir)
-    t42Append(s, dir)
-    ccClustersOfFolded(s, requireReady(t42IndexPath(s, dir)))
-  }
+  /** t42: the cluster table served INCREMENTALLY ([[ClusterShelf.t42]]):
+    * build the base half, merge the tail tranche through the
+    * merge-graph append, serve the min-folded labels through t13/t33's
+    * cluster-assembly tail. Oracle = the full-corpus bucket-connectivity
+    * CC: append-then-serve must equal the rebuild exactly (crafted
+    * cases in CcIncrementalSpec). */
+  def ccIncrementalServe(s: SparkSession, dir: String): DataFrame =
+    ClusterShelf.serve(s, dir, ClusterShelf.t42)
 
-  // ------------ t43: FORGET on the cluster shelf — deletion that can
-  // SPLIT a component (min-label merge is not invertible: removal can
-  // RAISE labels, so this is the shelf's q40 — a scoped re-derivation
-  // landed as a replacement the read prefers, never a corpus rebuild)
+  /** t43: FORGET served ([[ClusterShelf.t43]]) — every canon of the
+    * fully-absorbed index taken down, the re-derived survivors served.
+    * Oracle = the bucket-CC rebuild over corpus minus the full index's
+    * cluster ids: splits, re-elections and vanished components exactly
+    * as if the forgotten docs had never been ingested. */
+  def ccForgetServe(s: SparkSession, dir: String): DataFrame =
+    ClusterShelf.serve(s, dir, ClusterShelf.t43)
 
-  /** Forget `ids` from the cluster index. Two windows under one lock:
-    *
-    *  1. The ids tombstone in `members` through the SHARED
-    *     [[applyTakedown]] (id-set-keyed marker) — future appends'
-    *     cross probes must never see a dead doc as a bucket-mate.
-    *  2. The AFFECTED components re-derive: their current labels are
-    *     found index-locally (folded labels semi-joined to the ids),
-    *     every member of an affected component is collected, the
-    *     SURVIVORS' bucket subgraph re-converges with the same CC
-    *     loop (bucket-mates never cross components, so the subgraph
-    *     is exactly the affected components — O(affected), never the
-    *     corpus; per-bucket minima recompute over survivors, so a
-    *     dead bucket-min re-elects), and the result lands as a
-    *     `relabel-f<tag>-*` REPLACEMENT generation with the affected
-    *     node set persisted as `relabel_nodes` INSIDE the same
-    *     marker-off window. Splits and raised labels fall out: a
-    *     survivor whose only bridge died simply converges into a
-    *     smaller component (or into none — a re-singleton emits no
-    *     row and the anti-join hides its stale one).
-    *
-    * ONE active replacement at a time (q42's discipline): a second
-    * forget REFUSES until [[t44Compact]] bakes the replacement into a
-    * fresh base — composing raise-capable replacements under a min
-    * fold would silently resurrect lowered labels. Idempotent per id
-    * set via `_FORGOTTEN_<tag>`. */
-  private[graft] def t43Forget(s: SparkSession,
-      out: java.nio.file.Path, ids: DataFrame, tag: String): Unit = {
-    artifactLock(out).synchronized {
-      requireReady(out)
-      val marker = out.resolve(s"_FORGOTTEN_$tag")
-      if (!java.nio.file.Files.exists(marker)) {
-        // an EMPTY id set (t45's lagging horizon — yesterday's cutoff
-        // re-run, or a horizon below every ingest time) is a pure
-        // no-op: marker only, no tombstones, and crucially NO
-        // replacement — landing an empty relabel generation would
-        // refuse every later forget for nothing
-        if (ids.isEmpty) {
-          java.nio.file.Files.write(marker, "1".getBytes("UTF-8"))
-          ()
-        } else {
-        require(!java.nio.file.Files.exists(out.resolve("relabel_nodes")),
-          s"$out already holds an active relabel replacement: compact " +
-            "first (t44Compact) — composing raise-capable replacements " +
-            "under the min fold would resurrect lowered labels")
-        val idNodes = ids.select(col("doc_id").as("node"))
-        // the isEmpty probe above already proved ids non-empty, and
-        // this takedown's rows ARE the ids — skip the read-back probe
-        applyTakedown(s, out, gen = s"f$tag", marker = s"_TAKEDOWN_F$tag",
-          knownNonEmpty = true)(
-          _ => idNodes.select(col("node").as("doc_id")))
-        val folded = t42FoldedLabels(s, out)
-        val affLabels = folded.join(idNodes, Seq("node"), "left_semi")
-          .select(col("label")).distinct()
-        // persisted: the affected set feeds the survivor subgraph (the
-        // re-convergence's edge derivation) AND lands as the
-        // relabel_nodes key list — two actions over the same
-        // folded-labels double-join; dropped before return
-        val affNodes = folded.join(affLabels, Seq("label"), "left_semi")
-          .select(col("node"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-        val survivors = affNodes.join(idNodes, Seq("node"), "left_anti")
-        val subMembers = aliveMembers(s, out)
-          .join(survivors.withColumnRenamed("node", "doc_id"),
-            Seq("doc_id"), "left_semi")
-        val relabeled = ccConvergedLabelsDf(s,
-          bucketStarEdges(subMembers), null)
-        withArtifactLease(out) {
-          val tmp = out.resolve("labels_relabel")
-          val tmpK = out.resolve("relabel_nodes_tmp")
-          // independent writes (re-derived labels vs the persisted
-          // affected-node key list) — overlap their jobs (guide §2.6)
-          parallelWrites(Seq(
-            () => relabeled.repartition(genParts(s))
-              .write.mode("overwrite").parquet(tmp.toString),
-            () => affNodes.coalesce(genParts(s))
-              .write.mode("overwrite").parquet(tmpK.toString)))
-          val ready = out.resolve("_INDEX_READY")
-          java.nio.file.Files.deleteIfExists(ready)
-          Generations.install(tmp, out.resolve("labels"),
-            Generations.prefix("relabel-f", tag))
-          deleteRecursively(out.resolve("relabel_nodes").toFile)
-          Generations.install(tmpK, out.resolve("relabel_nodes"), "k")
-          java.nio.file.Files.write(marker, "1".getBytes("UTF-8"))
-          java.nio.file.Files.write(ready,
-            System.nanoTime().toString.getBytes("UTF-8"))
-          ()
-        }
-        } finally affNodes.unpersist(blocking = true)
-        }
-      }
-    }
-  }
+  /** t44: t43's composition, then the compaction, which must be
+    * invisible: t43's oracle verbatim ([[ClusterShelf.t44]]). */
+  def ccForgetCompactServe(s: SparkSession, dir: String): DataFrame =
+    ClusterShelf.serve(s, dir, ClusterShelf.t44)
 
-  /** t44: COMPACTION after a forget — materialize the replacement-
-    * aware folded labels as ONE fresh `compact-*` generation, retire
-    * `relabel_nodes` (the read's anti-join disappears; plain appends
-    * and a NEXT forget become legal again), and fold the members
-    * tombstones away through the shared [[compactTombstoneIndex]].
-    * Marker-last; `_CUT` untouched; serve-before ≡ serve-after. */
-  private[graft] def t44Compact(s: SparkSession,
-      out: java.nio.file.Path): Boolean =
-    artifactLock(out).synchronized {
-      requireReady(out)
-      val dst = out.resolve("labels")
-      // an active replacement COUNTS as mutated independently of the
-      // relabel generation's file shape (today's writer emits a part
-      // file even for an empty re-derivation, but the key list is the
-      // semantic truth): compaction must retire `relabel_nodes` in
-      // every case, or a later forget permanently refuses with
-      // "compact first"
-      val mutated = Option(dst.toFile.listFiles()).toSeq.flatten
-        .exists(f => f.getName.startsWith("append-") ||
-          f.getName.startsWith("relabel-")) ||
-        java.nio.file.Files.exists(out.resolve("relabel_nodes"))
-      if (mutated) {
-        withArtifactLease(out) {
-          val tmp = out.resolve("labels_compact")
-          t42FoldedLabels(s, out)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val ready = out.resolve("_INDEX_READY")
-          java.nio.file.Files.deleteIfExists(ready)
-          deleteRecursively(dst.toFile)
-          Generations.install(tmp, dst, Generations.prefix("compact", 0))
-          val keys = out.resolve("relabel_nodes")
-          if (java.nio.file.Files.exists(keys))
-            deleteRecursively(keys.toFile)
-          java.nio.file.Files.write(ready,
-            System.nanoTime().toString.getBytes("UTF-8"))
-          ()
-        }
-        compactTombstoneIndex(s, out)
-        true
-      } else false
-    }
+  /** t45: cluster-shelf EVENT-TIME retention ([[ClusterShelf.t45]]) —
+    * the derived ingest time rides in the members, the horizon advances
+    * twice, each advance compacted. The expired set is non-contiguous
+    * in id space; oracle = the bucket-CC rebuild over docs whose derived
+    * ingest time exceeds the second horizon. */
+  def ccTimeAgeOff(s: SparkSession, dir: String): DataFrame =
+    ClusterShelf.serve(s, dir, ClusterShelf.t45)
 
-  /** t43's deterministic forget set, derived INDEX-LOCALLY: every
-    * cluster's canon (the min member — the worst case, every forget
-    * forces a re-election and every component either splits, shrinks,
-    * or vanishes). In production the ids arrive from outside (t39's
-    * shape); the derivation exists so the oracle can reproduce the
-    * set as `SELECT DISTINCT cluster_id`. */
-  private def t43CanonIds(s: SparkSession,
-      out: java.nio.file.Path): DataFrame =
-    t42FoldedLabels(s, out)
-      .filter(col("node") === col("label"))
-      .select(col("node").as("doc_id"))
-
-  /** t43: FORGET served — the fully-absorbed cluster index (t42's
-    * machinery on t43's own artifact copy), every canon taken down,
-    * the re-derived survivors served. Oracle = the bucket-CC REBUILD
-    * over corpus minus the full index's cluster ids: splits,
-    * re-elections, and vanished components must all be exactly as if
-    * the forgotten docs had never been ingested. */
-  def ccForgetServe(s: SparkSession, dir: String): DataFrame = {
-    buildT42Index(s, dir, "t43")
-    t42Append(s, dir, "t43")
-    val out = requireReady(t42IndexPath(s, dir, "t43"))
-    t43Forget(s, out, t43CanonIds(s, out), "canons")
-    ccClustersOfFolded(s, out)
-  }
-
-  /** t44: compaction after the forget, served — the full t43
-    * composition on t44's own artifact copy, then the fold; the serve
-    * must be INVISIBLE (t36/q43's rule), so the oracle is t43's
-    * verbatim. What changes is the read: one generation, no
-    * anti-join, appends and a next forget legal again. */
-  def ccForgetCompactServe(s: SparkSession, dir: String): DataFrame = {
-    buildT42Index(s, dir, "t44")
-    t42Append(s, dir, "t44")
-    val out = requireReady(t42IndexPath(s, dir, "t44"))
-    t43Forget(s, out, t43CanonIds(s, out), "canons")
-    t44Compact(s, out)
-    ccClustersOfFolded(s, out)
-  }
-
-  // ------------ t45: RETENTION on the cluster shelf — the last empty
-  // cell in the policy × shelf matrix (t38/t41 band, m12/m13 media,
-  // v22/v23 vector, q41 sum all have scheduled TTL verbs; the cluster
-  // shelf had only the id-list forget)
-
-  /** t45's OWN cluster artifact over the FULL corpus, with the
-    * derived per-doc ingest time (the shared t41/m13/v23 md5 idiom)
-    * riding IN the members relation — a horizon advance is then
-    * index-local: the expired set evaluates on the index's own
-    * `ingest_ts` column, never the corpus. `_CUT` = hi (the index is
-    * fully absorbed; retention is the only mutation this family
-    * gates). */
-  private[graft] def buildT45Index(s: SparkSession, dir: String)
-      : java.nio.file.Path = {
-    val out = t42IndexPath(s, dir, "t45")
-    ensureArtifact(out) {
-      val d = docs(s, dir)
-      val hi = d.agg(max(col("doc_id"))).head().getLong(0)
-      val members = bandedSignaturesOf(d)
-        .select(col("band"), col("sig"), col("doc_id"))
-        .withColumn("ingest_ts", org.apache.spark.sql.functions
-          .expr(t41IngestTs))
-      members.write.mode("overwrite")
-        .parquet(out.resolve("members").toString)
-      membersCarryTs.put(out, true)
-      ccConvergedLabelsDf(s, bucketStarEdges(
-          s.read.parquet(out.resolve("members").toString)), null)
-        .write.mode("overwrite").parquet(out.resolve("labels").toString)
-      java.nio.file.Files.write(out.resolve("_CUT"),
-        hi.toString.getBytes("UTF-8"))
-    }
-    out
-  }
-
-  /** AGE OFF the cluster index at `horizon` — retention composed with
-    * t43's forget: the expired set is a PREDICATE over the members
-    * relation's own timestamp column (id-span via `tsCol = "doc_id"`,
-    * event-time via the persisted `ingest_ts` — both forms, t41's
-    * rule), evaluated index-locally, then routed through the SAME
-    * [[t43Forget]] machinery because min-label merge is not
-    * invertible: an expired doc can SPLIT its component and RAISE
-    * survivors' labels, which `ageOffMembers`' plain tombstone (built
-    * for min-fold re-election) cannot express on this shelf. The
-    * forget tombstones the expired membership AND re-derives exactly
-    * the affected components into a replacement generation —
-    * O(expired + affected), never the corpus. Idempotent PER HORIZON
-    * (`_FORGOTTEN_h<horizon>` marker — re-running yesterday's cutoff
-    * short-circuits); a LAGGING horizon (below every ingest time)
-    * no-ops without landing a replacement; t43's refusal discipline
-    * stands — the nightly schedule is advance → compact → advance,
-    * and a second advance on an uncompacted replacement fails
-    * loudly. Expired ids read the RAW members relation (not the
-    * tombstone-joined view) so the lazy plan is stable across the
-    * forget's own mutations. */
-  private[graft] def t45AgeOff(s: SparkSession, out: java.nio.file.Path,
-      horizon: Long, tsCol: String = "ingest_ts"): Unit = {
-    // persist the expired set once: the forget's emptiness probe,
-    // tombstone write, and affected/survivor joins would otherwise
-    // each re-run the members scan + distinct (s19 pays this per
-    // stream rep); dropped before return on every path
-    val expired = readStable(s, out.resolve("members").toString)
-      .filter(col(tsCol) <= horizon)
-      .select(col("doc_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try t43Forget(s, out, expired, s"h$horizon")
-    finally expired.unpersist(blocking = true)
-  }
-
-  /** t45: cluster-shelf EVENT-TIME retention, served — build the
-    * timestamp-carrying cluster artifact, advance the policy horizon
-    * twice (compacting between advances — the refusal discipline's
-    * steady state), serve the surviving clusters. The expired set is
-    * NON-CONTIGUOUS in id space (the hash-time interleaves expired
-    * and surviving ids), so splits, re-elections, and vanished
-    * components must all be exactly as if the expired docs had never
-    * been ingested: the oracle is the bucket-CC REBUILD over docs
-    * whose derived ingest time exceeds the second constant horizon.
-    * Split/raise/lagging-horizon/refusal pinned in
-    * CcIncrementalSpec. */
-  def ccTimeAgeOff(s: SparkSession, dir: String): DataFrame = {
-    val out = buildT45Index(s, dir)
-    t45AgeOff(s, requireReady(out), T41H1)
-    t44Compact(s, out)
-    t45AgeOff(s, out, T41H2)
-    ccClustersOfFolded(s, requireReady(out))
-  }
-
-  // ------------ t46: EXTERNAL takedown list on the cluster shelf —
-  // t39's input-relation shape (a legal-hold queue, a GDPR request
-  // log) × t43's component re-derivation
-
-  /** FORGET an externally-supplied id RELATION from the cluster
-    * index. The generation tag is the [[erasureFingerprint]] of the
-    * SORTED DISTINCT id list (the q44/s16 compliance rule: a second
-    * DIFFERENT list lands beside the first instead of
-    * short-circuiting on a shared marker — a silent no-op on a new
-    * erasure request would be a compliance failure; re-submitting a
-    * semantically equal list — byte-identical or differing only in
-    * duplicate multiplicity — stays a marker no-op). Absent ids
-    * no-op and repeated ids are idempotent by anti-join/semi-join
-    * construction (t39's edge semantics, pinned in
-    * CcIncrementalSpec). */
-  private[graft] def t43ForgetExternal(s: SparkSession,
-      out: java.nio.file.Path, ids: DataFrame,
-      tag: String = null): Unit = {
-    val t = if (tag != null) tag else erasureFingerprint(ids)
-    t43Forget(s, out, ids.select(col("doc_id")).distinct(), s"x$t")
-  }
-
-  /** t46: the cluster shelf's external-takedown verb, served — the
-    * fully-absorbed cluster index (t42's machinery on t46's own
-    * artifact copy), the staged t39 erasure relation (every
-    * corpus-range multiple of 7, plus an absent id that must no-op
-    * and a repeated id that must be idempotent) routed through the
-    * list-fingerprint forget, survivors served. Oracle = the
-    * bucket-CC rebuild over docs not divisible by 7 — splits,
-    * re-elections, and vanished components exactly as if the erased
-    * docs had never been ingested. */
-  def ccTakedownExternal(s: SparkSession, dir: String): DataFrame = {
-    buildT42Index(s, dir, "t46")
-    t42Append(s, dir, "t46")
-    val out = requireReady(t42IndexPath(s, dir, "t46"))
-    val ext = stageErasures(s, dir, "documents", "doc_id")
-    t43ForgetExternal(s, out,
-      readStable(s, ext.resolve("erasures").toString))
-    ccClustersOfFolded(s, out)
-  }
+  /** t46: the staged t39 erasure list (every multiple of 7, an absent
+    * id, a repeated id) forgotten from the cluster shelf
+    * ([[ClusterShelf.t46]]). Oracle = the bucket-CC rebuild over docs
+    * not divisible by 7. */
+  def ccTakedownExternal(s: SparkSession, dir: String): DataFrame =
+    ClusterShelf.serve(s, dir, ClusterShelf.t46)
 
   // ------------ t47: ONE erasure request fans out to EVERY shelf
 
@@ -1680,10 +1087,7 @@ object DedupOps {
     val tag = erasureFingerprint(list)
     val band = MemberShelf.stage(s, dir, MemberShelf.t39, tag)
     val media = MemberShelf.stage(s, dir, MemberShelf.m14, tag)
-    buildT42Index(s, dir, "t46")
-    t42Append(s, dir, "t46")
-    val cc = requireReady(t42IndexPath(s, dir, "t46"))
-    t43ForgetExternal(s, cc, list, tag = tag)
+    val cc = requireReady(ClusterShelf.stage(s, dir, ClusterShelf.t46, tag))
     val summed = Relational.fanoutSumTakedown(s, dir, list, tag = tag)
     val bandSum = aliveMembers(s, requireReady(band)).agg(
         countDistinct(col("band"), col("sig")).as("n_groups"),
@@ -1691,7 +1095,7 @@ object DedupOps {
         sum_distinct(col("doc_id")).as("checksum"))
       .select(lit("band").as("shelf"), col("n_groups"),
         col("n_rows"), col("checksum"))
-    val ccSum = ccClustersOfFolded(s, cc).agg(
+    val ccSum = ClusterShelf.served(s, cc).agg(
         countDistinct(col("cluster_id")).as("n_groups"),
         count(lit(1)).as("n_rows"),
         sum(col("doc_id")).as("checksum"))
@@ -1794,7 +1198,7 @@ object DedupOps {
     * per path infers and memoizes; later reads declare the schema and
     * plan with zero jobs. Working copies are fresh temp dirs per
     * invocation, so entries grow O(invocations) of a few hundred
-    * bytes — the same accepted bound as [[membersCarryTs]].
+    * bytes.
     *
     * Invariant relied on: inference is conf-independent across the
     * JVM's sessions — every session (mains and the shared test base)
@@ -1815,8 +1219,7 @@ object DedupOps {
   /** Drop every schema memo at or under `dir` — called on artifact
     * REBUILD ([[ensureArtifact]]'s clear-and-build path), where a
     * relation may legitimately come back with a different schema at
-    * the same path (the `membersCarryTs` flip got exactly this
-    * invalidation; the schema memo must match it). */
+    * the same path (members with or without `ingest_ts`). */
   private[graft] def invalidateSchemaMemo(dir: java.nio.file.Path): Unit = {
     val prefix = dir.toAbsolutePath.toString
     val it = dirSchemaMemo.keySet().iterator()
@@ -1895,6 +1298,21 @@ object DedupOps {
   private[graft] def cutOf(idx: java.nio.file.Path): Long =
     new String(java.nio.file.Files.readAllBytes(idx.resolve("_CUT")),
       "UTF-8").trim.toLong
+
+  /** `idx`'s cut when the tranche `(_CUT, upTo]` is already absorbed —
+    * `_CUT ≥ min(upTo, _HI)`, where `_HI` is the span's hi its build
+    * read — answered from the two files with no Spark job; None when
+    * the tranche may hold rows (or the artifact has no `_HI`, like a
+    * stream's working copy), and the caller's delta scan decides. */
+  private[graft] def absorbedCut(idx: java.nio.file.Path,
+      upTo: Long): Option[Long] = {
+    val cut = cutOf(idx)
+    val hi = idx.resolve("_HI")
+    val top = if (!java.nio.file.Files.exists(hi)) upTo
+      else upTo.min(new String(java.nio.file.Files.readAllBytes(hi),
+        "UTF-8").trim.toLong)
+    Some(cut).filter(_ >= top)
+  }
 
   /** Serve-path readiness assert: every artifact READ that can run
     * outside the building JVM (served buckets, partials reads, the
@@ -2044,9 +1462,12 @@ object DedupOps {
     * appends resume against the compacted base exactly where they
     * left off. No-op (returns false) when no `append-*` generation
     * exists — a converged artifact is re-served, not re-written, per
-    * invocation. */
+    * invocation. With `replaced` the fold reads the
+    * replacement-preferring relation ([[readReplaced]]) and an active
+    * key list always compacts, retired inside the same window. */
   private[graft] def compactArtifact(s: SparkSession,
-      out: java.nio.file.Path, rel: String = "buckets")(
+      out: java.nio.file.Path, rel: String = "buckets",
+      replaced: Replaced = null)(
       merge: DataFrame => DataFrame): Boolean =
     artifactLock(out).synchronized { withArtifactLease(out) {
       // only a READY artifact compacts: a marker-less directory is
@@ -2063,35 +1484,86 @@ object DedupOps {
       // retract*/ageoff* generations (q39/q41's negated partials)
       // compact the same way appends do: the fold nets them against
       // the mass they cancel, so the compacted base carries the
-      // retraction folded in. resketch-* generations (q40) do NOT
-      // fold — they REPLACE their keys' history and the read path
-      // prefers them; a flat fold would re-add the replaced rows.
+      // retraction folded in. A replacement side (`replaced`) folds
+      // through the replacement-preferring read and retires its key
+      // list in the same window; without one, resketch-* generations
+      // refuse — a flat fold would re-add the rows they replace.
       val files = Option(dst.toFile.listFiles()).toSeq.flatten
-      require(!files.exists(_.getName.startsWith("resketch-")),
+      require(replaced != null ||
+        !files.exists(_.getName.startsWith("resketch-")),
         s"$out/$rel holds resketch-* generations: a flat fold would " +
-          "re-add the rows they replace — read the replacement-" +
-          "preferring relation (PartialsShelf.partials) and fold it " +
-          "with PartialsShelf.compact instead")
-      val hasAppends = files.exists(f => f.getName.startsWith("append-") ||
-        f.getName.startsWith("retract") || f.getName.startsWith("ageoff"))
-      if (!hasAppends) false
+          "re-add the rows they replace — compact through the " +
+          "replacement-preferring read (PartialsShelf.compact) instead")
+      val keys = Option(replaced).map(r => out.resolve(r.keys))
+        .filter(java.nio.file.Files.exists(_))
+      val due = keys.nonEmpty || files.exists(f =>
+        f.getName.startsWith("append-") ||
+          f.getName.startsWith("retract") || f.getName.startsWith("ageoff"))
+      if (!due) false
       else {
         val cut = cutOf(out)
         val tmp = out.resolve(s"${rel}_compact")
         // materialize the fold BEFORE touching the served relation
         // (parquet write is eager; a failure here aborts with the
         // index still intact and ready)
-        merge(s.read.parquet(dst.toString))
+        merge(if (replaced == null) s.read.parquet(dst.toString)
+          else readReplaced(s, out, replaced))
           .write.mode("overwrite").parquet(tmp.toString)
         val marker = out.resolve("_INDEX_READY")
         java.nio.file.Files.deleteIfExists(marker)
         deleteRecursively(dst.toFile)
         Generations.install(tmp, dst, Generations.prefix("compact", cut))
+        keys.foreach(k => deleteRecursively(k.toFile))
         java.nio.file.Files.write(marker,
           System.nanoTime().toString.getBytes("UTF-8"))
         true
       }
     } }
+
+  /** A relation `rel` with a REPLACEMENT side: while the key list
+    * `keys` exists, the generations whose file names start with
+    * `replacement` REPLACE their `key` rows in every other generation.
+    * A deletion that a monotone merge cannot express (a forget that
+    * raises cluster labels, a retraction from an HLL sketch) lands as a
+    * re-derivation of the affected keys, preferred on read. `schema` is declared on
+    * every read of `rel` and its key list, so none plans a
+    * footer-inference job. */
+  private[graft] final case class Replaced(rel: String, keys: String,
+      key: String, replacement: String,
+      schema: org.apache.spark.sql.types.StructType)
+
+  /** The key list of `r` on artifact `out`, None when no replacement
+    * is active. */
+  private[graft] def replacedKeys(s: SparkSession, out: java.nio.file.Path,
+      r: Replaced): Option[DataFrame] = {
+    val keys = out.resolve(r.keys)
+    if (!java.nio.file.Files.exists(keys)) None
+    else Some(s.read.schema(org.apache.spark.sql.types.StructType(
+      Seq(r.schema(r.key)))).parquet(keys.toString))
+  }
+
+  /** Relation `r` of artifact `out`, replacement-preferring: every
+    * generation when no replacement is active, else the base
+    * generations anti-joined on the key list (its build side is the
+    * small key list, never the corpus) unioned with the replacement
+    * generations. */
+  private[graft] def readReplaced(s: SparkSession, out: java.nio.file.Path,
+      r: Replaced): DataFrame = {
+    val dst = out.resolve(r.rel)
+    def read(fs: Seq[java.io.File]): DataFrame =
+      if (fs.isEmpty) s.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), r.schema)
+      else s.read.schema(r.schema).parquet(fs.map(_.toString): _*)
+    replacedKeys(s, out, r) match {
+      case None => read(Seq(dst.toFile))
+      case Some(keys) =>
+        val (re, base) = Option(dst.toFile.listFiles()).toSeq.flatten
+          .filter(_.getName.endsWith(".parquet"))
+          .partition(_.getName.startsWith(r.replacement))
+        val kept = read(base).join(keys, Seq(r.key), "left_anti")
+        if (re.isEmpty) kept else kept.unionAll(read(re))
+    }
+  }
 
   /** t36: index COMPACTION, served ([[BucketShelf.t36]]) — build,
     * append the delta tranche (two generations, the t35 state), then
@@ -2151,7 +1623,7 @@ object DedupOps {
         td.repartition(genParts(s))
           .write.mode("overwrite").parquet(tmp.toString)
         // `knownNonEmpty`: a caller that already proved its id set
-        // non-empty (t43Forget probes it before calling) skips the
+        // non-empty (the cluster forget probes it first) skips the
         // read-back — the schema-inference + take(1) jobs were two
         // fixed-overhead jobs per forget for a fact already in hand
         if (!knownNonEmpty && s.read.parquet(tmp.toString).isEmpty) {
@@ -2394,14 +1866,6 @@ object DedupOps {
       "AS BIGINT)"
 
   private[graft] val t41IngestTs = ingestTsExpr("doc_id")
-
-  // does this artifact's members relation carry `ingest_ts`? One
-  // footer read per artifact path, memoized — the property is fixed
-  // at build time (buildT42Index withTs / buildT45Index) and the
-  // streamed absorb asks per micro-batch
-  private val membersCarryTs =
-    new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path,
-      java.lang.Boolean]()
 
   // the policy horizons: fifths of the derived-time RANGE — pure
   // compile-time constants on both sides (no bounds scan even at

@@ -131,11 +131,13 @@ private[graft] object PartialsShelf {
     * layout digest. An [[Erase]] entry's key also carries the erasure
     * fingerprint RULE: a retraction re-applied under a re-tagged list
     * would subtract twice (the sum shelf is not idempotent like the
-    * member shelves' anti-join), so a rule change rebuilds instead. */
+    * member shelves' anti-join), so a rule change rebuilds instead. An
+    * appending entry's key also says its build persists `_HI`. */
   def path(s: SparkSession, dir: String, e: Entry): Path = {
     val rule = if (e.verb == Erase) s"${DedupOps.erasureFpRule}:" else ""
+    val hi = if (e.verb == Frozen) "" else "hi:"
     DedupOps.artifactDir(e.prefix, s"${e.prefix.replace("_", "")}:" +
-      s"$rule$dir@${Relational.layoutHex(s, dir, "events")}")
+      s"$hi$rule$dir@${Relational.layoutHex(s, dir, "events")}")
   }
 
   private def events(s: SparkSession, dir: String): DataFrame =
@@ -206,7 +208,7 @@ private[graft] object PartialsShelf {
 
   /** BUILD entry `e`'s artifact under the nonce-marker contract: the
     * history tranche (ts ≤ the span's midpoint) folded through the
-    * kind's partial, plus the `_CUT` watermark. */
+    * kind's partial, plus the `_CUT` watermark and the span's `_HI`. */
   def build(s: SparkSession, dir: String, e: Entry): Path = {
     val out = path(s, dir, e)
     DedupOps.ensureArtifact(out) {
@@ -216,6 +218,7 @@ private[graft] object PartialsShelf {
       e.kind.partial(raw.filter(col("ts") <= tsCutLit(raw, cut)))
         .write.mode("overwrite").parquet(out.resolve("partials").toString)
       Files.write(out.resolve("_CUT"), cut.toString.getBytes("UTF-8"))
+      Files.write(out.resolve("_HI"), hi.toString.getBytes("UTF-8"))
     }
     out
   }
@@ -224,7 +227,7 @@ private[graft] object PartialsShelf {
     * `(_CUT, upTo]` as an `append-<cut>-` generation and advance
     * `_CUT`. The delta's high-watermark comes from the pushed delta
     * scan only; an absorbed tranche is a no-op with the nonce
-    * untouched. Returns the cut after the call.
+    * untouched and no Spark job. Returns the cut after the call.
     *
     * Once a `resketch-*` generation exists, the replacement-preferring
     * read ([[partials]]) drops every other generation's rows of the
@@ -240,46 +243,40 @@ private[graft] object PartialsShelf {
     val raw = events(s, dir)
     val out = build(s, dir, e)
     DedupOps.artifactLock(out).synchronized { DedupOps.retryOnConflict() {
-      val cut = DedupOps.cutOf(out)
-      // the upper bound is skipped at Long.MaxValue, which is not
-      // representable as a timestamp
-      val lower = col("ts") > tsCutLit(raw, cut)
-      val delta =
-        if (upTo == Long.MaxValue) raw.filter(lower)
-        else raw.filter(lower && col("ts") <= tsCutLit(raw, upTo))
-      val hiRow = Tables.normalizeTs(delta.select(col("ts")))
-        .agg(max(col("ts"))).head()
-      if (hiRow.isNullAt(0)) cut
-      else {
-        val newCut = hiRow.getLong(0)
-        val keysDir = out.resolve("resketch_keys")
-        val replaced = Files.exists(keysDir)
-        require(aware || !replaced,
-          s"$out carries a resketch generation: a plain append of an " +
-            "affected key's delta would be silently anti-joined away " +
-            "by the replacement-preferring read — use the " +
-            "resketch-aware append or land a fresh re-sketch first")
-        val part = e.kind.partial(delta)
-        val tmp = out.resolve("partials_append")
-        if (!replaced) {
-          part.write.mode("overwrite").parquet(tmp.toString)
-          DedupOps.commitArtifactAppend(out, tmp, newCut, rel = "partials",
-            expectedCut = cut)
-        } else {
-          val keys = s.read.parquet(keysDir.toString)
+      DedupOps.absorbedCut(out, upTo).getOrElse {
+        val cut = DedupOps.cutOf(out)
+        // the upper bound is skipped at Long.MaxValue, which is not
+        // representable as a timestamp
+        val lower = col("ts") > tsCutLit(raw, cut)
+        val delta =
+          if (upTo == Long.MaxValue) raw.filter(lower)
+          else raw.filter(lower && col("ts") <= tsCutLit(raw, upTo))
+        val hiRow = Tables.normalizeTs(delta.select(col("ts")))
+          .agg(max(col("ts"))).head()
+        if (hiRow.isNullAt(0)) cut
+        else {
+          val newCut = hiRow.getLong(0)
+          val keys = DedupOps.replacedKeys(s, out, replaced(s, out))
+          require(aware || keys.isEmpty,
+            s"$out carries a resketch generation: a plain append of an " +
+              "affected key's delta would be silently anti-joined away " +
+              "by the replacement-preferring read — use the " +
+              "resketch-aware append or land a fresh re-sketch first")
+          val part = e.kind.partial(delta)
+          val tmp = out.resolve("partials_append")
           val tmpA = out.resolve("partials_resketch_append")
-          part.join(keys, Seq("event_type"), "left_anti")
+          keys.fold(part)(part.join(_, Seq("event_type"), "left_anti"))
             .write.mode("overwrite").parquet(tmp.toString)
-          part.join(keys, Seq("event_type"), "left_semi")
-            .write.mode("overwrite").parquet(tmpA.toString)
+          keys.foreach(part.join(_, Seq("event_type"), "left_semi")
+            .write.mode("overwrite").parquet(tmpA.toString))
           // install clears a crashed retry's half-moved generation
           // first (commitArtifactAppend's delete-then-move rule)
           DedupOps.commitArtifactAppend(out, tmp, newCut, rel = "partials",
-            beforeReady = () => Generations.install(tmpA,
+            beforeReady = () => if (keys.nonEmpty) Generations.install(tmpA,
               out.resolve("partials"), Generations.prefix("resketch", newCut)),
             expectedCut = cut)
+          newCut
         }
-        newCut
       }
     } }
   }
@@ -388,57 +385,31 @@ private[graft] object PartialsShelf {
     resketch(s, dir, e, window(s, dir, e) && evenKey)
   }
 
+  /** `partials` with its replacement side: `resketch-*` generations
+    * replace the rows of the keys in `resketch_keys`. The schema is the
+    * one [[DedupOps.readStable]] memoizes for the directory. */
+  private def replaced(s: SparkSession, out: Path): DedupOps.Replaced =
+    DedupOps.Replaced("partials", "resketch_keys", "event_type", "resketch-",
+      DedupOps.readStable(s, out.resolve("partials").toString).schema)
+
   /** The partials relation entry `e` serves from its ready artifact:
     * every generation, except that while `resketch_keys` exists the
-    * `resketch-*` generations REPLACE their keys' rows in all others.
-    * The anti-join's build side is the tiny key list, never the
-    * corpus. */
-  def partials(s: SparkSession, out: Path): DataFrame = {
-    val dst = DedupOps.requireReady(out).resolve("partials")
-    val keys = out.resolve("resketch_keys")
-    if (!Files.exists(keys)) s.read.parquet(dst.toString)
-    else {
-      val (re, base) = Option(dst.toFile.listFiles()).toSeq.flatten
-        .map(_.getName).filter(_.endsWith(".parquet"))
-        .partition(Generations.parse(_).exists(_._1 == "resketch"))
-      def read(ns: Seq[String]) =
-        s.read.parquet(ns.map(dst.resolve(_).toString): _*)
-      val kept = read(base)
-        .join(s.read.parquet(keys.toString), Seq("event_type"), "left_anti")
-      if (re.isEmpty) kept else kept.unionByName(read(re))
-    }
-  }
+    * `resketch-*` generations REPLACE their keys' rows in all others
+    * ([[DedupOps.readReplaced]]). */
+  def partials(s: SparkSession, out: Path): DataFrame =
+    DedupOps.readReplaced(s, DedupOps.requireReady(out), replaced(s, out))
 
   /** COMPACT entry `e`'s artifact into one `compact-*` generation,
     * `_CUT` untouched, invisible in the result because the kind's fold
-    * is associative. A flat fold ([[DedupOps.compactArtifact]]) would
-    * re-add the rows a resketch generation replaces, so while
-    * `resketch_keys` exists the fold materializes [[partials]] instead
-    * and retires the key list inside the same mutation window: plain
-    * appends are legal again, while `_RESKETCHED` survives so the
-    * retraction never re-runs. Crash-safe under the marker-last
-    * contract; false when there is nothing to fold. */
+    * is associative. While `resketch_keys` exists the fold reads
+    * [[partials]] and retires the key list inside the same mutation
+    * window ([[DedupOps.compactArtifact]]): plain appends are legal
+    * again, while `_RESKETCHED` survives so the retraction never
+    * re-runs. False when there is nothing to fold. */
   def compact(s: SparkSession, dir: String, e: Entry): Boolean = {
     val out = path(s, dir, e)
-    val keys = out.resolve("resketch_keys")
-    if (!Files.exists(keys))
-      DedupOps.compactArtifact(s, out, rel = "partials")(e.kind.fold)
-    else DedupOps.artifactLock(out).synchronized {
-      DedupOps.withArtifactLease(out) {
-        val tmp = out.resolve("partials_compact")
-        e.kind.fold(partials(s, out))
-          .write.mode("overwrite").parquet(tmp.toString)
-        val cut = DedupOps.cutOf(out)
-        val dst = out.resolve("partials")
-        val marker = out.resolve("_INDEX_READY")
-        Files.deleteIfExists(marker)
-        DedupOps.deleteRecursively(dst.toFile)
-        Generations.install(tmp, dst, Generations.prefix("compact", cut))
-        DedupOps.deleteRecursively(keys.toFile)
-        Files.write(marker, System.nanoTime().toString.getBytes("UTF-8"))
-        true
-      }
-    }
+    DedupOps.compactArtifact(s, out, rel = "partials",
+      replaced = replaced(s, out))(e.kind.fold)
   }
 
   /** Entry `e`'s maintenance path: build, then its verb. An [[Erase]]

@@ -861,7 +861,7 @@ object StreamingOps {
       * dir if present: a crash after an earlier attempt's temp write
       * but before its marker leaves unmarked debris, and the commit
       * must not copy a STALE temp in under the new cut (rows the old
-      * attempt folded may since have been retired — e.g. a t44Compact
+      * attempt folded may since have been retired — e.g. a compaction
       * retired the replacement, and a stale `relabel-c` would
       * resurrect relabel rows with `relabel_nodes` gone). Exposed so
       * the spec can pin a crash exactly between intent and commit. */
@@ -963,9 +963,6 @@ object StreamingOps {
     } finally bands.unpersist(blocking = true)
   }
 
-  private val minLabel: DataFrame => DataFrame =
-    _.groupBy(col("node")).agg(min(col("label")).as("label"))
-
   /** The band shelf: `buckets` min-fold per (band, sig), `members`
     * concatenate (no fold semantics — fewer generations to list and
     * read; tombstones untouched). */
@@ -978,8 +975,8 @@ object StreamingOps {
       StructField("dup_of", LongType, nullable = true))),
     bandAbsorb)
 
-  /** The cluster shelf (s18-s20): the absorb is t42's merge-graph
-    * [[DedupOps.t42AbsorbDelta]] — it converges the batch's merge
+  /** The cluster shelf (s18-s20): the absorb is the merge-graph
+    * [[ClusterShelf.absorb]] — it converges the batch's merge
     * graph, writes the batch docs' cluster assignments AT ABSORB TIME
     * to the flags BEFORE its commit, and commits cleared-first and
     * `_CUT`-conditional; `knownHi` spares it a second max agg. The
@@ -993,14 +990,14 @@ object StreamingOps {
     * concatenated. `relabel-f` and `relabel_nodes` stay untouched. */
   private[graft] val cluster = new StreamShelf("s18", Seq("labels", "members"),
     Seq(
-      FoldFamily("labels", Generations.Replacement, minLabel, minGens = 2),
-      FoldFamily("labels", Generations.Plain, minLabel),
+      FoldFamily("labels", Generations.Replacement, ClusterShelf.fold,
+        minGens = 2),
+      FoldFamily("labels", Generations.Plain, ClusterShelf.fold),
       FoldFamily("members", Generations.Plain, identity)),
     StructType(Seq(StructField("doc_id", LongType, nullable = false),
       StructField("cluster_id", LongType, nullable = true))),
     (s, work, batch, flags, hi) => DedupOps.artifactLock(work).synchronized {
-      DedupOps.t42AbsorbDelta(s, work, batch, flags = flags,
-        knownHi = Some(hi))
+      ClusterShelf.absorb(s, work, batch, flags = flags, knownHi = Some(hi))
       ()
     })
 
@@ -1015,12 +1012,13 @@ object StreamingOps {
       : java.nio.file.Path =
     band.workingCopy(s, s16Base(s, dir))
 
-  /** The cluster shelf's working copy of t42's build at the s16
-    * midpoint split; `fam` keys the pristine base per GATE, so no two
-    * gates share a mutable artifact (order-independence). */
+  /** The cluster shelf's working copy of a frozen base built at the
+    * s16 midpoint split; `fam` keys the pristine base per GATE, so no
+    * two gates share a mutable artifact (order-independence). */
   private[graft] def s18WorkingCopy(s: SparkSession, dir: String,
       fam: String = "s18", withTs: Boolean = false): java.nio.file.Path =
-    cluster.workingCopy(s, DedupOps.buildT42Index(s, dir, fam, withTs))
+    cluster.workingCopy(s, ClusterShelf.build(s, dir,
+      ClusterShelf.Entry(Nil, fam, ClusterShelf.Frozen, withTs)))
 
   /** Pins the micro-batch maintenance conf around a block and
     * restores it in finally: the stream's fixed partition count
@@ -1231,14 +1229,14 @@ object StreamingOps {
     * retired by compaction, bounded at one active replacement by
     * t43's refusal discipline. */
   private[graft] val s18Gate = new Gate(cluster,
-    (s, dir) => DedupOps.buildT42Index(s, dir, "s18", false))
+    ClusterShelf.build(_, _, ClusterShelf.s18))
 
   def streamedClusterMaintenance(s: SparkSession, dir: String)
       : DataFrame = runGate(s, dir, s18Gate)
 
   /** s19: retention age-off ON THE STREAMED CLUSTER INDEX — the s17
     * row on the s18 column. The horizon advances through the CLUSTER
-    * shelf's retention verb ([[DedupOps.t45AgeOff]] — NOT the
+    * shelf's retention verb ([[ClusterShelf.ageOff]] — NOT the
     * membership shelves' plain tombstone, because expiry can SPLIT a
     * component and RAISE labels: the expired docs tombstone in
     * `members` and the affected components re-derive over the
@@ -1253,9 +1251,8 @@ object StreamingOps {
     * Oracle: s18's three materialized closures with the post-advance
     * states restricted to survivors (docs above h). */
   private[graft] val s19Gate = new Gate(cluster,
-    (s, dir) => DedupOps.buildT42Index(s, dir, "s19", false),
-    Some(idSpanAdvance((s, work, h) =>
-      DedupOps.t45AgeOff(s, work, h, tsCol = "doc_id"))))
+    ClusterShelf.build(_, _, ClusterShelf.s19),
+    Some(idSpanAdvance(ClusterShelf.ageOff(_, _, _, tsCol = "doc_id"))))
 
   def streamedClusterRetention(s: SparkSession, dir: String): DataFrame =
     runGate(s, dir, s19Gate)
@@ -1265,10 +1262,10 @@ object StreamingOps {
     * `ingest_ts` — the non-contiguous-in-id-space case an id-span
     * predicate cannot express (t41's rule, composed onto the
     * streamed cluster index). The working copy builds with the
-    * derived ingest time in its base members (t45's layout at t42's
-    * cut) and the absorb keeps EVERY appended generation
+    * derived ingest time in its base members (t45's layout) and the
+    * absorb keeps EVERY appended generation
     * schema-uniform by deriving the same column, so the advance —
-    * [[DedupOps.t45AgeOff]] at its DEFAULT `tsCol = "ingest_ts"`,
+    * [[ClusterShelf.ageOff]] at its DEFAULT `tsCol = "ingest_ts"`,
     * the constant policy horizon `T41H1` (no bounds scan on either
     * side) — expires an interleaved subset of base AND tranche-1
     * docs alike. Everything else is s19 verbatim. Oracle = s18's
@@ -1278,8 +1275,8 @@ object StreamingOps {
     * expired/surviving, raised-canon re-election, and flags-stand
     * pinned on a crafted corpus in StreamingGateSpec. */
   private val s20Gate = new Gate(cluster,
-    (s, dir) => DedupOps.buildT42Index(s, dir, "s20", true),
-    Some((s, work) => () => DedupOps.t45AgeOff(s, work, DedupOps.T41H1)))
+    ClusterShelf.build(_, _, ClusterShelf.s20),
+    Some((s, work) => () => ClusterShelf.ageOff(s, work, DedupOps.T41H1)))
 
   def streamedClusterRetentionEventTime(s: SparkSession, dir: String)
       : DataFrame = runGate(s, dir, s20Gate)

@@ -61,13 +61,14 @@ class CcIncrementalSpec extends SparkSpec {
     // without error). ensureArtifact's clear-and-build path drops the
     // memo entries under the artifact dir.
     val dir = craftCorpus().toString
-    val out = DedupOps.buildT42Index(spark, dir, "fpmemo", withTs = false)
+    val plain = ClusterShelf.Entry(Nil, "fpmemo", ClusterShelf.Frozen)
+    val out = ClusterShelf.build(spark, dir, plain)
     val members = out.resolve("members").toString
     assert(!DedupOps.readStable(spark, members).columns.contains("ingest_ts"))
     // force the rebuild path: a marker-less artifact dir is exactly
     // the crash-mid-build shape ensureArtifact re-derives
     java.nio.file.Files.delete(out.resolve("_INDEX_READY"))
-    DedupOps.buildT42Index(spark, dir, "fpmemo", withTs = true)
+    ClusterShelf.build(spark, dir, plain.copy(withTs = true))
     val m1 = DedupOps.readStable(spark, members)
     assert(m1.columns.contains("ingest_ts"),
       "rebuild with a changed schema must re-infer, not serve the memo")
@@ -94,15 +95,21 @@ class CcIncrementalSpec extends SparkSpec {
     // the delta singleton emits nothing
     assert(!byDoc.contains(163L), s"163 has no bucket-mate: $served")
     // the relabel landed as ONE append generation beside the base
-    val out = DedupOps.t42IndexPath(spark, tmp.toString)
+    val out = ClusterShelf.path(spark, tmp.toString, ClusterShelf.t42)
     val names = out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet"))
     assert(names.exists(_.startsWith("append-163-")), names.toSeq)
     assert(names.exists(_.startsWith("part-")),
       "the base generation must be untouched (LSM append, no rewrite)")
-    // idempotent: everything is absorbed — a re-append is a no-op
+    // idempotent: everything is absorbed — a re-append is a no-op,
+    // and a warm serve submits no job before its action (_CUT ≥ _HI
+    // answers the append; the labels read declares its schema)
     val names0 = names.sorted.toSeq
-    DedupOps.t42Append(spark, tmp.toString)
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t42)
+    val (warm, jobs) =
+      jobsDuring(DedupOps.ccIncrementalServe(spark, tmp.toString))
+    assert(jobs === 0, s"$jobs jobs before any action")
+    assert(rows(warm) === expected)
     assert(out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
       names0, "an absorbed corpus must not re-append")
@@ -120,18 +127,18 @@ class CcIncrementalSpec extends SparkSpec {
     spark.conf.set("graft.artifact.genPartitions", "2")
     try {
       import spark.implicits._
-      DedupOps.buildT42Index(spark, tmp.toString)
-      DedupOps.t42Append(spark, tmp.toString)
+      ClusterShelf.build(spark, tmp.toString, ClusterShelf.t42)
+      ClusterShelf.append(spark, tmp.toString, ClusterShelf.t42)
       assert(rows(ccAssembled(tmp)) ===
         rows(DedupOps.rebuildBucketClusters(spark, tmp.toString)),
         "append ≡ rebuild must hold with 2-file generations")
-      val out = DedupOps.t42IndexPath(spark, tmp.toString)
-      DedupOps.t43Forget(spark, out, Seq(100L).toDF("doc_id"), "gp100")
-      assert(rows(DedupOps.ccClustersOfFolded(spark, out)) ===
+      val out = ClusterShelf.path(spark, tmp.toString, ClusterShelf.t42)
+      ClusterShelf.forget(spark, out, Seq(100L).toDF("doc_id"), "gp100")
+      assert(rows(ClusterShelf.served(spark, out)) ===
         rebuildMinus(tmp, Set(100L)),
         "forget's replacement must hold with 2-file generations")
-      assert(DedupOps.t44Compact(spark, out))
-      assert(rows(DedupOps.ccClustersOfFolded(spark, out)) ===
+      assert(ClusterShelf.compact(spark, out))
+      assert(rows(ClusterShelf.served(spark, out)) ===
         rebuildMinus(tmp, Set(100L)),
         "compaction must be invisible with 2-file generations")
     } finally {
@@ -142,13 +149,13 @@ class CcIncrementalSpec extends SparkSpec {
 
   test("t42 two-tranche composition: a second append merges against state the FIRST append wrote") {
     val tmp = craftCorpus()
-    DedupOps.buildT42Index(spark, tmp.toString)
+    ClusterShelf.build(spark, tmp.toString, ClusterShelf.t42)
     // tranche 1: the bridge and the tC twin; tranche 2: 163
-    DedupOps.t42Append(spark, tmp.toString, upTo = 130L)
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t42, upTo = 130L)
     val mid = rows(ccAssembled(tmp))
     assert(mid.map(r => r._2 -> r._1).toMap.get(11L).contains(1L),
       s"the first tranche's merge must already serve: $mid")
-    DedupOps.t42Append(spark, tmp.toString)
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t42)
     val fin = rows(ccAssembled(tmp))
     val expected = rows(DedupOps.rebuildBucketClusters(spark, tmp.toString))
     assert(fin === expected,
@@ -157,9 +164,9 @@ class CcIncrementalSpec extends SparkSpec {
   }
 
   private def ccAssembled(tmp: java.nio.file.Path) = {
-    val out = DedupOps.requireReady(DedupOps.t42IndexPath(spark,
-      tmp.toString))
-    DedupOps.ccClustersOfFolded(spark, out)
+    val out = DedupOps.requireReady(ClusterShelf.path(spark,
+      tmp.toString, ClusterShelf.t42))
+    ClusterShelf.served(spark, out)
   }
 
   /** The rebuild comparator over corpus-minus-`dead` — what any forget
@@ -174,15 +181,15 @@ class CcIncrementalSpec extends SparkSpec {
 
   test("t43 forget SPLITS the bridged component; replacement generation; refusal until compaction") {
     val tmp = craftCorpus()
-    DedupOps.buildT42Index(spark, tmp.toString)
-    DedupOps.t42Append(spark, tmp.toString)
-    val out = DedupOps.t42IndexPath(spark, tmp.toString)
+    ClusterShelf.build(spark, tmp.toString, ClusterShelf.t42)
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t42)
+    val out = ClusterShelf.path(spark, tmp.toString, ClusterShelf.t42)
     // before: the bridge 100 holds {1,2,10,11,100} together under 1
     assert(rows(ccAssembled(tmp)).map(r => r._2 -> r._1).toMap
       .get(11L).contains(1L))
     import spark.implicits._
-    DedupOps.t43Forget(spark, out, Seq(100L).toDF("doc_id"), "b100")
-    val served = rows(DedupOps.ccClustersOfFolded(spark, out))
+    ClusterShelf.forget(spark, out, Seq(100L).toDF("doc_id"), "b100")
+    val served = rows(ClusterShelf.served(spark, out))
     assert(served === rebuildMinus(tmp, Set(100L)))
     val byDoc = served.map(r => r._2 -> r._1).toMap
     // the SPLIT: A and B are separate components again — labels RAISED
@@ -203,7 +210,7 @@ class CcIncrementalSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(out.resolve("relabel_nodes")))
     // idempotent per id set
     val names0 = names.sorted.toSeq
-    DedupOps.t43Forget(spark, out, Seq(100L).toDF("doc_id"), "b100")
+    ClusterShelf.forget(spark, out, Seq(100L).toDF("doc_id"), "b100")
     assert(out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
       names0)
@@ -211,7 +218,7 @@ class CcIncrementalSpec extends SparkSpec {
     // raise-capable replacements under the min fold would resurrect
     // lowered labels
     val e = intercept[IllegalArgumentException] {
-      DedupOps.t43Forget(spark, out, Seq(1L).toDF("doc_id"), "b1")
+      ClusterShelf.forget(spark, out, Seq(1L).toDF("doc_id"), "b1")
     }
     assert(e.getMessage.contains("compact first"))
     DedupOps.deleteRecursively(tmp.toFile)
@@ -239,14 +246,14 @@ class CcIncrementalSpec extends SparkSpec {
       .find(f => f.getName.startsWith("part-") &&
         f.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath, tmp.resolve("documents.parquet"))
-    DedupOps.buildT42Index(spark, tmp.toString)
-    DedupOps.t42Append(spark, tmp.toString, upTo = 150L)
-    val out = DedupOps.t42IndexPath(spark, tmp.toString)
-    DedupOps.t43Forget(spark, out, Seq(100L).toDF("doc_id"), "b100")
+    ClusterShelf.build(spark, tmp.toString, ClusterShelf.t42)
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t42, upTo = 150L)
+    val out = ClusterShelf.path(spark, tmp.toString, ClusterShelf.t42)
+    ClusterShelf.forget(spark, out, Seq(100L).toDF("doc_id"), "b100")
     // the second bridge arrives: A and B re-merge under 1 — a
     // LOWERING of nodes the replacement owns
-    DedupOps.t42Append(spark, tmp.toString)
-    val served = rows(DedupOps.ccClustersOfFolded(spark, out))
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t42)
+    val served = rows(ClusterShelf.served(spark, out))
     assert(served === rebuildMinus(tmp, Set(100L)),
       s"the post-forget append must serve the re-merged clusters: $served")
     assert(served.map(r => r._2 -> r._1).toMap.get(11L).contains(1L))
@@ -257,16 +264,16 @@ class CcIncrementalSpec extends SparkSpec {
     assert(names1.exists(_.startsWith("relabel-a200-")), names1.toSeq)
     // t44: the fold bakes replacement + appends into one generation,
     // retires the key list and the member tombstones — invisibly
-    assert(DedupOps.t44Compact(spark, out))
+    assert(ClusterShelf.compact(spark, out))
     val names2 = out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet"))
     assert(names2.forall(_.startsWith("compact-")), names2.toSeq)
     assert(!java.nio.file.Files.exists(out.resolve("relabel_nodes")))
-    assert(rows(DedupOps.ccClustersOfFolded(spark, out)) === served,
+    assert(rows(ClusterShelf.served(spark, out)) === served,
       "compaction must be invisible through the forget serve")
     // and the lifecycle continues: a NEXT forget is legal again
-    DedupOps.t43Forget(spark, out, Seq(200L).toDF("doc_id"), "b200")
-    assert(rows(DedupOps.ccClustersOfFolded(spark, out)) ===
+    ClusterShelf.forget(spark, out, Seq(200L).toDF("doc_id"), "b200")
+    assert(rows(ClusterShelf.served(spark, out)) ===
       rebuildMinus(tmp, Set(100L, 200L)),
       "the post-compaction forget must split the re-merged component")
     DedupOps.deleteRecursively(tmp.toFile)
@@ -277,22 +284,23 @@ class CcIncrementalSpec extends SparkSpec {
     // the event-time form (the md5-derived ingest_ts, NON-CONTIGUOUS
     // in id space) is hash-gated end-to-end by t45_cc_time_ageoff
     val tmp = craftCorpus()
-    val out = DedupOps.buildT45Index(spark, tmp.toString)
-    DedupOps.requireReady(out)
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t45)
+    val out = DedupOps.requireReady(
+      ClusterShelf.path(spark, tmp.toString, ClusterShelf.t45))
     // LAGGING horizon (below every id): marker only — no tombstones,
     // no replacement (an empty relabel generation would refuse every
     // later forget for nothing), serve untouched
-    DedupOps.t45AgeOff(spark, out, 0L, tsCol = "doc_id")
+    ClusterShelf.ageOff(spark, out, 0L, tsCol = "doc_id")
     assert(java.nio.file.Files.exists(out.resolve("_FORGOTTEN_h0")))
     assert(!java.nio.file.Files.exists(out.resolve("relabel_nodes")),
       "a lagging horizon must not land a replacement")
-    assert(rows(DedupOps.ccClustersOfFolded(spark, out)) ===
+    assert(rows(ClusterShelf.served(spark, out)) ===
       rebuildMinus(tmp, Set.empty))
     // horizon 2 expires {1, 2}: the bridged component {1,2,10,11,100}
     // SHRINKS and its label RAISES to 10 — exactly what a min-fold
     // tombstone cannot express and the component re-derivation can
-    DedupOps.t45AgeOff(spark, out, 2L, tsCol = "doc_id")
-    val served = rows(DedupOps.ccClustersOfFolded(spark, out))
+    ClusterShelf.ageOff(spark, out, 2L, tsCol = "doc_id")
+    val served = rows(ClusterShelf.served(spark, out))
     assert(served === rebuildMinus(tmp, Set(1L, 2L)))
     assert(served.map(r => r._2 -> r._1).toMap.get(11L).contains(10L),
       s"the surviving members must re-converge under the raised min: " +
@@ -300,19 +308,19 @@ class CcIncrementalSpec extends SparkSpec {
     // re-running yesterday's horizon short-circuits on its marker
     val names0 = out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
-    DedupOps.t45AgeOff(spark, out, 2L, tsCol = "doc_id")
+    ClusterShelf.ageOff(spark, out, 2L, tsCol = "doc_id")
     assert(out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
       names0, "a re-run horizon must be a marker no-op")
     // a FURTHER advance refuses while the replacement is active —
     // the nightly schedule is advance -> compact -> advance
     val e = intercept[IllegalArgumentException] {
-      DedupOps.t45AgeOff(spark, out, 10L, tsCol = "doc_id")
+      ClusterShelf.ageOff(spark, out, 10L, tsCol = "doc_id")
     }
     assert(e.getMessage.contains("compact first"))
-    assert(DedupOps.t44Compact(spark, out))
-    DedupOps.t45AgeOff(spark, out, 10L, tsCol = "doc_id")
-    assert(rows(DedupOps.ccClustersOfFolded(spark, out)) ===
+    assert(ClusterShelf.compact(spark, out))
+    ClusterShelf.ageOff(spark, out, 10L, tsCol = "doc_id")
+    assert(rows(ClusterShelf.served(spark, out)) ===
       rebuildMinus(tmp, Set(1L, 2L, 10L)),
       "the post-compaction advance must serve the twice-aged survivors")
     DedupOps.deleteRecursively(tmp.toFile)
@@ -356,23 +364,23 @@ class CcIncrementalSpec extends SparkSpec {
 
   test("t46 external list: absent ids no-op, repeated ids idempotent, a second DIFFERENT list lands") {
     val tmp = craftCorpus()
-    DedupOps.buildT42Index(spark, tmp.toString, "t46")
-    DedupOps.t42Append(spark, tmp.toString, "t46")
+    ClusterShelf.build(spark, tmp.toString, ClusterShelf.t46)
+    ClusterShelf.append(spark, tmp.toString, ClusterShelf.t46)
     val out = DedupOps.requireReady(
-      DedupOps.t42IndexPath(spark, tmp.toString, "t46"))
+      ClusterShelf.path(spark, tmp.toString, ClusterShelf.t46))
     import spark.implicits._
     // the t39 edge shape: the bridge 100, a REPEATED id, and an id
     // ABSENT from the corpus — the absent id must no-op (not error),
     // the duplicate must be idempotent
     val list1 = Seq(100L, 100L, 999L).toDF("doc_id")
-    DedupOps.t43ForgetExternal(spark, out, list1)
-    val served1 = rows(DedupOps.ccClustersOfFolded(spark, out))
+    ClusterShelf.external(spark, out, list1)
+    val served1 = rows(ClusterShelf.served(spark, out))
     assert(served1 === rebuildMinus(tmp, Set(100L)),
       s"only the present id's erasure may have an effect: $served1")
     // re-submitting the SAME list is a marker no-op (same fingerprint)
     val names0 = out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
-    DedupOps.t43ForgetExternal(spark, out, list1)
+    ClusterShelf.external(spark, out, list1)
     assert(out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
       names0)
@@ -381,7 +389,7 @@ class CcIncrementalSpec extends SparkSpec {
     // sorted ids): with the replacement still active, a new
     // fingerprint would fail loudly with 'compact first' — a
     // re-submission must never do that
-    DedupOps.t43ForgetExternal(spark, out,
+    ClusterShelf.external(spark, out,
       Seq(100L, 999L, 999L, 999L).toDF("doc_id"))
     assert(out.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
@@ -389,9 +397,9 @@ class CcIncrementalSpec extends SparkSpec {
     // a second DIFFERENT list must LAND (the q44/s16 compliance rule:
     // a shared marker would silently drop a new erasure request) —
     // after the compaction the refusal discipline demands
-    assert(DedupOps.t44Compact(spark, out))
-    DedupOps.t43ForgetExternal(spark, out, Seq(120L).toDF("doc_id"))
-    assert(rows(DedupOps.ccClustersOfFolded(spark, out)) ===
+    assert(ClusterShelf.compact(spark, out))
+    ClusterShelf.external(spark, out, Seq(120L).toDF("doc_id"))
+    assert(rows(ClusterShelf.served(spark, out)) ===
       rebuildMinus(tmp, Set(100L, 120L)),
       "the second, different erasure list must take effect")
     DedupOps.deleteRecursively(tmp.toFile)

@@ -58,7 +58,10 @@ class IndexAppendSpec extends SparkSpec {
       BucketShelf.path(spark, dir, BucketShelf.t35).resolve("_INDEX_READY")
     val nonce0 = new String(Files.readAllBytes(marker), "UTF-8")
     assert(nonce0.nonEmpty, "the marker must carry a nonce")
-    val again = DedupOps.indexAppendServe(spark, dir).collect()
+    val (warm, jobs) = jobsDuring(DedupOps.indexAppendServe(spark, dir))
+    assert(jobs === 0, s"$jobs jobs before any action: the absorbed " +
+      "tranche must be answered from _CUT and _HI")
+    val again = warm.collect()
     assert(new String(Files.readAllBytes(marker), "UTF-8") === nonce0,
       "an absorbed tranche must re-append as a no-op")
     assert(again.nonEmpty)

@@ -1,9 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -202,25 +198,13 @@ class SketchGateSpec extends SparkSpec {
   test("q40: a warm serve reads its persisted retraction window, no bounds scan") {
     val est = Relational.q40SketchRetract(spark, dir)
       .collect().map(_.toSeq.toVector).toSeq
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val warm = try {
-      val df = Relational.q40SketchRetract(spark, dir)
-      ListenerBusDrain(spark.sparkContext)
-      df
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // five jobs before any action: the append's delta high-watermark
-    // agg (its shuffle stage and result, under adaptive execution; an
-    // absorbed tranche then no-ops) and the partials read's three
-    // footer inferences. The window's bounds come from the artifact's
-    // _WINDOW; an events min/max scan there made it seven
-    assert(jobs.get() === 5, s"${jobs.get()} jobs before any action")
+    val (warm, jobs) = jobsDuring(Relational.q40SketchRetract(spark, dir))
+    // no job before any action: the append sees the tranche absorbed
+    // from _CUT and _HI, the partials read declares its schemas, and
+    // the window's bounds come from the artifact's _WINDOW (the
+    // delta high-watermark agg, three footer inferences and an events
+    // min/max scan there made it seven)
+    assert(jobs === 0, s"$jobs jobs before any action")
     assert(warm.collect().map(_.toSeq.toVector).toSeq === est)
   }
 

@@ -654,7 +654,7 @@ class StreamingGateSpec extends SparkSpec {
     // the working index converged to exactly the full-corpus clusters
     // (emitted flags stay as absorbed; the STATE merged downward)
     val work = StreamingOps.s18Gate.lastWork.get()
-    val folded = DedupOps.ccClustersOfFolded(spark, work)
+    val folded = ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq
     val rebuild = DedupOps.rebuildBucketClusters(spark, tmp.toString)
       .collect().map(_.toSeq.toVector).toSeq
@@ -717,7 +717,7 @@ class StreamingGateSpec extends SparkSpec {
       assert(!names.exists(_.startsWith("part-")), names.toSeq)
     }
     // the repaired, folded state still converged to the rebuild
-    assert(DedupOps.ccClustersOfFolded(spark, work)
+    assert(ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq ===
       DedupOps.rebuildBucketClusters(spark, tmp.toString)
         .collect().map(_.toSeq.toVector).toSeq)
@@ -733,7 +733,7 @@ class StreamingGateSpec extends SparkSpec {
     StreamingOps.cluster.runStream(spark, work, staged, "t-00[01].parquet", ckpt)
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 121")
-    val before = DedupOps.ccClustersOfFolded(spark, work)
+    val before = ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq
     // crash shape: batch 1's generation and _CUT landed but the fence
     // never advanced — rewind + re-deliver must land byte-identically
@@ -744,7 +744,7 @@ class StreamingGateSpec extends SparkSpec {
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim === "1 121",
       "the repair must re-fence the re-delivered batch")
-    assert(DedupOps.ccClustersOfFolded(spark, work)
+    assert(ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq === before,
       "debris rewind + re-absorb must reproduce the exact state")
     // resume the real stream for the final tranche: the bridge still
@@ -812,7 +812,7 @@ class StreamingGateSpec extends SparkSpec {
     assert(new String(java.nio.file.Files.readAllBytes(
       work.resolve("_BATCH")), "UTF-8").trim.split("\\s+")(0).toLong === 2L)
     // the final state converged to the survivors-only rebuild
-    val folded = DedupOps.ccClustersOfFolded(spark, work)
+    val folded = ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq
     val rebuild = DedupOps.connectedComponentsOf(spark,
       DedupOps.bucketStarEdges(DedupOps.bandedSignaturesOf(
@@ -827,7 +827,7 @@ class StreamingGateSpec extends SparkSpec {
     // no-op on the streamed cluster shelf too
     val names0 = work.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
-    DedupOps.t45AgeOff(spark, work, 41L, tsCol = "doc_id")
+    ClusterShelf.ageOff(spark, work, 41L, tsCol = "doc_id")
     assert(work.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
       names0)
@@ -849,20 +849,20 @@ class StreamingGateSpec extends SparkSpec {
     val ckpt = work.resolve("ckpt").toString
     StreamingOps.cluster.runStream(spark, work, staged, "t-000.parquet", ckpt)
     import spark.implicits._
-    DedupOps.t43ForgetExternal(spark, work,
+    ClusterShelf.external(spark, work,
       Seq(1L, 1L, 999L).toDF("doc_id"))
     // re-submitting the SAME list on the live stream dir is a marker
     // no-op; a DIFFERENT list refuses until compaction (the refusal
     // discipline holds mid-stream too)
     val names0 = work.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
-    DedupOps.t43ForgetExternal(spark, work,
+    ClusterShelf.external(spark, work,
       Seq(1L, 1L, 999L).toDF("doc_id"))
     assert(work.resolve("labels").toFile.listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq ===
       names0)
     val e = intercept[IllegalArgumentException] {
-      DedupOps.t43ForgetExternal(spark, work, Seq(50L).toDF("doc_id"))
+      ClusterShelf.external(spark, work, Seq(50L).toDF("doc_id"))
     }
     assert(e.getMessage.contains("compact first"))
     // the stream resumes across the replacement; the fence never saw
@@ -878,7 +878,7 @@ class StreamingGateSpec extends SparkSpec {
       s"151 must cluster with the SURVIVOR 2, never the erased 1: " +
         s"$flags")
     // final state = the rebuild over corpus minus the erased id
-    val folded = DedupOps.ccClustersOfFolded(spark, work)
+    val folded = ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq
     val rebuild = DedupOps.connectedComponentsOf(spark,
       DedupOps.bucketStarEdges(DedupOps.bandedSignaturesOf(
@@ -915,7 +915,7 @@ class StreamingGateSpec extends SparkSpec {
         f.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath, tmp.resolve("documents.parquet"))
     val work = StreamingOps.s18WorkingCopy(spark, tmp.toString, "s18rf")
-    DedupOps.t43Forget(spark, work, Seq(40L).toDF("doc_id"), "rf")
+    ClusterShelf.forget(spark, work, Seq(40L).toDF("doc_id"), "rf")
     val d = spark.read.parquet(tmp.resolve("documents.parquet").toString)
     Seq(90L, 95L, 100L, 105L, 110L).zipWithIndex.foreach {
       case (id, b) =>
@@ -938,7 +938,7 @@ class StreamingGateSpec extends SparkSpec {
     // the folded, replacement-active state still serves exactly the
     // survivors-only rebuild — and every batch doc clustered under
     // the replaced component's raised min
-    val folded = DedupOps.ccClustersOfFolded(spark, work)
+    val folded = ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq
     val rebuild = DedupOps.connectedComponentsOf(spark,
       DedupOps.bucketStarEdges(DedupOps.bandedSignaturesOf(
@@ -962,7 +962,7 @@ class StreamingGateSpec extends SparkSpec {
   test("s18 fold: unmarked relfold debris from a pre-marker crash never resurrects a retired replacement") {
     // crash AFTER a prior fold attempt wrote labels_relfold but
     // BEFORE its _FOLD marker: the temp is unmarked debris. A
-    // t44Compact then retires the replacement (relabel_nodes gone).
+    // ClusterShelf.compact then retires the replacement (relabel_nodes gone).
     // A later PLAIN-side fold skips the relabel rewrite (≤ 1
     // generation fenced) — it must DELETE the stale temp, not let
     // the commit copy it in as relabel-c<newCut>, which would
@@ -985,15 +985,15 @@ class StreamingGateSpec extends SparkSpec {
         f.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath, tmp.resolve("documents.parquet"))
     val work = StreamingOps.s18WorkingCopy(spark, tmp.toString, "s18dbr")
-    DedupOps.t43Forget(spark, work, Seq(10L).toDF("doc_id"), "dbr")
+    ClusterShelf.forget(spark, work, Seq(10L).toDF("doc_id"), "dbr")
     // the pre-marker crash debris: a relfold temp whose rows map the
-    // replaced component to a label that t44Compact is about to
+    // replaced component to a label that ClusterShelf.compact is about to
     // retire (11/12 → the pre-forget min 10 — exactly what a stale
     // fold over since-retired relabel-a rows would have materialized)
     Seq((11L, 10L), (12L, 10L)).toDF("node", "label")
       .coalesce(1).write.mode("overwrite")
       .parquet(work.resolve("labels_relfold").toString)
-    assert(DedupOps.t44Compact(spark, work),
+    assert(ClusterShelf.compact(spark, work),
       "the compaction must retire the active replacement")
     assert(!java.nio.file.Files.exists(work.resolve("relabel_nodes")))
     // the later plain-side fold: relabel side has nothing fenced —
@@ -1010,7 +1010,7 @@ class StreamingGateSpec extends SparkSpec {
     // ABSORBED tranche (doc_id ≤ the working copy's cut, minus the
     // forgotten 10): the retired replacement's component re-derives
     // under its raised min 11, never under the debris's stale 10
-    val folded = DedupOps.ccClustersOfFolded(spark, work)
+    val folded = ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq
     val rebuild = DedupOps.connectedComponentsOf(spark,
       DedupOps.bucketStarEdges(DedupOps.bandedSignaturesOf(
@@ -1066,7 +1066,7 @@ class StreamingGateSpec extends SparkSpec {
     assert(flags === Seq((110L, 6L)),
       "pre-advance absorb must flag under the original canon")
     // the EVENT-TIME advance between batches
-    DedupOps.t45AgeOff(spark, work, DedupOps.T41H1)
+    ClusterShelf.ageOff(spark, work, DedupOps.T41H1)
     val expired = spark.read
       .parquet(work.resolve("tombstones").toString)
       .select(col("doc_id")).distinct()
@@ -1096,7 +1096,7 @@ class StreamingGateSpec extends SparkSpec {
             .filter(expr(DedupOps.t41IngestTs) > h))
           .select(col("band"), col("sig"), col("doc_id"))))
         .collect().map(_.toSeq.toVector).toSeq
-    assert(DedupOps.ccClustersOfFolded(spark, work)
+    assert(ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq === rebuildAbove(
         DedupOps.T41H1))
     // the nightly DISCIPLINE on the streamed index: compact (retire
@@ -1108,10 +1108,10 @@ class StreamingGateSpec extends SparkSpec {
     // advance's away), 110's emitted flag still stands (history is
     // immutable even for a doc that later expired), and the serve
     // equals the survivors-above-H2 rebuild.
-    assert(DedupOps.t44Compact(spark, work),
+    assert(ClusterShelf.compact(spark, work),
       "the mid-stream compact must retire the active replacement")
     val h2 = 1700000000L
-    DedupOps.t45AgeOff(spark, work, h2)
+    ClusterShelf.ageOff(spark, work, h2)
     val expired2 = spark.read
       .parquet(work.resolve("tombstones").toString)
       .select(col("doc_id")).distinct()
@@ -1124,7 +1124,7 @@ class StreamingGateSpec extends SparkSpec {
     assert(flags === Seq((110L, 6L), (150L, 10L), (160L, 10L)),
       "emitted flags stand across compact + second advance; the " +
         "singleton 199 emits nothing")
-    assert(DedupOps.ccClustersOfFolded(spark, work)
+    assert(ClusterShelf.served(spark, work)
       .collect().map(_.toSeq.toVector).toSeq === rebuildAbove(h2))
     DedupOps.deleteRecursively(work.toFile)
     DedupOps.deleteRecursively(tmp.toFile)

@@ -606,8 +606,8 @@ class TombstoneSpec extends SparkSpec {
       "doc_id")
     assert(band === expected, "band shelf must serve corpus minus listed")
     assert(media === band, "media and band shelves must agree exactly")
-    val cluster = ids(DedupOps.ccClustersOfFolded(spark,
-      DedupOps.requireReady(DedupOps.t42IndexPath(spark, sf, "t46"))),
+    val cluster = ids(ClusterShelf.served(spark,
+      DedupOps.requireReady(ClusterShelf.path(spark, sf, ClusterShelf.t46))),
       "doc_id")
     assert(cluster.subsetOf(expected) &&
       cluster.intersect(listed).isEmpty,
